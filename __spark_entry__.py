@@ -800,31 +800,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- flagship composition: the whole modern pipeline in ONE plan ---------
     def pipeline_extract_dedup_chunk(spark, sf_dir):
         """extract -> exact-dedup (keep smallest url) -> quality gate ->
-        overlapping chunks: what a user actually runs end-to-end. One lazy
-        plan; Catalyst sees all of it (the dedup window and the chunk
-        fan-out fuse with the kernel's output without materialization)."""
-        from pyspark.sql import Window
+        overlapping chunks: what a user actually runs end-to-end — the curate
+        job's own plan, unsampled. One lazy plan; Catalyst sees all of it
+        (the dedup window and the chunk fan-out fuse with the kernel's
+        output without materialization)."""
+        from jobs.curate_job import build_curated_chunks
 
-        from pdf_parser_spark.operators.chunking import chunk_documents
-
-        out = extract_pipeline(_pages(spark, sf_dir))
-        ok = out.where(F.col("status") == "ok").select("url", "text")
-        fp = F.substring(
-            F.sha2(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))), 256),
-            1, 16,
-        )
-        w = Window.partitionBy("fingerprint").orderBy("url")
-        deduped = (
-            ok.withColumn("fingerprint", fp)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "fingerprint")
-        )
-        quality = deduped.where(
-            F.size(F.filter(F.split("text", r"\s+"), lambda x: x != "")) >= 10
-        )
-        return chunk_documents(
-            quality, text_col="text", id_col="url", chunk_tokens=64, overlap=8
+        return build_curated_chunks(
+            spark, ensure_corpus(sf_dir), 64, 8, 10, sample_rate=None
         ).orderBy("url", "chunk_idx")
     q["pipeline_extract_dedup_chunk"] = pipeline_extract_dedup_chunk
 
@@ -1465,53 +1448,38 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # (tools/check_oracles.py), so rotation only changes which subset the driver
 # re-proves each round: least-recently-verified first.
 _VERIFY_FIRST = [
-    # round-5 window. Slot budget (window = 50, driver checks first 50):
-    #   - 30 of the 41 queries last driver-verified in r3 (VERDICT r4 item 1)
-    #   - all 11 media_* queries: round 5 touches kernels/webp.py (ADVICE r4
-    #     distance/TR fixes), kernels/mp4.py (co64), operators/multimodal.py
-    #     (JPEG/BMP/ICO/TIFF/VP8X dims, MP3) — one shared import closure, so
-    #     the freshness ledger forces every media query in-window
-    #   - 9 new-in-r5 queries (media_mp3_metadata, pipeline_curate_end2end,
-    #     clean_gopher_gate, media_exif_metadata, pdf_info_metadata,
-    #     clean_decontaminate, dedup_span_coverage, ann_semdedup,
-    #     pipeline_training_mix)
-    # That sums to 50; the 11 r3-verified queries left OUT of the window
-    # (f1_f2_size_filter, f3_magic_router, f4_extension_predicate,
-    # f5_empty_text_guard, p3_content_hash, clean_domain_stats,
-    # clean_canonical_url, clean_scrub_pii, clean_repetition_flags,
-    # ai_label_discovery, extract_error_accounting) are single-expression
-    # column ops or one-row aggregates, driver-green in r3 AND at least
-    # one earlier round (f1_f2_size_filter, ai_label_discovery and
-    # extract_error_accounting in all of r1/r2/r3; the clean_* four in
-    # r1+r3), byte-identical golden tests in pytest, and their code is
-    # ledger-frozen at the r3-verified commit b7a09fc4
-    # (tools/freshness_ledger.py check == 0 violations proves their
-    # import closures are untouched since that verification).
-    # r3-stale backlog, least-recently-verified evidence first:
-    "extract_classic_pipeline", "extract_ai_pipeline",
+    # Slot budget (window = 50): every query whose import closure reaches a
+    # module rewritten onto the shared textstats column functions
+    # (operators/textstats, chunking, cleaning, gopher, decontaminate,
+    # spandedup, bpe, dedup, lm, streaming/stream), the two curate-job plans
+    # (jobs/ is outside the ledger's import graph), ann_semdedup (changed
+    # after its r5 stamp) and the 14 round-5 media queries. Rotated out: the olap_* eight, the
+    # temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
+    # udaf_geomean_chars, udf_groupmap_zscore, sql_udf_extract_text,
+    # sql_udtf_field_rows — verified green in round 5 and ledger-frozen at
+    # their r5 stamp (`tools/freshness_ledger.py check` proves it).
+    # closure touched, previously off-window:
+    "dedup_exact", "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
+    "dedup_minhash_lsh_pairs_capped", "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_pruned", "dedup_simhash", "dedup_simhash_pairs",
+    "dedup_clusters", "text_token_count", "text_quality_score",
+    "text_lang_id", "text_fingerprint", "text_lm_quality",
+    "text_winnow_fingerprint", "clean_canonical_url", "clean_scrub_pii",
+    "clean_repetition_flags", "clean_domain_stats",
+    # closure touched, already in the round-5 window:
     "dedup_clusters_capped", "ann_dup_clusters", "text_bpe_token_counts",
-    "olap_event_pivot", "olap_event_moving_avg", "olap_event_cube",
-    "olap_user_activity_fullouter", "set_ops_feed_vs_ok",
-    "udaf_geomean_chars", "udf_groupmap_zscore",
-    "pipeline_extract_dedup_chunk", "shape_chunk_documents",
-    "shape_pack_documents", "shape_pack_bpe_tokens",
-    "shape_deterministic_sample", "olap_pricing_summary",
-    "olap_regional_revenue", "olap_value_quantiles", "olap_order_priority",
-    "temporal_asof_join", "temporal_interval_join", "temporal_sessionize",
-    "temporal_session_window_native",
-    "clean_stopword_stats",
-    "clean_line_dedup", "sql_udf_extract_text",
-    "sql_udtf_field_rows", "stream_extract_lift",
-    # media closure changed in r5 (webp/mp4/multimodal edits):
+    "shape_chunk_documents", "shape_pack_documents", "shape_pack_bpe_tokens",
+    "shape_deterministic_sample", "clean_stopword_stats", "clean_line_dedup",
+    "stream_extract_lift", "clean_gopher_gate", "clean_decontaminate",
+    "dedup_span_coverage", "pipeline_training_mix",
+    # the curate job's plan, and semdedup:
+    "pipeline_extract_dedup_chunk", "pipeline_curate_end2end", "ann_semdedup",
+    # round-5 media closure:
     "media_metadata", "media_image_dimensions", "media_image_real_features",
     "media_thumbnails", "media_gif_frame_features", "media_features",
     "media_frame_sample", "media_video_frame_features", "media_mp4_metadata",
-    "media_audio_features", "media_wav_metadata",
-    # new in round 5 (fills the window to exactly 50; uncommented as each
-    # query lands):
-    "media_mp3_metadata", "pipeline_curate_end2end", "clean_gopher_gate",
-    "media_exif_metadata", "pdf_info_metadata", "clean_decontaminate",
-    "dedup_span_coverage", "ann_semdedup", "pipeline_training_mix",
+    "media_audio_features", "media_wav_metadata", "media_mp3_metadata",
+    "media_exif_metadata", "pdf_info_metadata",
 ]
 
 
@@ -1961,8 +1929,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["text_token_count"] = """
         SELECT doc_id,
-          CASE WHEN length(trim(text)) = 0 THEN 0
-               ELSE length(string_split_regex(trim(text), '\\s+')) END AS n_tokens,
+          len(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS n_tokens,
           length(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS n_subword_tokens,
           length(text) AS n_chars_measured
         FROM documents ORDER BY doc_id
@@ -1971,7 +1938,7 @@ def oracle_sql() -> dict[str, str]:
         WITH m AS (
           SELECT doc_id,
             length(text)::DOUBLE AS n_chars,
-            length(string_split_regex(trim(text), '\\s+'))::DOUBLE AS n_tok,
+            len(list_filter(string_split_regex(text, '\\s+'), x -> x <> ''))::DOUBLE AS n_tok,
             length(regexp_extract_all(text, '[.,;:!?]'))::DOUBLE AS n_punct,
             length(regexp_extract_all(text, '[A-Z]'))::DOUBLE AS n_upper
           FROM documents
@@ -2011,7 +1978,7 @@ def oracle_sql() -> dict[str, str]:
         FROM c ORDER BY doc_id
     """
     o["text_fingerprint"] = f"""
-        SELECT doc_id, substring(sha256({norm}), 1, 16) AS fingerprint
+        SELECT doc_id, substring(sha256(COALESCE({norm}, '')), 1, 16) AS fingerprint
         FROM documents ORDER BY doc_id
     """
 

@@ -37,7 +37,7 @@ def build_curated_chunks(spark, input_dir, chunk_tokens=2048, overlap=64,
     from pdf_parser_spark.operators.chunking import (
         chunk_documents, deterministic_sample,
     )
-    from pdf_parser_spark.operators.textstats import normalized
+    from pdf_parser_spark.operators.textstats import content_fingerprint, tokens
     from pdf_parser_spark.pipeline import extract_pipeline, load_pages
 
     pages = load_pages(spark, input_dir)
@@ -46,24 +46,14 @@ def build_curated_chunks(spark, input_dir, chunk_tokens=2048, overlap=64,
         .where(F.col("status") == "ok")
         .select("url", "text")
     )
-    # the SAME normal form + NULL coalesce as operators.dedup.exact_dedup —
-    # an inline re-derivation here once omitted the coalesce, which would
-    # collapse all NULL-text rows into one survivor and drift on any future
-    # change to the normal form
-    fp = F.substring(
-        F.sha2(F.coalesce(normalized(F.col("text")), F.lit("")), 256), 1, 16
-    )
     w = Window.partitionBy("fingerprint").orderBy("url")
     deduped = (
-        ok.withColumn("fingerprint", fp)
+        ok.withColumn("fingerprint", content_fingerprint(F.col("text")))
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "fingerprint")
     )
-    quality = deduped.where(
-        F.size(F.filter(F.split("text", r"\s+"), lambda x: x != ""))
-        >= min_tokens
-    )
+    quality = deduped.where(F.size(tokens(F.col("text"))) >= min_tokens)
     if sample_rate is not None:
         quality = deterministic_sample(quality, key_col="url", rate=sample_rate)
     return chunk_documents(

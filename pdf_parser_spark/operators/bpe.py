@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _ASCII_WS
+from .textstats import _ASCII_WS, lower_tokens
 
 __all__ = ["word_frequencies", "bpe_train", "bpe_encode", "bpe_token_counts"]
 
@@ -37,9 +37,7 @@ def word_frequencies(
     One explode + one hash aggregate (map-side combinable); the orderBy
     ties break on the word itself so the training set is stable.
     """
-    words = F.explode(
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != "")
-    ).alias("word")
+    words = F.explode(lower_tokens(F.col(text_col))).alias("word")
     rows = (
         df.select(words)
         .groupBy("word")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import md5_hash60
+from .textstats import tokens
 
 __all__ = ["chunk_documents", "pack_documents", "deterministic_sample"]
 
@@ -30,24 +31,24 @@ def chunk_documents(
     """Split each document into overlapping whitespace-token chunks.
 
     Chunk k starts at token offset k*(chunk_tokens-overlap) and takes
-    chunk_tokens tokens; the tail chunk is shorter. split -> sequence ->
-    slice -> posexplode, all codegen'd; the fan-out is bounded by
-    n_tokens/stride per row, so skew follows document length, which the F1
-    size cap already bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
+    chunk_tokens tokens; the tail chunk is shorter. Tokens are projected
+    once as a column, then sequence -> slice -> posexplode, all codegen'd
+    (slicing a captured split expression re-splits the document per
+    chunk); the fan-out is bounded by n_tokens/stride per row, so skew
+    follows document length, which the F1 size cap already bounds.
+    Returns (id, chunk_idx, chunk_text, n_tokens).
     """
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     step = chunk_tokens - overlap
-    tokens = F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+    toks = F.col("_toks")
     starts = F.sequence(
-        F.lit(1), F.greatest(F.size(tokens) - overlap, F.lit(1)), F.lit(step)
+        F.lit(1), F.greatest(F.size(toks) - overlap, F.lit(1)), F.lit(step)
     )
-    chunks = F.transform(starts, lambda s: F.slice(tokens, s, chunk_tokens))
+    chunks = F.transform(starts, lambda s: F.slice(toks, s, chunk_tokens))
     return (
-        df.select(
-            F.col(id_col),
-            F.posexplode(chunks).alias("chunk_idx", "_chunk"),
-        )
+        df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+        .select(id_col, F.posexplode(chunks).alias("chunk_idx", "_chunk"))
         .select(
             id_col,
             "chunk_idx",
@@ -84,9 +85,7 @@ def pack_documents(
         # whitespace counting is only the default proxy
         toks = F.col(tokens_col).cast("long")
     else:
-        toks = F.size(
-            F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
-        ).cast("long")
+        toks = F.size(tokens(F.col(text_col))).cast("long")
     if shard_col is None:
         # safe default: a Window.partitionBy() (empty) here would serialize
         # the whole corpus through one task — derive a hash shard instead

@@ -10,15 +10,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .gopher import GOPHER_STOPWORDS
+from .textstats import lower_tokens
+
 __all__ = [
     "canonicalize_url", "host_of", "scrub_pii", "repetition_flags",
     "stopword_stats", "line_dedup", "domain_stats", "domain_filter",
-    "GOPHER_STOPWORDS",
 ]
-
-# the Gopher rule's word list (Rae et al. 2021 §A1.1: "contain at least two
-# of the following English words: the, be, to, of, and, that, have, with")
-GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 # PII patterns (shared verbatim with the DuckDB oracles; RE2-safe, no
 # backrefs). Order matters: emails before phones (an email may contain
@@ -96,7 +94,7 @@ def repetition_flags(
         1.0 - F.size(F.array_distinct(lines)) / n_lines.cast("double")
     )
 
-    words = F.filter(F.split(F.lower(t), r"\s+"), lambda x: x != "")
+    words = lower_tokens(t)
     n_words = F.size(words)
     # modal-word frequency in O(n log n): sort, then one linear fold
     # tracking (prev, current run, best run) — not the O(n^2)
@@ -148,9 +146,7 @@ def stopword_stats(
     token fraction as a quality signal. Token-exact matching (pure JVM
     array ops) — \\b-regex counting diverges between Unicode-aware (Java)
     and ASCII (RE2) word boundaries on non-ASCII-adjacent text."""
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    toks = lower_tokens(F.col(text_col))
     n_tok = F.size(toks).cast("double")
     n_stop = F.size(
         F.filter(toks, lambda x: x.isin(*GOPHER_STOPWORDS))

@@ -24,26 +24,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import lower_tokens, ngrams
+
 __all__ = ["ngram_set", "decontaminate"]
 
 
-def _tokens(text_col: str):
-    return F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit(""))
+def _grams(df: DataFrame, n: int, text_col: str, *keep: str) -> DataFrame:
+    """(*keep, gram): each row's distinct word n-grams, tokens projected
+    first. The explode takes the n-gram expression itself: exploding a
+    projected array column makes Catalyst infer a size() filter and push it
+    below the projections, inlining the split back into the lambda."""
+    return (
+        df.select(*keep, lower_tokens(F.col(text_col)).alias("_toks"))
+        .select(
+            *keep,
+            F.explode(F.array_distinct(ngrams(F.col("_toks"), n))).alias("gram"),
+        )
+    )
 
 
 def ngram_set(df: DataFrame, n: int = 8, text_col: str = "text") -> DataFrame:
     """Distinct word n-grams (space-joined, lowercased) of every row."""
-    toks = F.transform(_tokens(text_col), lambda x: F.lower(x))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return (
-        df.select(F.explode(grams).alias("gram")).distinct()
-    )
+    return _grams(df, n, text_col).distinct()
 
 
 def decontaminate(
@@ -61,19 +63,8 @@ def decontaminate(
     ``contaminated`` = that count >= min_hits.
     """
     bench = F.broadcast(ngram_set(benchmark, n=n, text_col=text_col))
-    toks = F.transform(_tokens(text_col), lambda x: F.lower(x))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    doc_grams = (
-        docs.select(id_col, F.explode(F.array_distinct(grams)).alias("gram"))
-    )
     hits = (
-        doc_grams.join(bench, "gram")
+        _grams(docs, n, text_col, id_col).join(bench, "gram")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
     )

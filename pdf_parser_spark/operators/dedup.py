@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from .textstats import _ASCII_WS, normalized
+from .textstats import _ASCII_WS, content_fingerprint, lower_tokens, ngrams
 
 __all__ = [
     "md5_hash60", "xxhash60", "exact_dedup", "word_shingles",
@@ -56,15 +56,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """Group identical normalized content; keep the smallest id as canonical.
 
     One shuffle (hash aggregate); partial aggregation runs map-side.
-
-    NULL text is coalesced to '' BEFORE hashing: sha2(NULL) is NULL, which
-    would silently collapse every NULL-text document into one NULL
-    fingerprint group invisible to downstream keep-logic. With the coalesce
-    they group under the empty-content fingerprint, visibly counted.
+    NULL-text documents group under the empty-content fingerprint, visibly
+    counted (see textstats.content_fingerprint).
     """
-    fp = F.substring(
-        F.sha2(F.coalesce(normalized(F.col(text_col)), F.lit("")), 256), 1, 16
-    )
+    fp = content_fingerprint(F.col(text_col))
     return (
         df.select(F.col(id_col), fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -83,21 +78,16 @@ def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document, as (id, shingle) rows.
 
-    Pure JVM: split -> sequence -> transform(slice+concat_ws) -> explode.
-
-    Documents with fewer than n tokens yield NO shingles: sequence(1, 0)
-    would otherwise produce a DESCENDING [1, 0] whose 0 start crashes
-    slice() — a short/empty document must never kill a task (found by the
-    differential fuzz gate, tests/test_oracle_fuzz.py).
+    Pure JVM: lowercase tokens projected once, then textstats.ngrams
+    (sequence -> transform(slice+concat_ws)) -> explode. Documents with
+    fewer than n tokens yield NO shingles.
     """
-    tokens = F.split(normalized(F.col(text_col)), " ")
-    idx = F.when(
-        F.size(tokens) >= n,
-        F.sequence(F.lit(1), F.size(tokens) - (n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    shingles = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tokens, i, n)))
     return (
-        df.select(F.col(id_col), F.explode(F.array_distinct(shingles)).alias("shingle"))
+        df.select(F.col(id_col), lower_tokens(F.col(text_col)).alias("_toks"))
+        .select(
+            id_col,
+            F.explode(F.array_distinct(ngrams(F.col("_toks"), n))).alias("shingle"),
+        )
     )
 
 

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import tokens
+
 __all__ = ["GOPHER_STOPWORDS", "gopher_quality_gate"]
 
 # the canonical Gopher stop-word list (Rae et al. 2021, A1.1: "contains at
@@ -59,7 +61,7 @@ def gopher_quality_gate(
     UNROUNDED values so the gate itself is exact.
     """
     t = F.col(text_col)
-    toks = F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
+    toks = tokens(t)
     n_words = F.size(toks)
     nz = F.greatest(n_words, F.lit(1)).cast("double")
     sum_len = F.aggregate(

@@ -20,15 +20,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _ASCII_WS
+from .textstats import _ASCII_WS, ngrams, normalized
 
 __all__ = ["train_char_trigram_lm", "lm_bits_per_char", "lm_quality_flags"]
 
 BOS = "\x02"  # sentence padding chars (never appear in normalized text)
-
-
-def _norm_expr(col):
-    return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
 def train_char_trigram_lm(
@@ -37,14 +33,16 @@ def train_char_trigram_lm(
     """Distributed trigram/bigram counting -> (tri_counts, bi_counts, vocab).
 
     One pass builds char trigrams of the padded normalized text via pure
-    array expressions; two hash aggregates produce the count tables with
-    deterministic top-K cutoffs.
+    array expressions (chars projected once, then textstats.ngrams); two
+    hash aggregates produce the count tables with deterministic top-K
+    cutoffs.
     """
-    padded = F.concat(F.lit(BOS + BOS), _norm_expr(F.col(text_col)))
-    chars = F.split(padded, "")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(chars) - 2, F.lit(0)))
-    tris = F.transform(idx, lambda i: F.concat_ws("", F.slice(chars, i, 3)))
-    exploded = df.select(F.explode(tris).alias("tri")).where(F.length("tri") == 3)
+    padded = F.concat(F.lit(BOS + BOS), normalized(F.col(text_col)))
+    exploded = (
+        df.select(F.split(padded, "").alias("_chars"))
+        .select(F.explode(ngrams(F.col("_chars"), 3, sep="")).alias("tri"))
+        .where(F.length("tri") == 3)
+    )
     tri_rows = (
         exploded.groupBy("tri").agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("tri")).limit(top_k).collect()
@@ -77,7 +75,7 @@ def lm_bits_per_char(
     def score(texts):
         out = []
         for t in texts:
-            # ASCII-whitespace normalization, matching _norm_expr's \s+
+            # ASCII-whitespace normalization, matching textstats.normalized's \s+
             s = " ".join(x for x in _ASCII_WS.split(("" if t is None else str(t)).lower()) if x)
             if not s:
                 out.append(None)
@@ -96,7 +94,7 @@ def lm_bits_per_char(
 
     return df.select(
         F.col(id_col),
-        F.length(_norm_expr(F.col(text_col))).alias("n_scored"),
+        F.length(normalized(F.col(text_col))).alias("n_scored"),
         score(F.col(text_col)).alias("bits_per_char"),
     )
 

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .textstats import lower_tokens, ngrams
+
 __all__ = ["duplicated_span_stats"]
 
 
@@ -57,21 +59,11 @@ def duplicated_span_stats(
     integer math: ``dup_tokens * 100 <= n_tokens * pct``; empty documents
     keep).
     """
-    toks = F.transform(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != F.lit("")),
-        lambda x: F.lower(x),
-    )
-    base = docs.select(id_col, toks.alias("_toks"))
+    base = docs.select(id_col, lower_tokens(F.col(text_col)).alias("_toks"))
     totals = base.select(
         id_col, F.size("_toks").cast("long").alias("n_tokens")
     )
-    grams = F.when(
-        F.size("_toks") >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size("_toks") - k),
-            lambda i: F.concat_ws(" ", F.slice("_toks", i + 1, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = ngrams(F.col("_toks"), k)
     key = F.xxhash64("gram") if hashed else F.col("gram")
     wins = (
         base.select(id_col, F.posexplode(grams).alias("pos", "gram"))

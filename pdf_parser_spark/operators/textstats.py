@@ -14,7 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "normalized", "token_count", "quality_score", "lang_id", "fingerprint",
+    "tokens", "lower_tokens", "normalized", "content_fingerprint", "ngrams",
+    "token_count", "quality_score", "lang_id", "fingerprint",
     "winnow_fingerprint", "LANG_MARKERS",
 ]
 
@@ -24,18 +25,57 @@ __all__ = [
 _ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
 
 
+# The column functions below are the ONE definition of each text concept;
+# every JVM operator and job builds its tokens, normal form, fingerprint
+# and n-grams through them. A token array used inside a higher-order-function
+# lambda must be projected as a column first and referenced by name: Spark
+# re-evaluates a captured expression once per element, re-splitting the
+# whole document for every chunk / gram.
+
+
+def tokens(col: Column) -> Column:
+    """ASCII-whitespace tokens: split on \\s+, empty strings dropped (so
+    leading/trailing whitespace and "" yield no tokens)."""
+    return F.filter(F.split(col, r"\s+"), lambda x: x != "")
+
+
+def lower_tokens(col: Column) -> Column:
+    """tokens() of the lowercased text (lowercasing never creates or removes
+    ASCII whitespace, so this equals lowercasing each token)."""
+    return tokens(F.lower(col))
+
+
 def normalized(col: Column) -> Column:
     """Whitespace-collapsed, trimmed, lowercased text (shared normal form)."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
+
+
+def content_fingerprint(col: Column) -> Column:
+    """16-hex-char sha256 prefix of the normal form. NULL text hashes as ''
+    (sha2(NULL) is NULL, which would silently merge every NULL-text row into
+    one invisible group)."""
+    return F.substring(F.sha2(F.coalesce(normalized(col), F.lit("")), 256), 1, 16)
+
+
+def ngrams(arr: Column, n: int, sep: str = " ") -> Column:
+    """In-order n-grams of an array column, each joined with sep; empty when
+    the array holds fewer than n elements (an unguarded sequence would run
+    DESCENDING there and crash slice()). Pass a projected column (see the
+    note above): arr is referenced inside the lambda."""
+    return F.when(
+        F.size(arr) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(arr) - n),
+            lambda i: F.concat_ws(sep, F.slice(arr, i + 1, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + a BPE-ish subword proxy (runs of letters/digits,
     plus standalone punctuation), both as JVM expressions."""
     t = F.col(text_col)
-    ws = F.when(F.length(F.trim(t)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(t), r"\s+"))
-    )
+    ws = F.size(tokens(t))
     bpe = F.size(F.regexp_extract_all(t, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), 0))
     return df.select(
         "doc_id",
@@ -50,7 +90,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     uppercase ratio, mean token length) combined into a 0..1 score."""
     t = F.col(text_col)
     n_chars = F.length(t).cast("double")
-    n_tok = F.size(F.split(F.trim(t), r"\s+")).cast("double")
+    n_tok = F.size(tokens(t)).cast("double")
     n_punct = F.size(F.regexp_extract_all(t, F.lit(r"[.,;:!?]"), 0)).cast("double")
     n_upper = F.size(F.regexp_extract_all(t, F.lit(r"[A-Z]"), 0)).cast("double")
     mean_tok_len = n_chars / F.greatest(n_tok, F.lit(1.0))
@@ -89,7 +129,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-marker language ID: count whole-token marker hits per
     language (pure JVM array ops) + a CASE argmax with deterministic
     tie-breaking (list order)."""
-    toks = F.split(normalized(F.col(text_col)), " ")
+    toks = lower_tokens(F.col(text_col))
     counts = [
         F.size(F.filter(toks, lambda x: x.isin(*words))).alias(f"c_{lang}")
         for lang, words in LANG_MARKERS
@@ -176,5 +216,5 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     lowercased text (stable across reflows), 16-hex-char prefix."""
     return df.select(
         "doc_id",
-        F.substring(F.sha2(normalized(F.col(text_col)), 256), 1, 16).alias("fingerprint"),
+        content_fingerprint(F.col(text_col)).alias("fingerprint"),
     )

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.textstats import content_fingerprint
 from ..pipeline import OUTPUT_SCHEMA, extract_kernel
 
 # schema of the pages table (a streaming source cannot infer it)
@@ -206,22 +207,11 @@ def stream_exact_dedup(
     resume_against; this operator is the incremental front-line filter.
     """
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    fp = F.substring(
-        F.sha2(
-            F.coalesce(
-                F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))),
-                F.lit(""),
-            ),
-            256,
-        ),
-        1,
-        16,
-    )
     deduped = (
         pages.select(
             "url",
             F.col("warc_ts").cast("timestamp").alias("warc_ts"),
-            fp.alias("fingerprint"),
+            content_fingerprint(F.col("text")).alias("fingerprint"),
         )
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["fingerprint"])

@@ -66,7 +66,8 @@ def _make_tables(tmpdir: str) -> None:
         if rng.random() < 0.2:
             t = t + "\n" + t  # duplicate lines / near-dup pressure
         docs.append((i, t, rng.choice(langs), len(t)))
-    docs += [(50, "", "en", 0), (51, "solo", "es", 4)]
+    docs += [(50, "", "en", 0), (51, "solo", "es", 4),
+             (52, "\tfoo bar", "en", 8)]
     pq.write_table(
         pa.Table.from_pydict(
             {"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs],
@@ -236,6 +237,21 @@ def _run(spark, fuzz_env, names):
 class TestDriverFuzz:
     def test_document_queries(self, spark, fuzz_env):
         _run(spark, fuzz_env, DOC_QUERIES)
+
+    # leading whitespace starts no token and "" has none, on both engines;
+    # quality's mean_token_len is chars / max(tokens, 1): 8 / 2 for doc 52
+    @pytest.mark.parametrize("query,col,want", [
+        ("text_token_count", "n_tokens", {50: 0, 52: 2}),
+        ("text_quality_score", "mean_token_len", {50: 0.0, 52: 4.0}),
+    ])
+    def test_edge_whitespace_token_counts(self, spark, fuzz_env, query, col,
+                                          want):
+        d, con = fuzz_env
+        got = {r.doc_id: r[col] for r in
+               entrymod.queries()[query](spark, d).collect() if r.doc_id in want}
+        ref = con.execute(entrymod.oracle_sql()[query]).df().set_index("doc_id")
+        assert got == want
+        assert {k: ref[col][k] for k in want} == want
 
     def test_embedding_queries(self, spark, fuzz_env):
         _run(spark, fuzz_env, EMB_QUERIES)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +22,9 @@ class TestTraining:
         assert len(tri) > 100 and vocab > 10
         assert all(len(t) == 3 for t in tri)
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        again = train_char_trigram_lm(docs)
+        # a blank document adds no trigram (and must not crash slice())
+        blank = docs.limit(1).withColumn("text", F.lit(" \t"))
+        again = train_char_trigram_lm(docs.union(blank))
         assert again[0] == tri and again[2] == vocab
 
 

@@ -917,6 +917,85 @@ class TestImageDimensions:
         assert heif_sniff_dimensions(zed) is None
 
 
+def _text_operators():
+    """name -> build(spark, docs, corpus_dir) for every operator that turns
+    text into tokens, grams or chars."""
+    from jobs.curate_job import build_curated_chunks
+    from pdf_parser_spark.operators import (
+        bpe, chunking, cleaning, decontaminate, dedup, gopher, lm, spandedup,
+        textstats,
+    )
+
+    return {
+        "token_count": lambda s, d, c: textstats.token_count(d),
+        "quality_score": lambda s, d, c: textstats.quality_score(d),
+        "lang_id": lambda s, d, c: textstats.lang_id(d),
+        "fingerprint": lambda s, d, c: textstats.fingerprint(d),
+        "exact_dedup": lambda s, d, c: dedup.exact_dedup(d),
+        "word_shingles": lambda s, d, c: dedup.word_shingles(d),
+        "minhash_signatures": lambda s, d, c: dedup.minhash_signatures(d),
+        "chunk_documents": lambda s, d, c: chunking.chunk_documents(d),
+        "pack_documents": lambda s, d, c: chunking.pack_documents(d),
+        "repetition_flags": lambda s, d, c: cleaning.repetition_flags(d),
+        "stopword_stats": lambda s, d, c: cleaning.stopword_stats(d),
+        "gopher_quality_gate":
+            lambda s, d, c: gopher.gopher_quality_gate(d, id_col="doc_id"),
+        "ngram_set": lambda s, d, c: decontaminate.ngram_set(d),
+        "decontaminate": lambda s, d, c: decontaminate.decontaminate(d, d),
+        "duplicated_span_stats":
+            lambda s, d, c: spandedup.duplicated_span_stats(d),
+        "word_frequencies": lambda s, d, c: bpe.word_frequencies(d),
+        "train_char_trigram_lm": lambda s, d, c: lm.train_char_trigram_lm(d),
+        "lm_bits_per_char":
+            lambda s, d, c: lm.lm_bits_per_char(d, ({}, {}, 1)),
+        "build_curated_chunks":
+            lambda s, d, c: build_curated_chunks(s, c, 64, 8, 10),
+    }
+
+
+class TestNoTextRescanInLambdas:
+    """A token / char array used inside a higher-order-function lambda must
+    be projected as a column first: Spark re-evaluates a captured expression
+    once per element, so a captured split re-splits the whole document for
+    every chunk or gram. Walks each operator's optimized plan."""
+
+    @staticmethod
+    def _rescanning_lambdas(plan):
+        def seq(s):
+            return [s.apply(i) for i in range(s.size())]
+
+        plans, exprs, found = [plan], [], []
+        while plans:
+            node = plans.pop()
+            exprs += seq(node.expressions())
+            plans += seq(node.children())
+        while exprs:
+            e = exprs.pop()
+            exprs += seq(e.children())
+            if e.getClass().getSimpleName() == "LambdaFunction":
+                body = e.function().toString()
+                if "split(" in body or "regexp_replace(" in body:
+                    found.append(body)
+        return found
+
+    @pytest.mark.parametrize("name", sorted(_text_operators()))
+    def test_lambda_bodies_never_rescan_text(self, spark, corpus_001,
+                                             monkeypatch, name):
+        from pyspark.sql import DataFrame
+
+        docs = spark.createDataFrame(
+            [(0, "the quick brown fox jumps over the lazy dog", "en"),
+             (1, "", "en")], "doc_id bigint, text string, lang string")
+        # operators that collect (model training) are planned, not run
+        planned = []
+        monkeypatch.setattr(type(docs), "collect",
+                            lambda self: planned.append(self) or [])
+        out = _text_operators()[name](spark, docs, corpus_001)
+        df = out if isinstance(out, DataFrame) else planned[-1]
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert self._rescanning_lambdas(plan) == []
+
+
 class TestDuplicatedSpans:
     """spandedup.duplicated_span_stats — span-level exact-substring dedup."""
 
