@@ -554,10 +554,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def ann_lsh_bucketed_topk(spark, sf_dir):
         # coordinate-sign buckets: JVM-only LSH the DuckDB oracle recomputes
-        # exactly (the seeded-Gaussian variant stays recall-tested in pytest)
+        # exactly, so the approximate top-k itself is value-checked
         return S.lsh_bucketed_topk(
-            _emb(spark, sf_dir), query_id=0, k=10, n_planes=4,
-            bucket_fn="coordinate",
+            _emb(spark, sf_dir), query_id=0, k=10, n_planes=4
         )
     q["ann_lsh_bucketed_topk"] = ann_lsh_bucketed_topk
 
@@ -613,8 +612,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["ann_knn_join"] = ann_knn_join
 
     def ann_knn_join_gemm(spark, sf_dir):
-        # Arrow/BLAS scale path: per-list cogrouped GEMM, same results
-        return S.knn_join_gemm(
+        # the bench's name for the batch KNN join (per-list cogrouped BLAS
+        # GEMM); same function and oracle as ann_knn_join
+        return S.knn_join(
             _emb(spark, sf_dir), k=3, n_lists=8, n_probe=8
         ).orderBy("qid", "nid")
     q["ann_knn_join_gemm"] = ann_knn_join_gemm
@@ -1448,17 +1448,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # (tools/check_oracles.py), so rotation only changes which subset the driver
 # re-proves each round: least-recently-verified first.
 _VERIFY_FIRST = [
-    # Slot budget (window = 50): every query whose import closure reaches a
-    # module rewritten onto the shared textstats column functions
+    # Slot budget (window = 50). In: every query whose import closure
+    # reaches a module rewritten onto the shared textstats column functions
     # (operators/textstats, chunking, cleaning, gopher, decontaminate,
-    # spandedup, bpe, dedup, lm, streaming/stream), the two curate-job plans
-    # (jobs/ is outside the ledger's import graph), ann_semdedup (changed
-    # after its r5 stamp) and the 14 round-5 media queries. Rotated out: the olap_* eight, the
-    # temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
-    # udaf_geomean_chars, udf_groupmap_zscore, sql_udf_extract_text,
-    # sql_udtf_field_rows — verified green in round 5 and ledger-frozen at
-    # their r5 stamp (`tools/freshness_ledger.py check` proves it).
+    # spandedup, bpe, dedup, lm, streaming/stream) or onto the one-
+    # implementation similarity operators (operators/similarity, which now
+    # imports dedup's skew cap), the two curate-job plans (jobs/ is outside
+    # the ledger's import graph), ann_semdedup, and 7 of the 14 round-5
+    # media queries. Rotated out: the olap_* eight, the temporal_* four,
+    # extract_classic/ai_pipeline, set_ops_feed_vs_ok, udaf_geomean_chars,
+    # udf_groupmap_zscore, sql_udf_extract_text, sql_udtf_field_rows
+    # (ledger-frozen at their r5 stamp), and media_video_frame_features,
+    # media_mp4_metadata, media_audio_features, media_wav_metadata,
+    # media_mp3_metadata, media_exif_metadata, pdf_info_metadata, whose
+    # closures touch no module changed since their stamp
+    # (`tools/freshness_ledger.py check` proves both).
     # closure touched, previously off-window:
+    "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
+    "ann_ivf_topk", "ann_bucketed_near_dup", "ann_knn_join",
+    "ann_knn_join_gemm",
     "dedup_exact", "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
     "dedup_minhash_lsh_pairs_capped", "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_pruned", "dedup_simhash", "dedup_simhash_pairs",
@@ -1466,7 +1474,7 @@ _VERIFY_FIRST = [
     "text_lang_id", "text_fingerprint", "text_lm_quality",
     "text_winnow_fingerprint", "clean_canonical_url", "clean_scrub_pii",
     "clean_repetition_flags", "clean_domain_stats",
-    # closure touched, already in the round-5 window:
+    # closure touched, already in the window:
     "dedup_clusters_capped", "ann_dup_clusters", "text_bpe_token_counts",
     "shape_chunk_documents", "shape_pack_documents", "shape_pack_bpe_tokens",
     "shape_deterministic_sample", "clean_stopword_stats", "clean_line_dedup",
@@ -1477,9 +1485,7 @@ _VERIFY_FIRST = [
     # round-5 media closure:
     "media_metadata", "media_image_dimensions", "media_image_real_features",
     "media_thumbnails", "media_gif_frame_features", "media_features",
-    "media_frame_sample", "media_video_frame_features", "media_mp4_metadata",
-    "media_audio_features", "media_wav_metadata", "media_mp3_metadata",
-    "media_exif_metadata", "pdf_info_metadata",
+    "media_frame_sample",
 ]
 
 

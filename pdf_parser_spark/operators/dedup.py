@@ -20,14 +20,14 @@ from __future__ import annotations
 from typing import List, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from .textstats import _ASCII_WS, content_fingerprint, lower_tokens, ngrams
 
 __all__ = [
-    "md5_hash60", "xxhash60", "exact_dedup", "word_shingles",
+    "md5_hash60", "exact_dedup", "word_shingles",
     "minhash_signatures", "minhash_lsh_pairs", "jaccard_pairs", "simhash64",
     "simhash_dups", "connected_components", "dup_clusters",
 ]
@@ -38,14 +38,27 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def xxhash60(col: Column) -> Column:
-    """Production hash: xxhash64 (JVM-native, ~20x cheaper than md5) masked
-    to the same 60-bit domain. Use for real corpora; md5_hash60 exists so
-    the DuckDB oracle can reproduce signatures bit-for-bit."""
-    return F.xxhash64(col).bitwiseAND(F.lit((1 << 60) - 1))
+def _drop_large_groups(df: DataFrame, keys: List[str],
+                       max_size: Optional[int]) -> DataFrame:
+    """The skew cap of every candidate-pair operator: drop the rows of key
+    groups holding more than max_size rows. None = keep all (oracle mode).
 
-
-_HASH_FNS = {"md5": md5_hash60, "xxhash": xxhash60}
+    A group of M rows feeds M^2/2 pairs into the self-join on `keys` that
+    follows, so one degenerate group (every empty document shares a
+    signature) can dominate a job. The size is a window count, whose one
+    shuffle by `keys` is also the self-join's, so the cap adds no exchange
+    (a groupBy + join form shuffles the input twice more). Same rows as the
+    oracles' QUALIFY count(*) OVER (PARTITION BY keys) <= max_size.
+    semdedup's max_cluster is the one exception: it broadcasts its k
+    cluster sizes, which are few enough to live on the driver.
+    """
+    if max_size is None:
+        return df
+    return (
+        df.withColumn("_gsz", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .where(F.col("_gsz") <= max_size)
+        .drop("_gsz")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -93,16 +106,16 @@ def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n: int = 3,
-                       num_hashes: int = 8, hash_fn: str = "md5") -> DataFrame:
-    """K-permutation MinHash: sig_i = min over shingles of hash60(shingle#i).
+                       num_hashes: int = 8) -> DataFrame:
+    """K-permutation MinHash: sig_i = min over shingles of
+    md5_hash60(shingle#i).
 
     One explode + one groupBy with K min() aggregates — all JVM expressions,
     map-side combinable, exactly one shuffle.
     """
-    h = _HASH_FNS[hash_fn]
     sh = word_shingles(df, text_col, id_col, n)
     aggs = [
-        F.min(h(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"mh_{i}")
+        F.min(md5_hash60(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"mh_{i}")
         for i in range(num_hashes)
     ]
     return sh.groupBy(id_col).agg(*aggs)
@@ -110,7 +123,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       n: int = 3, num_hashes: int = 16, bands: int = 4,
-                      hash_fn: str = "md5",
                       max_bucket: Optional[int] = None) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding over MinHash signatures.
 
@@ -126,7 +138,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     aggregate) already collapses them. None = no cap (oracle-exact mode).
     """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, hash_fn)
+    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
     band_cols = []
     for b in range(bands):
         cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -138,20 +150,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
             ).alias(f"b{b}")
         )
     banded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk"))
-    banded = banded.select(id_col, "bk.band", "bk.key")
-    if max_bucket is not None:
-        # bucket-size filter as a window count: ONE shuffle of `banded` by
-        # (band, key), which is also the self-join key — vs the previous
-        # groupBy+join form that shuffled banded twice and joined (measured
-        # 28 -> fewer exchanges; same rows, the oracle's QUALIFY count)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "key")
-        banded = (
-            banded.withColumn("_bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
+    banded = _drop_large_groups(
+        banded.select(id_col, "bk.band", "bk.key"), ["band", "key"], max_bucket
+    )
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -184,11 +185,9 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     sets, so the similarity stays a true Jaccard over the pruned universe
     (the standard prefix-filtering compromise). None = exact (oracle mode).
     """
-    sh = word_shingles(df, text_col, id_col, n)
-    if max_df is not None:
-        dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        sh = sh.join(dfreq.where(F.col("_df") <= max_df), "shingle").drop("_df")
-    sh = sh.cache()
+    sh = _drop_large_groups(
+        word_shingles(df, text_col, id_col, n), ["shingle"], max_df
+    ).cache()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     l, r = sh.alias("l"), sh.alias("r")
     common = (
@@ -337,7 +336,7 @@ def simhash_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     Hamming<=3 of 64 bits agrees on at least one 16-bit block), then verify
     distance with bit_count on the xor — JVM-side.
 
-    max_block: skew cap mirroring minhash_lsh_pairs' max_bucket — a
+    max_block: the shared skew cap (_drop_large_groups) on blocks — a
     degenerate block (every empty document simhashes to 0) yields M^2/2
     verify pairs; blocks above the cap are dropped, their members being
     exact-dup material that exact_dedup already collapses. None = exact.
@@ -351,13 +350,10 @@ def simhash_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         for b in range(4)
     ])
     banded = sig.select(id_col, "simhash", F.explode(blocks).alias("bk"))
-    banded = banded.select(id_col, "simhash", "bk.blk", "bk.key")
-    if max_block is not None:
-        sizes = banded.groupBy("blk", "key").agg(F.count(F.lit(1)).alias("_bsz"))
-        banded = (
-            banded.join(sizes.where(F.col("_bsz") <= max_block), ["blk", "key"])
-            .drop("_bsz")
-        )
+    banded = _drop_large_groups(
+        banded.select(id_col, "simhash", "bk.blk", "bk.key"), ["blk", "key"],
+        max_block,
+    )
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.key") == F.col("r.key"))

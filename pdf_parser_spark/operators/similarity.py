@@ -3,28 +3,31 @@
 Baseline: brute-force cosine top-k, entirely JVM-side (zip_with + aggregate
 over double-cast arrays — no Python in the hot path, one shuffle for top-k).
 
-Scale path: random-hyperplane LSH bucketing — sign-bit sketches via a
-deterministic seeded projection (vectorized numpy Pandas UDF), candidates
-meet only inside buckets. At 100 TB the bucket join replaces the full cross
-product; recall is tested against the brute-force baseline in pytest.
+Scale paths: coordinate-sign LSH buckets (a pure JVM expression the DuckDB
+oracles recompute exactly), so candidates meet only inside a bucket; and an
+IVF index (seeded numpy k-means) whose probe lists prune top-k search and
+the batch KNN join, which scores each list pair as one BLAS matrix
+multiply. At 100 TB the bucket or list equi-join replaces the full cross
+product; the approximate modes' recall is tested against the exact forms
+in pytest.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from .dedup import _drop_large_groups
+
 __all__ = [
     "cosine", "dot", "l2_norm", "brute_force_topk", "embedding_near_dup_pairs",
-    "coordinate_sign_bucket", "bucketed_near_dup_pairs",
-    "lsh_bucketed_topk", "hyperplane_bucket_udf",
+    "coordinate_sign_bucket", "bucketed_near_dup_pairs", "lsh_bucketed_topk",
     "ivf_train_centroids", "ivf_assign", "ivf_topk", "knn_join",
-    "knn_join_gemm",
 ]
 
 
@@ -49,10 +52,10 @@ def dot(a: Column, b: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity of two array columns, computed in double.
 
-    For pairwise joins prefer precomputing l2_norm() once per SIDE and
-    dividing dot() by the product: this form re-aggregates both norms per
-    PAIR (3 array folds instead of 1), which triples the work of an
-    n^2-pair scoring join (see knn_join).
+    Re-folds both norms on every call (3 array folds per pair): the price
+    of one JVM expression the SQL oracles mirror. knn_join instead
+    normalizes each side once and scores a whole list pair as one matrix
+    multiply.
     """
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
@@ -145,17 +148,16 @@ def bucketed_near_dup_pairs(
     that's a ~2^n_planes-fold pruning for near-uniform data. True near-dups
     (cosine ~1) collide with probability (1 - theta/pi)^n_planes, so recall
     stays high for the thresholds dedup cares about (tested vs the exact
-    form). max_bucket mirrors minhash_lsh_pairs' skew cap: degenerate
-    buckets (e.g. all-zero embeddings) are dropped rather than exploded.
+    form). max_bucket is the shared skew cap (dedup._drop_large_groups):
+    degenerate buckets (e.g. all-zero embeddings) are dropped rather than
+    exploded.
     """
     b = embeddings.select(
         F.col(id_col),
         F.col(vec_col),
         coordinate_sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
     )
-    if max_bucket is not None:
-        sizes = b.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_bsz"))
-        b = b.join(sizes.where(F.col("_bsz") <= max_bucket), "_bucket").drop("_bsz")
+    b = _drop_large_groups(b, ["_bucket"], max_bucket)
     l = b.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "_bucket"
     )
@@ -171,27 +173,6 @@ def bucketed_near_dup_pairs(
         )
         .where(F.col("score") >= threshold)
     )
-
-
-def hyperplane_bucket_udf(dim: int, n_planes: int = 12, seed: int = 7):
-    """Vectorized sign-sketch bucketing: bucket = bits of sign(R @ v).
-
-    R is a deterministic seeded Gaussian matrix generated once per worker
-    (closure), so every executor buckets identically.
-    """
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-    @F.pandas_udf(IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        bits = (mat @ planes.T) > 0
-        keys = np.zeros(len(vecs), dtype=np.int64)
-        for b in range(n_planes):
-            keys |= bits[:, b].astype(np.int64) << b
-        return pd.Series(keys.astype(np.int32))
-
-    return bucket
 
 
 def ivf_train_centroids(
@@ -262,7 +243,7 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: probe only the n_probe lists nearest the query.
 
-    The scale path beyond hyperplane LSH: with a partitioned/bucketed layout
+    The scale path beyond LSH buckets: with a partitioned/bucketed layout
     on `_ivf_list`, the probe is partition pruning — a 10^12-vector search
     touches n_probe/n_lists of the data and nothing else. Recall vs the
     brute-force baseline is asserted in tests.
@@ -303,83 +284,16 @@ def knn_join(
 
     The all-rows upgrade of ivf_topk (a training pipeline needs
     every-document-vs-index, not one query vector): each query row explodes
-    to its n_probe nearest lists and equi-joins the list-assigned corpus, so
-    the candidate set per query is n_probe/n_lists of the data — with a
-    layout bucketed by _ivf_list the join is co-located and the probe is
-    partition pruning. n_probe == n_lists is the exhaustive (oracle-exact)
-    mode; production sets n_probe << n_lists. Ranking is one
-    row_number window per query id over (rounded score desc, id asc) —
-    deterministic across engines. Returns (qid, nid, score).
-    """
-    cent = ivf_train_centroids(
-        embeddings, n_lists, vec_col, seed=seed, id_col=id_col
-    )
-    # norms are computed ONCE per row on each side; the per-pair work is a
-    # single dot-product fold (cosine() inline would re-fold both norms for
-    # every one of the n*candidates pairs — measured 2-3x slower)
-    assigned = ivf_assign(embeddings, cent, vec_col).withColumn(
-        "_n_norm", l2_norm(F.col(vec_col))
-    )
-    centm = np.ascontiguousarray(cent, dtype=np.float64)
-    n_probe = min(n_probe, len(centm))
-
-    @F.pandas_udf("array<int>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(mat @ centm.T), axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    q = embeddings.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_q_norm"),
-        F.explode(probes(F.col(vec_col))).alias("_probe"),
-    )
-    scored = (
-        q.join(assigned, q["_probe"] == assigned["_ivf_list"])
-        .where(F.col("qid") != F.col(id_col))
-        .select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            F.round(
-                dot(F.col(vec_col), F.col("_qv"))
-                / (F.col("_n_norm") * F.col("_q_norm")),
-                6,
-            ).alias("score"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def knn_join_gemm(
-    embeddings: DataFrame,
-    k: int = 3,
-    n_lists: int = 8,
-    n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """Arrow/BLAS implementation of knn_join: per-list cogrouped GEMM.
-
-    Same contract and (up to float64 rounding) same results as knn_join,
-    but each (probe-list x inverted-list) pair is scored as ONE numpy
-    matrix multiply inside a cogrouped applyInPandas instead of millions of
-    per-pair JVM array folds — the shape that wins once lists hold 10^4+
-    vectors (BLAS does the dim-loop at memory bandwidth). Each list emits
-    only its local top-k per query, so the global ranking window sees
-    n_probe*k candidates per query, not the whole probed corpus. Measured
-    ~4x faster than the JVM fold at sf0.1 exhaustive mode; the gap widens
-    with list size. knn_join remains the oracle-exact reference (identical
-    sequential summation order to the SQL oracle).
+    to its n_probe nearest lists, and each (probe list x inverted list) pair
+    is scored as ONE numpy matrix multiply inside a cogrouped
+    applyInPandas, so BLAS does the dim-loop at memory bandwidth instead of
+    one JVM array fold per pair. Each list emits only its local top-k per
+    query, so the global ranking window sees n_probe*k candidates per
+    query, not the whole probed corpus. n_probe == n_lists is the
+    exhaustive mode the SQL oracle checks; production sets
+    n_probe << n_lists. Ranking is (score rounded to 6 places desc, id asc)
+    in both the local cut and the window, so ties break the same way in
+    every engine. Returns (qid, nid, score).
     """
     cent = ivf_train_centroids(
         embeddings, n_lists, vec_col, seed=seed, id_col=id_col
@@ -416,7 +330,7 @@ def knn_join_gemm(
         S[qids[:, None] == nids[None, :]] = -np.inf  # mask self-matches
         kk = min(k, S.shape[1])
         # local top-k on ROUNDED scores with nid-ascending tiebreak — the
-        # same total order as knn_join's window and the SQL oracle. An
+        # same total order as the ranking window below and the SQL oracle. An
         # unrounded argpartition cut can pick a different member of a tie
         # group straddling the local-k boundary (duplicate/near-dup vectors
         # are exactly this operator's target data) and diverge globally.
@@ -441,8 +355,6 @@ def knn_join_gemm(
             "qid long, nid long, score double",
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
     return (
         candidates.withColumn("_rn", F.row_number().over(w))
@@ -457,32 +369,18 @@ def lsh_bucketed_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: Optional[int] = None,
     n_planes: int = 8,
-    seed: int = 7,
-    bucket_fn: str = "hyperplane",
 ) -> DataFrame:
-    """ANN top-k: score only vectors in the query's LSH bucket.
+    """ANN top-k: score only vectors in the query's coordinate-sign bucket.
 
-    The scale path for brute_force_topk: the bucket equi-join prunes the
-    candidate set ~2^n_planes-fold before any cosine is computed. Recall vs
-    the brute-force baseline is asserted in tests (same bucket => high-cosine
-    vectors collide with high probability).
-
-    bucket_fn: 'hyperplane' = seeded Gaussian projections (numpy pandas
-    UDF); 'coordinate' = coordinate_sign_bucket — JVM-only and exactly
-    reproducible in the DuckDB oracle.
+    The scale path for brute_force_topk: the bucket filter prunes the
+    candidate set ~2^n_planes-fold before any cosine is computed. The
+    bucket is coordinate_sign_bucket, a JVM expression the DuckDB oracle
+    recomputes, so the approximate result itself is value-checked.
     """
-    if bucket_fn == "coordinate":
-        bucketed = embeddings.withColumn(
-            "_bucket", coordinate_sign_bucket(F.col(vec_col), n_planes)
-        )
-    else:
-        if dim is None:
-            first = embeddings.select(F.size(F.col(vec_col))).first()
-            dim = int(first[0])
-        bucket = hyperplane_bucket_udf(dim, n_planes, seed)
-        bucketed = embeddings.withColumn("_bucket", bucket(F.col(vec_col)))
+    bucketed = embeddings.withColumn(
+        "_bucket", coordinate_sign_bucket(F.col(vec_col), n_planes)
+    )
     q = bucketed.where(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("_query_vec"), F.col("_bucket").alias("_qb")
     )

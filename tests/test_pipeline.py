@@ -142,17 +142,24 @@ class TestDeterminism:
     def test_partitioning_invariance(self, spark, corpus_001):
         """Same corpus at different partition counts -> identical output."""
         pages = load_pages(spark, corpus_001)
-        a = extract_pipeline(pages, num_partitions=2).drop("extracted_at")
-        b = extract_pipeline(pages, num_partitions=16).drop("extracted_at")
+        a = extract_pipeline(pages, repartition_partitions=2).drop("extracted_at")
+        b = extract_pipeline(pages, repartition_partitions=16).drop("extracted_at")
         a_rows = sorted(a.collect(), key=lambda r: r.url)
         b_rows = sorted(b.collect(), key=lambda r: r.url)
         assert a_rows == b_rows
 
     def test_mega_threshold_invariance(self, spark, corpus_001):
         """Skew routing must not change results, only placement."""
+        # the mega/small split only runs inside the explicit repartition:
+        # threshold 1 routes every row through the mega branch, 1 << 30
+        # every row through the url-hash branch
         pages = load_pages(spark, corpus_001).limit(60)
-        a = extract_pipeline(pages, mega_threshold=1).drop("extracted_at")
-        b = extract_pipeline(pages, mega_threshold=1 << 30).drop("extracted_at")
+        a = extract_pipeline(
+            pages, repartition_partitions=4, mega_threshold=1
+        ).drop("extracted_at")
+        b = extract_pipeline(
+            pages, repartition_partitions=4, mega_threshold=1 << 30
+        ).drop("extracted_at")
         assert sorted(a.collect(), key=lambda r: r.url) == sorted(
             b.collect(), key=lambda r: r.url
         )
