@@ -1451,14 +1451,17 @@ _VERIFY_FIRST = [
     # Slot budget (window = 50). In: every query whose import closure
     # reaches a module rewritten onto the shared textstats column functions
     # (operators/textstats, chunking, cleaning, gopher, decontaminate,
-    # spandedup, bpe, dedup, lm, streaming/stream) or onto the one-
-    # implementation similarity operators (operators/similarity, which now
-    # imports dedup's skew cap), the two curate-job plans (jobs/ is outside
-    # the ledger's import graph), ann_semdedup, and 7 of the 14 round-5
-    # media queries. Rotated out: the olap_* eight, the temporal_* four,
-    # extract_classic/ai_pipeline, set_ops_feed_vs_ok, udaf_geomean_chars,
-    # udf_groupmap_zscore, sql_udf_extract_text, sql_udtf_field_rows
-    # (ledger-frozen at their r5 stamp), and media_video_frame_features,
+    # spandedup, bpe, dedup, lm, streaming/stream) or onto the one
+    # candidate-pair join and query top-k (operators/dedup, similarity,
+    # semdedup), the two curate-job plans (jobs/ is outside the ledger's
+    # import graph), ann_semdedup, s2_warc_source and s2_warc_datasource
+    # (their closure holds sources/warc.py; last verified round 4), and 5
+    # of the 14 round-5 media queries. Rotated out: the olap_* eight, the
+    # temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
+    # udaf_geomean_chars, udf_groupmap_zscore, sql_udf_extract_text,
+    # sql_udtf_field_rows (ledger-frozen at their r5 stamp), and
+    # media_thumbnails, media_gif_frame_features (verified round 5; nothing
+    # in their closure changed since), media_video_frame_features,
     # media_mp4_metadata, media_audio_features, media_wav_metadata,
     # media_mp3_metadata, media_exif_metadata, pdf_info_metadata, whose
     # closures touch no module changed since their stamp
@@ -1482,10 +1485,11 @@ _VERIFY_FIRST = [
     "dedup_span_coverage", "pipeline_training_mix",
     # the curate job's plan, and semdedup:
     "pipeline_extract_dedup_chunk", "pipeline_curate_end2end", "ann_semdedup",
+    # WARC readers (sources/warc.py changed):
+    "s2_warc_source", "s2_warc_datasource",
     # round-5 media closure:
     "media_metadata", "media_image_dimensions", "media_image_real_features",
-    "media_thumbnails", "media_gif_frame_features", "media_features",
-    "media_frame_sample",
+    "media_features", "media_frame_sample",
 ]
 
 

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _ASCII_WS, lower_tokens
+from .textstats import _py_lower_tokens, lower_tokens
 
 __all__ = ["word_frequencies", "bpe_train", "bpe_encode", "bpe_token_counts"]
 
@@ -134,9 +134,7 @@ def bpe_encode(
         out = []
         for t in texts:
             toks: List[str] = []
-            for w in _ASCII_WS.split(("" if t is None else str(t)).lower()):
-                if not w:
-                    continue
+            for w in _py_lower_tokens(t):
                 got = cache.get(w)
                 if got is None:
                     got = cache[w] = _encode_word(w, ranks)

@@ -10,11 +10,11 @@ Spark-first design for 100 TB: the benchmark side is small by definition
 n-gram set is **broadcast** — the big side never shuffles for the join;
 the only exchange is the per-document hit count keyed by ``doc_id``, and
 even that carries just (doc_id, gram-hit) pairs for the tiny fraction of
-rows with any overlap. N-grams are built with pure array expressions
-(split / transform / sequence / concat_ws — whole-stage codegen, no
-Python). At extreme scale the exact broadcast set swaps for a bloom
-filter built from the same grams; the exact form here IS the oracle-able
-semantics.
+rows with any overlap. N-grams are dedup.word_shingles, built with pure
+array expressions (split / transform / sequence / concat_ws — whole-stage
+codegen, no Python). At extreme scale the exact broadcast set swaps for a
+bloom filter built from the same grams; the exact form here IS the
+oracle-able semantics.
 
 Reference parity: no counterpart in the reference app — part of the
 beyond-reference training-data-pipeline surface (SURVEY.md §2).
@@ -24,28 +24,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .textstats import lower_tokens, ngrams
+from .dedup import word_shingles
 
 __all__ = ["ngram_set", "decontaminate"]
 
 
-def _grams(df: DataFrame, n: int, text_col: str, *keep: str) -> DataFrame:
-    """(*keep, gram): each row's distinct word n-grams, tokens projected
-    first. The explode takes the n-gram expression itself: exploding a
-    projected array column makes Catalyst infer a size() filter and push it
-    below the projections, inlining the split back into the lambda."""
-    return (
-        df.select(*keep, lower_tokens(F.col(text_col)).alias("_toks"))
-        .select(
-            *keep,
-            F.explode(F.array_distinct(ngrams(F.col("_toks"), n))).alias("gram"),
-        )
-    )
-
-
 def ngram_set(df: DataFrame, n: int = 8, text_col: str = "text") -> DataFrame:
     """Distinct word n-grams (space-joined, lowercased) of every row."""
-    return _grams(df, n, text_col).distinct()
+    return (
+        word_shingles(df, text_col, None, n)
+        .select(F.col("shingle").alias("gram"))
+        .distinct()
+    )
 
 
 def decontaminate(
@@ -64,7 +54,8 @@ def decontaminate(
     """
     bench = F.broadcast(ngram_set(benchmark, n=n, text_col=text_col))
     hits = (
-        _grams(docs, n, text_col, id_col).join(bench, "gram")
+        word_shingles(docs, text_col, id_col, n)
+        .join(bench, F.col("shingle") == F.col("gram"))
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
     )

@@ -17,14 +17,14 @@ driver's value-hash oracle can check MinHash signatures exactly.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from .textstats import _ASCII_WS, content_fingerprint, lower_tokens, ngrams
+from .textstats import _py_lower_tokens, content_fingerprint, lower_tokens, ngrams
 
 __all__ = [
     "md5_hash60", "exact_dedup", "word_shingles",
@@ -49,8 +49,6 @@ def _drop_large_groups(df: DataFrame, keys: List[str],
     shuffle by `keys` is also the self-join's, so the cap adds no exchange
     (a groupBy + join form shuffles the input twice more). Same rows as the
     oracles' QUALIFY count(*) OVER (PARTITION BY keys) <= max_size.
-    semdedup's max_cluster is the one exception: it broadcasts its k
-    cluster sizes, which are few enough to live on the driver.
     """
     if max_size is None:
         return df
@@ -58,6 +56,31 @@ def _drop_large_groups(df: DataFrame, keys: List[str],
         df.withColumn("_gsz", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
         .where(F.col("_gsz") <= max_size)
         .drop("_gsz")
+    )
+
+
+def _key_pairs(df: DataFrame, keys: List[str], id_col: str,
+               carry: Sequence[str] = (),
+               max_size: Optional[int] = None) -> DataFrame:
+    """The one candidate-pair join of every near-duplicate operator.
+
+    Drops key groups above max_size (_drop_large_groups), then self-joins
+    the rows on `keys` with id_a < id_b. Returns (id_a, id_b) plus each
+    side's `carry` columns suffixed _a / _b; the caller keeps only its own
+    verify step (band distinct, Hamming test, shared-shingle count, cosine).
+    A pair sharing several keys appears once per shared key.
+    """
+    df = _drop_large_groups(df, keys, max_size)
+
+    def side(sfx: str) -> DataFrame:
+        return df.select(*keys, F.col(id_col).alias(f"id{sfx}"),
+                         *[F.col(c).alias(f"{c}{sfx}") for c in carry])
+
+    left, right = side("_a"), side("_b")
+    return (
+        left.join(right, keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}{x}" for x in ("_a", "_b") for c in carry])
     )
 
 
@@ -87,18 +110,23 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # Shingling + MinHash + LSH
 # --------------------------------------------------------------------------
 
-def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document, as (id, shingle) rows.
+def word_shingles(df: DataFrame, text_col: str = "text",
+                  id_col: Optional[str] = "doc_id", n: int = 3) -> DataFrame:
+    """Distinct word n-gram shingles per document, as (id, shingle) rows;
+    id_col=None gives bare (shingle) rows, for frames without an id.
 
     Pure JVM: lowercase tokens projected once, then textstats.ngrams
     (sequence -> transform(slice+concat_ws)) -> explode. Documents with
-    fewer than n tokens yield NO shingles.
+    fewer than n tokens yield NO shingles. The explode takes the n-gram
+    expression itself: exploding a projected array column makes Catalyst
+    infer a size() filter and push it below the projections, inlining the
+    split back into the lambda.
     """
+    keep = [id_col] if id_col else []
     return (
-        df.select(F.col(id_col), lower_tokens(F.col(text_col)).alias("_toks"))
+        df.select(*keep, lower_tokens(F.col(text_col)).alias("_toks"))
         .select(
-            id_col,
+            *keep,
             F.explode(F.array_distinct(ngrams(F.col("_toks"), n))).alias("shingle"),
         )
     )
@@ -150,22 +178,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
             ).alias(f"b{b}")
         )
     banded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk"))
-    banded = _drop_large_groups(
-        banded.select(id_col, "bk.band", "bk.key"), ["band", "key"], max_bucket
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
+        _key_pairs(banded.select(id_col, "bk.band", "bk.key"), ["band", "key"],
+                   id_col, max_size=max_bucket)
         .distinct()
     )
 
@@ -189,11 +204,9 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         word_shingles(df, text_col, id_col, n), ["shingle"], max_df
     ).cache()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    l, r = sh.alias("l"), sh.alias("r")
     common = (
-        l.join(r, (F.col("l.shingle") == F.col("r.shingle"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        _key_pairs(sh, ["shingle"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
@@ -301,10 +314,7 @@ def _simhash64_udf(texts: pd.Series) -> pd.Series:
     shifts = np.arange(64, dtype=np.uint64)
     out = []
     for t in texts:
-        # ASCII-whitespace split, matching the JVM ops' \s+ (Java and RE2
-        # \s are ASCII); str.split() would also break on U+00A0 etc.,
-        # silently diverging from every SQL engine on NBSP-laden web text
-        toks = set(x for x in _ASCII_WS.split(("" if t is None else str(t)).lower()) if x)
+        toks = set(_py_lower_tokens(t))
         if not toks:
             out.append(0)
             continue
@@ -350,20 +360,13 @@ def simhash_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         for b in range(4)
     ])
     banded = sig.select(id_col, "simhash", F.explode(blocks).alias("bk"))
-    banded = _drop_large_groups(
-        banded.select(id_col, "simhash", "bk.blk", "bk.key"), ["blk", "key"],
-        max_block,
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    pairs = (
-        l.join(r, (F.col("l.blk") == F.col("r.blk")) & (F.col("l.key") == F.col("r.key"))
-               & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+    return (
+        _key_pairs(banded.select(id_col, "simhash", "bk.blk", "bk.key"),
+                   ["blk", "key"], id_col, carry=["simhash"], max_size=max_block)
         .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
+            "id_a", "id_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return pairs

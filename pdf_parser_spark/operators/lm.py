@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import _ASCII_WS, ngrams, normalized
+from .textstats import _py_lower_tokens, ngrams, normalized
 
 __all__ = ["train_char_trigram_lm", "lm_bits_per_char", "lm_quality_flags"]
 
@@ -75,8 +75,7 @@ def lm_bits_per_char(
     def score(texts):
         out = []
         for t in texts:
-            # ASCII-whitespace normalization, matching textstats.normalized's \s+
-            s = " ".join(x for x in _ASCII_WS.split(("" if t is None else str(t)).lower()) if x)
+            s = " ".join(_py_lower_tokens(t))  # textstats.normalized's form
             if not s:
                 out.append(None)
                 continue

@@ -41,6 +41,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from .dedup import _key_pairs
+
 __all__ = ["quantize", "kmeans_assign", "semdedup"]
 
 
@@ -147,8 +149,9 @@ def semdedup(
     ``max_cluster`` is the skew guard (the `max_bucket` of this family):
     the pairwise step SKIPS clusters larger than the cap (their members
     keep), bounding the quadratic cost when a degenerate corpus collapses
-    into one cluster. Cluster sizes are k driver-scale rows — the guard
-    join broadcasts.
+    into one cluster. It is the shared cap of the pair join
+    (dedup._key_pairs): a window count by ``cluster`` that reuses the
+    join's shuffle.
     """
     p, q = threshold
     assigned = kmeans_assign(
@@ -162,39 +165,22 @@ def semdedup(
             F.lit(0).cast("long"), lambda acc, v: acc + v,
         ).alias("norm2"),
     )
-    m = assigned.join(qdf, id_col)
-    if max_cluster is not None:
-        sizes = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("_csz"))
-        m = (
-            m.join(F.broadcast(sizes), "cluster")
-            .where(F.col("_csz") <= max_cluster)
-            .drop("_csz")
-        )
-    a = m.select(
-        F.col(id_col).alias("id_a"), F.col("cluster"),
-        F.col("q").alias("q_a"), F.col("norm2").alias("n_a"),
-    )
-    b = m.select(
-        F.col(id_col).alias("id_b"), F.col("cluster"),
-        F.col("q").alias("q_b"), F.col("norm2").alias("n_b"),
-    )
+    pairs = _key_pairs(assigned.join(qdf, id_col), ["cluster"], id_col,
+                       carry=["q", "norm2"], max_size=max_cluster)
     dot = F.aggregate(
         F.zip_with("q_a", "q_b", lambda x, y: x * y),
         F.lit(0).cast("long"), lambda acc, v: acc + v,
     )
     dec = "decimal(38,0)"
     near = (
-        a.join(b, ["cluster"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("dot", dot)
+        pairs.withColumn("dot", dot)
         .where(
             (F.col("dot") > 0)
             & (
                 F.lit(q * q).cast(dec) * F.col("dot").cast(dec)
                 * F.col("dot").cast(dec)
-                > F.lit(p * p).cast(dec) * F.col("n_a").cast(dec)
-                * F.col("n_b").cast(dec)
+                > F.lit(p * p).cast(dec) * F.col("norm2_a").cast(dec)
+                * F.col("norm2_b").cast(dec)
             )
         )
         .select(F.col("id_b").alias(id_col))

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from .dedup import _drop_large_groups
+from .dedup import _key_pairs
 
 __all__ = [
     "cosine", "dot", "l2_norm", "brute_force_topk", "embedding_near_dup_pairs",
@@ -60,6 +60,41 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def _unit_rows(vecs) -> np.ndarray:
+    """Stack vectors as float64 matrix rows, each L2-normalized (an all-zero
+    row stays zero)."""
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    return mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+
+
+def _query_topk(rows: DataFrame, query_id: int, k: int, id_col: str,
+                vec_col: str, candidate: Optional[Column] = None) -> DataFrame:
+    """Top-k rows by cosine to the stored row query_id, which is excluded.
+
+    The query row is broadcast (crossJoin with a 1-row broadcast side), so
+    the scan stays embarrassingly parallel; the only shuffle is the top-k.
+    Its columns arrive suffixed _q, so `candidate` (the caller's predicate:
+    the IVF probe lists, the query's bucket) can compare against them.
+    Order: score rounded to 6 places desc, then id asc.
+    """
+    q = rows.where(F.col(id_col) == query_id).select(
+        *[F.col(c).alias(f"{c}_q") for c in rows.columns]
+    )
+    keep = F.col(id_col) != query_id
+    if candidate is not None:
+        keep = keep & candidate
+    return (
+        rows.crossJoin(F.broadcast(q))
+        .where(keep)
+        .select(
+            F.col(id_col),
+            F.round(cosine(F.col(vec_col), F.col(f"{vec_col}_q")), 6).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query_id: int = 0,
@@ -67,23 +102,8 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k nearest neighbours of one stored vector, by cosine.
-
-    The query row is broadcast (crossJoin with a 1-row broadcast side), so
-    the scan stays embarrassingly parallel; the only shuffle is the top-k.
-    """
-    q = embeddings.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_query_vec")
-    )
-    scored = (
-        embeddings.where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_query_vec")), 6).alias("score"),
-        )
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+    """Top-k nearest neighbours of one stored vector, by cosine (exact)."""
+    return _query_topk(embeddings, query_id, k, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(
@@ -157,19 +177,13 @@ def bucketed_near_dup_pairs(
         F.col(vec_col),
         coordinate_sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
     )
-    b = _drop_large_groups(b, ["_bucket"], max_bucket)
-    l = b.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "_bucket"
-    )
-    r = b.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "_bucket"
-    )
     return (
-        l.join(r, ["_bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _key_pairs(b, ["_bucket"], id_col, carry=[vec_col], max_size=max_bucket)
         .select(
             "id_a", "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("score"),
+            F.round(
+                cosine(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")), 6
+            ).alias("score"),
         )
         .where(F.col("score") >= threshold)
     )
@@ -194,13 +208,10 @@ def ivf_train_centroids(
     top-k, not a full sort): limit() without an order is partition-layout
     dependent, which would make "deterministic" false across cluster sizes.
     """
-    sample = [
-        np.asarray(r[0], dtype=np.float64)
-        for r in embeddings.select(vec_col, id_col)
+    mat = _unit_rows(
+        r[0] for r in embeddings.select(vec_col, id_col)
         .orderBy(id_col).limit(sample_rows).select(vec_col).collect()
-    ]
-    mat = np.stack(sample)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    )
     rng = np.random.RandomState(seed)
     cent = mat[rng.choice(len(mat), size=min(n_lists, len(mat)), replace=False)]
     for _ in range(iters):
@@ -224,9 +235,7 @@ def ivf_assign(
 
     @F.pandas_udf(IntegerType())
     def nearest(vecs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(mat @ cent.T, axis=1).astype(np.int32))
+        return pd.Series(np.argmax(_unit_rows(vecs) @ cent.T, axis=1).astype(np.int32))
 
     return embeddings.withColumn("_ivf_list", nearest(F.col(vec_col)))
 
@@ -250,25 +259,12 @@ def ivf_topk(
     """
     cent = ivf_train_centroids(embeddings, n_lists, vec_col, seed=seed)
     assigned = ivf_assign(embeddings, cent, vec_col)
-    qvec = np.asarray(
-        embeddings.where(F.col(id_col) == query_id).select(vec_col).first()[0],
-        dtype=np.float64,
-    )
-    qn = qvec / np.maximum(np.linalg.norm(qvec), 1e-12)
+    qn = _unit_rows(
+        [embeddings.where(F.col(id_col) == query_id).select(vec_col).first()[0]]
+    )[0]
     probe = np.argsort(-(cent @ qn))[:n_probe].tolist()
-    q = embeddings.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_query_vec")
-    )
-    return (
-        assigned.where(F.col("_ivf_list").isin(probe) & (F.col(id_col) != query_id))
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_query_vec")), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _query_topk(assigned, query_id, k, id_col, vec_col,
+                       F.col("_ivf_list").isin(probe))
 
 
 def knn_join(
@@ -304,9 +300,7 @@ def knn_join(
 
     @F.pandas_udf("array<int>")
     def probes(vecs: pd.Series) -> pd.Series:
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(mat @ centm.T), axis=1)[:, :n_probe]
+        order = np.argsort(-(_unit_rows(vecs) @ centm.T), axis=1)[:, :n_probe]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
     q = embeddings.select(
@@ -320,11 +314,7 @@ def knn_join(
             return pd.DataFrame({"qid": [], "nid": [], "score": []}).astype(
                 {"qid": "int64", "nid": "int64", "score": "float64"}
             )
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in left["_qv"]])
-        C = np.stack([np.asarray(v, dtype=np.float64) for v in right[vec_col]])
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        S = Qn @ Cn.T
+        S = _unit_rows(left["_qv"]) @ _unit_rows(right[vec_col]).T
         qids = left["qid"].to_numpy()
         nids = right[id_col].to_numpy()
         S[qids[:, None] == nids[None, :]] = -np.inf  # mask self-matches
@@ -381,16 +371,5 @@ def lsh_bucketed_topk(
     bucketed = embeddings.withColumn(
         "_bucket", coordinate_sign_bucket(F.col(vec_col), n_planes)
     )
-    q = bucketed.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("_query_vec"), F.col("_bucket").alias("_qb")
-    )
-    return (
-        bucketed.crossJoin(F.broadcast(q))
-        .where((F.col("_bucket") == F.col("_qb")) & (F.col(id_col) != query_id))
-        .select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("_query_vec")), 6).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _query_topk(bucketed, query_id, k, id_col, vec_col,
+                       F.col("_bucket") == F.col("_bucket_q"))

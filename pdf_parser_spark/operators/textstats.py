@@ -45,6 +45,12 @@ def lower_tokens(col: Column) -> Column:
     return tokens(F.lower(col))
 
 
+def _py_lower_tokens(t) -> List[str]:
+    """lower_tokens() for the Python-side kernels: ASCII-whitespace split
+    (see _ASCII_WS) of the lowercased text, empties dropped; None -> []."""
+    return [x for x in _ASCII_WS.split(("" if t is None else str(t)).lower()) if x]
+
+
 def normalized(col: Column) -> Column:
     """Whitespace-collapsed, trimmed, lowercased text (shared normal form)."""
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
@@ -177,8 +183,7 @@ def winnow_fingerprint(
         base_pow = base ** np.uint64(k - 1)
         out = []
         for t in texts:
-            # ASCII-whitespace normalization (see dedup._simhash64_udf note)
-            s = " ".join(x for x in _ASCII_WS.split(("" if t is None else str(t)).lower()) if x)
+            s = " ".join(_py_lower_tokens(t))
             if len(s) < k:
                 out.append([])
                 continue

@@ -84,7 +84,8 @@ def _parse_warc_date(s: Optional[str]) -> Optional[datetime]:
             .astimezone(timezone.utc)
             .replace(tzinfo=None)
         )
-    except ValueError:
+    except (ValueError, OverflowError):
+        # malformed, or out of range once shifted to UTC (year 1 at +05:00)
         return None
 
 
@@ -103,10 +104,15 @@ def parse_warc_bytes(
     """Parse one WARC archive into (url, timestamp, document_bytes) tuples.
 
     Malformed records are skipped (never raise): the per-file parse keeps
-    going from the next well-formed record boundary it can find.
+    going from the next well-formed record boundary it can find. A record
+    whose WARC-Date does not parse keeps a NULL timestamp; an archive whose
+    gzip stream does not inflate yields no records.
     """
     if data[:2] == b"\x1f\x8b":
-        data = _gunzip_members(data)
+        try:
+            data = _gunzip_members(data)
+        except zlib.error:
+            return []
     out: List[Tuple[Optional[str], Optional[datetime], bytes]] = []
     pos = 0
     n = len(data)
@@ -120,6 +126,8 @@ def parse_warc_bytes(
         headers = _parse_headers(data[start:head_end])
         try:
             length = int(headers.get("content-length", ""))
+            if length < 0:
+                raise ValueError(length)  # would step the scan backwards
         except ValueError:
             pos = head_end + 4
             continue
@@ -145,17 +153,14 @@ def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows: dict = {"url": [], "warc_ts": [], "html": [], "text": [], "lang": []}
         for path, content in zip(pdf["path"], pdf["content"]):
-            try:
-                records = parse_warc_bytes(bytes(content))
-            except Exception:
-                records = []  # unreadable archive: contributes zero rows
-            for url, ts, doc in records:
+            for url, ts, doc in parse_warc_bytes(bytes(content)):
                 rows["url"].append(url if url else str(path))
                 rows["warc_ts"].append(ts)
                 rows["html"].append(doc)
                 rows["text"].append("")
                 rows["lang"].append(None)
-        yield pd.DataFrame(rows)
+        if rows["url"]:  # an empty frame's columns are float64, not the schema's
+            yield pd.DataFrame(rows)
 
 
 def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:

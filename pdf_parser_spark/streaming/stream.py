@@ -3,9 +3,9 @@
 The reference is a bounded interactive app (SURVEY.md §2.9) and the batch
 job's resume story is snapshot-based; this module is the incremental-feed
 variant the north star anticipates ("if the corpus were fed incrementally").
-The SAME kernel runs unchanged: mapInPandas is stateless, so the streaming
-plan is identical to the batch plan with a file (or Iceberg/Kafka) stream
-source in front.
+The SAME plan runs unchanged: pipeline.extract_pipeline is stateless
+(mapInPandas), so the streaming jobs call the batch plan builder with a file
+(or Iceberg/Kafka) stream source in front.
 
 Semantics at scale:
   * exactly-once via the checkpoint: file-source offsets + sink commit log
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.textstats import content_fingerprint
-from ..pipeline import OUTPUT_SCHEMA, extract_kernel
+from ..pipeline import extract_pipeline
 
 # schema of the pages table (a streaming source cannot infer it)
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -56,11 +56,7 @@ def stream_extract(
     stops by itself once the backlog drains).
     """
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "text", "lang")
-        .mapInPandas(extract_kernel(method), OUTPUT_SCHEMA)
-        .withColumn("extracted_at", F.current_timestamp())
-    )
+    extracted = extract_pipeline(pages, method=method)
     writer = (
         extracted.writeStream.format("parquet")
         .option("path", out_path)
@@ -168,10 +164,7 @@ def stream_status_counts(
     is the current count. In-memory sink named 'status_counts'.
     """
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "text", "lang")
-        .mapInPandas(extract_kernel(), OUTPUT_SCHEMA)
-    )
+    extracted = extract_pipeline(pages)
     counts = (
         extracted.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "status")

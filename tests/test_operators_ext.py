@@ -276,7 +276,8 @@ class TestDedupSkewGuards:
         assert set(pruned) == {(0, 1)}
         assert pruned[(0, 1)] == 1.0  # identical over the pruned universe
 
-    @pytest.mark.parametrize("op", ["minhash", "simhash", "bucketed", "jaccard"])
+    @pytest.mark.parametrize(
+        "op", ["minhash", "simhash", "bucketed", "jaccard", "semdedup"])
     def test_cap_adds_no_exchange(self, spark, op):
         # the skew cap is a window count partitioned by the self-join key,
         # so it must reuse the join's shuffle instead of adding its own
@@ -284,6 +285,7 @@ class TestDedupSkewGuards:
         # AQE and broadcast joins off: the plan is the static one.
         from pdf_parser_spark.operators import dedup as D
         from pdf_parser_spark.operators import similarity as S
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         docs = spark.createDataFrame(
             [(i, f"cap exchange probe text number {i % 3} with shared words")
@@ -301,6 +303,8 @@ class TestDedupSkewGuards:
                 emb, 0.2, n_planes=2, max_bucket=cap),
             "jaccard": lambda cap: D.jaccard_pairs(docs, threshold=0.0,
                                                    max_df=cap),
+            "semdedup": lambda cap: semdedup(emb, k=2, iters=1, dim=4,
+                                             threshold=(1, 2), max_cluster=cap),
         }[op]
 
         def exchanges(df):

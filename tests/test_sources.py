@@ -109,6 +109,24 @@ class TestParseWarcBytes:
         data = bad + _sample_warc()
         assert len(parse_warc_bytes(data)) == 2
 
+    def test_negative_content_length_skips_record(self):
+        # a negative length would move the scan back before the record
+        # and find the same record again forever
+        data = _sample_warc() + _warc_record(
+            "resource", "https://x/neg", "2024-01-01T00:00:00Z", b"x" * 64
+        ).replace(b"Content-Length: 64", b"Content-Length: -300")
+        assert len(parse_warc_bytes(data)) == 2
+
+    def test_out_of_range_date_keeps_record(self):
+        # year 1 at +05:00 is before datetime.min once shifted to UTC
+        data = _warc_record("resource", "https://x/old",
+                            "0001-01-01T00:00:00+05:00", HTML_DOC)
+        assert parse_warc_bytes(data) == [("https://x/old", None, HTML_DOC)]
+
+    def test_corrupt_gzip_yields_no_records(self):
+        gz = gzip.compress(_sample_warc())
+        assert parse_warc_bytes(gz[:10] + b"\xff" * 20 + gz[30:]) == []
+
 
 class TestSparkSources:
     def test_read_warc_to_pages_schema(self, spark, tmp_path):
@@ -208,6 +226,36 @@ class TestWarcDataSource:
             for r in read_warc(spark, wdir).collect()
         }
         assert via_ds == via_mp and len(via_ds) > 0
+
+    def test_bad_archives_read_alike_without_task_failure(self, spark, tmp_path):
+        # a bad date keeps its record with a NULL timestamp; a corrupt gzip
+        # archive contributes no rows; neither costs the other archives
+        # their rows nor fails a task, in either reader
+        from pdf_parser_spark.sources.warc import read_warc
+        from pdf_parser_spark.sources.warc_datasource import register_warc_source
+
+        (tmp_path / "good.warc").write_bytes(_sample_warc())
+        (tmp_path / "bad-date.warc").write_bytes(
+            _warc_record("resource", "https://example.org/old.html",
+                         "0001-01-01T00:00:00+05:00", HTML_DOC))
+        gz = gzip.compress(_sample_warc())
+        (tmp_path / "corrupt.warc.gz").write_bytes(
+            gz[:10] + b"\xff" * 20 + gz[30:])
+        register_warc_source(spark)
+        via_ds = sorted(
+            (r.url, r.warc_ts, bytes(r.html))
+            for r in spark.read.format("warc").load(str(tmp_path)).collect()
+        )
+        via_mp = sorted(
+            (r.url, r.warc_ts, bytes(r.html))
+            for r in read_warc(spark, str(tmp_path)).collect()
+        )
+        assert via_ds == via_mp
+        assert [(u, ts) for u, ts, _ in via_mp] == [
+            ("https://example.org/a.html", datetime(2024, 1, 2, 3, 4, 5)),
+            ("https://example.org/b.pdf", datetime(2024, 1, 3)),
+            ("https://example.org/old.html", None),
+        ]
 
     def test_one_partition_per_archive(self, spark):
         from pdf_parser_spark.corpus import ensure_corpus
