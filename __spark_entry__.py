@@ -366,25 +366,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     q["s2_warc_source"] = s2_warc_source
 
-    def s2_warc_datasource(spark, sf_dir):
-        # the same archives through the custom Spark 4 Python DataSource
-        # (spark.read.format('warc')) — one partition per archive file
-        from pdf_parser_spark.sources.warc_datasource import register_warc_source
-        from pdf_parser_spark.sources.warc_fixture import ensure_warc_fixture
-
-        wdir = ensure_warc_fixture(ensure_corpus(sf_dir))
-        register_warc_source(spark)
-        return (
-            spark.read.format("warc").load(wdir)
-            .select(
-                "url", "warc_ts",
-                F.length("html").alias("n_bytes"),
-                F.sha2(F.lower(F.hex("html")), 256).alias("payload_sha"),
-            )
-            .orderBy("url")
-        )
-    q["s2_warc_datasource"] = s2_warc_datasource
-
     # ---- F6: unknown requested fields are skipped, never errors --------------
     def f6_unknown_field_skip(spark, sf_dir):
         # reference pin: classic_extractor.py:86-88 via tests/test_extractors.py
@@ -1454,10 +1435,12 @@ _VERIFY_FIRST = [
     # spandedup, bpe, dedup, lm, streaming/stream) or onto the one
     # candidate-pair join and query top-k (operators/dedup, similarity,
     # semdedup), the two curate-job plans (jobs/ is outside the ledger's
-    # import graph), ann_semdedup, s2_warc_source and s2_warc_datasource
-    # (their closure holds sources/warc.py; last verified round 4), and 5
-    # of the 14 round-5 media queries. Rotated out: the olap_* eight, the
-    # temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
+    # import graph), ann_semdedup, s2_warc_source (its closure holds
+    # sources/warc.py; last verified round 4), f1_f2_size_filter (last
+    # verified round 3, ledger stamp b7a09fc; it takes the slot of the
+    # deleted DataSource WARC query so it does not sit out a third round),
+    # and 5 of the 14 round-5 media queries. Rotated out: the olap_* eight,
+    # the temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
     # udaf_geomean_chars, udf_groupmap_zscore, sql_udf_extract_text,
     # sql_udtf_field_rows (ledger-frozen at their r5 stamp), and
     # media_thumbnails, media_gif_frame_features (verified round 5; nothing
@@ -1485,8 +1468,8 @@ _VERIFY_FIRST = [
     "dedup_span_coverage", "pipeline_training_mix",
     # the curate job's plan, and semdedup:
     "pipeline_extract_dedup_chunk", "pipeline_curate_end2end", "ann_semdedup",
-    # WARC readers (sources/warc.py changed):
-    "s2_warc_source", "s2_warc_datasource",
+    # the WARC reader (sources/warc.py changed), and the oldest stamp:
+    "s2_warc_source", "f1_f2_size_filter",
     # round-5 media closure:
     "media_metadata", "media_image_dimensions", "media_image_real_features",
     "media_features", "media_frame_sample",
@@ -1619,7 +1602,6 @@ def oracle_sql() -> dict[str, str]:
         FROM {pages} WHERE octet_length(html) > 0
         ORDER BY url LIMIT 50
     """
-    o["s2_warc_datasource"] = o["s2_warc_source"]
     o["f6_unknown_field_skip"] = f"""
         -- python strip() also removes tab/newline: whitespace-only rows raise
         -- in the kernel -> NULL; unmatched policy would yield the empty dict

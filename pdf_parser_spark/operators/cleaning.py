@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gopher import GOPHER_STOPWORDS
-from .textstats import lower_tokens
+from .gopher import stopword_hits
+from .textstats import lines, lower_tokens, symbol_count
 
 __all__ = [
     "canonicalize_url", "host_of", "scrub_pii", "repetition_flags",
@@ -88,13 +88,18 @@ def repetition_flags(
     default-ish thresholds (tunable per corpus).
     """
     t = F.col(text_col)
-    lines = F.filter(F.split(t, r"\n"), lambda x: F.trim(x) != "")
-    n_lines = F.size(lines)
+    arrays = df.select(
+        F.col(id_col),
+        F.filter(lines(t), lambda x: F.trim(x) != "").alias("_lines"),
+        lower_tokens(t).alias("_words"),
+        symbol_count(t).alias("_n_sym"),
+    )
+    lns, words = F.col("_lines"), F.col("_words")
+    n_lines = F.size(lns)
     dup_line_frac = F.when(n_lines <= 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct(lines)) / n_lines.cast("double")
+        1.0 - F.size(F.array_distinct(lns)) / n_lines.cast("double")
     )
 
-    words = lower_tokens(t)
     n_words = F.size(words)
     # modal-word frequency in O(n log n): sort, then one linear fold
     # tracking (prev, current run, best run) — not the O(n^2)
@@ -117,12 +122,11 @@ def repetition_flags(
         folded["best"] / n_words.cast("double")
     )
 
-    n_symbols = F.size(F.regexp_extract_all(t, F.lit(r"#|\.\.\."), 0))
     symbol_ratio = F.when(n_words <= 0, F.lit(0.0)).otherwise(
-        n_symbols / n_words.cast("double")
+        F.col("_n_sym") / n_words.cast("double")
     )
 
-    return df.select(
+    return arrays.select(
         F.col(id_col),
         F.round(dup_line_frac, 6).alias("dup_line_frac"),
         F.round(top_word_frac, 6).alias("top_word_frac"),
@@ -146,18 +150,18 @@ def stopword_stats(
     token fraction as a quality signal. Token-exact matching (pure JVM
     array ops) — \\b-regex counting diverges between Unicode-aware (Java)
     and ASCII (RE2) word boundaries on non-ASCII-adjacent text."""
-    toks = lower_tokens(F.col(text_col))
-    n_tok = F.size(toks).cast("double")
-    n_stop = F.size(
-        F.filter(toks, lambda x: x.isin(*GOPHER_STOPWORDS))
-    ).cast("double")
-    kinds = None
-    for w in GOPHER_STOPWORDS:
-        hit = (F.array_contains(toks, w)).cast("int")
-        kinds = hit if kinds is None else kinds + hit
-    return df.select(
+    arrays = df.select(
+        F.col(id_col), lower_tokens(F.col(text_col)).alias("_toks")
+    ).select(
         F.col(id_col),
-        F.round(n_stop / F.greatest(n_tok, F.lit(1.0)), 6).alias("stop_frac"),
+        F.size("_toks").cast("double").alias("_n_tok"),
+        stopword_hits(F.col("_toks")).alias("_hits"),
+    )
+    n_stop = F.size("_hits").cast("double")
+    kinds = F.size(F.array_distinct("_hits"))
+    return arrays.select(
+        F.col(id_col),
+        F.round(n_stop / F.greatest("_n_tok", F.lit(1.0)), 6).alias("stop_frac"),
         kinds.alias("n_stop_kinds"),
         (kinds >= min_kinds).alias("keep"),
     )
@@ -180,14 +184,14 @@ def line_dedup(
     never whole documents, and the frequency side can be computed on a
     sample or a sketch at 10^12 docs without changing the plan shape.
     """
-    lines = df.select(
+    line_rows = df.select(
         F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(lines(F.col(text_col))).alias("pos", "line"),
     )
-    freq = lines.groupBy("line").agg(
+    freq = line_rows.groupBy("line").agg(
         F.countDistinct(id_col).alias("_df")
     )
-    kept = lines.join(freq.where(F.col("_df") <= max_doc_freq), "line")
+    kept = line_rows.join(freq.where(F.col("_df") <= max_doc_freq), "line")
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -198,7 +202,9 @@ def line_dedup(
         ).alias("text_deduped"),
         F.count(F.lit(1)).alias("n_lines_kept"),
     )
-    totals = lines.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_lines_total"))
+    totals = line_rows.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_lines_total")
+    )
     return (
         df.select(id_col)
         .join(totals, id_col, "left")

@@ -26,17 +26,23 @@ of the beyond-reference training-data-pipeline surface (SURVEY.md §2,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import tokens
+from .textstats import lines, symbol_count, tokens
 
-__all__ = ["GOPHER_STOPWORDS", "gopher_quality_gate"]
+__all__ = ["GOPHER_STOPWORDS", "stopword_hits", "gopher_quality_gate"]
 
 # the canonical Gopher stop-word list (Rae et al. 2021, A1.1: "contains at
 # least two of the following English words: the, be, to, of, and, that,
 # have, with")
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+
+
+def stopword_hits(arr: Column) -> Column:
+    """The tokens of arr that are Gopher stop words, case-insensitively.
+    Pass a projected column: arr is filtered by a lambda."""
+    return F.filter(arr, lambda x: F.lower(x).isin(GOPHER_STOPWORDS))
 
 
 def gopher_quality_gate(
@@ -61,7 +67,13 @@ def gopher_quality_gate(
     UNROUNDED values so the gate itself is exact.
     """
     t = F.col(text_col)
-    toks = tokens(t)
+    arrays = df.select(
+        id_col,
+        tokens(t).alias("_toks"),
+        lines(t).alias("_lines"),
+        symbol_count(t).alias("_n_sym"),
+    )
+    toks, lns = F.col("_toks"), F.col("_lines")
     n_words = F.size(toks)
     nz = F.greatest(n_words, F.lit(1)).cast("double")
     sum_len = F.aggregate(
@@ -70,21 +82,16 @@ def gopher_quality_gate(
     mean_word_len = sum_len.cast("double") / nz
     n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
     frac_alpha = n_alpha.cast("double") / nz
-    n_stop = F.size(
-        F.filter(toks, lambda x: F.lower(x).isin(GOPHER_STOPWORDS))
-    )
-    # same non-overlapping '#'/'...' count as cleaning.repetition_flags
-    n_symbols = F.size(F.regexp_extract_all(t, F.lit(r"#|\.\.\."), 0))
-    symbol_ratio = n_symbols.cast("double") / nz
+    n_stop = F.size(stopword_hits(toks))
+    symbol_ratio = F.col("_n_sym").cast("double") / nz
 
-    lines = F.split(t, "\n")
-    n_lines = F.size(lines)
+    n_lines = F.size(lns)
     nlz = F.greatest(n_lines, F.lit(1)).cast("double")
     n_bullet = F.size(
-        F.filter(lines, lambda l: F.ltrim(l).rlike(r"^[-*•]"))
+        F.filter(lns, lambda l: F.ltrim(l).rlike(r"^[-*•]"))
     )
     n_ellipsis = F.size(
-        F.filter(lines, lambda l: F.rtrim(l).rlike(r"(\.\.\.|…)$"))
+        F.filter(lns, lambda l: F.rtrim(l).rlike(r"(\.\.\.|…)$"))
     )
     frac_bullet = n_bullet.cast("double") / nlz
     frac_ellipsis = n_ellipsis.cast("double") / nlz
@@ -102,7 +109,7 @@ def gopher_quality_gate(
     keep = F.lit(True)
     for c in rules.values():
         keep = keep & c
-    return df.select(
+    return arrays.select(
         id_col,
         n_words.alias("n_words"),
         F.round(mean_word_len, 4).alias("mean_word_len"),

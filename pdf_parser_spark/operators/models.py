@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import pkgutil
 from typing import Dict, List, Tuple
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -19,12 +20,17 @@ BPE_PATH = os.path.join(_HERE, "frozen_bpe_sf001.json")
 __all__ = ["LM_PATH", "BPE_PATH", "load_frozen_lm", "load_frozen_bpe"]
 
 
+def _load(path: str) -> dict:
+    """Read an artifact through the package loader, not the filesystem: from
+    a spark-submit zip the package directory is not a directory."""
+    return json.loads(pkgutil.get_data(__package__, os.path.basename(path)))
+
+
 def load_frozen_lm() -> Tuple[Dict[str, int], Dict[str, int], int]:
     """(tri_counts, bi_counts, vocab) exactly as train_char_trigram_lm builds
     them: bigram counts and vocab are derived from the truncated trigram
     table, not counted independently (lm.py:50-56)."""
-    with open(LM_PATH) as f:
-        tri_counts: Dict[str, int] = json.load(f)["tri"]
+    tri_counts: Dict[str, int] = _load(LM_PATH)["tri"]
     bi_counts: Dict[str, int] = {}
     vocab = set()
     for tri, c in tri_counts.items():
@@ -34,5 +40,4 @@ def load_frozen_lm() -> Tuple[Dict[str, int], Dict[str, int], int]:
 
 
 def load_frozen_bpe() -> List[Tuple[str, str]]:
-    with open(BPE_PATH) as f:
-        return [tuple(p) for p in json.load(f)["merges"]]
+    return [tuple(p) for p in _load(BPE_PATH)["merges"]]

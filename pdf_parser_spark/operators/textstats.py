@@ -14,9 +14,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "tokens", "lower_tokens", "normalized", "content_fingerprint", "ngrams",
-    "token_count", "quality_score", "lang_id", "fingerprint",
-    "winnow_fingerprint", "LANG_MARKERS",
+    "tokens", "lower_tokens", "lines", "symbol_count", "normalized",
+    "content_fingerprint", "ngrams", "token_count", "quality_score",
+    "lang_id", "fingerprint", "winnow_fingerprint", "LANG_MARKERS",
 ]
 
 # ASCII whitespace, exactly what Java's and RE2's \s match: the Python-side
@@ -26,11 +26,13 @@ _ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
 
 
 # The column functions below are the ONE definition of each text concept;
-# every JVM operator and job builds its tokens, normal form, fingerprint
-# and n-grams through them. A token array used inside a higher-order-function
-# lambda must be projected as a column first and referenced by name: Spark
-# re-evaluates a captured expression once per element, re-splitting the
-# whole document for every chunk / gram.
+# every JVM operator and job builds its tokens, lines, symbol count, normal
+# form, fingerprint and n-grams through them. A token array used inside a
+# higher-order-function lambda must be projected as a column first and
+# referenced by name: Spark re-evaluates a captured expression once per
+# element, re-splitting the whole document for every chunk / gram. A gate
+# that derives several stats from one array likewise projects the array
+# once and computes every stat from that column.
 
 
 def tokens(col: Column) -> Column:
@@ -43,6 +45,16 @@ def lower_tokens(col: Column) -> Column:
     """tokens() of the lowercased text (lowercasing never creates or removes
     ASCII whitespace, so this equals lowercasing each token)."""
     return tokens(F.lower(col))
+
+
+def lines(col: Column) -> Column:
+    """Lines split on "\\n", blank lines kept ("" is one blank line)."""
+    return F.split(col, "\n")
+
+
+def symbol_count(col: Column) -> Column:
+    """Gopher's symbol count: non-overlapping '#' and '...' matches."""
+    return F.size(F.regexp_extract_all(col, F.lit(r"#|\.\.\."), 0))
 
 
 def _py_lower_tokens(t) -> List[str]:
@@ -95,10 +107,18 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic document-quality heuristics (length, punctuation ratio,
     uppercase ratio, mean token length) combined into a 0..1 score."""
     t = F.col(text_col)
-    n_chars = F.length(t).cast("double")
-    n_tok = F.size(tokens(t)).cast("double")
-    n_punct = F.size(F.regexp_extract_all(t, F.lit(r"[.,;:!?]"), 0)).cast("double")
-    n_upper = F.size(F.regexp_extract_all(t, F.lit(r"[A-Z]"), 0)).cast("double")
+    counts = df.select(
+        "doc_id",
+        F.length(t).cast("double").alias("_n_chars"),
+        F.size(tokens(t)).cast("double").alias("_n_tok"),
+        F.size(F.regexp_extract_all(t, F.lit(r"[.,;:!?]"), 0))
+        .cast("double").alias("_n_punct"),
+        F.size(F.regexp_extract_all(t, F.lit(r"[A-Z]"), 0))
+        .cast("double").alias("_n_upper"),
+    )
+    n_chars, n_tok, n_punct, n_upper = (
+        F.col(c) for c in ("_n_chars", "_n_tok", "_n_punct", "_n_upper")
+    )
     mean_tok_len = n_chars / F.greatest(n_tok, F.lit(1.0))
     punct_ratio = n_punct / F.greatest(n_chars, F.lit(1.0))
     upper_ratio = n_upper / F.greatest(n_chars, F.lit(1.0))
@@ -108,7 +128,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     punct_pts = F.when(punct_ratio <= 0.1, 400).otherwise(160)
     upper_pts = F.when(upper_ratio <= 0.3, 400).otherwise(200)
     score = (len_pts + tok_pts + punct_pts + upper_pts).cast("long")
-    return df.select(
+    return counts.select(
         "doc_id",
         F.round(mean_tok_len, 4).alias("mean_token_len"),
         F.round(punct_ratio, 4).alias("punct_ratio"),
@@ -135,12 +155,15 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-marker language ID: count whole-token marker hits per
     language (pure JVM array ops) + a CASE argmax with deterministic
     tie-breaking (list order)."""
-    toks = lower_tokens(F.col(text_col))
+    arrays = df.select(
+        "doc_id", "lang", lower_tokens(F.col(text_col)).alias("_toks")
+    )
+    toks = F.col("_toks")
     counts = [
         F.size(F.filter(toks, lambda x: x.isin(*words))).alias(f"c_{lang}")
         for lang, words in LANG_MARKERS
     ]
-    with_counts = df.select("doc_id", "lang", *counts)
+    with_counts = arrays.select("doc_id", "lang", *counts)
     best = F.greatest(*[F.col(f"c_{lang}") for lang, _ in LANG_MARKERS])
     pred = F.when(best == 0, F.lit("und"))
     for lang, _ in LANG_MARKERS:

@@ -77,6 +77,22 @@ class TestRepetitionFlags:
         assert (r.dup_line_frac, r.top_word_frac, r.symbol_word_ratio) == (0.0, 0.0, 0.0)
 
 
+class TestStopwordStats:
+    def _stats(self, spark, text):
+        from pdf_parser_spark.operators.cleaning import stopword_stats
+
+        df = spark.createDataFrame([(0, text)], "doc_id bigint, text string")
+        return stopword_stats(df).collect()[0]
+
+    def test_kinds_count_distinct_words_case_insensitively(self, spark):
+        r = self._stats(spark, "THE the The with zebra")
+        assert (r.n_stop_kinds, r.stop_frac, r.keep) == (2, 0.8, True)
+
+    def test_repeats_of_one_word_are_one_kind(self, spark):
+        r = self._stats(spark, "the the")
+        assert (r.n_stop_kinds, r.keep) == (1, False)
+
+
 class TestDomainOps:
     def test_stats_and_filter(self, spark):
         from pdf_parser_spark.operators.cleaning import domain_filter, domain_stats

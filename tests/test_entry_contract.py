@@ -70,6 +70,33 @@ class TestEntryContract:
             f"and re-stamp: {offenders}"
         )
 
+    def test_oracle_hash_independent_of_checkout(self, monkeypatch):
+        """Oracle SQL embeds <repo>/.corpus: the ledger hash must not change
+        with where the repo is checked out."""
+        import os
+        import sys
+        from types import SimpleNamespace
+
+        sys.path.insert(0, os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools"))
+        import freshness_ledger
+
+        def q(spark, sf_dir):
+            return None
+
+        def snap(repo):
+            monkeypatch.setattr(freshness_ledger, "REPO", repo)
+            entry = SimpleNamespace(
+                queries=lambda: {"q": q},
+                oracle_sql=lambda: {
+                    "q": f"SELECT * FROM '{repo}/.corpus/sf0.01/pages.parquet'"
+                },
+            )
+            return freshness_ledger.snapshot(entry)
+
+        assert snap("/srv/a/repo") == snap("/home/b/copy")
+
     def test_oracle_dtype_parity(self, spark, contract):
         """The r1/r2 red rows (text_bpe_token_counts, olap_event_pivot) were
         value-equal but hash-mismatched: DuckDB sum()/sum(CASE) returns

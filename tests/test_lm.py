@@ -74,3 +74,35 @@ class TestFrozenLM:
         fresh_tri, fresh_bi, fresh_v = train_char_trigram_lm(docs)
         tri, bi, v = load_frozen_lm()
         assert tri == fresh_tri and bi == fresh_bi and v == fresh_v
+
+    def test_frozen_artifacts_load_from_the_zip(self, tmp_path):
+        # spark-submit ships tools/package.py's zip: both artifacts must load
+        # from it with no checkout on the path
+        import json
+        import os
+        import subprocess
+        import sys
+
+        from pdf_parser_spark.operators.models import (
+            load_frozen_bpe, load_frozen_lm,
+        )
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        zpath = subprocess.run(
+            [sys.executable, os.path.join(repo, "tools", "package.py")],
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        code = (
+            "import json; from pdf_parser_spark.operators import models; "
+            "print(json.dumps([models.__file__, models.load_frozen_lm(), "
+            "models.load_frozen_bpe()]))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=tmp_path,
+            env={**os.environ, "PYTHONPATH": zpath},
+            capture_output=True, text=True, check=True,
+        ).stdout
+        where, lm, bpe = json.loads(out)
+        assert where.startswith(zpath)
+        assert [lm, bpe] == json.loads(
+            json.dumps([load_frozen_lm(), load_frozen_bpe()]))

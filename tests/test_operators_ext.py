@@ -970,30 +970,11 @@ class TestNoTextRescanInLambdas:
     """A token / char array used inside a higher-order-function lambda must
     be projected as a column first: Spark re-evaluates a captured expression
     once per element, so a captured split re-splits the whole document for
-    every chunk or gram. Walks each operator's optimized plan."""
+    every chunk or gram. A gate projects each array once, so no plan node
+    splits the same text twice. Walks each operator's optimized plan."""
 
     @staticmethod
-    def _rescanning_lambdas(plan):
-        def seq(s):
-            return [s.apply(i) for i in range(s.size())]
-
-        plans, exprs, found = [plan], [], []
-        while plans:
-            node = plans.pop()
-            exprs += seq(node.expressions())
-            plans += seq(node.children())
-        while exprs:
-            e = exprs.pop()
-            exprs += seq(e.children())
-            if e.getClass().getSimpleName() == "LambdaFunction":
-                body = e.function().toString()
-                if "split(" in body or "regexp_replace(" in body:
-                    found.append(body)
-        return found
-
-    @pytest.mark.parametrize("name", sorted(_text_operators()))
-    def test_lambda_bodies_never_rescan_text(self, spark, corpus_001,
-                                             monkeypatch, name):
+    def _optimized_plan(spark, monkeypatch, corpus_001, name):
         from pyspark.sql import DataFrame
 
         docs = spark.createDataFrame(
@@ -1005,8 +986,29 @@ class TestNoTextRescanInLambdas:
                             lambda self: planned.append(self) or [])
         out = _text_operators()[name](spark, docs, corpus_001)
         df = out if isinstance(out, DataFrame) else planned[-1]
-        plan = df._jdf.queryExecution().optimizedPlan()
-        assert self._rescanning_lambdas(plan) == []
+        return df._jdf.queryExecution().optimizedPlan()
+
+    @pytest.mark.parametrize("name", sorted(_text_operators()))
+    def test_lambda_bodies_never_rescan_text(self, spark, corpus_001,
+                                             monkeypatch, name):
+        from tools.plan_audit import node_expressions
+
+        plan = self._optimized_plan(spark, monkeypatch, corpus_001, name)
+        bodies = [
+            e.function().toString()
+            for exprs in node_expressions(plan) for e in exprs
+            if e.getClass().getSimpleName() == "LambdaFunction"
+        ]
+        assert [b for b in bodies
+                if "split(" in b or "regexp_replace(" in b] == []
+
+    @pytest.mark.parametrize("name", sorted(_text_operators()))
+    def test_each_text_array_split_once(self, spark, corpus_001,
+                                        monkeypatch, name):
+        from tools.plan_audit import split_copies
+
+        plan = self._optimized_plan(spark, monkeypatch, corpus_001, name)
+        assert split_copies(plan) <= 1
 
 
 class TestDuplicatedSpans:

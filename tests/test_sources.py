@@ -209,30 +209,11 @@ class TestSinks:
 
 
 class TestWarcDataSource:
-    def test_format_warc_equals_mapinpandas_reader(self, spark, tmp_path):
-        from pdf_parser_spark.corpus import ensure_corpus
-        from pdf_parser_spark.sources.warc import read_warc
-        from pdf_parser_spark.sources.warc_datasource import register_warc_source
-        from pdf_parser_spark.sources.warc_fixture import ensure_warc_fixture
-
-        wdir = ensure_warc_fixture(ensure_corpus(0.001))
-        register_warc_source(spark)
-        via_ds = {
-            (r.url, r.warc_ts, bytes(r.html))
-            for r in spark.read.format("warc").load(wdir).collect()
-        }
-        via_mp = {
-            (r.url, r.warc_ts, bytes(r.html))
-            for r in read_warc(spark, wdir).collect()
-        }
-        assert via_ds == via_mp and len(via_ds) > 0
-
     def test_bad_archives_read_alike_without_task_failure(self, spark, tmp_path):
         # a bad date keeps its record with a NULL timestamp; a corrupt gzip
         # archive contributes no rows; neither costs the other archives
-        # their rows nor fails a task, in either reader
+        # their rows nor fails a task
         from pdf_parser_spark.sources.warc import read_warc
-        from pdf_parser_spark.sources.warc_datasource import register_warc_source
 
         (tmp_path / "good.warc").write_bytes(_sample_warc())
         (tmp_path / "bad-date.warc").write_bytes(
@@ -241,28 +222,12 @@ class TestWarcDataSource:
         gz = gzip.compress(_sample_warc())
         (tmp_path / "corrupt.warc.gz").write_bytes(
             gz[:10] + b"\xff" * 20 + gz[30:])
-        register_warc_source(spark)
-        via_ds = sorted(
-            (r.url, r.warc_ts, bytes(r.html))
-            for r in spark.read.format("warc").load(str(tmp_path)).collect()
-        )
-        via_mp = sorted(
+        rows = sorted(
             (r.url, r.warc_ts, bytes(r.html))
             for r in read_warc(spark, str(tmp_path)).collect()
         )
-        assert via_ds == via_mp
-        assert [(u, ts) for u, ts, _ in via_mp] == [
+        assert [(u, ts) for u, ts, _ in rows] == [
             ("https://example.org/a.html", datetime(2024, 1, 2, 3, 4, 5)),
             ("https://example.org/b.pdf", datetime(2024, 1, 3)),
             ("https://example.org/old.html", None),
         ]
-
-    def test_one_partition_per_archive(self, spark):
-        from pdf_parser_spark.corpus import ensure_corpus
-        from pdf_parser_spark.sources.warc_datasource import register_warc_source
-        from pdf_parser_spark.sources.warc_fixture import ensure_warc_fixture
-
-        wdir = ensure_warc_fixture(ensure_corpus(0.001))
-        register_warc_source(spark)
-        df = spark.read.format("warc").load(wdir)
-        assert df.rdd.getNumPartitions() == 1  # fixture has one archive

@@ -199,6 +199,9 @@ def query_closures(entry=None) -> dict[str, set[str]]:
 def snapshot(entry=None) -> dict[str, dict[str, str]]:
     e = entry or _entry_module()
     oracles = e.oracle_sql()
+    # oracle SQL embeds the checkout's corpus path: hash it as a fixed token
+    # so a copy of the repo elsewhere hashes alike
+    corpus_root = os.path.join(REPO, ".corpus")
     snap = {}
     for name, fn in e.queries().items():
         snap[name] = {
@@ -206,7 +209,7 @@ def snapshot(entry=None) -> dict[str, dict[str, str]]:
                 inspect.getsource(fn).encode()
             ).hexdigest()[:16],
             "oracle_sha": hashlib.sha256(
-                oracles.get(name, "").encode()
+                oracles.get(name, "").replace(corpus_root, "<corpus>").encode()
             ).hexdigest()[:16],
         }
     return snap

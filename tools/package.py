@@ -1,4 +1,5 @@
-"""Build dist/pdf_parser_spark.zip for spark-submit --py-files."""
+"""Build dist/pdf_parser_spark.zip for spark-submit --py-files: the
+package's modules plus its JSON model artifacts."""
 
 from __future__ import annotations
 
@@ -18,7 +19,7 @@ def main() -> int:
             if "__pycache__" in root:
                 continue
             for f in sorted(files):
-                if f.endswith(".py"):
+                if f.endswith((".py", ".json")):
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, REPO))
     print(out)

@@ -1,5 +1,5 @@
-"""Physical-plan audit: exchanges / pushdown / pruning / join strategy per
-query. Backs the 'Plan audit' section of BENCH.md.
+"""Physical-plan audit: exchanges / pushdown / pruning / join strategy and
+text splits per query. Backs the 'Plan audit' section of BENCH.md.
 
 Usage: python tools/plan_audit.py [query ...]
 """
@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,7 +30,40 @@ DEFAULT = [
     "dedup_span_coverage",  # r5: 8-byte-key shuffles, no broadcast of big sides
     "ann_semdedup",  # r5: assignment fused JVM projection; pair join on cluster
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
+    # each gate projects its token / line arrays once: splits=1
+    "clean_repetition_flags", "clean_stopword_stats", "text_lang_id",
 ]
+
+
+def _seq(s):
+    return [s.apply(i) for i in range(s.size())]
+
+
+def node_expressions(plan):
+    """For each node of a Catalyst plan tree, the list of every expression
+    it holds, nested ones included."""
+    nodes, out = [plan], []
+    while nodes:
+        node = nodes.pop()
+        nodes += _seq(node.children())
+        exprs = _seq(node.expressions())
+        for e in exprs:  # appending while iterating walks the whole tree
+            exprs += _seq(e.children())
+        out.append(exprs)
+    return out
+
+
+def split_copies(plan) -> int:
+    """Most copies of one split expression (equal canonical form) that a
+    single plan node holds; 1 means no node splits the same text twice."""
+    most = 0
+    for exprs in node_expressions(plan):
+        splits = Counter(
+            e.canonicalized().toString() for e in exprs
+            if e.getClass().getSimpleName() == "StringSplit"
+        )
+        most = max([most, *splits.values()])
+    return most
 
 
 def main() -> int:
@@ -51,6 +85,7 @@ def main() -> int:
             f" broadcastJoin={plan.count('BroadcastHashJoin')}"
             f" sortMergeJoin={plan.count('SortMergeJoin')}"
             f" topK={plan.count('TakeOrderedAndProject')}"
+            f" splits={split_copies(df._jdf.queryExecution().optimizedPlan())}"
         )
         for p, s in zip(pushed or ["-"] * len(schemas), schemas):
             print(f"   pushed=[{p[:70]}] read={s[:100]}")
