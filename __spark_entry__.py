@@ -592,14 +592,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     q["ann_knn_join"] = ann_knn_join
 
-    def ann_knn_join_gemm(spark, sf_dir):
-        # the bench's name for the batch KNN join (per-list cogrouped BLAS
-        # GEMM); same function and oracle as ann_knn_join
-        return S.knn_join(
-            _emb(spark, sf_dir), k=3, n_lists=8, n_probe=8
-        ).orderBy("qid", "nid")
-    q["ann_knn_join_gemm"] = ann_knn_join_gemm
-
     # ---- text analysis --------------------------------------------------------
     def text_token_count(spark, sf_dir):
         return T.token_count(_docs(spark, sf_dir)).orderBy("doc_id")
@@ -1429,30 +1421,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # (tools/check_oracles.py), so rotation only changes which subset the driver
 # re-proves each round: least-recently-verified first.
 _VERIFY_FIRST = [
-    # Slot budget (window = 50). In: every query whose import closure
-    # reaches a module rewritten onto the shared textstats column functions
-    # (operators/textstats, chunking, cleaning, gopher, decontaminate,
-    # spandedup, bpe, dedup, lm, streaming/stream) or onto the one
-    # candidate-pair join and query top-k (operators/dedup, similarity,
-    # semdedup), the two curate-job plans (jobs/ is outside the ledger's
-    # import graph), ann_semdedup, s2_warc_source (its closure holds
-    # sources/warc.py; last verified round 4), f1_f2_size_filter (last
-    # verified round 3, ledger stamp b7a09fc; it takes the slot of the
-    # deleted DataSource WARC query so it does not sit out a third round),
-    # and 5 of the 14 round-5 media queries. Rotated out: the olap_* eight,
-    # the temporal_* four, extract_classic/ai_pipeline, set_ops_feed_vs_ok,
-    # udaf_geomean_chars, udf_groupmap_zscore, sql_udf_extract_text,
-    # sql_udtf_field_rows (ledger-frozen at their r5 stamp), and
-    # media_thumbnails, media_gif_frame_features (verified round 5; nothing
-    # in their closure changed since), media_video_frame_features,
-    # media_mp4_metadata, media_audio_features, media_wav_metadata,
-    # media_mp3_metadata, media_exif_metadata, pdf_info_metadata, whose
-    # closures touch no module changed since their stamp
-    # (`tools/freshness_ledger.py check` proves both).
+    # Slot budget (window = 50). In: every query whose closure reaches a
+    # module moved onto the shared textstats columns or the one pair join /
+    # query top-k (operators/textstats, chunking, cleaning, gopher,
+    # decontaminate, spandedup, bpe, dedup, lm, similarity, semdedup,
+    # streaming/stream), the two curate-job plans (jobs/ is outside the
+    # ledger's import graph), s2_warc_source (last verified round 4), and
+    # the seven round-5 two-round-stale extraction queries (stamp b7a09fc),
+    # so none sits out a third round. Their six slots: the deleted GEMM
+    # alias of ann_knn_join (same function and oracle) and the media
+    # metadata / image_dimensions / image_real_features / features /
+    # frame_sample queries: each green in CORRECTNESS_r05, with the source
+    # and oracle SQL of round-5 commit c9bacc9, its closure untouched by
+    # `git diff c9bacc9 -- pdf_parser_spark/`. Also out, frozen at their r5
+    # stamp: olap_* (8), temporal_* (4), extract_classic/ai_pipeline,
+    # set_ops_feed_vs_ok, udaf_geomean_chars, udf_groupmap_zscore,
+    # sql_udf_extract_text, sql_udtf_field_rows, the other nine round-5
+    # media queries (`tools/freshness_ledger.py check` proves all).
     # closure touched, previously off-window:
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
     "ann_ivf_topk", "ann_bucketed_near_dup", "ann_knn_join",
-    "ann_knn_join_gemm",
     "dedup_exact", "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
     "dedup_minhash_lsh_pairs_capped", "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_pruned", "dedup_simhash", "dedup_simhash_pairs",
@@ -1468,11 +1456,10 @@ _VERIFY_FIRST = [
     "dedup_span_coverage", "pipeline_training_mix",
     # the curate job's plan, and semdedup:
     "pipeline_extract_dedup_chunk", "pipeline_curate_end2end", "ann_semdedup",
-    # the WARC reader (sources/warc.py changed), and the oldest stamp:
-    "s2_warc_source", "f1_f2_size_filter",
-    # round-5 media closure:
-    "media_metadata", "media_image_dimensions", "media_image_real_features",
-    "media_features", "media_frame_sample",
+    # the WARC reader, and the seven two-round-stale extraction queries:
+    "s2_warc_source", "f1_f2_size_filter", "f3_magic_router",
+    "f4_extension_predicate", "f5_empty_text_guard", "p3_content_hash",
+    "extract_error_accounting", "ai_label_discovery",
 ]
 
 
@@ -1916,8 +1903,6 @@ def oracle_sql() -> dict[str, str]:
                    b.vec_id) <= 3
         ORDER BY qid, nid
     """
-
-    o["ann_knn_join_gemm"] = o["ann_knn_join"]
 
     o["text_token_count"] = """
         SELECT doc_id,

@@ -9,10 +9,10 @@ cluster, never the whole corpus.
 
 Spark-first design:
 - k-means follows the standard distributed pattern (MLlib's): centroids are
-  tiny driver state broadcast into a JVM assignment expression each
-  iteration; the only shuffle per iteration is one `groupBy(cluster)` with
-  d per-dimension `sum` aggregates (map-side partial agg, NO explode — the
-  shuffle moves k rows of d sums, not n*d rows).
+  driver state, the closure constant of one Arrow assignment kernel (the
+  plan has the same size at every k); the only shuffle per iteration is one
+  `groupBy(cluster)` with d per-dimension `sum` aggregates (map-side partial
+  agg, NO explode — the shuffle moves k rows of d sums, not n*d rows).
 - the within-cluster pair join keys on `cluster`; its cost is bounded by
   the cluster size k chosen for the corpus (SemDeDup's own design knob).
 
@@ -20,7 +20,8 @@ Exact cross-engine math (the oracle trick): embeddings are quantized to an
 integer grid (``round(x * quant)``, exact in both engines because float ->
 double widening and power-of-two scaling are IEEE-exact), so
 
-- assignment distances are exact integer sums of squares,
+- assignment distances are exact integer sums of squares (a float64 GEMM
+  under a checked bound, see ``_assign``),
 - centroid updates round the integer mean through one shared double
   expression (``floor(S/C + 0.5)``) whose inputs are identical integers,
 - the cosine threshold test cross-multiplies to integers:
@@ -39,7 +40,9 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from .dedup import _key_pairs
 
@@ -62,28 +65,64 @@ def quantize(df: DataFrame, quant: int = 4096,
     )
 
 
-def _dist2(qcol, centroid: list[int]):
-    """Exact integer squared distance from ``qcol`` to one centroid."""
-    c = F.array(*[F.lit(int(v)) for v in centroid])
-    return F.aggregate(
-        F.zip_with(qcol, c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+def _assign(qdf: DataFrame, centroids: list[list[int]],
+            dim: int) -> DataFrame:
+    """Add ``cluster`` and the exact ``dist2`` to it (nearest centroid, ties
+    to the smaller index: ``argmin`` keeps the first minimum) and ``norm2``.
+
+    One Arrow kernel per batch: ``D = |q|^2 - 2*Q@C.T + |c|^2`` in float64
+    over integers, exact while ``4*dim*M^2 < 2^53`` (M = largest |entry|;
+    the defaults give 2^32); out-of-range or wrong-length rows raise
+    ``ValueError``. The centroids are a closure constant (PySpark broadcasts
+    a large pickled UDF), so the plan does not grow with k.
+    """
+    cent = np.asarray(centroids, dtype=np.float64).reshape(-1, dim)
+    c2 = (cent * cent).sum(axis=1)
+    cmax = float(np.abs(cent).max(initial=0.0))
+    schema = StructType(qdf.schema.fields + [
+        StructField("cluster", IntegerType()), StructField("dist2", LongType()),
+        StructField("norm2", LongType())])
+
+    def nearest(batches):
+        for pdf in batches:
+            if any(v is None or len(v) != dim for v in pdf["q"]):
+                raise ValueError(f"semdedup: embedding without {dim} entries")
+            q = np.stack(pdf["q"].to_list()).astype(np.float64)
+            m = max(float(np.abs(q).max()), cmax)
+            if 4 * dim * m * m >= 2.0 ** 53:
+                raise ValueError(f"semdedup: |entry| {m:.0f} breaks the exact "
+                                 f"float64 bound 4*dim*M^2 < 2^53, dim={dim}")
+            q2 = (q * q).sum(axis=1)
+            d = q2[:, None] - 2.0 * (q @ cent.T) + c2
+            yield pdf.assign(cluster=np.argmin(d, axis=1).astype(np.int32),
+                             dist2=d.min(axis=1).astype(np.int64),
+                             norm2=q2.astype(np.int64))
+
+    return qdf.mapInPandas(nearest, schema)
 
 
-def _assign(qdf: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Add ``cluster`` and ``dist2`` columns: nearest centroid, ties to the
-    smaller index. One JVM expression — array_min over (dist2, j) structs."""
-    pairs = F.array(*[
-        F.struct(
-            _dist2(F.col("q"), c).alias("d"),
-            F.lit(j).alias("j"),
-        )
-        for j, c in enumerate(centroids)
-    ])
-    best = F.array_min(pairs)
-    return qdf.withColumn("dist2", best["d"]).withColumn("cluster", best["j"])
+def _kmeans(emb: DataFrame, k: int, iters: int, quant: int, dim: int,
+            id_col: str, vec_col: str) -> DataFrame:
+    """Lloyd k-means: the final assignment, quantized ``q`` carried."""
+    qdf = quantize(emb, quant=quant, vec_col=vec_col).select(id_col, "q")
+    seeds = qdf.orderBy(id_col).limit(k).collect()
+    centroids = [list(r["q"]) for r in seeds]
+    for _ in range(iters):
+        rows = _assign(qdf, centroids, dim).groupBy("cluster").agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(dim)],
+        ).collect()
+        new = {
+            r["cluster"]: [
+                # one shared double expression over exact integer inputs:
+                # identical in Spark / DuckDB / Python (IEEE doubles)
+                int(math.floor(r[f"s{i}"] / r["n"] + 0.5))
+                for i in range(dim)
+            ]
+            for r in rows
+        }
+        centroids = [new.get(j, c) for j, c in enumerate(centroids)]
+    return _assign(qdf, centroids, dim)
 
 
 def kmeans_assign(
@@ -102,30 +141,9 @@ def kmeans_assign(
     and recomputes centroids as the rounded integer mean; an empty cluster
     keeps its previous centroid. Returns one row per vector with
     ``cluster`` and the exact ``dist2`` to its final centroid.
-
-    Centroids are driver state (k*dim ints — the standard distributed
-    k-means shape); data-side work stays in whole-stage codegen.
     """
-    qdf = quantize(emb, quant=quant, vec_col=vec_col).select(id_col, "q")
-    seeds = qdf.orderBy(id_col).limit(k).collect()
-    centroids = [list(r["q"]) for r in seeds]
-    for _ in range(iters):
-        assigned = _assign(qdf, centroids)
-        rows = assigned.groupBy("cluster").agg(
-            F.count(F.lit(1)).alias("n"),
-            *[F.sum(F.col("q")[i]).alias(f"s{i}") for i in range(dim)],
-        ).collect()
-        new = {
-            r["cluster"]: [
-                # one shared double expression over exact integer inputs:
-                # identical in Spark / DuckDB / Python (IEEE doubles)
-                int(math.floor(r[f"s{i}"] / r["n"] + 0.5))
-                for i in range(dim)
-            ]
-            for r in rows
-        }
-        centroids = [new.get(j, centroids[j]) for j in range(k)]
-    return _assign(qdf, centroids).select(id_col, "cluster", "dist2")
+    return _kmeans(emb, k, iters, quant, dim, id_col, vec_col).select(
+        id_col, "cluster", "dist2")
 
 
 def semdedup(
@@ -154,18 +172,8 @@ def semdedup(
     join's shuffle.
     """
     p, q = threshold
-    assigned = kmeans_assign(
-        emb, k=k, iters=iters, quant=quant, dim=dim,
-        id_col=id_col, vec_col=vec_col,
-    )
-    qdf = quantize(emb, quant=quant, vec_col=vec_col).select(
-        F.col(id_col), "q",
-        F.aggregate(
-            F.transform(F.col("q"), lambda x: x * x),
-            F.lit(0).cast("long"), lambda acc, v: acc + v,
-        ).alias("norm2"),
-    )
-    pairs = _key_pairs(assigned.join(qdf, id_col), ["cluster"], id_col,
+    assigned = _kmeans(emb, k, iters, quant, dim, id_col, vec_col)
+    pairs = _key_pairs(assigned, ["cluster"], id_col,
                        carry=["q", "norm2"], max_size=max_cluster)
     dot = F.aggregate(
         F.zip_with("q_a", "q_b", lambda x, y: x * y),

@@ -39,7 +39,7 @@ DOC_QUERIES = [
 EMB_QUERIES = [
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
     "ann_ivf_topk", "ann_bucketed_near_dup", "ann_knn_join",
-    "ann_knn_join_gemm", "ann_dup_clusters",
+    "ann_dup_clusters",
 ]
 EVENT_QUERIES = [
     "p11_json_sniff", "p11b_typed_json_parse", "temporal_sessionize",

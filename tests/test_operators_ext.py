@@ -1191,3 +1191,45 @@ class TestSemDeDup:
                                       threshold=(2, 5)).collect()}
         assert uncapped[0] is True and not any(
             uncapped[i] for i in range(1, 6))
+
+    def test_assignment_plan_size_constant_in_k(self, spark):
+        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from tools.plan_audit import node_expressions
+
+        # the centroids ride in the kernel's closure, not in the plan, so
+        # the plan cannot grow with k (a per-centroid expression adds ~60
+        # nodes per centroid)
+        df, dim = self._emb(spark, [(i, [float(i % 5), 1.0, -float(i % 3)])
+                                    for i in range(64)], 3)
+
+        def exprs(k):
+            plan = kmeans_assign(df, k=k, iters=0, dim=dim)._jdf \
+                .queryExecution().optimizedPlan()
+            return sum(map(len, node_expressions(plan)))
+
+        assert exprs(2) == exprs(64)
+
+    @pytest.mark.parametrize("bad", [[1e5, 0.0], [1.0]])
+    def test_inexact_input_raises(self, spark, bad):
+        from pyspark.errors import PythonException
+
+        from pdf_parser_spark.operators.semdedup import kmeans_assign
+
+        # 1e5 quantizes to 409,600,000: 4*dim*M^2 >= 2^53, so float64 could
+        # no longer hold dist2 exactly; a 1-entry row has no dim=2 distance.
+        # Neither is a seed, so the kernel itself must refuse it.
+        rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, bad)]
+        df, dim = self._emb(spark, rows, 2)
+        with pytest.raises(PythonException, match="ValueError"):
+            kmeans_assign(df, k=2, iters=0, dim=dim).collect()
+
+    def test_k_above_row_count(self, spark):
+        from pdf_parser_spark.operators.semdedup import kmeans_assign
+
+        # 3 rows, k=5: every row seeds its own cluster (the oracle's
+        # LIMIT k yields 3 seeds too); iterating must not index past them
+        rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.0])]
+        df, dim = self._emb(spark, rows, 2)
+        out = {r.vec_id: (r.cluster, r.dist2)
+               for r in kmeans_assign(df, k=5, iters=2, dim=dim).collect()}
+        assert out == {0: (0, 0), 1: (1, 0), 2: (2, 0)}

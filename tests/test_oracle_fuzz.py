@@ -216,21 +216,30 @@ def _random_embeddings(seed: int, n: int = 60, dim: int = 64):
 
 
 class TestSemDeDupOracleFuzz:
-    @pytest.mark.parametrize("seed", [11, 4242, 777])
-    def test_semdedup_exact_across_engines(self, spark, seed):
+    # DuckDB stays the independent reference at a large k too (a
+    # per-centroid expression would hold ~60 nodes per centroid there);
+    # 256 vectors leave ~4 per cluster, so planted duplicates still meet
+    @pytest.mark.parametrize("seed,k,n", [
+        *(pytest.param(s, 8, 60, id=str(s)) for s in (11, 4242, 777)),
+        *(pytest.param(s, 64, 256, id=f"{s}-k64") for s in (11, 4242, 777)),
+    ])
+    def test_semdedup_exact_across_engines(self, spark, seed, k, n):
         from pdf_parser_spark.operators.semdedup import semdedup
 
-        vecs = _random_embeddings(seed)
+        vecs = _random_embeddings(seed, n=n)
         df = spark.createDataFrame(
             vecs, "vec_id bigint, embedding array<float>")
         got = {r.vec_id: (r.cluster, r.dist2, r.keep)
-               for r in semdedup(df, k=8, iters=2, dim=64,
+               for r in semdedup(df, k=k, iters=2, dim=64,
                                  threshold=(2, 5)).collect()}
+        oracle = _oracle("ann_semdedup")
+        assert oracle.count("LIMIT 8") == 1
         con = duckdb.connect()
         con.execute(
             "CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
         con.executemany("INSERT INTO embeddings VALUES (?, ?)", vecs)
         want = {row[0]: (row[1], row[2], row[3])
-                for row in con.execute(_oracle("ann_semdedup")).fetchall()}
+                for row in con.execute(
+                    oracle.replace("LIMIT 8", f"LIMIT {k}")).fetchall()}
         assert got == want
-        assert any(not k for _, _, k in got.values())  # planted dups fire
+        assert any(not keep for _, _, keep in got.values())  # dups fire

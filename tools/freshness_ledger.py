@@ -1,7 +1,7 @@
 """Oracle freshness ledger — mechanical guard against stale driver evidence.
 
-Round-3 VERDICT item 8: two queries (`dedup_minhash_lsh_pairs_capped`,
-`ann_knn_join_gemm`) had their plans rewritten AFTER their last driver-green
+Round-3 VERDICT item 8: two queries (`dedup_minhash_lsh_pairs_capped` and
+the batch KNN join) had their plans rewritten AFTER their last driver-green
 row, so their correctness evidence was a round old. The driver checks only
 the first 50 `queries()` entries (`_VERIFY_FIRST` in `__spark_entry__.py`),
 so code drift on an off-window query is invisible until the next rotation.

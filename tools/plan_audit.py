@@ -1,5 +1,6 @@
-"""Physical-plan audit: exchanges / pushdown / pruning / join strategy and
-text splits per query. Backs the 'Plan audit' section of BENCH.md.
+"""Physical-plan audit: exchanges / pushdown / pruning / join strategy, text
+splits and optimized-plan expression count per query. Backs the 'Plan
+audit' section of BENCH.md.
 
 Usage: python tools/plan_audit.py [query ...]
 """
@@ -28,7 +29,7 @@ DEFAULT = [
     "clean_gopher_gate",  # r5: must stay one fused JVM projection
     "clean_decontaminate",  # r5: gram join must broadcast the bench side
     "dedup_span_coverage",  # r5: 8-byte-key shuffles, no broadcast of big sides
-    "ann_semdedup",  # r5: assignment fused JVM projection; pair join on cluster
+    "ann_semdedup",  # one Arrow GEMM assignment, exprs= flat in k; cluster join
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
     # each gate projects its token / line arrays once: splits=1
     "clean_repetition_flags", "clean_stopword_stats", "text_lang_id",
@@ -80,12 +81,14 @@ def main() -> int:
         plan = df._jdf.queryExecution().explainString(mode)
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         schemas = re.findall(r"ReadSchema: (.*)", plan)
+        optimized = df._jdf.queryExecution().optimizedPlan()
         print(
             f"== {name}: exchanges={plan.count('Exchange')}"
             f" broadcastJoin={plan.count('BroadcastHashJoin')}"
             f" sortMergeJoin={plan.count('SortMergeJoin')}"
             f" topK={plan.count('TakeOrderedAndProject')}"
-            f" splits={split_copies(df._jdf.queryExecution().optimizedPlan())}"
+            f" splits={split_copies(optimized)}"
+            f" exprs={sum(map(len, node_expressions(optimized)))}"
         )
         for p, s in zip(pushed or ["-"] * len(schemas), schemas):
             print(f"   pushed=[{p[:70]}] read={s[:100]}")
