@@ -16,9 +16,11 @@ Local smoke:
 
 The script never creates its own master/config in cluster mode — all sizing
 (executors, memory, shuffle partitions) belongs to spark-submit; getOrCreate
-picks up the submitted conf. Source selection: --input pointing at a
-directory with pages.parquet uses the table scan; --warc treats --input as a
-directory of WARC archives; --binary as loose document files.
+picks up the submitted conf. Source selection: by default --input is a
+directory with pages.parquet (the table scan); --source warc treats it as a
+directory of WARC archives, --source binary as loose document files.
+With --resume, a missing or empty --output means nothing is committed yet;
+any other failure to read it fails the job rather than re-extracting.
 """
 
 from __future__ import annotations
@@ -63,11 +65,13 @@ def main(argv=None) -> int:
         pages = load_pages(spark, args.input)
 
     if args.resume:
+        from pyspark.errors import AnalysisException
+
         try:
-            committed = spark.read.parquet(args.output)
-            pages = resume_against(pages, committed)
-        except Exception:
-            pass  # first run: nothing committed yet
+            pages = resume_against(pages, spark.read.parquet(args.output))
+        except AnalysisException as e:
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise  # unreadable committed output: never re-extract over it
 
     result, obs = with_metrics(
         extract_pipeline(

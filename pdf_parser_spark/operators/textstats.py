@@ -185,8 +185,8 @@ def winnow_fingerprint(
     """Winnowing document fingerprint (Schleimer et al., SIGMOD'03): rolling
     Rabin-Karp hash over character k-grams, then the minimum hash per sliding
     window (rightmost on ties) — the standard public local-fingerprinting
-    scheme behind MOSS. Vectorized numpy Pandas UDF (the rolling recurrence is
-    inherently sequential per doc but vectorizes across the k-gram axis).
+    scheme behind MOSS. Vectorized numpy Pandas UDF: every k-gram hash is
+    built at once from k shifted multiply-adds over the code points.
 
     Returns (id, fingerprints ARRAY<BIGINT>) — overlap of fingerprint sets
     localizes shared substrings, which plain sha256/minhash cannot.
@@ -203,7 +203,6 @@ def winnow_fingerprint(
     @F.pandas_udf(ArrayType(LongType()))
     def winnow(texts):
         np.seterr(over="ignore")  # uint64 wraparound IS the hash semantics
-        base_pow = base ** np.uint64(k - 1)
         out = []
         for t in texts:
             s = " ".join(_py_lower_tokens(t))
@@ -213,15 +212,10 @@ def winnow_fingerprint(
             codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
             codes = codes.astype(np.uint64)
             n = len(codes) - k + 1
-            # rolling hash h[i+1] = (h[i] - c[i]*base^(k-1)) * base + c[i+k]
-            h = np.uint64(0)
-            hashes = np.empty(n, dtype=np.uint64)
+            # h[i] = sum_j c[i+j] * base^(k-1-j) mod 2^64, Horner over j
+            hashes = np.zeros(n, dtype=np.uint64)
             for j in range(k):
-                h = h * base + codes[j]
-            hashes[0] = h
-            for i in range(1, n):
-                h = (h - codes[i - 1] * base_pow) * base + codes[i + k - 1]
-                hashes[i] = h
+                hashes = hashes * base + codes[j:j + n]
             hashes &= mask
             if n <= window:
                 sel = {int(hashes.min())}

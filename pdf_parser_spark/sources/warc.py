@@ -1,40 +1,40 @@
 """From-scratch WARC (ISO 28500) reader — the Common-Crawl ingestion path.
 
-The north star describes "an Iceberg table of Common-Crawl-style pages"; this
-source produces that table directly from raw WARC archives. Built from the
-public WARC 1.0/1.1 format only (no external warc libraries):
+Builds the pages table straight from raw WARC archives, using only the
+public WARC 1.0/1.1 format (no external warc libraries):
 
     WARC/1.0\r\n
     <WARC headers: Name: value, \r\n separated>\r\n
     \r\n
     <Content-Length payload bytes>\r\n\r\n     (record separator)
 
-For `WARC-Type: response` records the payload is an HTTP response; the body
-after the first CRLFCRLF is the document bytes. `resource` and `conversion`
-records carry the document directly. Gzip archives (the Common Crawl layout:
-one gzip member per record, concatenated) are decompressed member-by-member
-with zlib.
-
-Execution model: `binaryFile` scan of *.warc / *.warc.gz -> one mapInPandas
-kernel emitting one row per contained record. A 1 GB WARC file is one task's
-work (WARC members are not independently splittable without an index); at
-Common-Crawl scale the unit of parallelism is the archive file, of which
-there are ~72k per crawl — ample for any cluster width. Per-record parse
-errors are isolated (skip record, keep file), matching the pipeline's
-row-level error discipline.
+`response` payloads are HTTP responses (the body after the first CRLFCRLF is
+the document); `resource` and `conversion` records carry the document
+directly. Records are read one at a time off a stream: the archive bytes, or
+`gzip.GzipFile` over them when they start with the gzip magic, which walks
+concatenated members (Common Crawl writes one per record) in linear time.
+Neither the inflated archive nor a per-member copy of the compressed rest is
+built, and a payload is read in bounded chunks, never by its claimed length.
+A corrupt or truncated gzip stream ends the archive after the records before
+it. Execution: the shared `binaryFile` scan (`read_binary_files`) -> one
+mapInPandas kernel, one row per document record, frames of at most the
+session's Arrow `maxRecordsPerBatch` rows. An archive is one task's work.
 """
 
 from __future__ import annotations
 
+import functools
+import gzip
+import io
 import zlib
 from datetime import datetime, timezone
-from typing import Iterator, List, Optional, Tuple
+from typing import BinaryIO, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType, StringType, StructField, StructType, TimestampType,
-)
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType, TimestampType
+
+from .binaryfile import read_binary_files
 
 __all__ = ["parse_warc_bytes", "read_warc", "WARC_SCHEMA"]
 
@@ -49,29 +49,31 @@ WARC_SCHEMA = StructType([
 _DOC_TYPES = {"response", "resource", "conversion"}
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress concatenated gzip members (Common Crawl writes one member
-    per record; a plain single-member gzip is the degenerate case)."""
-    out: List[bytes] = []
-    pos = 0
-    while pos < len(data):
-        d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
-        out.append(d.decompress(data[pos:]))
-        out.append(d.flush())
-        consumed = len(data) - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        pos += consumed
-    return b"".join(out)
-
-
-def _parse_headers(block: bytes) -> dict:
-    headers: dict = {}
-    for line in block.split(b"\r\n"):
-        if b":" in line:
-            k, v = line.split(b":", 1)
-            headers[k.strip().lower().decode("latin-1")] = v.strip().decode("latin-1")
-    return headers
+def _records(fp: BinaryIO) -> Iterator[Tuple[dict, bytes]]:
+    """Yield (lower-cased headers, payload) for each record on the stream."""
+    while line := fp.readline():
+        if b"WARC/" not in line:
+            continue  # garbage between records
+        headers: dict = {}
+        while (line := fp.readline()) not in (b"\r\n", b""):
+            if b":" in line:
+                k, v = line.split(b":", 1)
+                headers[k.strip().lower().decode("latin-1")] = v.strip().decode("latin-1")
+        if not line:
+            return  # header block never ended
+        try:
+            need = int(headers.get("content-length", ""))
+        except ValueError:
+            continue
+        if need < 0:
+            continue  # malformed: read(-n) would take the whole rest
+        parts = []  # read in bounded chunks: never allocate a claimed length
+        while need and (part := fp.read(min(need, 1 << 20))):
+            parts.append(part)
+            need -= len(part)
+        if need:
+            return  # truncated archive: drop the partial tail record
+        yield headers, b"".join(parts)
 
 
 def _parse_warc_date(s: Optional[str]) -> Optional[datetime]:
@@ -98,78 +100,49 @@ def _http_body(payload: bytes) -> bytes:
     return payload
 
 
-def parse_warc_bytes(
-    data: bytes,
-) -> List[Tuple[Optional[str], Optional[datetime], bytes]]:
-    """Parse one WARC archive into (url, timestamp, document_bytes) tuples.
+def parse_warc_bytes(data: bytes) -> Iterator[Tuple[Optional[str], Optional[datetime], bytes]]:
+    """Yield (url, timestamp, document_bytes) per document record of one archive.
 
-    Malformed records are skipped (never raise): the per-file parse keeps
-    going from the next well-formed record boundary it can find. A record
-    whose WARC-Date does not parse keeps a NULL timestamp; an archive whose
-    gzip stream does not inflate yields no records.
+    Never raises. A record without a valid Content-Length is skipped (the
+    parse resumes at the next line holding `WARC/`), a truncated tail record
+    is dropped, a bad WARC-Date gives a NULL timestamp, and a corrupt or
+    truncated gzip stream ends the archive after the records before it.
     """
+    fp = io.BytesIO(data)
     if data[:2] == b"\x1f\x8b":
-        try:
-            data = _gunzip_members(data)
-        except zlib.error:
-            return []
-    out: List[Tuple[Optional[str], Optional[datetime], bytes]] = []
-    pos = 0
-    n = len(data)
-    while pos < n:
-        start = data.find(b"WARC/", pos)
-        if start < 0:
-            break
-        head_end = data.find(b"\r\n\r\n", start)
-        if head_end < 0:
-            break
-        headers = _parse_headers(data[start:head_end])
-        try:
-            length = int(headers.get("content-length", ""))
-            if length < 0:
-                raise ValueError(length)  # would step the scan backwards
-        except ValueError:
-            pos = head_end + 4
-            continue
-        body_start = head_end + 4
-        body_end = body_start + length
-        if body_end > n:
-            break  # truncated archive: drop the partial tail record
-        rtype = headers.get("warc-type", "")
-        if rtype in _DOC_TYPES:
-            payload = data[body_start:body_end]
-            if rtype == "response":
-                payload = _http_body(payload)
-            out.append((
-                headers.get("warc-target-uri"),
-                _parse_warc_date(headers.get("warc-date")),
-                payload,
-            ))
-        pos = body_end
-    return out
+        fp = gzip.GzipFile(fileobj=fp)
+    try:
+        for headers, payload in _records(fp):
+            rtype = headers.get("warc-type", "")
+            if rtype in _DOC_TYPES:
+                yield (
+                    headers.get("warc-target-uri"),
+                    _parse_warc_date(headers.get("warc-date")),
+                    _http_body(payload) if rtype == "response" else payload,
+                )
+    except (OSError, EOFError, zlib.error):
+        return
 
 
-def _warc_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _frame(rows: list) -> pd.DataFrame:
+    return pd.DataFrame(rows, columns=["url", "warc_ts", "html"]).assign(text="", lang=None)
+
+
+def _warc_kernel(batches: Iterator[pd.DataFrame], batch_rows: int) -> Iterator[pd.DataFrame]:
+    rows: list = []
     for pdf in batches:
-        rows: dict = {"url": [], "warc_ts": [], "html": [], "text": [], "lang": []}
-        for path, content in zip(pdf["path"], pdf["content"]):
+        for path, content in zip(pdf["url"], pdf["html"]):
             for url, ts, doc in parse_warc_bytes(bytes(content)):
-                rows["url"].append(url if url else str(path))
-                rows["warc_ts"].append(ts)
-                rows["html"].append(doc)
-                rows["text"].append("")
-                rows["lang"].append(None)
-        if rows["url"]:  # an empty frame's columns are float64, not the schema's
-            yield pd.DataFrame(rows)
+                rows.append((url if url else str(path), ts, doc))
+                if len(rows) == batch_rows:  # <= 0: one frame, as Arrow's no-limit
+                    yield _frame(rows)
+                    rows = []
+    if rows:  # an empty frame's columns are float64, not the schema's
+        yield _frame(rows)
 
 
 def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
     """Read WARC archives under `path` into the canonical pages schema."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-    return files.mapInPandas(_warc_kernel, WARC_SCHEMA)
+    files = read_binary_files(spark, path, glob).select("url", "html")
+    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return files.mapInPandas(functools.partial(_warc_kernel, batch_rows=n), WARC_SCHEMA)

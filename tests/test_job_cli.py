@@ -4,11 +4,16 @@ the deployment surface users actually launch."""
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +26,7 @@ def corpus():
 def _run(args):
     return subprocess.run(
         [sys.executable, "jobs/extract_job.py", *args],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
 
 
@@ -46,6 +51,44 @@ class TestExtractJobCli:
         ).fetchone()
         assert n[0] == n[1] == 100  # no duplicate urls after the rerun
 
+    def test_resume_fails_on_unreadable_commit(self, corpus, tmp_path):
+        # committed part files that cannot be read must fail the job, not
+        # read as "nothing committed" and re-extract every url again (every
+        # part is cut, so the one schema inference reads is cut too)
+        out = str(tmp_path / "out_bad")
+        assert _run(["--input", corpus, "--output", out]).returncode == 0
+        for f in os.listdir(out):
+            if f.endswith(".parquet"):
+                with open(os.path.join(out, f), "r+b") as fh:
+                    fh.truncate(os.path.getsize(fh.name) // 2)
+        before = sorted(os.listdir(out))
+        r = _run(["--input", corpus, "--output", out, "--resume"])
+        assert r.returncode != 0
+        assert sorted(os.listdir(out)) == before  # nothing appended
+
+    def test_warc_source_end_to_end(self, spark, corpus, tmp_path):
+        # the spark-submit ingestion path: WARC archives in, one extraction
+        # row per archived url, equal to extract_pipeline over the table
+        from pdf_parser_spark.pipeline import extract_pipeline, load_pages
+        from pdf_parser_spark.sources.warc_fixture import ensure_warc_fixture
+
+        out = str(tmp_path / "out_warc")
+        r = _run(["--input", ensure_warc_fixture(corpus), "--source", "warc",
+                  "--output", out])
+        assert r.returncode == 0, r.stderr[-2000:]
+        got = duckdb.sql(
+            f"SELECT url, status, text, fields_json "
+            f"FROM read_parquet('{out}/*.parquet') ORDER BY url"
+        ).fetchall()
+        urls = [u for u, *_ in got]
+        assert len(urls) == len(set(urls)) == 50
+        want = sorted(
+            tuple(row) for row in extract_pipeline(load_pages(spark, corpus))
+            .where(F.col("url").isin(urls))
+            .select("url", "status", "text", "fields_json").collect()
+        )
+        assert got == want
+
     def test_lineage_output(self, corpus, tmp_path):
         out, lin = str(tmp_path / "out3"), str(tmp_path / "lineage")
         r = _run(["--input", corpus, "--output", out, "--lineage-output", lin])
@@ -62,7 +105,7 @@ class TestCurateJobCli:
         r = subprocess.run(
             [sys.executable, "jobs/curate_job.py", "--input", corpus,
              "--output", out, "--chunk-tokens", "64", "--overlap", "8"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=REPO, timeout=300,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         rows = duckdb.sql(
@@ -76,7 +119,7 @@ class TestCurateJobCli:
         r = subprocess.run(
             [sys.executable, "jobs/curate_job.py", "--input", corpus,
              "--output", out, "--sample-rate", "0.3"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=REPO, timeout=300,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         n_docs = duckdb.sql(
@@ -99,7 +142,7 @@ class TestParallelismInvariance:
             r = subprocess.run(
                 [sys.executable, "jobs/extract_job.py",
                  "--input", corpus, "--output", out],
-                capture_output=True, text=True, cwd="/root/repo",
+                capture_output=True, text=True, cwd=REPO,
                 timeout=300, env=env,
             )
             assert r.returncode == 0, r.stderr[-2000:]

@@ -122,10 +122,10 @@ class TestWarcProperties:
     @settings(max_examples=40, deadline=None)
     @given(
         payloads=st.lists(st.binary(min_size=0, max_size=500), min_size=1, max_size=5),
-        gz=st.booleans(),
+        layout=st.sampled_from(["plain", "one_member", "member_per_record"]),
     )
-    def test_payloads_roundtrip(self, payloads, gz):
-        recs = b"".join(
+    def test_payloads_roundtrip(self, payloads, layout):
+        recs = [
             (
                 f"WARC/1.0\r\nWARC-Type: resource\r\n"
                 f"WARC-Target-URI: https://x/{i}\r\n"
@@ -133,16 +133,20 @@ class TestWarcProperties:
                 f"Content-Length: {len(p)}\r\n\r\n"
             ).encode() + p + b"\r\n\r\n"
             for i, p in enumerate(payloads)
-        )
-        if gz:
-            recs = gzip.compress(recs)
-        got = parse_warc_bytes(recs)
+        ]
+        if layout == "member_per_record":  # the Common Crawl layout
+            data = b"".join(gzip.compress(r) for r in recs)
+        elif layout == "one_member":
+            data = gzip.compress(b"".join(recs))
+        else:
+            data = b"".join(recs)
+        got = list(parse_warc_bytes(data))
         assert [g[2] for g in got] == payloads
 
     @settings(max_examples=30, deadline=None)
     @given(data=st.binary(min_size=0, max_size=2048))
     def test_garbage_never_crashes(self, data):
-        assert isinstance(parse_warc_bytes(data), list)
+        assert all(len(r) == 3 for r in parse_warc_bytes(data))
 
 
 class TestJsonCanonical:

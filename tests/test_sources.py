@@ -60,22 +60,22 @@ def _sample_warc() -> bytes:
 
 class TestParseWarcBytes:
     def test_extracts_only_document_records(self):
-        recs = parse_warc_bytes(_sample_warc())
+        recs = list(parse_warc_bytes(_sample_warc()))
         assert [u for u, _, _ in recs] == [
             "https://example.org/a.html", "https://example.org/b.pdf"
         ]
 
     def test_http_envelope_stripped(self):
-        recs = parse_warc_bytes(_sample_warc())
+        recs = list(parse_warc_bytes(_sample_warc()))
         assert recs[0][2] == HTML_DOC
 
     def test_pdf_payload_byte_identical(self):
         pdf = build_pdf([["Customer Name: Jan Kowalski"]], font_mode="simple")
-        recs = parse_warc_bytes(_sample_warc())
+        recs = list(parse_warc_bytes(_sample_warc()))
         assert recs[1][2] == pdf
 
     def test_warc_date_parsed(self):
-        recs = parse_warc_bytes(_sample_warc())
+        recs = list(parse_warc_bytes(_sample_warc()))
         assert recs[0][1] == datetime(2024, 1, 2, 3, 4, 5)
 
     def test_gzip_member_per_record(self):
@@ -88,18 +88,18 @@ class TestParseWarcBytes:
                          "2024-01-03T00:00:00Z", pdf),
         ]
         gz = b"".join(gzip.compress(r) for r in raw)
-        recs = parse_warc_bytes(gz)
+        recs = list(parse_warc_bytes(gz))
         assert len(recs) == 2 and recs[0][2] == HTML_DOC and recs[1][2] == pdf
 
     def test_truncated_tail_record_dropped(self):
         data = _sample_warc()
-        recs_full = parse_warc_bytes(data)
-        recs_cut = parse_warc_bytes(data[:-30])  # cuts into the last payload
+        recs_full = list(parse_warc_bytes(data))
+        recs_cut = list(parse_warc_bytes(data[:-30]))  # cuts into the last payload
         assert len(recs_cut) == len(recs_full) - 1
 
     def test_garbage_between_records_skipped(self):
         data = b"junkjunk" + _sample_warc()
-        assert len(parse_warc_bytes(data)) == 2
+        assert len(list(parse_warc_bytes(data))) == 2
 
     def test_malformed_content_length_skips_record(self):
         bad = (
@@ -107,7 +107,7 @@ class TestParseWarcBytes:
             b"WARC-Target-URI: https://x/\r\nContent-Length: nope\r\n\r\n"
         )
         data = bad + _sample_warc()
-        assert len(parse_warc_bytes(data)) == 2
+        assert len(list(parse_warc_bytes(data))) == 2
 
     def test_negative_content_length_skips_record(self):
         # a negative length would move the scan back before the record
@@ -115,17 +115,77 @@ class TestParseWarcBytes:
         data = _sample_warc() + _warc_record(
             "resource", "https://x/neg", "2024-01-01T00:00:00Z", b"x" * 64
         ).replace(b"Content-Length: 64", b"Content-Length: -300")
-        assert len(parse_warc_bytes(data)) == 2
+        assert len(list(parse_warc_bytes(data))) == 2
 
     def test_out_of_range_date_keeps_record(self):
         # year 1 at +05:00 is before datetime.min once shifted to UTC
         data = _warc_record("resource", "https://x/old",
                             "0001-01-01T00:00:00+05:00", HTML_DOC)
-        assert parse_warc_bytes(data) == [("https://x/old", None, HTML_DOC)]
+        assert list(parse_warc_bytes(data)) == [("https://x/old", None, HTML_DOC)]
 
     def test_corrupt_gzip_yields_no_records(self):
         gz = gzip.compress(_sample_warc())
-        assert parse_warc_bytes(gz[:10] + b"\xff" * 20 + gz[30:]) == []
+        assert list(parse_warc_bytes(gz[:10] + b"\xff" * 20 + gz[30:])) == []
+
+    def test_corrupt_member_keeps_records_before_it(self):
+        # one gzip-failure rule: a corrupt member ends the archive, but the
+        # records of the members before it survive
+        members = [
+            gzip.compress(_warc_record("resource", f"https://x/{i}",
+                                       "2024-01-01T00:00:00Z", HTML_DOC))
+            for i in range(3)
+        ]
+        members[2] = members[2][:10] + b"\xff" * 20 + members[2][30:]
+        recs = list(parse_warc_bytes(b"".join(members)))
+        assert recs == [
+            ("https://x/0", datetime(2024, 1, 1), HTML_DOC),
+            ("https://x/1", datetime(2024, 1, 1), HTML_DOC),
+        ]
+
+    @pytest.mark.parametrize("length", [
+        "99999999999999999999",  # does not fit in a ssize_t
+        "4611686018427387904",   # 2**62: fits, but must never be allocated
+    ])
+    @pytest.mark.parametrize("member_per_record", [False, True])
+    def test_huge_content_length_ends_archive(self, length, member_per_record):
+        # a claimed length past the end of the stream is a truncated tail:
+        # the records before it are kept and nothing raises
+        raw = [
+            _warc_record("resource", f"https://x/{i}", "2024-01-01T00:00:00Z",
+                         HTML_DOC)
+            for i in range(2)
+        ] + [_warc_record("resource", "https://x/huge", "2024-01-01T00:00:00Z",
+                          b"x" * 64).replace(b"Content-Length: 64",
+                                             f"Content-Length: {length}".encode())]
+        data = (b"".join(gzip.compress(r) for r in raw) if member_per_record
+                else b"".join(raw))
+        assert list(parse_warc_bytes(data)) == [
+            ("https://x/0", datetime(2024, 1, 1), HTML_DOC),
+            ("https://x/1", datetime(2024, 1, 1), HTML_DOC),
+        ]
+
+    def test_kernel_frames_bounded(self):
+        # one input batch of archives holding 100 records in all must come
+        # out as frames of at most 64 rows, with the same rows overall
+        import pandas as pd
+
+        from pdf_parser_spark.sources.warc import _warc_kernel
+
+        archives = [
+            b"".join(gzip.compress(_warc_record(
+                "resource", f"https://x/{a}/{i}", "2024-01-01T00:00:00Z",
+                HTML_DOC)) for i in range(25))
+            for a in range(4)
+        ]
+        batch = pd.DataFrame({"url": [f"a{a}" for a in range(4)],
+                              "html": archives})
+        frames = list(_warc_kernel(iter([batch]), batch_rows=64))
+        assert max(len(f) for f in frames) <= 64
+        rows = pd.concat(frames)
+        assert rows["url"].tolist() == [
+            f"https://x/{a}/{i}" for a in range(4) for i in range(25)
+        ]
+        assert (rows["html"] == HTML_DOC).all()
 
 
 class TestSparkSources:
