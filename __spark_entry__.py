@@ -1054,9 +1054,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def dedup_span_coverage(spark, sf_dir):
         # span-level exact-substring dedup (Lee et al. 2021): per-document
         # coverage of 10-token windows that repeat >= 2 times corpus-wide,
-        # with exact interval-union token counts via an ordered window
-        # function. hashed=True is the scale path (8-byte xxhash64 shuffle
-        # keys); a pytest pins hashed == unhashed output.
+        # with exact interval-union token counts, all from one exploded
+        # frame (8-byte xxhash64 shuffle keys; the oracle groups the gram
+        # strings themselves and takes the union with a running-max window).
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
 
         d = _docs(spark, sf_dir)

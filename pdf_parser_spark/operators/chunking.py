@@ -32,11 +32,12 @@ def chunk_documents(
 
     Chunk k starts at token offset k*(chunk_tokens-overlap) and takes
     chunk_tokens tokens; the tail chunk is shorter. Tokens are projected
-    once as a column, then sequence -> slice -> posexplode, all codegen'd
-    (slicing a captured split expression re-splits the document per
-    chunk); the fan-out is bounded by n_tokens/stride per row, so skew
-    follows document length, which the F1 size cap already bounds.
-    Returns (id, chunk_idx, chunk_text, n_tokens).
+    once as a column, the chunk start offsets posexplode, and each chunk is
+    a plain slice of the token column in the projection above, all
+    codegen'd (no lambda: slicing inside one re-evaluates what it
+    captures per chunk); the fan-out is bounded by n_tokens/stride per
+    row, so skew follows document length, which the F1 size cap already
+    bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
     """
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
@@ -45,15 +46,16 @@ def chunk_documents(
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(toks) - overlap, F.lit(1)), F.lit(step)
     )
-    chunks = F.transform(starts, lambda s: F.slice(toks, s, chunk_tokens))
+    chunk = F.slice(toks, F.col("_start"), chunk_tokens)
     return (
         df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-        .select(id_col, F.posexplode(chunks).alias("chunk_idx", "_chunk"))
+        .select(id_col, "_toks",
+                F.posexplode(starts).alias("chunk_idx", "_start"))
         .select(
             id_col,
             "chunk_idx",
-            F.array_join("_chunk", " ").alias("chunk_text"),
-            F.size("_chunk").alias("n_tokens"),
+            F.array_join(chunk, " ").alias("chunk_text"),
+            F.size(chunk).alias("n_tokens"),
         )
     )
 

@@ -178,43 +178,33 @@ def line_dedup(
     nav text), then reassemble each document's remaining lines in their
     original order.
 
-    Shape at scale: posexplode -> one distinct-doc count per line (two
-    map-side-combinable aggregates) -> filter -> one groupBy(doc) that
-    array_sorts (pos, line) structs back into text. Shuffles carry lines,
-    never whole documents, and the frequency side can be computed on a
-    sample or a sketch at 10^12 docs without changing the plan shape.
+    ``id_col`` must be a key of ``df``: one row per id, NULL text giving
+    ("", 0, 0). Shape at scale: one posexplode_outer (NULL text keeps one
+    row with a NULL pos and line, so no document needs a rejoin) -> one
+    distinct-doc count per line (two map-side-combinable aggregates) ->
+    the too-common lines LEFT-join back (a NULL line never matches) -> one
+    groupBy(doc) that counts lines and array_sorts the kept (pos, line)
+    structs back into text. Shuffles carry lines, never whole documents,
+    and the frequency side can be computed on a sample or a sketch at
+    10^12 docs without changing the plan shape.
     """
     line_rows = df.select(
         F.col(id_col),
-        F.posexplode(lines(F.col(text_col))).alias("pos", "line"),
+        F.posexplode_outer(lines(F.col(text_col))).alias("pos", "line"),
     )
-    freq = line_rows.groupBy("line").agg(
-        F.countDistinct(id_col).alias("_df")
+    common = (
+        line_rows.groupBy("line")
+        .agg(F.countDistinct(id_col).alias("_df"))
+        .where(F.col("_df") > max_doc_freq)
     )
-    kept = line_rows.join(freq.where(F.col("_df") <= max_doc_freq), "line")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda x: x["line"],
-            ),
-            "\n",
-        ).alias("text_deduped"),
-        F.count(F.lit(1)).alias("n_lines_kept"),
-    )
-    totals = line_rows.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_lines_total")
-    )
-    return (
-        df.select(id_col)
-        .join(totals, id_col, "left")
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
-            F.coalesce("n_lines_kept", F.lit(0)).alias("n_lines_kept"),
-            F.coalesce("n_lines_total", F.lit(0)).alias("n_lines_total"),
-        )
+    kept = F.col("pos").isNotNull() & F.col("_df").isNull()
+    kept_lines = F.array_sort(
+        F.collect_list(F.when(kept, F.struct("pos", "line"))))
+    return line_rows.join(common, "line", "left").groupBy(id_col).agg(
+        F.array_join(F.transform(kept_lines, lambda x: x["line"]), "\n")
+        .alias("text_deduped"),
+        F.count(F.when(kept, 1)).alias("n_lines_kept"),
+        F.count("pos").alias("n_lines_total"),
     )
 
 

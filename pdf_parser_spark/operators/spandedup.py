@@ -5,27 +5,29 @@
 document-level near-dup (MinHash, SimHash; `operators/dedup.py`) misses
 boilerplate repeated inside otherwise-distinct pages, which is most of the
 duplication in web text. Their suffix-array construction is single-machine;
-the Spark-first equivalent used at web scale is k-token window hashing:
+the Spark-first equivalent used at web scale is k-token window hashing,
+over ONE exploded frame:
 
-1. every k-token window of every document becomes one (doc, pos, key) row
-   — a narrow `posexplode`, no shuffle;
-2. one `groupBy(key)` (map-side partial aggregation collapses repeats
-   before the exchange) finds windows occurring >= ``min_count`` times
-   corpus-wide — including repeats WITHIN one document;
-3. windows join back to the duplicated-key set (both sides shuffle on the
-   8-byte key; AQE handles the hot-key skew that duplicated boilerplate
-   creates by definition);
-4. per document, the union length of the flagged [pos, pos+k) intervals is
-   computed with an ordered window function (running max of interval end)
-   — exact coverage even when duplicated windows overlap, no
-   driver-side interval merging.
+1. ``posexplode_outer`` gives one (doc, n_tokens, pos, key) row per k-token
+   window — narrow, no shuffle. A document with no window (short, empty or
+   NULL text) keeps one row with a NULL pos and key, so its totals need no
+   second scan and no rejoin;
+2. ``groupBy(key)`` counts each key's grams corpus-wide (map-side partial
+   aggregation collapses repeats, including repeats WITHIN one document)
+   and keeps the keys seen >= ``min_count`` times. Not a window over the
+   key: that buffers a hot key's group in one task (AQE splits skewed
+   joins, not windows);
+3. the duplicated keys LEFT-join back onto the frame; a NULL key never
+   matches, so window-less rows never share a partition with a real key;
+4. one ``groupBy(doc)`` gives every output column: the totals, and the
+   sorted starts of the flagged windows, folded into the exact union
+   length of their [pos, pos+k) intervals even where they overlap (no
+   sort of the unflagged windows, no window function).
 
-With ``hashed=True`` (the default, the scale path) the shuffle key is
-``xxhash64(gram)`` — 8 bytes instead of a ~60-byte string. A 64-bit
-collision can merge two gram classes and at most flag a handful of
-false-positive windows per ~10^13 grams; standard practice accepts this
-(the published pipelines hash too). ``hashed=False`` keys on the gram
-string itself; a test pins both paths to identical output.
+The key is ``xxhash64(gram)``, 8 bytes instead of a ~60-byte string. A
+64-bit collision can merge two gram classes and at most flag a handful of
+false-positive windows per ~10^13 grams, which the published pipelines
+accept too; the DuckDB oracle groups the gram strings themselves.
 
 Reference parity: no counterpart in the reference app — part of the
 beyond-reference training-data-pipeline surface (SURVEY.md §2).
@@ -33,7 +35,7 @@ beyond-reference training-data-pipeline surface (SURVEY.md §2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .textstats import lower_tokens, ngrams
 
@@ -47,59 +49,51 @@ def duplicated_span_stats(
     max_coverage_pct: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """Per-document duplicated-span statistics and a keep flag.
 
-    One row per input document: ``n_tokens``, ``n_windows`` (k-token
-    windows), ``n_dup_windows`` (windows whose content occurs >=
-    ``min_count`` times corpus-wide), ``dup_tokens`` (union length of the
-    flagged windows' token intervals), and ``keep`` — true iff the
-    duplicated-token coverage is <= ``max_coverage_pct`` percent (exact
-    integer math: ``dup_tokens * 100 <= n_tokens * pct``; empty documents
-    keep).
+    ``id_col`` must be a key of ``docs``; one row per id: ``n_tokens``
+    (NULL for NULL text), ``n_windows`` (k-token windows), ``n_dup_windows``
+    (windows whose content occurs >= ``min_count`` times corpus-wide),
+    ``dup_tokens`` (union length of the flagged windows' token intervals),
+    and ``keep`` — true iff the duplicated-token coverage is <=
+    ``max_coverage_pct`` percent (exact integer math: ``dup_tokens * 100 <=
+    n_tokens * pct``; empty documents keep).
     """
-    base = docs.select(id_col, lower_tokens(F.col(text_col)).alias("_toks"))
-    totals = base.select(
-        id_col, F.size("_toks").cast("long").alias("n_tokens")
-    )
-    grams = ngrams(F.col("_toks"), k)
-    key = F.xxhash64("gram") if hashed else F.col("gram")
+    toks = F.col("_toks")
     wins = (
-        base.select(id_col, F.posexplode(grams).alias("pos", "gram"))
-        .select(id_col, "pos", key.alias("key"))
+        docs.select(id_col, lower_tokens(F.col(text_col)).alias("_toks"))
+        .select(id_col, F.size(toks).cast("long").alias("n_tokens"),
+                F.posexplode_outer(ngrams(toks, k)).alias("pos", "gram"))
+        .select(id_col, "n_tokens", "pos", F.when(
+            F.col("gram").isNotNull(), F.xxhash64("gram")).alias("key"))
     )
     dup_keys = (
-        wins.groupBy("key")
-        .agg(F.count(F.lit(1)).alias("_c"))
+        wins.groupBy("key").agg(F.count("key").alias("_c"))
         .where(F.col("_c") >= min_count)
-        .select("key")
     )
-    flagged = wins.join(dup_keys, "key").select(id_col, "pos")
-    prev = (
-        Window.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    flagged = F.array_sort(F.collect_list(
+        F.when(F.col("_c").isNotNull(), F.col("pos"))))
+    # sorted equal-length intervals: each start adds min(k, its gap to the
+    # previous flagged start) to their union; the first adds k
+    union = F.aggregate(
+        "_flagged",
+        F.struct(F.lit(-k).alias("p"), F.lit(0).cast("long").alias("n")),
+        lambda acc, p: F.struct(
+            p.alias("p"),
+            (acc["n"] + F.least(F.lit(k), p - acc["p"])).alias("n")),
+        lambda acc: acc["n"],
     )
-    covered = flagged.withColumn(
-        "_prev_end", F.max(F.col("pos") + k).over(prev)
-    )
-    per_doc = covered.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_dup_windows"),
-        F.sum(
-            F.col("pos") + k
-            - F.greatest(F.col("pos"), F.coalesce("_prev_end", F.col("pos")))
-        ).cast("long").alias("dup_tokens"),
-    )
-    dup_tokens = F.coalesce("dup_tokens", F.lit(0)).cast("long")
-    return totals.join(per_doc, id_col, "left").select(
-        id_col,
-        "n_tokens",
-        F.greatest(F.col("n_tokens") - (k - 1), F.lit(0))
-        .cast("long").alias("n_windows"),
-        F.coalesce("n_dup_windows", F.lit(0))
-        .cast("long").alias("n_dup_windows"),
-        dup_tokens.alias("dup_tokens"),
-        (dup_tokens * 100 <= F.col("n_tokens") * max_coverage_pct)
-        .alias("keep"),
+    n_tok, dup_tok = F.col("n_tokens"), F.col("dup_tokens")
+    n_windows = F.greatest(n_tok - (k - 1), F.lit(0)).cast("long")
+    return (
+        wins.join(dup_keys, "key", "left").groupBy(id_col)
+        .agg(F.max("n_tokens").alias("n_tokens"), flagged.alias("_flagged"))
+        .withColumn("dup_tokens", union)
+        .select(
+            id_col, n_tok, n_windows.alias("n_windows"),
+            F.size("_flagged").cast("long").alias("n_dup_windows"),
+            dup_tok,
+            (dup_tok * 100 <= n_tok * max_coverage_pct).alias("keep"),
+        )
     )

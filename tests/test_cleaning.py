@@ -109,38 +109,42 @@ class TestDomainOps:
 
 
 class TestLineDedup:
-    def test_common_lines_dropped_order_preserved(self, spark):
+    # extra inputs in every case: NULL text keeps a row with no lines, ""
+    # is one blank line that no other doc shares; neither changes a row
+    NULL_DOC, EMPTY_DOC = 900, 901
+
+    def _run(self, spark, rows):
         from pdf_parser_spark.operators.cleaning import line_dedup
 
+        extra = [(self.NULL_DOC, None), (self.EMPTY_DOC, "")]
+        df = spark.createDataFrame(rows + extra, "doc_id bigint, text string")
+        out = {r.doc_id: r for r in line_dedup(df, max_doc_freq=1).collect()}
+        assert len(out) == len(rows) + 2
+        assert tuple(out.pop(self.NULL_DOC))[1:] == ("", 0, 0)
+        assert tuple(out.pop(self.EMPTY_DOC))[1:] == ("", 1, 1)
+        return out
+
+    def test_common_lines_dropped_order_preserved(self, spark):
         boiler = "COOKIE BANNER"
         rows = [
             (0, f"{boiler}\nunique alpha\nmiddle zero\n{boiler}"),
             (1, f"{boiler}\nunique beta"),
             (2, "entirely unique document"),
         ]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = {r.doc_id: r for r in line_dedup(df, max_doc_freq=1).collect()}
+        out = self._run(spark, rows)
         assert out[0].text_deduped == "unique alpha\nmiddle zero"
         assert out[0].n_lines_total == 4 and out[0].n_lines_kept == 2
         assert out[1].text_deduped == "unique beta"
         assert out[2].text_deduped == "entirely unique document"
 
     def test_all_lines_dropped_yields_empty_row_not_missing(self, spark):
-        from pdf_parser_spark.operators.cleaning import line_dedup
-
-        rows = [(0, "same\nsame2"), (1, "same\nsame2")]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = {r.doc_id: r for r in line_dedup(df, max_doc_freq=1).collect()}
+        out = self._run(spark, [(0, "same\nsame2"), (1, "same\nsame2")])
         assert set(out) == {0, 1}
         assert out[0].text_deduped == "" and out[0].n_lines_kept == 0
         assert out[0].n_lines_total == 2
 
     def test_within_doc_repeats_survive_freq_filter(self, spark):
-        from pdf_parser_spark.operators.cleaning import line_dedup
-
-        rows = [(0, "twice\ntwice\nother"), (1, "unrelated")]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = {r.doc_id: r for r in line_dedup(df, max_doc_freq=1).collect()}
+        out = self._run(spark, [(0, "twice\ntwice\nother"), (1, "unrelated")])
         # 'twice' occurs in only ONE doc (doc-frequency 1) -> both copies kept
         assert out[0].text_deduped == "twice\ntwice\nother"
 

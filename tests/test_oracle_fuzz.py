@@ -157,6 +157,29 @@ class TestOracleFuzz:
         }
         assert got == want
 
+    def test_line_dedup_doc_frequency(self, tables):
+        import __spark_entry__ as e
+
+        from pdf_parser_spark.operators.cleaning import line_dedup
+
+        df, con = tables
+        got = {
+            r.url: tuple(r)[1:]
+            for r in line_dedup(
+                df.selectExpr("doc_id AS url", "text"), id_col="url"
+            ).collect()
+        }
+        # the driver oracle reads the feed pages; point it at the fuzz
+        # documents table instead (same math, same aliases)
+        feed = f"FROM {e._corpus_glob()} WHERE url LIKE '%/feed/%'"
+        sql = _oracle("clean_line_dedup")
+        assert sql.count(feed) == 2  # the rewrite must match both reads
+        sql = sql.replace(
+            feed, "FROM (SELECT doc_id AS url, text FROM documents)")
+        want = {row[0]: tuple(row[1:]) for row in con.execute(sql).fetchall()}
+        assert got == want
+        assert any(n_kept < n_total for _, n_kept, n_total in got.values())
+
     def test_gopher_gate_rules(self, tables):
         import math
         import re

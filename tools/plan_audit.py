@@ -1,6 +1,6 @@
-"""Physical-plan audit: exchanges / pushdown / pruning / join strategy, text
-splits and optimized-plan expression count per query. Backs the 'Plan
-audit' section of BENCH.md.
+"""Physical-plan audit: exchanges / pushdown / pruning / join strategy, file
+scans and joins, text splits and optimized-plan expression count per query.
+Backs the 'Plan audit' section of BENCH.md.
 
 Usage: python tools/plan_audit.py [query ...]
 """
@@ -28,9 +28,10 @@ DEFAULT = [
     "temporal_asof_join", "temporal_interval_join",
     "clean_gopher_gate",  # r5: must stay one fused JVM projection
     "clean_decontaminate",  # r5: gram join must broadcast the bench side
-    "dedup_span_coverage",  # r5: 8-byte-key shuffles, no broadcast of big sides
+    "dedup_span_coverage",  # 8-byte-key shuffles; scans=2 joins=1
     "ann_semdedup",  # one Arrow GEMM assignment, exprs= flat in k; cluster join
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
+    "clean_line_dedup",  # like span dedup: scans=2 joins=1
     # each gate projects its token / line arrays once: splits=1
     "clean_repetition_flags", "clean_stopword_stats", "text_lang_id",
 ]
@@ -67,6 +68,14 @@ def split_copies(plan) -> int:
     return most
 
 
+def scans_and_joins(plan) -> tuple[int, int]:
+    """(file scans, joins) in a physical plan's current tree: an executed
+    adaptive plan prints its final tree above its initial one, and a reused
+    exchange prints no subtree (it runs once, where it first appears)."""
+    tree = plan.toString().split("== Initial Plan ==")[0]
+    return tree.count("FileScan "), len(re.findall(r"\w+Join ", tree))
+
+
 def main() -> int:
     names = sys.argv[1:] or DEFAULT
     spark = get_spark(master="local[4]", shuffle_partitions=8)
@@ -82,8 +91,10 @@ def main() -> int:
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         schemas = re.findall(r"ReadSchema: (.*)", plan)
         optimized = df._jdf.queryExecution().optimizedPlan()
+        scans, joins = scans_and_joins(df._jdf.queryExecution().executedPlan())
         print(
             f"== {name}: exchanges={plan.count('Exchange')}"
+            f" scans={scans} joins={joins}"
             f" broadcastJoin={plan.count('BroadcastHashJoin')}"
             f" sortMergeJoin={plan.count('SortMergeJoin')}"
             f" topK={plan.count('TakeOrderedAndProject')}"
