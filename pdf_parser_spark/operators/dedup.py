@@ -190,37 +190,30 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   max_df: Optional[int] = None) -> DataFrame:
     """Exact n-gram Jaccard similarity via an inverted shingle index.
 
-    common(a,b) from the self-join on shingle; |A|,|B| from a per-doc count;
-    J = common / (|A| + |B| - common). Only co-occurring pairs are scored.
+    ``id_col`` must be a key of ``df``. Returns (id_a, id_b, jaccard) with
+    id_a < id_b for every pair sharing a shingle and J >= threshold, where
+    J = common / (|A| + |B| - common), rounded to 6 places. Only
+    co-occurring pairs are scored: common(a,b) counts the rows of the one
+    self-join on shingle, and |A|, |B| are a per-document window count over
+    the shingle frame that rides through that join as a carry column (no
+    size aggregate, no join back).
 
     max_df: skew guard — a shingle appearing in M documents contributes
     M^2/2 join rows, so stop-shingles ("of the and") dominate web corpora.
     Shingles with document frequency > max_df are dropped from the index
-    BEFORE the self-join; |A|/|B| are computed on the same filtered shingle
+    BEFORE the self-join; |A|/|B| are counted on the same filtered shingle
     sets, so the similarity stays a true Jaccard over the pruned universe
     (the standard prefix-filtering compromise). None = exact (oracle mode).
     """
     sh = _drop_large_groups(
         word_shingles(df, text_col, id_col, n), ["shingle"], max_df
-    ).cache()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    common = (
-        _key_pairs(sh, ["shingle"], id_col)
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
+    ).withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+    common, sz_a, sz_b = F.col("common"), F.col("sz_a"), F.col("sz_b")
     return (
-        common.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-                6,
-            ),
-        )
+        _key_pairs(sh, ["shingle"], id_col, carry=["sz"])
+        .groupBy("id_a", "id_b", "sz_a", "sz_b")
+        .agg(F.count(F.lit(1)).alias("common"))
+        .withColumn("jaccard", F.round(common / (sz_a + sz_b - common), 6))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

@@ -74,67 +74,28 @@ def stream_host_stats(
     checkpoint: str,
     max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
-    """Custom stateful operator via applyInPandasWithState: incremental
-    per-host crawl statistics that survive across micro-batches.
+    """Incremental per-host crawl statistics that survive across
+    micro-batches: Spark's built-in streaming aggregate, no per-row Python.
 
-    State per host = (docs_seen, bytes_seen, first_ts, last_ts); each
-    micro-batch folds its rows into the state and emits the running totals —
-    the streaming analog of a grouped aggregate whose groups arrive
-    incrementally at 10^12-document scale (state store is partitioned by
-    host hash, so it shards across executors).
+    Per host: docs, bytes (html length, 0 for NULL html), first_ts and
+    last_ts (min / max warc_ts). The partial aggregates live in the state
+    store, partitioned by host hash, so state shards across executors and
+    each micro-batch folds only its own rows into it. UPDATE mode emits the
+    running totals of the hosts a micro-batch touched; the latest row per
+    host is its total.
 
     Emits to an in-memory sink named 'host_stats'.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    hosted = pages.select(
-        F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1).alias("host"),
-        F.coalesce(F.length("html"), F.lit(0)).alias("n_bytes"),
-        F.col("warc_ts"),
-    )
-
-    out_schema = (
-        "host string, docs bigint, bytes bigint, "
-        "first_ts timestamp, last_ts timestamp"
-    )
-    state_schema = "docs bigint, bytes bigint, first_ts timestamp, last_ts timestamp"
-
-    def update(key, pdfs, state: GroupState):
-        docs = 0
-        nbytes = 0
-        first = last = None
-        for pdf in pdfs:
-            docs += len(pdf)
-            nbytes += int(pdf["n_bytes"].sum())
-            ts = pdf["warc_ts"].dropna()
-            if len(ts):
-                mn, mx = ts.min(), ts.max()
-                first = mn if first is None else min(first, mn)
-                last = mx if last is None else max(last, mx)
-        if state.exists:
-            p_docs, p_bytes, p_first, p_last = state.get
-            docs += p_docs
-            nbytes += p_bytes
-            first = p_first if first is None else (
-                min(first, p_first) if p_first is not None else first
-            )
-            last = p_last if last is None else (
-                max(last, p_last) if p_last is not None else last
-            )
-        state.update((docs, nbytes, first, last))
-        yield pd.DataFrame({
-            "host": [key[0]],
-            "docs": [docs],
-            "bytes": [nbytes],
-            "first_ts": [first],
-            "last_ts": [last],
-        })
-
-    stats = hosted.groupBy("host").applyInPandasWithState(
-        update, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout,
+    stats = (
+        pages.groupBy(
+            F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1).alias("host"))
+        .agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),
+            F.min("warc_ts").alias("first_ts"),
+            F.max("warc_ts").alias("last_ts"),
+        )
     )
     return (
         stats.writeStream.format("memory")

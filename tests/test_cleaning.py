@@ -220,14 +220,21 @@ class TestDecontaminate:
     """decontaminate.decontaminate — benchmark n-gram overlap flags."""
 
     BENCH = "the quick brown fox jumps over the lazy dog tonight"
+    # extra input in every case: NULL text keeps its row with no hits and
+    # changes no other row
+    NULL_DOC = 900
 
     def _run(self, spark, docs, **kw):
         from pdf_parser_spark.operators.decontaminate import decontaminate
 
-        ddf = spark.createDataFrame(docs, "doc_id bigint, text string")
+        ddf = spark.createDataFrame(docs + [(self.NULL_DOC, None)],
+                                    "doc_id bigint, text string")
         bdf = spark.createDataFrame([(100, self.BENCH)],
                                     "doc_id bigint, text string")
-        return {r.doc_id: r for r in decontaminate(ddf, bdf, **kw).collect()}
+        out = {r.doc_id: r for r in decontaminate(ddf, bdf, **kw).collect()}
+        assert len(out) == len(docs) + 1
+        assert tuple(out.pop(self.NULL_DOC))[1:] == (0, False)
+        return out
 
     def test_exact_overlap_flagged(self, spark):
         docs = [
@@ -270,10 +277,8 @@ class TestDecontaminate:
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
             .fromString("formatted")
         plan = df._jdf.queryExecution().explainString(mode)
-        # the GRAM join (big side) must broadcast the benchmark set; the
-        # final flag join on doc_id may sort-merge — it moves only 8-byte
-        # keys + counts and the hit set is unbounded in the worst case,
-        # so forcing a broadcast there would NOT be scale-safe
-        # the only inner join in the plan IS the gram join
+        # the one join, corpus grams LEFT-joined to the benchmark set, must
+        # broadcast the benchmark side (small by definition), so the big
+        # side never shuffles for it
         assert "BroadcastHashJoin" in plan
-        assert "Inner BuildRight" in plan.split("BroadcastHashJoin")[1][:40]
+        assert "LeftOuter BuildRight" in plan.split("BroadcastHashJoin")[1][:40]

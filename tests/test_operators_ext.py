@@ -321,8 +321,9 @@ class TestDedupSkewGuards:
         finally:
             for k, v in saved.items():
                 spark.conf.set(k, v)
-        # jaccard's window shuffle sits inside its .cache(), and the plans
-        # above the cache shuffle again: at most one more
+        # jaccard's per-document size window (by id) sits between the cap
+        # window (by shingle) and the self-join, so the join shuffles by
+        # shingle again: at most one more
         assert capped <= uncapped + (1 if op == "jaccard" else 0), (
             op, uncapped, capped)
 
@@ -1012,15 +1013,21 @@ class TestNoTextRescanInLambdas:
 
 
 class TestOneExplodedPass:
-    """Span dedup and line dedup explode each document once, and every
-    per-document column comes from that one exploded frame: the input is
-    read twice (the key counts and the join back) and joined once — no
-    totals aggregate, no rescan of the ids, no rejoin. Counted in the
-    executed (final adaptive) plan over a parquet input."""
+    """Span dedup, line dedup, decontamination and n-gram Jaccard explode
+    each document once, and every per-document column comes from that one
+    exploded frame: the input is read at most twice (span / line: the key
+    counts and the join back; decontaminate: the corpus and the benchmark;
+    jaccard: the self-join's two sides) and joined once — no totals or size
+    aggregate, no rescan of the ids, no rejoin. Counted in the executed
+    (final adaptive) plan over a parquet input."""
 
-    @pytest.mark.parametrize("op", ["span", "line"])
+    @pytest.mark.parametrize("op", ["span", "line", "decontaminate", "jaccard"])
     def test_reads_input_twice_joins_once(self, spark, tmp_path, op):
+        from pyspark.sql import functions as F
+
         from pdf_parser_spark.operators.cleaning import line_dedup
+        from pdf_parser_spark.operators.decontaminate import decontaminate
+        from pdf_parser_spark.operators.dedup import jaccard_pairs
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
         from tools.plan_audit import scans_and_joins
 
@@ -1031,11 +1038,27 @@ class TestOneExplodedPass:
             .write.parquet(path)
         docs = spark.read.parquet(path)
         out = {"span": lambda: duplicated_span_stats(docs, k=5),
-               "line": lambda: line_dedup(docs)}[op]()
+               "line": lambda: line_dedup(docs),
+               "decontaminate": lambda: decontaminate(
+                   docs, docs.where(F.col("doc_id") % 5 == 0), n=3),
+               "jaccard": lambda: jaccard_pairs(docs, threshold=0.0)}[op]()
         out.write.format("noop").mode("overwrite").save()
         plan = out._jdf.queryExecution().executedPlan()
         scans, joins = scans_and_joins(plan)
         assert scans <= 2 and joins <= 1, (op, scans, joins)
+
+    def test_jaccard_leaves_session_cache_empty(self, spark):
+        # a cached operator-internal frame stays registered in the session's
+        # CacheManager, which then substitutes it into later plans that
+        # share the subtree
+        from pdf_parser_spark.operators.dedup import jaccard_pairs
+
+        docs = spark.createDataFrame(
+            [(i, f"cache probe text {i % 3} with shared words") for i in range(6)],
+            "doc_id bigint, text string")
+        spark.catalog.clearCache()
+        assert jaccard_pairs(docs, threshold=0.0).count() > 0
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestDuplicatedSpans:

@@ -143,6 +143,29 @@ class TestOracleFuzz:
         }
         assert got == want
 
+    def test_jaccard_pairs(self, tables):
+        from pyspark.sql import functions as F
+
+        from pdf_parser_spark.operators.dedup import jaccard_pairs
+
+        df, con = tables
+        # the oracle's top 20 is a total order (jaccard desc, id_a, id_b).
+        # The most documents sharing one shingle here is 3, so the pruned
+        # form caps document frequency at 2: the pruning binds, and |A|,
+        # |B| shrink with it
+        pruned = _oracle("dedup_ngram_jaccard_pruned")
+        assert pruned.count("<= 100") == 1
+        tops = []
+        for max_df, sql in [(None, _oracle("dedup_ngram_jaccard")),
+                            (2, pruned.replace("<= 100", "<= 2"))]:
+            got = [
+                tuple(r) for r in jaccard_pairs(df, threshold=0.0, max_df=max_df)
+                .orderBy(F.desc("jaccard"), "id_a", "id_b").limit(20).collect()
+            ]
+            assert got == [tuple(r) for r in con.execute(sql).fetchall()], max_df
+            tops.append(got)
+        assert len(tops[0]) == 20 and tops[0] != tops[1]
+
     def test_span_coverage_interval_union(self, tables):
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
 

@@ -85,18 +85,20 @@ class TestStatefulHostStats:
         q.awaitTermination(120)
         # update-mode memory sink: the LAST row per host is the running total
         got = {
-            r.host: (r.docs, r.bytes)
+            r.host: (r.docs, r.bytes, r.first_ts, r.last_ts)
             for r in spark.sql(
                 "select * from host_stats order by docs"
             ).collect()
         }
         want = {
-            r.host: (r.docs, r.bytes)
+            r.host: (r.docs, r.bytes, r.first_ts, r.last_ts)
             for r in load_pages(spark, corpus_001)
             .groupBy(F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"))
             .agg(
                 F.count(F.lit(1)).alias("docs"),
                 F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),
+                F.min("warc_ts").alias("first_ts"),
+                F.max("warc_ts").alias("last_ts"),
             )
             .collect()
         }

@@ -1,5 +1,6 @@
 """Physical-plan audit: exchanges / pushdown / pruning / join strategy, file
-scans and joins, text splits and optimized-plan expression count per query.
+scans and joins, cached scans, text splits and optimized-plan expression
+count per query.
 Backs the 'Plan audit' section of BENCH.md.
 
 Usage: python tools/plan_audit.py [query ...]
@@ -27,7 +28,8 @@ DEFAULT = [
     "pipeline_extract_dedup_chunk", "shape_pack_documents",
     "temporal_asof_join", "temporal_interval_join",
     "clean_gopher_gate",  # r5: must stay one fused JVM projection
-    "clean_decontaminate",  # r5: gram join must broadcast the bench side
+    "clean_decontaminate",  # bench side broadcast; scans=2 joins=1
+    "dedup_ngram_jaccard_pruned",  # one self-join, sizes carried: joins=1
     "dedup_span_coverage",  # 8-byte-key shuffles; scans=2 joins=1
     "ann_semdedup",  # one Arrow GEMM assignment, exprs= flat in k; cluster join
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
@@ -68,12 +70,50 @@ def split_copies(plan) -> int:
     return most
 
 
+def node_counts(plan) -> Counter:
+    """Physical operators in a plan's current tree, by class name. An
+    adaptive plan counts its current plan (the final one once executed), a
+    query stage counts its exchange, and a reused exchange counts once as
+    ReusedExchangeExec with no subtree (it runs where it first appears)."""
+    counts, nodes = Counter(), [plan]
+    while nodes:
+        node = nodes.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            nodes.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            nodes.append(node.plan())
+        else:
+            counts[name] += 1
+            if name != "ReusedExchangeExec":
+                nodes += _seq(node.children())
+    return counts
+
+
 def scans_and_joins(plan) -> tuple[int, int]:
-    """(file scans, joins) in a physical plan's current tree: an executed
-    adaptive plan prints its final tree above its initial one, and a reused
-    exchange prints no subtree (it runs once, where it first appears)."""
-    tree = plan.toString().split("== Initial Plan ==")[0]
-    return tree.count("FileScan "), len(re.findall(r"\w+Join ", tree))
+    """(file scans, joins) in a physical plan's current tree."""
+    counts = node_counts(plan)
+    return (counts["FileSourceScanExec"],
+            sum(v for k, v in counts.items() if k.endswith("JoinExec")))
+
+
+def audit(df) -> dict:
+    """The per-query figures main() prints, counted in the physical plan's
+    current tree (exchanges: shuffle and broadcast exchanges that run)."""
+    qe = df._jdf.queryExecution()
+    plan, optimized = qe.executedPlan(), qe.optimizedPlan()
+    counts = node_counts(plan)
+    scans, joins = scans_and_joins(plan)
+    return {
+        "exchanges": counts["ShuffleExchangeExec"] + counts["BroadcastExchangeExec"],
+        "scans": scans, "joins": joins,
+        "broadcastJoin": counts["BroadcastHashJoinExec"],
+        "sortMergeJoin": counts["SortMergeJoinExec"],
+        "topK": counts["TakeOrderedAndProjectExec"],
+        "cached": counts["InMemoryTableScanExec"],
+        "splits": split_copies(optimized),
+        "exprs": sum(map(len, node_expressions(optimized))),
+    }
 
 
 def main() -> int:
@@ -90,17 +130,7 @@ def main() -> int:
         plan = df._jdf.queryExecution().explainString(mode)
         pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
         schemas = re.findall(r"ReadSchema: (.*)", plan)
-        optimized = df._jdf.queryExecution().optimizedPlan()
-        scans, joins = scans_and_joins(df._jdf.queryExecution().executedPlan())
-        print(
-            f"== {name}: exchanges={plan.count('Exchange')}"
-            f" scans={scans} joins={joins}"
-            f" broadcastJoin={plan.count('BroadcastHashJoin')}"
-            f" sortMergeJoin={plan.count('SortMergeJoin')}"
-            f" topK={plan.count('TakeOrderedAndProject')}"
-            f" splits={split_copies(optimized)}"
-            f" exprs={sum(map(len, node_expressions(optimized)))}"
-        )
+        print(f"== {name}: " + " ".join(f"{k}={v}" for k, v in audit(df).items()))
         for p, s in zip(pushed or ["-"] * len(schemas), schemas):
             print(f"   pushed=[{p[:70]}] read={s[:100]}")
     spark.stop()

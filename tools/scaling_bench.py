@@ -61,8 +61,8 @@ if plan_name == "lsh":
 elif plan_name == "spandedup":
     # span-level exact-substring dedup (r5): the operator's one big
     # exchange keys on 8-byte xxhash64 gram hashes with map-side partial
-    # counts, then a join-back and a per-doc ordered window — the
-    # shuffle-heaviest of the dedup family, so the natural 4N stall probe
+    # counts, then a join-back and a per-doc groupBy — the shuffle-heaviest
+    # of the dedup family, so the natural 4N stall probe
     from pdf_parser_spark.operators.spandedup import duplicated_span_stats
     docs = (
         extract_pipeline(pages)
