@@ -541,16 +541,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
     q["ann_lsh_bucketed_topk"] = ann_lsh_bucketed_topk
 
-    def ann_ivf_topk(spark, sf_dir):
-        # n_probe == n_lists probes every inverted list, so the result is
-        # exhaustive-exact regardless of the trained centroids — which makes
-        # the brute-force SQL a true value oracle; approximate recall for
-        # n_probe < n_lists is asserted in pytest
-        return S.ivf_topk(
-            _emb(spark, sf_dir), query_id=0, k=10, n_lists=8, n_probe=8
-        )
-    q["ann_ivf_topk"] = ann_ivf_topk
-
     def ann_bucketed_near_dup(spark, sf_dir):
         # scale path for ann_embedding_near_dup: bucket equi-join, no O(n^2)
         return S.bucketed_near_dup_pairs(
@@ -1437,10 +1427,16 @@ _VERIFY_FIRST = [
     # stamp: olap_* (8), temporal_* (4), extract_classic/ai_pipeline,
     # set_ops_feed_vs_ok, udaf_geomean_chars, udf_groupmap_zscore,
     # sql_udf_extract_text, sql_udtf_field_rows, the other nine round-5
-    # media queries (`tools/freshness_ledger.py check` proves all).
+    # media queries. The slot of the deleted ann_ivf_topk (knn_join's
+    # one-query case, checked against brute force's own oracle) goes to
+    # p4_regex_fields: its evidence is round 4 (CORRECTNESS_r04), the
+    # oldest of any query. The other 14 round-4 queries (p5/p7/p9/p10/
+    # p11/p11b/p12, a3, f6, s5, s6, w1, w2, olap_priority_rollup) stay out,
+    # frozen at their r4 stamp (`tools/freshness_ledger.py check` proves
+    # all).
     # closure touched, previously off-window:
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
-    "ann_ivf_topk", "ann_bucketed_near_dup", "ann_knn_join",
+    "ann_bucketed_near_dup", "ann_knn_join",
     "dedup_exact", "dedup_minhash_signatures", "dedup_minhash_lsh_pairs",
     "dedup_minhash_lsh_pairs_capped", "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_pruned", "dedup_simhash", "dedup_simhash_pairs",
@@ -1460,6 +1456,8 @@ _VERIFY_FIRST = [
     "s2_warc_source", "f1_f2_size_filter", "f3_magic_router",
     "f4_extension_predicate", "f5_empty_text_guard", "p3_content_hash",
     "extract_error_accounting", "ai_label_discovery",
+    # the deleted ann_ivf_topk's slot: round-4 evidence
+    "p4_regex_fields",
 ]
 
 
@@ -1862,8 +1860,6 @@ def oracle_sql() -> dict[str, str]:
         FROM b, q WHERE bk = qbk AND vec_id <> 0
         ORDER BY score DESC, vec_id LIMIT 10
     """
-    # exhaustive-probe IVF == brute force (see the query comment)
-    o["ann_ivf_topk"] = o["ann_bruteforce_topk"]
     o["ann_bucketed_near_dup"] = f"""
         WITH b AS (SELECT vec_id, embedding, ({bucket_sql}) AS bk FROM embeddings)
         SELECT l.vec_id AS id_a, r.vec_id AS id_b,

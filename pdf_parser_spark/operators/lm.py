@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 
 from .textstats import _py_lower_tokens, ngrams, normalized
 
-__all__ = ["train_char_trigram_lm", "lm_bits_per_char", "lm_quality_flags"]
+__all__ = ["train_char_trigram_lm", "trigram_model", "lm_bits_per_char",
+           "lm_quality_flags"]
 
 BOS = "\x02"  # sentence padding chars (never appear in normalized text)
 
@@ -47,7 +48,15 @@ def train_char_trigram_lm(
         exploded.groupBy("tri").agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("tri")).limit(top_k).collect()
     )
-    tri_counts = {r.tri: r.c for r in tri_rows}
+    return trigram_model({r.tri: r.c for r in tri_rows})
+
+
+def trigram_model(
+    tri_counts: Dict[str, int],
+) -> Tuple[Dict[str, int], Dict[str, int], int]:
+    """(tri_counts, bi_counts, vocab) from a (truncated) trigram table: the
+    bigram counts and the vocab are derived from it, not counted
+    independently, so a trained and a frozen table give the same model."""
     bi_counts: Dict[str, int] = {}
     vocab = set()
     for tri, c in tri_counts.items():

@@ -13,6 +13,8 @@ import os
 import pkgutil
 from typing import Dict, List, Tuple
 
+from .lm import trigram_model
+
 _HERE = os.path.dirname(os.path.abspath(__file__))
 LM_PATH = os.path.join(_HERE, "frozen_lm_sf001.json")
 BPE_PATH = os.path.join(_HERE, "frozen_bpe_sf001.json")
@@ -28,15 +30,8 @@ def _load(path: str) -> dict:
 
 def load_frozen_lm() -> Tuple[Dict[str, int], Dict[str, int], int]:
     """(tri_counts, bi_counts, vocab) exactly as train_char_trigram_lm builds
-    them: bigram counts and vocab are derived from the truncated trigram
-    table, not counted independently (lm.py:50-56)."""
-    tri_counts: Dict[str, int] = _load(LM_PATH)["tri"]
-    bi_counts: Dict[str, int] = {}
-    vocab = set()
-    for tri, c in tri_counts.items():
-        bi_counts[tri[:2]] = bi_counts.get(tri[:2], 0) + c
-        vocab.add(tri[2])
-    return tri_counts, bi_counts, max(len(vocab), 1)
+    them: both pass the trigram table through lm.trigram_model."""
+    return trigram_model(_load(LM_PATH)["tri"])
 
 
 def load_frozen_bpe() -> List[Tuple[str, str]]:

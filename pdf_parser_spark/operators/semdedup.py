@@ -13,8 +13,12 @@ Spark-first design:
   plan has the same size at every k); the only shuffle per iteration is one
   `groupBy(cluster)` with d per-dimension `sum` aggregates (map-side partial
   agg, NO explode — the shuffle moves k rows of d sums, not n*d rows).
-- the within-cluster pair join keys on `cluster`; its cost is bounded by
-  the cluster size k chosen for the corpus (SemDeDup's own design knob).
+- the keep flag comes from ONE LEFT self-join on `cluster` (each vector
+  against the smaller ids of its cluster) and one `groupBy` per vector
+  that the join's shuffle already partitions; no pair list is
+  materialized, deduplicated or joined back. Its cost is bounded by the
+  cluster size k chosen for the corpus (SemDeDup's own design knob), and
+  the ``max_cluster`` cap empties the candidate side of larger clusters.
 
 Exact cross-engine math (the oracle trick): embeddings are quantized to an
 integer grid (``round(x * quant)``, exact in both engines because float ->
@@ -44,7 +48,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .dedup import _key_pairs
+from .dedup import _drop_large_groups
 
 __all__ = ["quantize", "kmeans_assign", "semdedup"]
 
@@ -164,40 +168,40 @@ def semdedup(
     (9, 10) = 0.9) — evaluated exactly: ``dot > 0 AND
     q^2*dot^2 > p^2*|a|^2*|b|^2`` in decimal(38,0).
 
+    One LEFT self-join on ``cluster`` (candidate id < vector id) and one
+    ``groupBy`` per vector, which the join's cluster shuffle already
+    partitions: ``keep = NOT bool_or(near)``. A vector with no candidate
+    (the smallest id of its cluster, or a cluster alone) joins NULL and
+    keeps.
+
     ``max_cluster`` is the skew guard (the `max_bucket` of this family):
-    the pairwise step SKIPS clusters larger than the cap (their members
-    keep), bounding the quadratic cost when a degenerate corpus collapses
-    into one cluster. It is the shared cap of the pair join
-    (dedup._key_pairs): a window count by ``cluster`` that reuses the
-    join's shuffle.
+    clusters larger than the cap lose their candidate side
+    (dedup._drop_large_groups: a window count by ``cluster`` that reuses
+    the join's shuffle), so their members keep, bounding the quadratic
+    cost when a degenerate corpus collapses into one cluster.
     """
     p, q = threshold
     assigned = _kmeans(emb, k, iters, quant, dim, id_col, vec_col)
-    pairs = _key_pairs(assigned, ["cluster"], id_col,
-                       carry=["q", "norm2"], max_size=max_cluster)
+    cand = _drop_large_groups(assigned, ["cluster"], max_cluster).select(
+        F.col("cluster").alias("_cluster_a"), F.col(id_col).alias("_id_a"),
+        F.col("q").alias("_q_a"), F.col("norm2").alias("_norm2_a"),
+    )
     dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
+        F.zip_with("q", "_q_a", lambda x, y: x * y),
         F.lit(0).cast("long"), lambda acc, v: acc + v,
     )
     dec = "decimal(38,0)"
-    near = (
-        pairs.withColumn("dot", dot)
-        .where(
-            (F.col("dot") > 0)
-            & (
-                F.lit(q * q).cast(dec) * F.col("dot").cast(dec)
-                * F.col("dot").cast(dec)
-                > F.lit(p * p).cast(dec) * F.col("norm2_a").cast(dec)
-                * F.col("norm2_b").cast(dec)
-            )
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
+    d = F.col("dot").cast(dec)
+    near = (F.col("dot") > 0) & (
+        F.lit(q * q).cast(dec) * d * d
+        > F.lit(p * p).cast(dec) * F.col("norm2").cast(dec)
+        * F.col("_norm2_a").cast(dec)
     )
     return (
-        assigned.join(near.withColumn("_dup", F.lit(True)), id_col, "left")
-        .select(
-            id_col, "cluster", "dist2",
-            F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
-        )
+        assigned.join(cand, (F.col("cluster") == F.col("_cluster_a"))
+                      & (F.col("_id_a") < F.col(id_col)), "left")
+        .select(id_col, "cluster", "dist2", "norm2", "_norm2_a",
+                dot.alias("dot"))
+        .groupBy(id_col, "cluster", "dist2")
+        .agg((~F.coalesce(F.bool_or(near), F.lit(False))).alias("keep"))
     )

@@ -5,11 +5,11 @@ over double-cast arrays — no Python in the hot path, one shuffle for top-k).
 
 Scale paths: coordinate-sign LSH buckets (a pure JVM expression the DuckDB
 oracles recompute exactly), so candidates meet only inside a bucket; and an
-IVF index (seeded numpy k-means) whose probe lists prune top-k search and
-the batch KNN join, which scores each list pair as one BLAS matrix
-multiply. At 100 TB the bucket or list equi-join replaces the full cross
-product; the approximate modes' recall is tested against the exact forms
-in pytest.
+IVF index (seeded numpy k-means) that serves the batch KNN join only: its
+probe lists prune the candidates, and each list pair is scored as one BLAS
+matrix multiply. At 100 TB the bucket or list equi-join replaces the full
+cross product; the approximate modes' recall is tested against the exact
+forms in pytest.
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from .dedup import _key_pairs
 __all__ = [
     "cosine", "dot", "l2_norm", "brute_force_topk", "embedding_near_dup_pairs",
     "coordinate_sign_bucket", "bucketed_near_dup_pairs", "lsh_bucketed_topk",
-    "ivf_train_centroids", "ivf_assign", "ivf_topk", "knn_join",
+    "ivf_train_centroids", "ivf_assign", "knn_join",
 ]
 
 
@@ -74,7 +74,7 @@ def _query_topk(rows: DataFrame, query_id: int, k: int, id_col: str,
     The query row is broadcast (crossJoin with a 1-row broadcast side), so
     the scan stays embarrassingly parallel; the only shuffle is the top-k.
     Its columns arrive suffixed _q, so `candidate` (the caller's predicate:
-    the IVF probe lists, the query's bucket) can compare against them.
+    the query's bucket) can compare against them.
     Order: score rounded to 6 places desc, then id asc.
     """
     q = rows.where(F.col(id_col) == query_id).select(
@@ -240,33 +240,6 @@ def ivf_assign(
     return embeddings.withColumn("_ivf_list", nearest(F.col(vec_col)))
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_id: int = 0,
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> DataFrame:
-    """IVF approximate top-k: probe only the n_probe lists nearest the query.
-
-    The scale path beyond LSH buckets: with a partitioned/bucketed layout
-    on `_ivf_list`, the probe is partition pruning — a 10^12-vector search
-    touches n_probe/n_lists of the data and nothing else. Recall vs the
-    brute-force baseline is asserted in tests.
-    """
-    cent = ivf_train_centroids(embeddings, n_lists, vec_col, seed=seed)
-    assigned = ivf_assign(embeddings, cent, vec_col)
-    qn = _unit_rows(
-        [embeddings.where(F.col(id_col) == query_id).select(vec_col).first()[0]]
-    )[0]
-    probe = np.argsort(-(cent @ qn))[:n_probe].tolist()
-    return _query_topk(assigned, query_id, k, id_col, vec_col,
-                       F.col("_ivf_list").isin(probe))
-
-
 def knn_join(
     embeddings: DataFrame,
     k: int = 3,
@@ -278,9 +251,9 @@ def knn_join(
 ) -> DataFrame:
     """Batch KNN join: top-k neighbours for EVERY row via the IVF index.
 
-    The all-rows upgrade of ivf_topk (a training pipeline needs
-    every-document-vs-index, not one query vector): each query row explodes
-    to its n_probe nearest lists, and each (probe list x inverted list) pair
+    A training pipeline needs every-document-vs-index, and one query is
+    this join restricted to its qid. Each query row explodes to its
+    n_probe nearest lists, and each (probe list x inverted list) pair
     is scored as ONE numpy matrix multiply inside a cogrouped
     applyInPandas, so BLAS does the dim-loop at memory bandwidth instead of
     one JVM array fold per pair. Each list emits only its local top-k per

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.cleaning import host_of
 from ..operators.textstats import content_fingerprint
 from ..pipeline import extract_pipeline
 
@@ -47,7 +48,6 @@ def stream_extract(
     out_path: str,
     checkpoint: str,
     method: str = "classic",
-    available_now: bool = True,
     max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
     """Run the extraction kernel as a streaming job with checkpointed resume.
@@ -57,15 +57,14 @@ def stream_extract(
     """
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
     extracted = extract_pipeline(pages, method=method)
-    writer = (
+    return (
         extracted.writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_host_stats(
@@ -77,8 +76,10 @@ def stream_host_stats(
     """Incremental per-host crawl statistics that survive across
     micro-batches: Spark's built-in streaming aggregate, no per-row Python.
 
-    Per host: docs, bytes (html length, 0 for NULL html), first_ts and
-    last_ts (min / max warc_ts). The partial aggregates live in the state
+    Per host (cleaning.host_of: lowercased, default port stripped, the
+    host every batch operator keys on): docs, bytes (html length, 0 for
+    NULL html), first_ts and last_ts (min / max warc_ts). The partial
+    aggregates live in the state
     store, partitioned by host hash, so state shards across executors and
     each micro-batch folds only its own rows into it. UPDATE mode emits the
     running totals of the hosts a micro-batch touched; the latest row per
@@ -88,8 +89,7 @@ def stream_host_stats(
     """
     pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
     stats = (
-        pages.groupBy(
-            F.regexp_extract(F.col("url"), r"^[a-z]+://([^/]+)", 1).alias("host"))
+        pages.groupBy(host_of(F.col("url")).alias("host"))
         .agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),

@@ -9,17 +9,16 @@ read fixed corpus paths) and fixture-backed media/WARC queries.
 from __future__ import annotations
 
 import datetime
-import math
 import os
 import random
 
 import duckdb
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
+from tools.check_oracles import compare
 
 SEED = 20260817
 
@@ -38,8 +37,7 @@ DOC_QUERIES = [
 ]
 EMB_QUERIES = [
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
-    "ann_ivf_topk", "ann_bucketed_near_dup", "ann_knn_join",
-    "ann_dup_clusters",
+    "ann_bucketed_near_dup", "ann_knn_join", "ann_dup_clusters",
 ]
 EVENT_QUERIES = [
     "p11_json_sniff", "p11b_typed_json_parse", "temporal_sessionize",
@@ -192,45 +190,15 @@ def fuzz_env(request, spark, tmp_path_factory):
     return d, con
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        try:
-            if df[c].dtype.kind == "f":
-                df[c] = df[c].round(6)
-        except Exception:
-            pass
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def _equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
-    if list(a.columns) != list(b.columns) or len(a) != len(b):
-        return False
-    for c in a.columns:
-        for x, y in zip(a[c].tolist(), b[c].tolist()):
-            if x is None and y is None:
-                continue
-            if isinstance(x, float) or isinstance(y, float):
-                xf = float("nan") if x is None else float(x)
-                yf = float("nan") if y is None else float(y)
-                if math.isnan(xf) and math.isnan(yf):
-                    continue
-                if abs(xf - yf) > 1e-9:
-                    return False
-            elif str(x) != str(y):
-                return False
-    return True
-
-
 def _run(spark, fuzz_env, names):
     d, con = fuzz_env
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     bad = []
     for name in names:
-        sdf = _canon(qs[name](spark, d).toPandas())
-        ddf = _canon(con.execute(oracles[name]).df())
-        if not _equal(sdf, ddf):
-            bad.append((name, len(sdf), len(ddf)))
+        reason = compare(qs[name](spark, d).toPandas(),
+                         con.execute(oracles[name]).df())
+        if reason is not None:
+            bad.append((name, reason))
     assert bad == [], bad
 
 
@@ -349,11 +317,11 @@ class TestPagesFuzz:
         try:
             bad = []
             for name in PAGES_QUERIES:
-                sdf = _canon(qs[name](spark, d).toPandas())
                 sql = oracles[name].replace(real_glob, fuzz_glob)
-                ddf = _canon(con.execute(sql).df())
-                if not _equal(sdf, ddf):
-                    bad.append((name, len(sdf), len(ddf)))
+                reason = compare(qs[name](spark, d).toPandas(),
+                                 con.execute(sql).df())
+                if reason is not None:
+                    bad.append((name, reason))
             assert bad == [], bad
         finally:
             entrymod.ensure_corpus = orig

@@ -37,31 +37,6 @@ class TestIVF:
         lists = [r[0] for r in a.select("_ivf_list").distinct().collect()]
         assert all(0 <= l < 8 for l in lists) and len(lists) > 1
 
-    def test_recall_vs_brute_force(self, emb):
-        from pdf_parser_spark.operators.similarity import (
-            brute_force_topk, ivf_topk,
-        )
-
-        exact = {r.vec_id for r in brute_force_topk(emb, query_id=1, k=10).collect()}
-        approx = {
-            r.vec_id
-            for r in ivf_topk(emb, query_id=1, k=10, n_lists=8, n_probe=4).collect()
-        }
-        # probing half the lists must recover at least half the true top-k
-        assert len(exact & approx) >= 5
-
-    def test_full_probe_equals_brute_force(self, emb):
-        from pdf_parser_spark.operators.similarity import (
-            brute_force_topk, ivf_topk,
-        )
-
-        exact = [tuple(r) for r in brute_force_topk(emb, query_id=2, k=5).collect()]
-        full = [
-            tuple(r)
-            for r in ivf_topk(emb, query_id=2, k=5, n_lists=4, n_probe=4).collect()
-        ]
-        assert exact == full  # probing every list is exhaustive search
-
 
 class TestConnectedComponents:
     def _components(self, spark, edges, n_nodes):
@@ -381,6 +356,17 @@ class TestKnnJoin:
             assert [n for n, _ in got] == [n for n, _ in want], qid
             assert all(abs(g - w) < 2e-6
                        for (_, g), (_, w) in zip(got, want)), qid
+
+    def test_restricted_probe_recall(self, emb):
+        from pdf_parser_spark.operators.similarity import brute_force_topk, knn_join
+
+        exact = {r.vec_id for r in brute_force_topk(emb, query_id=1, k=10).collect()}
+        approx = {
+            r.nid for r in knn_join(emb, k=10, n_lists=8, n_probe=4)
+            .where(F.col("qid") == 1).collect()
+        }
+        # probing half the lists must recover at least half the true top-k
+        assert len(exact & approx) >= 5
 
     def test_restricted_probe_prunes_candidates(self, emb):
         from pdf_parser_spark.operators.similarity import knn_join
@@ -1018,30 +1004,41 @@ class TestOneExplodedPass:
     exploded frame: the input is read at most twice (span / line: the key
     counts and the join back; decontaminate: the corpus and the benchmark;
     jaccard: the self-join's two sides) and joined once — no totals or size
-    aggregate, no rescan of the ids, no rejoin. Counted in the executed
-    (final adaptive) plan over a parquet input."""
+    aggregate, no rescan of the ids, no rejoin. SemDeDup's keep flag is one
+    LEFT self-join of the final assignment plus one groupBy (no pair
+    distinct joined back). Counted in the executed (final adaptive) plan
+    over a parquet input."""
 
-    @pytest.mark.parametrize("op", ["span", "line", "decontaminate", "jaccard"])
+    @pytest.mark.parametrize(
+        "op", ["span", "line", "decontaminate", "jaccard", "semdedup"])
     def test_reads_input_twice_joins_once(self, spark, tmp_path, op):
         from pyspark.sql import functions as F
 
         from pdf_parser_spark.operators.cleaning import line_dedup
         from pdf_parser_spark.operators.decontaminate import decontaminate
         from pdf_parser_spark.operators.dedup import jaccard_pairs
+        from pdf_parser_spark.operators.semdedup import semdedup
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
         from tools.plan_audit import scans_and_joins
 
-        rows = [(i, f"shared banner line\nbody {i} " + "w " * (i % 12))
-                for i in range(20)] + [(20, None), (21, "")]
-        path = str(tmp_path / "docs")
-        spark.createDataFrame(rows, "doc_id bigint, text string") \
-            .write.parquet(path)
+        if op == "semdedup":
+            rows = [(i, [float(i % 2), 1.0, float(i % 3), 0.5])
+                    for i in range(20)]
+            schema = "vec_id bigint, embedding array<float>"
+        else:
+            rows = [(i, f"shared banner line\nbody {i} " + "w " * (i % 12))
+                    for i in range(20)] + [(20, None), (21, "")]
+            schema = "doc_id bigint, text string"
+        path = str(tmp_path / "input")
+        spark.createDataFrame(rows, schema).write.parquet(path)
         docs = spark.read.parquet(path)
         out = {"span": lambda: duplicated_span_stats(docs, k=5),
                "line": lambda: line_dedup(docs),
                "decontaminate": lambda: decontaminate(
                    docs, docs.where(F.col("doc_id") % 5 == 0), n=3),
-               "jaccard": lambda: jaccard_pairs(docs, threshold=0.0)}[op]()
+               "jaccard": lambda: jaccard_pairs(docs, threshold=0.0),
+               "semdedup": lambda: semdedup(docs, k=2, iters=1, dim=4,
+                                            threshold=(1, 2))}[op]()
         out.write.format("noop").mode("overwrite").save()
         plan = out._jdf.queryExecution().executedPlan()
         scans, joins = scans_and_joins(plan)
@@ -1235,6 +1232,27 @@ class TestSemDeDup:
                                       threshold=(2, 5)).collect()}
         assert uncapped[0] is True and not any(
             uncapped[i] for i in range(1, 6))
+
+    def test_cap_is_per_cluster(self, spark):
+        from pdf_parser_spark.operators.semdedup import semdedup
+
+        # seeds 0, 1, 2 (k=3). Cluster of 0: four identical vectors, above
+        # the cap of 3, so all four keep. Cluster of 1: two near-parallel
+        # vectors, under the cap, so 6 drops. Vector 2 is alone and keeps.
+        rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, -1.0]),
+                (3, [1.0, 0.0]), (4, [1.0, 0.0]), (5, [1.0, 0.0]),
+                (6, [0.01, 1.0])]
+        df, dim = self._emb(spark, rows, 2)
+        out = {r.vec_id: r for r in
+               semdedup(df, k=3, iters=1, dim=dim, threshold=(9, 10),
+                        max_cluster=3).collect()}
+        clusters = {}
+        for r in out.values():
+            clusters.setdefault(r.cluster, set()).add(r.vec_id)
+        assert sorted(map(sorted, clusters.values())) == [
+            [0, 3, 4, 5], [1, 6], [2]]
+        assert {i: r.keep for i, r in out.items()} == {
+            0: True, 3: True, 4: True, 5: True, 1: True, 6: False, 2: True}
 
     def test_assignment_plan_size_constant_in_k(self, spark):
         from pdf_parser_spark.operators.semdedup import kmeans_assign

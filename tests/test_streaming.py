@@ -71,16 +71,39 @@ class TestStreamExtract:
 
 
 class TestStatefulHostStats:
-    def test_state_accumulates_across_microbatches(self, spark, corpus_001, tmp_path):
+    def test_state_accumulates_across_microbatches(self, spark, tmp_path):
+        import datetime
+
         from pyspark.sql import functions as F
 
-        from pdf_parser_spark.pipeline import load_pages
+        from pdf_parser_spark.operators.cleaning import host_of
         from pdf_parser_spark.streaming import stream_host_stats
+        from pdf_parser_spark.streaming.stream import PAGES_DDL
 
-        # maxFilesPerTrigger=2 over 8 shards forces multiple micro-batches,
-        # so per-host state MUST carry across batches to reach batch totals
+        # four one-file appends; maxFilesPerTrigger=2 makes two micro-batches,
+        # and every host spans both, so per-host state MUST carry across
+        # them. Upper-case scheme and host plus a default port name the same
+        # host as https://example.com; a non-default port stays in the host.
+        t0 = datetime.datetime(2024, 5, 1)
+        shards = [
+            [("HTTP://Example.COM:443/a", 0, b"<p>one</p>"),
+             ("https://fixtures.test/x", 1, None)],
+            [("https://example.com/b", 2, b"two"),
+             ("http://sub.site.pl:8080/y", 3, b"three!")],
+            [("https://fixtures.test/z", 4, b"4"),
+             ("http://SUB.site.pl:8080/w?q=1", 5, b"")],
+            [("https://EXAMPLE.com:80/c#frag", 6, b"seven77")],
+        ]
+        corpus = tmp_path / "corpus"
+        for rows in shards:
+            spark.createDataFrame(
+                [(u, t0 + datetime.timedelta(hours=h), html, None, "en")
+                 for u, h, html in rows], PAGES_DDL,
+            ).coalesce(1).write.mode("append").parquet(
+                str(corpus / "pages.parquet"))
         q = stream_host_stats(
-            spark, corpus_001, str(tmp_path / "ck_host"), max_files_per_trigger=2
+            spark, str(corpus), str(tmp_path / "ck_host"),
+            max_files_per_trigger=2,
         )
         q.awaitTermination(120)
         # update-mode memory sink: the LAST row per host is the running total
@@ -92,8 +115,8 @@ class TestStatefulHostStats:
         }
         want = {
             r.host: (r.docs, r.bytes, r.first_ts, r.last_ts)
-            for r in load_pages(spark, corpus_001)
-            .groupBy(F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1).alias("host"))
+            for r in spark.read.parquet(str(corpus / "pages.parquet"))
+            .groupBy(host_of(F.col("url")).alias("host"))
             .agg(
                 F.count(F.lit(1)).alias("docs"),
                 F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("bytes"),
@@ -103,6 +126,11 @@ class TestStatefulHostStats:
             .collect()
         }
         assert got == want
+        assert {h: v[:2] for h, v in got.items()} == {
+            "example.com": (3, 10 + 3 + 7),
+            "fixtures.test": (2, 0 + 1),
+            "sub.site.pl:8080": (2, 6 + 0),
+        }
 
 
 class TestStreamExactDedup:

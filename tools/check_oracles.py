@@ -36,24 +36,40 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
-def frames_equal(a: pd.DataFrame, b: pd.DataFrame) -> bool:
+def _kinds(df: pd.DataFrame) -> dict:
+    return {c: "i" if df[c].dtype.kind == "u" else df[c].dtype.kind
+            for c in df.columns}
+
+
+def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> str | None:
+    """The one cross-engine value comparison: None when the two results
+    are equal after canon(), else the reason they differ.
+
+    Same column names, row count and dtype kind per column (a kind
+    mismatch, HUGEINT -> float64 against int64, changes a value hash even
+    when the values compare equal), then order-insensitive
+    values: floats within 1e-9 after 6-place rounding, NULL == NULL and
+    NaN == NaN, anything else by its string form.
+    """
+    a, b = canon(spark_df), canon(oracle_df)
     if list(a.columns) != list(b.columns) or len(a) != len(b):
-        return False
+        return (f"spark {len(a)}x{list(a.columns)} vs "
+                f"oracle {len(b)}x{list(b.columns)}")
+    if _kinds(a) != _kinds(b):
+        return f"dtype kinds {_kinds(a)} vs {_kinds(b)}"
     for c in a.columns:
-        av, bv = a[c].tolist(), b[c].tolist()
-        for x, y in zip(av, bv):
+        for i, (x, y) in enumerate(zip(a[c].tolist(), b[c].tolist())):
             if x is None and y is None:
                 continue
             if isinstance(x, float) or isinstance(y, float):
                 xf = float("nan") if x is None else float(x)
                 yf = float("nan") if y is None else float(y)
-                if math.isnan(xf) and math.isnan(yf):
+                if (math.isnan(xf) and math.isnan(yf)) or abs(xf - yf) <= 1e-9:
                     continue
-                if abs(xf - yf) > 1e-9:
-                    return False
-            elif str(x) != str(y):
-                return False
-    return True
+            elif str(x) == str(y):
+                continue
+            return f"col {c} row {i}: {x!r} vs {y!r}"
+    return None
 
 
 def main(only: str | None = None) -> int:
@@ -88,34 +104,12 @@ def main(only: str | None = None) -> int:
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
             failures += 1
             continue
-        a, b = canon(sdf), canon(ddf)
-        kinds = lambda df_: {
-            c: ("i" if df_[c].dtype.kind == "u" else df_[c].dtype.kind)
-            for c in df_.columns
-        }
-        if kinds(a) != kinds(b):
-            # dtype-kind mismatch = the driver hash artifact class (HUGEINT
-            # -> float64 vs int64), even when values compare equal here
-            failures += 1
-            print(f"FAIL {name}: dtype kinds {kinds(a)} vs {kinds(b)}")
-        elif frames_equal(a, b):
-            print(f"OK   {name}: {len(a)} rows")
+        reason = compare(sdf, ddf)
+        if reason is None:
+            print(f"OK   {name}: {len(sdf)} rows")
         else:
             failures += 1
-            print(f"FAIL {name}: spark {len(a)}x{len(a.columns)} vs duckdb {len(b)}x{len(b.columns)}")
-            print("  spark cols:", list(a.columns), " duckdb cols:", list(b.columns))
-            if list(a.columns) == list(b.columns) and len(a) == len(b):
-                for c in a.columns:
-                    neq = [
-                        (i, a[c][i], b[c][i])
-                        for i in range(len(a))
-                        if str(a[c][i]) != str(b[c][i])
-                    ][:3]
-                    if neq:
-                        print(f"  col {c} first diffs: {neq}")
-            else:
-                print("  spark head:", a.head(3).to_dict("records"))
-                print("  duck  head:", b.head(3).to_dict("records"))
+            print(f"FAIL {name}: {reason}")
     spark.stop()
     print("FAILURES:", failures)
     return 1 if failures else 0

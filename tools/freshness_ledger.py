@@ -310,6 +310,9 @@ def main() -> int:
         if args.cmd == "init" and args.off_window_commit and name not in window:
             c = args.off_window_commit
         ledger["queries"][name] = {"commit": c, **snap[name]}
+    # a deleted query leaves no record behind
+    ledger["queries"] = {n: r for n, r in ledger["queries"].items()
+                         if n in snap}
     with open(LEDGER, "w") as fh:
         json.dump(ledger, fh, indent=1, sort_keys=True)
         fh.write("\n")

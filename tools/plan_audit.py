@@ -31,7 +31,7 @@ DEFAULT = [
     "clean_decontaminate",  # bench side broadcast; scans=2 joins=1
     "dedup_ngram_jaccard_pruned",  # one self-join, sizes carried: joins=1
     "dedup_span_coverage",  # 8-byte-key shuffles; scans=2 joins=1
-    "ann_semdedup",  # one Arrow GEMM assignment, exprs= flat in k; cluster join
+    "ann_semdedup",  # one Arrow GEMM assignment, exprs= flat in k; scans=2 joins=1
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
     "clean_line_dedup",  # like span dedup: scans=2 joins=1
     # each gate projects its token / line arrays once: splits=1
