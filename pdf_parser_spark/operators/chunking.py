@@ -39,8 +39,8 @@ def chunk_documents(
     row, so skew follows document length, which the F1 size cap already
     bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
     """
-    if overlap >= chunk_tokens:
-        raise ValueError("overlap must be < chunk_tokens")
+    if not 0 <= overlap < chunk_tokens:
+        raise ValueError("overlap must be in [0, chunk_tokens)")
     step = chunk_tokens - overlap
     toks = F.col("_toks")
     starts = F.sequence(
@@ -132,4 +132,4 @@ def deterministic_sample(
     bucket = md5_hash60(
         F.concat(F.col(key_col).cast("string"), F.lit(salt))
     ) % denom
-    return df.where(bucket < int(rate * denom))
+    return df.where(bucket < round(rate * denom))

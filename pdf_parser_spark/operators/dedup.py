@@ -223,52 +223,50 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 # Duplicate clusters: connected components over the near-dup pair graph
 # --------------------------------------------------------------------------
 
+_MAX_ROUNDS = 50  # near-dup pair graphs converge in a handful of rounds
+
+
 def connected_components(
     nodes: DataFrame, edges: DataFrame, id_col: str = "doc_id",
-    max_iters: int = 50,
 ) -> DataFrame:
     """Min-label propagation to a fixpoint: every node ends up labelled with
     the smallest id reachable from it. Returns (id_col, component).
 
-    Iterative-algorithm-on-Spark shape: a driver loop of joins, with
-    localCheckpoint() per round to truncate the lineage (else the plan
-    doubles every iteration) and a LongAccumulator-free convergence test via
-    a changed-count aggregate. Rounds needed = graph diameter, which for
-    near-dup clusters is tiny (dups cluster into cliques/stars); each round
-    is one shuffle join on (node -> label), never on payloads.
+    One neighbor frame (src, dst), one explode of each edge both ways,
+    localCheckpoint()ed before the loop so the caller's pair plan runs once;
+    no distinct (a repeated pair only repeats an offer). Each round is one
+    join (neighbors on dst = node offer their label to src) and one
+    groupBy(node) over labels + offers: min is the new label, max(_old) the
+    old one, NULL for a src outside `nodes`, which is dropped. Labels are
+    localCheckpoint()ed per round to cut the lineage; rounds = graph
+    diameter, tiny for near-dup clusters.
     """
-    both = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
-    labels = labels.localCheckpoint()
-    for _ in range(max_iters):
-        neighbor_min = (
-            both.join(labels, both.dst == labels.node)
-            .groupBy("src").agg(F.min("label").alias("nbr_label"))
+    nbrs = edges.selectExpr(
+        "explode(array(array(id_a, id_b), array(id_b, id_a))) AS _e"
+    ).selectExpr("_e[0] AS src", "_e[1] AS dst").localCheckpoint()
+    ids = F.col(id_col)
+    labels = nodes.select(ids.alias("node"), ids.alias("label")).localCheckpoint()
+    for _ in range(_MAX_ROUNDS):
+        offers = nbrs.join(labels, nbrs.dst == labels.node).select(
+            F.col("src").alias("node"), "label", F.lit(None).alias("_old")
         )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label")).alias("_chg"),
-            )
+        labels = (
+            labels.withColumn("_old", F.col("label"))
+            .unionByName(offers)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+            .where(F.col("_old").isNotNull())
+            .localCheckpoint()
         )
-        updated = updated.localCheckpoint()
-        changed = updated.where(F.col("_chg")).count()
-        labels = updated.drop("_chg")
+        changed = labels.where(F.col("label") < F.col("_old")).count()
+        labels = labels.drop("_old")
         if changed == 0:
             break
-    else:
-        # the loop exhausted max_iters with labels still moving: returning
-        # silently would hand the caller wrong components with no signal
+    else:  # returning silently would hand back wrong components
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds "
             f"({changed} labels still changing); the pair graph has a longer "
-            "diameter than near-dup clusters should — raise max_iters"
+            "diameter than near-dup clusters should"
         )
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("component"))
 

@@ -48,10 +48,12 @@ class TestChunkDocuments:
         # sum of chunk tokens = n + overlap*(n_chunks-1): every token covered
         assert all(r.chunked == r.n + 4 * r.last for r in j)
 
-    def test_overlap_must_be_smaller(self, spark):
+    @pytest.mark.parametrize("overlap", [4, -1])
+    def test_overlap_must_be_smaller(self, spark, overlap):
+        # a negative overlap strides past tokens that no chunk covers
         df = spark.createDataFrame([(0, "a b")], "doc_id bigint, text string")
         with pytest.raises(ValueError):
-            chunk_documents(df, chunk_tokens=4, overlap=4)
+            chunk_documents(df, chunk_tokens=4, overlap=overlap)
 
 
 class TestPackDocuments:
@@ -111,6 +113,12 @@ class TestDeterministicSample:
         small = {r.doc_id for r in deterministic_sample(docs, rate=0.1).collect()}
         big = {r.doc_id for r in deterministic_sample(docs, rate=0.5).collect()}
         assert small <= big  # threshold sampling nests by construction
+
+    def test_rate_threshold_is_not_truncated(self, spark):
+        # md5 bucket of "k1772" is exactly 5699 of 10,000, and
+        # int(0.57 * 10000) == 5699 would drop it at rate 0.57
+        df = spark.createDataFrame([("k1772",)], "doc_id string")
+        assert deterministic_sample(df, rate=0.57).count() == 1
 
 
 class TestPackByTokensCol:

@@ -97,6 +97,34 @@ class TestEntryContract:
 
         assert snap("/srv/a/repo") == snap("/home/b/copy")
 
+    def test_entry_scope_import_enters_closure(self, tmp_path):
+        """A name the entry module imports at module scope from the package
+        puts that module in the closure of every query that uses it, with
+        no hand-kept alias table to forget it in."""
+        import importlib.util
+        import os
+        import sys
+
+        sys.path.insert(0, os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools"))
+        import freshness_ledger
+
+        stub = tmp_path / "stub_entry.py"
+        stub.write_text(
+            "from pdf_parser_spark.sources.exif_fixture import "
+            "ensure_exif_fixture\n\n"
+            "def queries():\n"
+            "    def q(spark, sf_dir):\n"
+            "        return ensure_exif_fixture(sf_dir)\n"
+            "    return {'q': q}\n"
+        )
+        spec = importlib.util.spec_from_file_location("stub_entry", stub)
+        entry = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(entry)
+        closures = freshness_ledger.query_closures(entry)
+        assert "pdf_parser_spark/sources/exif_fixture.py" in closures["q"]
+
     def test_oracle_dtype_parity(self, spark, contract):
         """The r1/r2 red rows (text_bpe_token_counts, olap_event_pivot) were
         value-equal but hash-mismatched: DuckDB sum()/sum(CASE) returns

@@ -95,6 +95,36 @@ class TestConnectedComponents:
         uncapped = {r.doc_id: r.component for r in dup_clusters(df).collect()}
         assert uncapped == {i: 0 for i in range(5)}
 
+    # chain 0-1-...-6 (7 rounds to the fixpoint), node 7 joined only to an
+    # id outside the node set
+    CHAIN = [(i, i + 1) for i in range(6)] + [(100, 7)]
+
+    def test_edge_frame_evaluated_once(self, spark):
+        # every row the edge plan yields bumps the accumulator: re-running
+        # the pair plan each round would count 7 edges per read, per round
+        acc = spark.sparkContext.accumulator(0)
+
+        def count_rows(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        from pdf_parser_spark.operators.dedup import connected_components
+
+        nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id bigint")
+        e = spark.createDataFrame(self.CHAIN, "id_a bigint, id_b bigint")
+        connected_components(nodes, e.mapInPandas(count_rows, e.schema)).collect()
+        assert acc.value == len(self.CHAIN)
+
+    def test_edge_outside_nodes_never_enters_output(self, spark):
+        assert self._components(spark, self.CHAIN, 8) == {
+            **{i: 0 for i in range(7)}, 7: 7}
+
+    def test_leaves_session_cache_empty(self, spark):
+        spark.catalog.clearCache()
+        self._components(spark, self.CHAIN, 8)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
 
 class TestMultimodalExt:
     def test_image_resize_contract(self, spark):

@@ -31,6 +31,7 @@ not extracted from the stamped commit — stamp promptly after rotation.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import inspect
 import json
@@ -43,25 +44,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "pdf_parser_spark"
 LEDGER = os.path.join(REPO, "tools", "freshness_ledger.json")
 WINDOW = 50  # driver checks the first 50 queries() entries
-
-# module-scope aliases in __spark_entry__.py: identifier -> package module.
-# Function-local `from pdf_parser_spark.x import ...` is picked up by regex;
-# these cover the names imported once at entry-module scope.
-_ALIAS_MODULES = {
-    "D": "pdf_parser_spark/operators/dedup.py",
-    "M": "pdf_parser_spark/operators/multimodal.py",
-    "S": "pdf_parser_spark/operators/similarity.py",
-    "T": "pdf_parser_spark/operators/textstats.py",
-    "extract_pipeline": "pdf_parser_spark/pipeline.py",
-    "load_pages": "pdf_parser_spark/pipeline.py",
-    "ensure_corpus": "pdf_parser_spark/corpus.py",
-    "corpus_dir_for": "pdf_parser_spark/corpus.py",
-    "ensure_av_fixture": "pdf_parser_spark/sources/av_fixture.py",
-    "ensure_img_fixture": "pdf_parser_spark/sources/img_fixture.py",
-    "ensure_mp4_fixture": "pdf_parser_spark/sources/mp4_fixture.py",
-    "ensure_video_fixture": "pdf_parser_spark/sources/mp4_fixture.py",
-}
-
 
 def _pkg_files() -> list[str]:
     out = []
@@ -146,10 +128,26 @@ def _entry_module():
     return e
 
 
+def _entry_aliases(entry) -> dict[str, str]:
+    """Names the entry module imports at module scope from the package
+    (`from pdf_parser_spark.operators import dedup as D`) -> package file.
+    Function-local imports are picked up per query by regex."""
+    out = {}
+    for node in ast.parse(inspect.getsource(entry)).body:
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+            for a in node.names:
+                f = (_module_to_file(f"{node.module}.{a.name}")
+                     or _module_to_file(node.module))
+                if f:
+                    out[a.asname or a.name] = f
+    return out
+
+
 def query_closures(entry=None) -> dict[str, set[str]]:
     """query name -> transitively-closed set of package files it touches."""
     e = entry or _entry_module()
     graph = build_import_graph()
+    aliases = _entry_aliases(e)
     helpers = {
         n: inspect.getsource(fn)
         for n, fn in vars(e).items()
@@ -184,7 +182,7 @@ def query_closures(entry=None) -> dict[str, set[str]]:
         # module aliases (D/M/S/T) must appear as attribute access —
         # `M^2/2` in a comment must not drag in multimodal.py (comments are
         # already stripped above; the dot requirement guards string literals)
-        for alias, f in _ALIAS_MODULES.items():
+        for alias, f in aliases.items():
             pat = (rf"\b{re.escape(alias)}\s*\." if len(alias) <= 2
                    else rf"\b{re.escape(alias)}\b")
             if re.search(pat, src):
