@@ -997,11 +997,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return C.repetition_flags(_docs(spark, sf_dir)).orderBy("doc_id")
     q["clean_repetition_flags"] = clean_repetition_flags
 
-    def clean_stopword_stats(spark, sf_dir):
-        from pdf_parser_spark.operators import cleaning as C
-        return C.stopword_stats(_docs(spark, sf_dir)).orderBy("doc_id")
-    q["clean_stopword_stats"] = clean_stopword_stats
-
     def clean_line_dedup(spark, sf_dir):
         # CCNet-style cross-document line dedup over the multi-line feed
         # texts: the shared claim-form template lines (appearing in every
@@ -1430,10 +1425,12 @@ _VERIFY_FIRST = [
     # media queries. The slot of the deleted ann_ivf_topk (knn_join's
     # one-query case, checked against brute force's own oracle) goes to
     # p4_regex_fields: its evidence is round 4 (CORRECTNESS_r04), the
-    # oldest of any query. The other 14 round-4 queries (p5/p7/p9/p10/
-    # p11/p11b/p12, a3, f6, s5, s6, w1, w2, olap_priority_rollup) stay out,
-    # frozen at their r4 stamp (`tools/freshness_ledger.py check` proves
-    # all).
+    # oldest of any query. The slot of the deleted clean_stopword_stats (a
+    # second stop-word rule; the Gopher gate holds the one definition) goes
+    # to p5_multi_pattern_fallback, likewise round-4 evidence (stamp
+    # 882f845). The other 13 round-4 queries (p7/p9/p10/p11/p11b/p12, a3,
+    # f6, s5, s6, w1, w2, olap_priority_rollup) stay out, frozen at their
+    # r4 stamp (`tools/freshness_ledger.py check` proves all).
     # closure touched, previously off-window:
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
     "ann_bucketed_near_dup", "ann_knn_join",
@@ -1447,7 +1444,7 @@ _VERIFY_FIRST = [
     # closure touched, already in the window:
     "dedup_clusters_capped", "ann_dup_clusters", "text_bpe_token_counts",
     "shape_chunk_documents", "shape_pack_documents", "shape_pack_bpe_tokens",
-    "shape_deterministic_sample", "clean_stopword_stats", "clean_line_dedup",
+    "shape_deterministic_sample", "clean_line_dedup",
     "stream_extract_lift", "clean_gopher_gate", "clean_decontaminate",
     "dedup_span_coverage", "pipeline_training_mix",
     # the curate job's plan, and semdedup:
@@ -1456,8 +1453,9 @@ _VERIFY_FIRST = [
     "s2_warc_source", "f1_f2_size_filter", "f3_magic_router",
     "f4_extension_predicate", "f5_empty_text_guard", "p3_content_hash",
     "extract_error_accounting", "ai_label_discovery",
-    # the deleted ann_ivf_topk's slot: round-4 evidence
-    "p4_regex_fields",
+    # the slots of the deleted ann_ivf_topk and clean_stopword_stats:
+    # round-4 evidence
+    "p4_regex_fields", "p5_multi_pattern_fallback",
 ]
 
 
@@ -2402,8 +2400,7 @@ def oracle_sql() -> dict[str, str]:
         WITH base AS (
           SELECT doc_id,
             list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines,
-            list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS words,
-            length(regexp_extract_all(text, '#|\\.\\.\\.')) AS n_sym
+            list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS words
           FROM documents
         ), m AS (
           SELECT doc_id,
@@ -2413,37 +2410,12 @@ def oracle_sql() -> dict[str, str]:
               SELECT max(c)::DOUBLE FROM (
                 SELECT count(*) AS c FROM unnest(words) AS u(w) GROUP BY w
               )
-            ) / len(words) END AS twf,
-            CASE WHEN len(words) <= 0 THEN 0.0
-                 ELSE n_sym / len(words)::DOUBLE END AS swr
+            ) / len(words) END AS twf
           FROM base
         )
         SELECT doc_id, round(dlf, 6) AS dup_line_frac,
                round(twf, 6) AS top_word_frac,
-               round(swr, 6) AS symbol_word_ratio,
-               (dlf <= 0.30 AND twf <= 0.20 AND swr <= 0.10) AS keep
-        FROM m ORDER BY doc_id
-    """
-    _stops = ["the", "be", "to", "of", "and", "that", "have", "with"]
-    _slist = "[" + ", ".join(f"'{w}'" for w in _stops) + "]"
-    _kinds = " + ".join(
-        f"CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END"
-        for w in _stops
-    )
-    o["clean_stopword_stats"] = f"""
-        WITH t AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
-          FROM documents
-        ), m AS (
-          SELECT doc_id,
-            len(toks)::DOUBLE AS n_tok,
-            len(list_filter(toks, x -> list_contains({_slist}, x)))::DOUBLE AS n_stop,
-            ({_kinds}) AS kinds
-          FROM t
-        )
-        SELECT doc_id, round(n_stop / greatest(n_tok, 1.0), 6) AS stop_frac,
-               kinds AS n_stop_kinds, kinds >= 2 AS keep
+               (dlf <= 0.30 AND twf <= 0.20) AS keep
         FROM m ORDER BY doc_id
     """
     o["clean_line_dedup"] = f"""
@@ -2472,9 +2444,10 @@ def oracle_sql() -> dict[str, str]:
         FROM {pages} GROUP BY 1 ORDER BY host
     """
     # Gopher gate over the extraction goldens: same tokenization as
-    # pipeline_extract_dedup_chunk ('\\s+' split, empties dropped), same
-    # '#'/'...' symbol count as clean_repetition_flags; rule booleans on
-    # UNROUNDED doubles exactly like the Spark side
+    # pipeline_extract_dedup_chunk ('\\s+' split, empties dropped), the
+    # '#'/'...' symbol count of textstats.symbol_count, stop words counted
+    # as DISTINCT lower-cased words; rule booleans on UNROUNDED doubles
+    # exactly like the Spark side
     o["clean_gopher_gate"] = f"""
         WITH ok AS (
           SELECT url, golden_text AS text FROM {goldens}
@@ -2491,8 +2464,9 @@ def oracle_sql() -> dict[str, str]:
             greatest(len(toks), 1)::DOUBLE AS nz,
             COALESCE(list_sum(list_transform(toks, x -> length(x))), 0)::DOUBLE AS sum_len,
             len(list_filter(toks, x -> regexp_matches(x, '[A-Za-z]')))::DOUBLE AS n_alpha,
-            len(list_filter(toks, x -> list_contains(
-              ['the','be','to','of','and','that','have','with'], lower(x)))) AS n_stop,
+            len(list_distinct(list_transform(list_filter(toks, x -> list_contains(
+              ['the','be','to','of','and','that','have','with'], lower(x))),
+              x -> lower(x)))) AS n_kinds,
             n_sym,
             len(lines) AS n_lines,
             greatest(len(lines), 1)::DOUBLE AS nlz,
@@ -2501,14 +2475,14 @@ def oracle_sql() -> dict[str, str]:
           FROM w
         ), r AS (
           SELECT url, n_words, sum_len / nz AS mwl, n_alpha / nz AS fa,
-                 n_stop, n_sym / nz AS sr, n_lines,
+                 n_kinds, n_sym / nz AS sr, n_lines,
                  n_bullet / nlz AS fb, n_ell / nlz AS fe
           FROM m
         )
         SELECT url, n_words,
           round(mwl, 4) AS mean_word_len,
           round(fa, 4) AS frac_alpha_words,
-          n_stop AS n_stop_hits,
+          n_kinds AS n_stop_kinds,
           round(sr, 4) AS symbol_ratio,
           n_lines,
           round(fb, 4) AS frac_bullet_lines,
@@ -2519,10 +2493,10 @@ def oracle_sql() -> dict[str, str]:
           (fb <= 0.9) AS rule_bullet_lines,
           (fe <= 0.3) AS rule_ellipsis_lines,
           (fa >= 0.8) AS rule_alpha_words,
-          (n_stop >= 2) AS rule_stopwords,
+          (n_kinds >= 2) AS rule_stopwords,
           (n_words BETWEEN 50 AND 100000 AND mwl BETWEEN 3.0 AND 10.0
            AND sr <= 0.1 AND fb <= 0.9 AND fe <= 0.3 AND fa >= 0.8
-           AND n_stop >= 2) AS keep
+           AND n_kinds >= 2) AS keep
         FROM r ORDER BY url
     """
     # same tokenization as the Spark side ('\\s+' split, empties dropped,

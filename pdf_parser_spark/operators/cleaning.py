@@ -1,8 +1,10 @@
 """Corpus-cleaning operators from the public training-data literature
 (C4 [Raffel et al. 2020], Gopher [Rae et al. 2021], RefinedWeb [Penedo et
-al. 2023]): URL canonicalization, PII scrubbing, repetition-based quality
-flags, and domain-level rollups. All JVM expressions (codegen-friendly,
-no Python in the hot path) with exact DuckDB-SQL oracles.
+al. 2023]): URL canonicalization, PII scrubbing, Gopher's repetition
+flags, CCNet-style line dedup, and domain-level rollups. All JVM
+expressions (codegen-friendly, no Python in the hot path) with exact
+DuckDB-SQL oracles. Gopher's other quality rules (stop words, symbol ratio,
+word and line shape) are the one gate in :mod:`.gopher`.
 """
 
 from __future__ import annotations
@@ -10,13 +12,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gopher import stopword_hits
-from .textstats import lines, lower_tokens, symbol_count
+from .textstats import lines, lower_tokens
 
 __all__ = [
     "canonicalize_url", "host_of", "scrub_pii", "repetition_flags",
-    "stopword_stats", "line_dedup", "domain_stats", "domain_filter",
+    "line_dedup", "domain_stats", "domain_filter",
 ]
+
+# Gopher's repetition bounds (Rae et al. 2021, A1.1): duplicate-line
+# fraction 0.30; the modal-word fraction takes the paper's top-2-gram
+# character fraction bound, 0.20
+MAX_DUP_LINE_FRAC = 0.30
+MAX_TOP_WORD_FRAC = 0.20
 
 # PII patterns (shared verbatim with the DuckDB oracles; RE2-safe, no
 # backrefs). Order matters: emails before phones (an email may contain
@@ -34,7 +41,8 @@ def host_of(url: Column) -> Column:
 
 def canonicalize_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Canonical form for dedup/join keys: lowercase scheme+host, default
-    ports stripped, fragment dropped, trailing slash trimmed (path only).
+    ports stripped, fragment dropped, and a bare "/" path dropped (a longer
+    path keeps its trailing slash).
 
     Two pages differing only in these never differ in content, so the
     canonical url is the natural dedup/bucketing key at crawl scale.
@@ -69,30 +77,22 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def repetition_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_dup_line_frac: float = 0.30,
-    max_top_word_frac: float = 0.20,
-    max_symbol_word_ratio: float = 0.10,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Gopher-style repetition/quality signals, pure array expressions:
+    """Gopher-style repetition signals, pure array expressions:
 
-    - dup_line_frac: 1 - distinct(lines)/lines (boilerplate pages repeat
-      nav/footer lines)
+    - dup_line_frac: 1 - distinct(lines)/lines over non-blank lines
+      (boilerplate pages repeat nav/footer lines)
     - top_word_frac: frequency of the most common word / total words
       (keyword-stuffed spam)
-    - symbol_word_ratio: '#'/'...' style symbols per word
 
-    Emits the raw fractions and a combined `keep` verdict with the paper's
-    default-ish thresholds (tunable per corpus).
+    Emits the fractions and a combined `keep` verdict at the bounds above.
     """
     t = F.col(text_col)
     arrays = df.select(
         F.col(id_col),
         F.filter(lines(t), lambda x: F.trim(x) != "").alias("_lines"),
         lower_tokens(t).alias("_words"),
-        symbol_count(t).alias("_n_sym"),
     )
     lns, words = F.col("_lines"), F.col("_words")
     n_lines = F.size(lns)
@@ -122,48 +122,14 @@ def repetition_flags(
         folded["best"] / n_words.cast("double")
     )
 
-    symbol_ratio = F.when(n_words <= 0, F.lit(0.0)).otherwise(
-        F.col("_n_sym") / n_words.cast("double")
-    )
-
     return arrays.select(
         F.col(id_col),
         F.round(dup_line_frac, 6).alias("dup_line_frac"),
         F.round(top_word_frac, 6).alias("top_word_frac"),
-        F.round(symbol_ratio, 6).alias("symbol_word_ratio"),
         (
-            (dup_line_frac <= max_dup_line_frac)
-            & (top_word_frac <= max_top_word_frac)
-            & (symbol_ratio <= max_symbol_word_ratio)
+            (dup_line_frac <= MAX_DUP_LINE_FRAC)
+            & (top_word_frac <= MAX_TOP_WORD_FRAC)
         ).alias("keep"),
-    )
-
-
-def stopword_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_kinds: int = 2,
-) -> DataFrame:
-    """Gopher's stopword rule: keep documents containing at least min_kinds
-    DISTINCT words from the 8-word English stopword list, plus the stopword
-    token fraction as a quality signal. Token-exact matching (pure JVM
-    array ops) — \\b-regex counting diverges between Unicode-aware (Java)
-    and ASCII (RE2) word boundaries on non-ASCII-adjacent text."""
-    arrays = df.select(
-        F.col(id_col), lower_tokens(F.col(text_col)).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.size("_toks").cast("double").alias("_n_tok"),
-        stopword_hits(F.col("_toks")).alias("_hits"),
-    )
-    n_stop = F.size("_hits").cast("double")
-    kinds = F.size(F.array_distinct("_hits"))
-    return arrays.select(
-        F.col(id_col),
-        F.round(n_stop / F.greatest("_n_tok", F.lit(1.0)), 6).alias("stop_frac"),
-        kinds.alias("n_stop_kinds"),
-        (kinds >= min_kinds).alias("keep"),
     )
 
 

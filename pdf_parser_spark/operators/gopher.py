@@ -1,12 +1,14 @@
 """Gopher-style composite document-quality gate (JVM-side, codegen-friendly).
 
-Implements the repetition-free subset of the Gopher quality signals
-(Rae et al. 2021, "Scaling Language Models: Methods, Analysis & Insights
-from Training Gopher", appendix A1.1) as one declarative Spark expression
-tree per document — word-count bounds, mean-word-length bounds,
-symbol-to-word ratio (``#`` and ``...``), bullet-line / ellipsis-line
-ratios, alphabetic-word fraction, and the canonical 8-word stop-word
-presence check.  The repetition signals (duplicate lines / n-grams) live in
+Implements the repetition-free subset of the Gopher quality rules (Rae et
+al. 2021, "Scaling Language Models: Methods, Analysis & Insights from
+Training Gopher", appendix A1.1) as one declarative Spark expression tree
+per document: word-count bounds, mean-word-length bounds, symbol-to-word
+ratio (``#`` and ``...``), bullet-line / ellipsis-line ratios,
+alphabetic-word fraction, and the stop-word rule (at least two DISTINCT
+words of the 8-word list). This module is the one definition of each of
+these rules, at the paper's thresholds (module constants, not parameters).
+The repetition signals (duplicate lines, modal-word frequency) live in
 :mod:`pdf_parser_spark.operators.cleaning` (``repetition_flags``,
 ``line_dedup``); this module is the per-document structural gate that a
 curation pipeline runs right after extraction.
@@ -31,38 +33,39 @@ from pyspark.sql import functions as F
 
 from .textstats import lines, symbol_count, tokens
 
-__all__ = ["GOPHER_STOPWORDS", "stopword_hits", "gopher_quality_gate"]
+__all__ = ["GOPHER_STOPWORDS", "stopword_kinds", "gopher_quality_gate"]
 
 # the canonical Gopher stop-word list (Rae et al. 2021, A1.1: "contains at
 # least two of the following English words: the, be, to, of, and, that,
 # have, with")
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
+# the published thresholds (A1.1): a document is kept only if it passes all
+MIN_WORDS, MAX_WORDS = 50, 100_000
+MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN = 3.0, 10.0
+MAX_SYMBOL_RATIO = 0.1
+MAX_BULLET_RATIO = 0.9
+MAX_ELLIPSIS_RATIO = 0.3
+MIN_ALPHA_WORD_RATIO = 0.8
+MIN_STOP_KINDS = 2
 
-def stopword_hits(arr: Column) -> Column:
-    """The tokens of arr that are Gopher stop words, case-insensitively.
-    Pass a projected column: arr is filtered by a lambda."""
-    return F.filter(arr, lambda x: F.lower(x).isin(GOPHER_STOPWORDS))
+
+def stopword_kinds(arr: Column) -> Column:
+    """How many DISTINCT Gopher stop words the tokens of arr hold,
+    case-insensitively ("THE the with" holds 2, "the the" holds 1). Pass
+    the gate's projected token column, not a split expression."""
+    lowered = F.transform(arr, lambda x: F.lower(x))
+    return F.size(F.array_distinct(
+        F.filter(lowered, lambda x: x.isin(GOPHER_STOPWORDS))))
 
 
 def gopher_quality_gate(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_ratio: float = 0.9,
-    max_ellipsis_ratio: float = 0.3,
-    min_alpha_word_ratio: float = 0.8,
-    min_stop_hits: int = 2,
+    df: DataFrame, text_col: str = "text", id_col: str = "url"
 ) -> DataFrame:
-    """Per-document Gopher quality stats + rule booleans + a final ``keep``.
+    """Per-document Gopher quality stats + rule booleans + a final ``keep``,
+    at the published thresholds above.
 
-    Thresholds default to the published Gopher values.  Ratios are rounded
-    to 4 places (engine-stable, same convention as
+    Ratios are rounded to 4 places (engine-stable, same convention as
     ``textstats.quality_score``); the rule booleans are evaluated on the
     UNROUNDED values so the gate itself is exact.
     """
@@ -82,7 +85,7 @@ def gopher_quality_gate(
     mean_word_len = sum_len.cast("double") / nz
     n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
     frac_alpha = n_alpha.cast("double") / nz
-    n_stop = F.size(stopword_hits(toks))
+    n_kinds = stopword_kinds(toks)
     symbol_ratio = F.col("_n_sym").cast("double") / nz
 
     n_lines = F.size(lns)
@@ -97,14 +100,14 @@ def gopher_quality_gate(
     frac_ellipsis = n_ellipsis.cast("double") / nlz
 
     rules = {
-        "rule_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "rule_mean_word_len": (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len),
-        "rule_symbol_ratio": symbol_ratio <= max_symbol_ratio,
-        "rule_bullet_lines": frac_bullet <= max_bullet_ratio,
-        "rule_ellipsis_lines": frac_ellipsis <= max_ellipsis_ratio,
-        "rule_alpha_words": frac_alpha >= min_alpha_word_ratio,
-        "rule_stopwords": n_stop >= min_stop_hits,
+        "rule_word_count": (n_words >= MIN_WORDS) & (n_words <= MAX_WORDS),
+        "rule_mean_word_len": (mean_word_len >= MIN_MEAN_WORD_LEN)
+        & (mean_word_len <= MAX_MEAN_WORD_LEN),
+        "rule_symbol_ratio": symbol_ratio <= MAX_SYMBOL_RATIO,
+        "rule_bullet_lines": frac_bullet <= MAX_BULLET_RATIO,
+        "rule_ellipsis_lines": frac_ellipsis <= MAX_ELLIPSIS_RATIO,
+        "rule_alpha_words": frac_alpha >= MIN_ALPHA_WORD_RATIO,
+        "rule_stopwords": n_kinds >= MIN_STOP_KINDS,
     }
     keep = F.lit(True)
     for c in rules.values():
@@ -114,7 +117,7 @@ def gopher_quality_gate(
         n_words.alias("n_words"),
         F.round(mean_word_len, 4).alias("mean_word_len"),
         F.round(frac_alpha, 4).alias("frac_alpha_words"),
-        n_stop.alias("n_stop_hits"),
+        n_kinds.alias("n_stop_kinds"),
         F.round(symbol_ratio, 4).alias("symbol_ratio"),
         n_lines.alias("n_lines"),
         F.round(frac_bullet, 4).alias("frac_bullet_lines"),

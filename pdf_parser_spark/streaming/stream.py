@@ -28,15 +28,14 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.cleaning import host_of
 from ..operators.textstats import content_fingerprint
 from ..pipeline import extract_pipeline
-
-# schema of the pages table (a streaming source cannot infer it)
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+from ..sources.warc import WARC_SCHEMA
 
 
 def _pages_stream(spark: SparkSession, corpus_dir: str,
                   max_files_per_trigger: int = 4) -> DataFrame:
     return (
-        spark.readStream.schema(PAGES_DDL)
+        # the pages table's schema (a streaming source cannot infer it)
+        spark.readStream.schema(WARC_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(f"{corpus_dir}/pages.parquet")
     )
@@ -164,7 +163,7 @@ def stream_exact_dedup(
     deduped = (
         pages.select(
             "url",
-            F.col("warc_ts").cast("timestamp").alias("warc_ts"),
+            "warc_ts",
             content_fingerprint(F.col("text")).alias("fingerprint"),
         )
         .withWatermark("warc_ts", watermark)

@@ -91,11 +91,22 @@ class TestPackDocuments:
         assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
     def test_default_mode_plan_has_partitioned_window(self, spark):
+        from tools.plan_audit import plan_nodes
+
         df = spark.createDataFrame([(0, "a")], "doc_id bigint, text string")
-        plan = pack_documents(df)._jdf.queryExecution().executedPlan().toString()
-        # an empty partitionBy would show 'Window [...]' with no partition
-        # spec and a single-partition Exchange; the derived shard must appear
-        assert "pmod" in plan or "shard" in plan
+        plan = pack_documents(df)._jdf.queryExecution().executedPlan()
+        # an empty partitionBy plans a Window with no partition spec over a
+        # single-partition exchange: the whole corpus in one task
+        windows, single = [], 0
+        for node in plan_nodes(plan):
+            name = node.getClass().getSimpleName()
+            if name == "WindowExec":
+                spec = node.partitionSpec()
+                windows.append([spec.apply(i).toString().split("#")[0]
+                                for i in range(spec.size())])
+            elif name == "ShuffleExchangeExec":
+                single += node.outputPartitioning().toString() == "SinglePartition"
+        assert windows == [["shard"]] and single == 0, (windows, single)
 
 
 class TestDeterministicSample:

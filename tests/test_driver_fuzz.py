@@ -30,7 +30,7 @@ DOC_QUERIES = [
     "text_token_count", "text_quality_score",
     "text_lang_id", "text_fingerprint", "text_winnow_fingerprint",
     "text_lm_quality", "text_bpe_token_counts", "clean_repetition_flags",
-    "clean_stopword_stats", "shape_chunk_documents", "shape_pack_documents",
+    "shape_chunk_documents", "shape_pack_documents",
     "shape_deterministic_sample", "shape_pack_bpe_tokens", "udaf_geomean_chars",
     "udf_groupmap_zscore", "p12_display_name_join", "w1_topk_limit",
     "w2_label_band_filter",

@@ -291,6 +291,7 @@ class TestDedupSkewGuards:
         from pdf_parser_spark.operators import dedup as D
         from pdf_parser_spark.operators import similarity as S
         from pdf_parser_spark.operators.semdedup import semdedup
+        from tools.plan_audit import node_counts
 
         docs = spark.createDataFrame(
             [(i, f"cap exchange probe text number {i % 3} with shared words")
@@ -313,8 +314,10 @@ class TestDedupSkewGuards:
         }[op]
 
         def exchanges(df):
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            return plan.count("Exchange hashpartitioning")
+            # shuffles that run: a reused exchange ("ReusedExchange ...
+            # Exchange hashpartitioning" in the plan text) runs no shuffle
+            plan = df._jdf.queryExecution().executedPlan()
+            return node_counts(plan)["ShuffleExchangeExec"]
 
         conf = {"spark.sql.adaptive.enabled": "false",
                 "spark.sql.autoBroadcastJoinThreshold": "-1"}
@@ -967,7 +970,6 @@ def _text_operators():
         "chunk_documents": lambda s, d, c: chunking.chunk_documents(d),
         "pack_documents": lambda s, d, c: chunking.pack_documents(d),
         "repetition_flags": lambda s, d, c: cleaning.repetition_flags(d),
-        "stopword_stats": lambda s, d, c: cleaning.stopword_stats(d),
         "gopher_quality_gate":
             lambda s, d, c: gopher.gopher_quality_gate(d, id_col="doc_id"),
         "ngram_set": lambda s, d, c: decontaminate.ngram_set(d),

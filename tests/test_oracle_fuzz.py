@@ -45,6 +45,8 @@ def _random_docs(seed: int, n: int = 40):
     docs.append((n, ""))  # empty
     docs.append((n + 1, "   "))
     docs.append((n + 2, "repeat " * 50))
+    # 60 stop-word hits, one stop-word kind
+    docs.append((n + 5, "the " * 60))
     docs.append((n + 3, "\n\n- only bullets...\n* again…\n"))
     # ASCII-whitespace zoo between tokens: Java \s and RE2 \s (DuckDB)
     # must both treat \t \n \f \r (and \r\n) as separators — a divergence

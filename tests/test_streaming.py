@@ -78,7 +78,7 @@ class TestStatefulHostStats:
 
         from pdf_parser_spark.operators.cleaning import host_of
         from pdf_parser_spark.streaming import stream_host_stats
-        from pdf_parser_spark.streaming.stream import PAGES_DDL
+        from pdf_parser_spark.sources.warc import WARC_SCHEMA
 
         # four one-file appends; maxFilesPerTrigger=2 makes two micro-batches,
         # and every host spans both, so per-host state MUST carry across
@@ -98,7 +98,7 @@ class TestStatefulHostStats:
         for rows in shards:
             spark.createDataFrame(
                 [(u, t0 + datetime.timedelta(hours=h), html, None, "en")
-                 for u, h, html in rows], PAGES_DDL,
+                 for u, h, html in rows], WARC_SCHEMA,
             ).coalesce(1).write.mode("append").parquet(
                 str(corpus / "pages.parquet"))
         q = stream_host_stats(

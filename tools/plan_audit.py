@@ -35,7 +35,7 @@ DEFAULT = [
     "pipeline_training_mix",  # r5: three curation gates in ONE composed plan
     "clean_line_dedup",  # like span dedup: scans=2 joins=1
     # each gate projects its token / line arrays once: splits=1
-    "clean_repetition_flags", "clean_stopword_stats", "text_lang_id",
+    "clean_repetition_flags", "text_lang_id",
 ]
 
 
@@ -70,12 +70,12 @@ def split_copies(plan) -> int:
     return most
 
 
-def node_counts(plan) -> Counter:
-    """Physical operators in a plan's current tree, by class name. An
-    adaptive plan counts its current plan (the final one once executed), a
-    query stage counts its exchange, and a reused exchange counts once as
-    ReusedExchangeExec with no subtree (it runs where it first appears)."""
-    counts, nodes = Counter(), [plan]
+def plan_nodes(plan):
+    """Physical operators in a plan's current tree. An adaptive plan yields
+    its current plan (the final one once executed), a query stage its
+    exchange, and a reused exchange once as ReusedExchangeExec with no
+    subtree (it runs where it first appears)."""
+    nodes = [plan]
     while nodes:
         node = nodes.pop()
         name = node.getClass().getSimpleName()
@@ -84,10 +84,14 @@ def node_counts(plan) -> Counter:
         elif name.endswith("QueryStageExec"):
             nodes.append(node.plan())
         else:
-            counts[name] += 1
+            yield node
             if name != "ReusedExchangeExec":
                 nodes += _seq(node.children())
-    return counts
+
+
+def node_counts(plan) -> Counter:
+    """plan_nodes(plan) counted by class name."""
+    return Counter(n.getClass().getSimpleName() for n in plan_nodes(plan))
 
 
 def scans_and_joins(plan) -> tuple[int, int]:
