@@ -463,9 +463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_minhash_signatures"] = dedup_minhash_signatures
 
     def dedup_minhash_lsh_pairs(spark, sf_dir):
-        return D.minhash_lsh_pairs(
-            _docs(spark, sf_dir), num_hashes=16, bands=8
-        ).orderBy("id_a", "id_b")
+        return D.minhash_lsh_pairs(_docs(spark, sf_dir)).orderBy("id_a", "id_b")
     q["dedup_minhash_lsh_pairs"] = dedup_minhash_lsh_pairs
 
     def dedup_minhash_lsh_pairs_capped(spark, sf_dir):
@@ -473,13 +471,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (M members = M^2/2 pairs) whose contents exact_dedup already
         # collapses; uncapped stays available as the oracle-exact mode above
         return D.minhash_lsh_pairs(
-            _docs(spark, sf_dir), num_hashes=16, bands=8, max_bucket=50
+            _docs(spark, sf_dir), max_bucket=50
         ).orderBy("id_a", "id_b")
     q["dedup_minhash_lsh_pairs_capped"] = dedup_minhash_lsh_pairs_capped
 
     def dedup_ngram_jaccard(spark, sf_dir):
         return (
-            D.jaccard_pairs(_docs(spark, sf_dir), threshold=0.0)
+            D.jaccard_pairs(_docs(spark, sf_dir))
             .orderBy(F.desc("jaccard"), "id_a", "id_b")
             .limit(20)
         )
@@ -491,7 +489,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (a shingle in M docs contributes M^2/2 join rows); the similarity
         # stays a true Jaccard over the pruned shingle universe
         return (
-            D.jaccard_pairs(_docs(spark, sf_dir), threshold=0.0, max_df=100)
+            D.jaccard_pairs(_docs(spark, sf_dir), max_df=100)
             .orderBy(F.desc("jaccard"), "id_a", "id_b")
             .limit(20)
         )
@@ -501,16 +499,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return D.simhash64(_docs(spark, sf_dir)).orderBy("doc_id")
     q["dedup_simhash"] = dedup_simhash
 
-    def dedup_simhash_pairs(spark, sf_dir):  # pigeonhole-blocked Hamming join
-        return D.simhash_dups(_docs(spark, sf_dir), max_hamming=8).orderBy(
-            "id_a", "id_b"
-        )
+    def dedup_simhash_pairs(spark, sf_dir):
+        # pigeonhole-blocked Hamming join: every pair within 3 bits
+        return D.simhash_dups(_docs(spark, sf_dir)).orderBy("id_a", "id_b")
     q["dedup_simhash_pairs"] = dedup_simhash_pairs
 
     def dedup_clusters(spark, sf_dir):  # LSH pairs -> connected components
-        return D.dup_clusters(
-            _docs(spark, sf_dir), num_hashes=16, bands=8
-        ).orderBy("doc_id")
+        return D.dup_clusters(_docs(spark, sf_dir)).orderBy("doc_id")
     q["dedup_clusters"] = dedup_clusters
 
     def dedup_clusters_capped(spark, sf_dir):
@@ -518,7 +513,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dup_clusters into the LSH banding (r2 verdict: the end-to-end path
         # users run inherited the uncapped M^2/2 bucket blowup)
         return D.dup_clusters(
-            _docs(spark, sf_dir), num_hashes=16, bands=8, max_bucket=50
+            _docs(spark, sf_dir), max_bucket=50
         ).orderBy("doc_id")
     q["dedup_clusters_capped"] = dedup_clusters_capped
 
@@ -536,15 +531,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ann_lsh_bucketed_topk(spark, sf_dir):
         # coordinate-sign buckets: JVM-only LSH the DuckDB oracle recomputes
         # exactly, so the approximate top-k itself is value-checked
-        return S.lsh_bucketed_topk(
-            _emb(spark, sf_dir), query_id=0, k=10, n_planes=4
-        )
+        return S.lsh_bucketed_topk(_emb(spark, sf_dir), query_id=0, k=10)
     q["ann_lsh_bucketed_topk"] = ann_lsh_bucketed_topk
 
     def ann_bucketed_near_dup(spark, sf_dir):
         # scale path for ann_embedding_near_dup: bucket equi-join, no O(n^2)
         return S.bucketed_near_dup_pairs(
-            _emb(spark, sf_dir), threshold=0.2, n_planes=4
+            _emb(spark, sf_dir), threshold=0.2
         ).orderBy("id_a", "id_b")
     q["ann_bucketed_near_dup"] = ann_bucketed_near_dup
 
@@ -554,7 +547,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # min-label connected components the text path uses — keep-rule is
         # component == vec_id, mirroring dedup_clusters
         emb = _emb(spark, sf_dir)
-        pairs = S.bucketed_near_dup_pairs(emb, threshold=0.2, n_planes=4)
+        pairs = S.bucketed_near_dup_pairs(emb, threshold=0.2)
         return D.connected_components(
             emb.select("vec_id"), pairs.select("id_a", "id_b"),
             id_col="vec_id",
@@ -1004,7 +997,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pdf_parser_spark.operators import cleaning as C
 
         feed = _pages(spark, sf_dir).where(F.col("url").contains("/feed/"))
-        return C.line_dedup(feed, id_col="url", max_doc_freq=1).orderBy("url")
+        return C.line_dedup(feed, id_col="url").orderBy("url")
     q["clean_line_dedup"] = clean_line_dedup
 
     def clean_domain_stats(spark, sf_dir):
@@ -1033,7 +1026,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         d = _docs(spark, sf_dir)
         bench = d.where(F.col("doc_id") % 20 == 0)
-        return DC.decontaminate(d, bench, n=8, min_hits=1).orderBy("doc_id")
+        return DC.decontaminate(d, bench).orderBy("doc_id")
     q["clean_decontaminate"] = clean_decontaminate
 
     def dedup_span_coverage(spark, sf_dir):
@@ -1045,7 +1038,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
 
         d = _docs(spark, sf_dir)
-        return duplicated_span_stats(d, k=10, min_count=2).orderBy("doc_id")
+        return duplicated_span_stats(d).orderBy("doc_id")
     q["dedup_span_coverage"] = dedup_span_coverage
 
     def pipeline_training_mix(spark, sf_dir):
@@ -1058,10 +1051,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
 
         d = _docs(spark, sf_dir)
-        span = duplicated_span_stats(d, k=10).select(
+        span = duplicated_span_stats(d).select(
             "doc_id", "dup_tokens", F.col("keep").alias("keep_span"))
         dec = DC.decontaminate(
-            d, d.where(F.col("doc_id") % 20 == 0), n=8
+            d, d.where(F.col("doc_id") % 20 == 0)
         ).select("doc_id", "n_contaminated_grams",
                  (~F.col("contaminated")).alias("keep_clean"))
         sem = semdedup(
@@ -1761,7 +1754,6 @@ def oracle_sql() -> dict[str, str]:
         FROM common
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(common / (sa.sz + sb.sz - common), 6) >= 0.0
         ORDER BY jaccard DESC, id_a, id_b LIMIT 20
     """
 
@@ -1794,22 +1786,18 @@ def oracle_sql() -> dict[str, str]:
           SELECT d.doc_id,
                  COALESCE(CASE WHEN us >= 9223372036854775808::UHUGEINT
                                THEN (us::HUGEINT - 18446744073709551616)::BIGINT
-                               ELSE us::BIGINT END, 0) AS simhash,
-                 COALESCE(us, 0::UHUGEINT)::UBIGINT AS usim
+                               ELSE us::BIGINT END, 0) AS simhash
           FROM documents d LEFT JOIN u USING (doc_id)
         )
     """
     o["dedup_simhash"] = simhash_cte + "SELECT doc_id, simhash FROM ssig ORDER BY doc_id"
+    # brute force over every pair, no blocks: the operator's 4 x 16-bit
+    # blocking must find all of them
     o["dedup_simhash_pairs"] = simhash_cte + """
-        , blocks AS (
-          SELECT doc_id, simhash, b.blk, ((usim >> (b.blk * 16)::INT) & 65535) AS key
-          FROM ssig, (SELECT unnest(range(0, 4)) AS blk) b
-        )
-        SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
+        SELECT l.doc_id AS id_a, r.doc_id AS id_b,
                bit_count(xor(l.simhash, r.simhash)) AS hamming
-        FROM blocks l JOIN blocks r
-          ON l.blk = r.blk AND l.key = r.key AND l.doc_id < r.doc_id
-        WHERE bit_count(xor(l.simhash, r.simhash)) <= 8
+        FROM ssig l JOIN ssig r ON l.doc_id < r.doc_id
+        WHERE bit_count(xor(l.simhash, r.simhash)) <= 3
         ORDER BY id_a, id_b
     """
 
@@ -1825,7 +1813,6 @@ def oracle_sql() -> dict[str, str]:
         FROM common
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(common / (sa.sz + sb.sz - common), 6) >= 0.0
         ORDER BY jaccard DESC, id_a, id_b LIMIT 20
     """
 

@@ -20,6 +20,9 @@ from .textstats import tokens
 
 __all__ = ["chunk_documents", "pack_documents", "deterministic_sample"]
 
+NUM_SHARDS = 64        # derived pack shards when the caller names none
+SAMPLE_DENOM = 10_000  # sample buckets: rates resolve to 1 / SAMPLE_DENOM
+
 
 def chunk_documents(
     df: DataFrame,
@@ -66,7 +69,6 @@ def pack_documents(
     id_col: str = "doc_id",
     token_budget: int = 2048,
     shard_col: Optional[str] = None,
-    num_shards: int = 64,
     tokens_col: Optional[str] = None,
 ) -> DataFrame:
     """Stream-order sequence packing: concatenate documents in key order and
@@ -76,7 +78,7 @@ def pack_documents(
 
     One prefix-sum window, always partitioned. Pass shard_col to control the
     sharding; when None a deterministic default shard is derived as
-    pmod(xxhash64(id), num_shards) — packing happens independently per shard,
+    pmod(xxhash64(id), NUM_SHARDS) — packing happens independently per shard,
     which is both the scalable plan (no global single-partition sort is
     reachable through this API) and the semantics training actually wants
     (any consistent order works; only determinism matters).
@@ -95,7 +97,7 @@ def pack_documents(
         df = df.withColumn(
             shard_col,
             F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                   F.lit(num_shards)).cast("int"),
+                   F.lit(NUM_SHARDS)).cast("int"),
         )
     base = df.select(
         F.col(shard_col),
@@ -121,15 +123,13 @@ def deterministic_sample(
     df: DataFrame,
     key_col: str = "doc_id",
     rate: float = 0.1,
-    salt: str = "",
-    denom: int = 10_000,
 ) -> DataFrame:
-    """Hash-threshold sampling: keep rows whose md5-derived bucket falls
-    under rate. Membership is a pure function of (key, salt) — identical on
-    every engine, cluster size, and retry, unlike rand()-based sampling —
-    and different salts give independent samples for held-out splits.
+    """Hash-threshold sampling: keep rows whose md5-derived bucket (of
+    SAMPLE_DENOM) falls under rate. Membership is a pure function of the
+    key — identical on every engine, cluster size, and retry, unlike
+    rand()-based sampling. A rate outside [0, 1] raises ValueError.
     """
-    bucket = md5_hash60(
-        F.concat(F.col(key_col).cast("string"), F.lit(salt))
-    ) % denom
-    return df.where(bucket < round(rate * denom))
+    if not 0 <= rate <= 1:
+        raise ValueError("rate must be in [0, 1]")
+    bucket = md5_hash60(F.col(key_col).cast("string")) % SAMPLE_DENOM
+    return df.where(bucket < round(rate * SAMPLE_DENOM))

@@ -137,12 +137,10 @@ def line_dedup(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_doc_freq: int = 1,
 ) -> DataFrame:
     """CCNet-style cross-document line dedup: drop every line that occurs in
-    more than max_doc_freq documents (site boilerplate, cookie banners,
-    nav text), then reassemble each document's remaining lines in their
-    original order.
+    more than one document (site boilerplate, cookie banners, nav text),
+    then reassemble each document's remaining lines in their original order.
 
     ``id_col`` must be a key of ``df``: one row per id, NULL text giving
     ("", 0, 0). Shape at scale: one posexplode_outer (NULL text keeps one
@@ -161,7 +159,7 @@ def line_dedup(
     common = (
         line_rows.groupBy("line")
         .agg(F.countDistinct(id_col).alias("_df"))
-        .where(F.col("_df") > max_doc_freq)
+        .where(F.col("_df") > 1)
     )
     kept = F.col("pos").isNotNull() & F.col("_df").isNull()
     kept_lines = F.array_sort(

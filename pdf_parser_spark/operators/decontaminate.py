@@ -1,8 +1,8 @@
 """Benchmark decontamination — n-gram overlap against a held-out set.
 
 The standard training-data step (GPT-3 appendix C, Llama 2 §A.6): a
-document is contaminated when it shares at least ``min_hits`` distinct
-word n-grams with any benchmark/eval document; contaminated documents are
+document is contaminated when it shares at least one distinct word
+N-gram with any benchmark/eval document; contaminated documents are
 flagged (and usually dropped) before training.
 
 Spark-first design for 100 TB, over ONE exploded frame:
@@ -34,42 +34,36 @@ from pyspark.sql import DataFrame, functions as F
 from .dedup import word_shingles
 from .textstats import lower_tokens, ngrams
 
-__all__ = ["ngram_set", "decontaminate"]
+__all__ = ["decontaminate"]
 
-
-def ngram_set(df: DataFrame, n: int = 8, text_col: str = "text") -> DataFrame:
-    """Distinct word n-grams (space-joined, lowercased) of every row."""
-    return (
-        word_shingles(df, text_col, None, n)
-        .select(F.col("shingle").alias("gram"))
-        .distinct()
-    )
+N = 8  # word n-gram length (the GPT-3 / Llama 2 overlap unit)
 
 
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 8,
-    min_hits: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """Per-document contamination flags against a benchmark corpus.
 
     ``id_col`` must be a key of ``docs``; one row per id:
-    ``n_contaminated_grams`` = distinct n-grams shared with ANY benchmark
+    ``n_contaminated_grams`` = distinct N-grams shared with ANY benchmark
     document (0 for short, empty or NULL text), and ``contaminated`` =
-    that count >= min_hits.
+    that count > 0.
     """
-    bench = F.broadcast(ngram_set(benchmark, n=n, text_col=text_col))
+    bench = F.broadcast(
+        word_shingles(benchmark, text_col, None, N)
+        .select(F.col("shingle").alias("gram")).distinct()
+    )
     grams = (
         docs.select(id_col, lower_tokens(F.col(text_col)).alias("_toks"))
         .select(id_col, F.explode_outer(
-            F.array_distinct(ngrams(F.col("_toks"), n))).alias("shingle"))
+            F.array_distinct(ngrams(F.col("_toks"), N))).alias("shingle"))
     )
     hits = F.col("n_contaminated_grams")
     return (
         grams.join(bench, F.col("shingle") == F.col("gram"), "left")
         .groupBy(id_col).agg(F.count("gram").alias("n_contaminated_grams"))
-        .select(id_col, hits, (hits >= min_hits).alias("contaminated"))
+        .select(id_col, hits, (hits > 0).alias("contaminated"))
     )

@@ -32,6 +32,14 @@ __all__ = [
     "simhash_dups", "connected_components", "dup_clusters",
 ]
 
+SHINGLE_N = 3     # word n-gram length of the MinHash and Jaccard shingles
+NUM_HASHES = 16   # MinHash permutations behind the LSH bands
+BANDS = 8         # LSH bands of NUM_HASHES // BANDS rows each
+# SimHash pairs: the 4 x 16-bit blocking finds every pair within d bits only
+# when d + 1 <= 4 blocks (pigeonhole; Manku et al., WWW 2007), so 3 is the
+# largest distance it finds exactly
+MAX_HAMMING = 3
+
 
 def md5_hash60(col: Column) -> Column:
     """Deterministic 60-bit hash portable across Spark and DuckDB."""
@@ -133,15 +141,15 @@ def word_shingles(df: DataFrame, text_col: str = "text",
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", n: int = 3,
+                       id_col: str = "doc_id",
                        num_hashes: int = 8) -> DataFrame:
-    """K-permutation MinHash: sig_i = min over shingles of
-    md5_hash60(shingle#i).
+    """K-permutation MinHash over SHINGLE_N-word shingles: sig_i = min over
+    shingles of md5_hash60(shingle#i).
 
     One explode + one groupBy with K min() aggregates — all JVM expressions,
     map-side combinable, exactly one shuffle.
     """
-    sh = word_shingles(df, text_col, id_col, n)
+    sh = word_shingles(df, text_col, id_col, SHINGLE_N)
     aggs = [
         F.min(md5_hash60(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"mh_{i}")
         for i in range(num_hashes)
@@ -150,9 +158,9 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n: int = 3, num_hashes: int = 16, bands: int = 4,
                       max_bucket: Optional[int] = None) -> DataFrame:
-    """Candidate near-duplicate pairs via LSH banding over MinHash signatures.
+    """Candidate near-duplicate pairs via LSH banding over MinHash signatures
+    (NUM_HASHES hashes in BANDS bands).
 
     Documents sharing any band key become a candidate pair; at scale each
     band bucket is tiny, so the self-join explodes only real collisions.
@@ -165,10 +173,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     near-identical to thousands of others, so exact_dedup (one cheap hash
     aggregate) already collapses them. None = no cap (oracle-exact mode).
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
+    rows_per_band = NUM_HASHES // BANDS
+    sig = minhash_signatures(df, text_col, id_col, NUM_HASHES)
     band_cols = []
-    for b in range(bands):
+    for b in range(BANDS):
         cols = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
         # md5 band key (not Spark's internal hash) so DuckDB oracles can
         # reproduce the exact candidate set
@@ -186,12 +194,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
 
 
 def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  n: int = 3, threshold: float = 0.6,
                   max_df: Optional[int] = None) -> DataFrame:
-    """Exact n-gram Jaccard similarity via an inverted shingle index.
+    """Exact SHINGLE_N-gram Jaccard similarity via an inverted shingle index.
 
     ``id_col`` must be a key of ``df``. Returns (id_a, id_b, jaccard) with
-    id_a < id_b for every pair sharing a shingle and J >= threshold, where
+    id_a < id_b for every pair sharing a shingle, where
     J = common / (|A| + |B| - common), rounded to 6 places. Only
     co-occurring pairs are scored: common(a,b) counts the rows of the one
     self-join on shingle, and |A|, |B| are a per-document window count over
@@ -206,16 +213,15 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     (the standard prefix-filtering compromise). None = exact (oracle mode).
     """
     sh = _drop_large_groups(
-        word_shingles(df, text_col, id_col, n), ["shingle"], max_df
+        word_shingles(df, text_col, id_col, SHINGLE_N), ["shingle"], max_df
     ).withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
     common, sz_a, sz_b = F.col("common"), F.col("sz_a"), F.col("sz_b")
     return (
         _key_pairs(sh, ["shingle"], id_col, carry=["sz"])
         .groupBy("id_a", "id_b", "sz_a", "sz_b")
         .agg(F.count(F.lit(1)).alias("common"))
-        .withColumn("jaccard", F.round(common / (sz_a + sz_b - common), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select("id_a", "id_b",
+                F.round(common / (sz_a + sz_b - common), 6).alias("jaccard"))
     )
 
 
@@ -273,7 +279,6 @@ def connected_components(
 
 def dup_clusters(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    n: int = 3, num_hashes: int = 16, bands: int = 8,
     max_bucket: Optional[int] = None,
 ) -> DataFrame:
     """End-to-end near-dup clustering: MinHash+LSH pairs -> components.
@@ -286,9 +291,7 @@ def dup_clusters(
     capped pairs query uses (a degenerate band bucket of M members otherwise
     feeds M^2/2 edges into component propagation). None = oracle-exact mode.
     """
-    pairs = minhash_lsh_pairs(
-        df, text_col, id_col, n, num_hashes, bands, max_bucket=max_bucket
-    )
+    pairs = minhash_lsh_pairs(df, text_col, id_col, max_bucket=max_bucket)
     return connected_components(df.select(id_col), pairs, id_col)
 
 
@@ -329,13 +332,13 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 
 
 def simhash_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 max_hamming: int = 3,
                  max_block: Optional[int] = None) -> DataFrame:
-    """Near-dup pairs with Hamming distance <= max_hamming.
+    """Near-dup pairs with Hamming distance <= MAX_HAMMING (3), all of them.
 
-    Scale path: block on 4 16-bit sub-keys (pigeonhole: any pair within
-    Hamming<=3 of 64 bits agrees on at least one 16-bit block), then verify
-    distance with bit_count on the xor — JVM-side.
+    Scale path: block on 4 16-bit sub-keys (pigeonhole: two 64-bit hashes
+    within Hamming 3 differ in at most 3 blocks, so they agree on at least
+    one; at distance 4 or more they may agree on none, and the join would
+    miss them), then verify distance with bit_count on the xor — JVM-side.
 
     max_block: the shared skew cap (_drop_large_groups) on blocks — a
     degenerate block (every empty document simhashes to 0) yields M^2/2
@@ -358,6 +361,6 @@ def simhash_dups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
             "id_a", "id_b",
             F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
         )
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= MAX_HAMMING)
         .distinct()
     )

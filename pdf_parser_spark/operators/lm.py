@@ -26,16 +26,19 @@ __all__ = ["train_char_trigram_lm", "trigram_model", "lm_bits_per_char",
            "lm_quality_flags"]
 
 BOS = "\x02"  # sentence padding chars (never appear in normalized text)
+TOP_K = 200_000          # trigrams the trained model keeps
+ADD_K = 0.1              # add-k smoothing constant
+MAX_BITS_PER_CHAR = 6.0  # quality cut: keep documents scoring at most this
 
 
 def train_char_trigram_lm(
-    df: DataFrame, text_col: str = "text", top_k: int = 200_000
+    df: DataFrame, text_col: str = "text"
 ) -> Tuple[Dict[str, int], Dict[str, int], int]:
     """Distributed trigram/bigram counting -> (tri_counts, bi_counts, vocab).
 
     One pass builds char trigrams of the padded normalized text via pure
     array expressions (chars projected once, then textstats.ngrams); two
-    hash aggregates produce the count tables with deterministic top-K
+    hash aggregates produce the count tables with deterministic TOP_K
     cutoffs.
     """
     padded = F.concat(F.lit(BOS + BOS), normalized(F.col(text_col)))
@@ -46,7 +49,7 @@ def train_char_trigram_lm(
     )
     tri_rows = (
         exploded.groupBy("tri").agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("tri")).limit(top_k).collect()
+        .orderBy(F.desc("c"), F.asc("tri")).limit(TOP_K).collect()
     )
     return trigram_model({r.tri: r.c for r in tri_rows})
 
@@ -70,9 +73,9 @@ def lm_bits_per_char(
     model: Tuple[Dict[str, int], Dict[str, int], int],
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: float = 0.1,
 ) -> DataFrame:
-    """Score documents: mean -log2 P(c | prev two chars), add-k smoothed.
+    """Score documents: mean -log2 P(c | prev two chars), add-k smoothed
+    (k = ADD_K).
 
     Lower = closer to the training distribution; gibberish, wrong-language,
     and binary-ish text score high. Returns (id, n_scored, bits_per_char).
@@ -93,8 +96,8 @@ def lm_bits_per_char(
             n = 0
             for i in range(len(s)):
                 tri = padded[i : i + 3]
-                num = tri_counts.get(tri, 0) + k
-                den = bi_counts.get(tri[:2], 0) + k * vocab
+                num = tri_counts.get(tri, 0) + ADD_K
+                den = bi_counts.get(tri[:2], 0) + ADD_K * vocab
                 total += -math.log2(num / den)
                 n += 1
             out.append(round(total / n, 6) if n else None)
@@ -110,16 +113,16 @@ def lm_bits_per_char(
 def lm_quality_flags(
     df: DataFrame,
     model: Tuple[Dict[str, int], Dict[str, int], int],
-    max_bits_per_char: float = 6.0,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """CCNet-style keep/drop verdict from the LM score (threshold tunable;
-    CCNet buckets by perplexity tertiles — a hard cut is the simple form)."""
+    """CCNet-style keep/drop verdict from the LM score: keep at most
+    MAX_BITS_PER_CHAR (CCNet buckets by perplexity tertiles — a hard cut is
+    the simple form)."""
     scored = lm_bits_per_char(df, model, text_col, id_col)
     return scored.withColumn(
         "keep",
         F.when(F.col("bits_per_char").isNull(), F.lit(False)).otherwise(
-            F.col("bits_per_char") <= max_bits_per_char
+            F.col("bits_per_char") <= MAX_BITS_PER_CHAR
         ),
     )

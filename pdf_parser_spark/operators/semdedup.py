@@ -21,7 +21,7 @@ Spark-first design:
   the ``max_cluster`` cap empties the candidate side of larger clusters.
 
 Exact cross-engine math (the oracle trick): embeddings are quantized to an
-integer grid (``round(x * quant)``, exact in both engines because float ->
+integer grid (``round(x * QUANT)``, exact in both engines because float ->
 double widening and power-of-two scaling are IEEE-exact), so
 
 - assignment distances are exact integer sums of squares (a float64 GEMM
@@ -50,21 +50,22 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from .dedup import _drop_large_groups
 
-__all__ = ["quantize", "kmeans_assign", "semdedup"]
+__all__ = ["quantize", "semdedup"]
+
+QUANT = 4096  # integer grid step of the quantized embeddings (a power of two)
 
 
-def quantize(df: DataFrame, quant: int = 4096,
-             vec_col: str = "embedding") -> DataFrame:
-    """Add ``q``: the embedding on an integer grid (round(x*quant), long).
+def quantize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """Add ``q``: the embedding on an integer grid (round(x*QUANT), long).
 
-    float->double widening is exact and ``quant`` is a power of two, so the
+    float->double widening is exact and ``QUANT`` is a power of two, so the
     product is IEEE-exact — every engine rounds the same value.
     """
     return df.withColumn(
         "q",
         F.transform(
             F.col(vec_col),
-            lambda x: F.round(x.cast("double") * quant).cast("long"),
+            lambda x: F.round(x.cast("double") * QUANT).cast("long"),
         ),
     )
 
@@ -76,11 +77,12 @@ def _assign(qdf: DataFrame, centroids: list[list[int]],
 
     One Arrow kernel per batch: ``D = |q|^2 - 2*Q@C.T + |c|^2`` in float64
     over integers, exact while ``4*dim*M^2 < 2^53`` (M = largest |entry|;
-    the defaults give 2^32); out-of-range or wrong-length rows raise
-    ``ValueError``. The centroids are a closure constant (PySpark broadcasts
-    a large pickled UDF), so the plan does not grow with k.
+    unit vectors at QUANT with dim=64 give 2^32); out-of-range or
+    wrong-length rows raise ``ValueError``. The centroids are a closure
+    constant (PySpark broadcasts a large pickled UDF), so the plan does not
+    grow with k.
     """
-    cent = np.asarray(centroids, dtype=np.float64).reshape(-1, dim)
+    cent = np.asarray(centroids, dtype=np.float64).reshape(len(centroids), dim)
     c2 = (cent * cent).sum(axis=1)
     cmax = float(np.abs(cent).max(initial=0.0))
     schema = StructType(qdf.schema.fields + [
@@ -105,12 +107,21 @@ def _assign(qdf: DataFrame, centroids: list[list[int]],
     return qdf.mapInPandas(nearest, schema)
 
 
-def _kmeans(emb: DataFrame, k: int, iters: int, quant: int, dim: int,
+def _kmeans(emb: DataFrame, k: int, iters: int,
             id_col: str, vec_col: str) -> DataFrame:
-    """Lloyd k-means: the final assignment, quantized ``q`` carried."""
-    qdf = quantize(emb, quant=quant, vec_col=vec_col).select(id_col, "q")
+    """Deterministic fixed-iteration Lloyd k-means over quantized vectors:
+    the final assignment, quantized ``q`` carried.
+
+    Init: the ``k`` vectors with the smallest ``id_col`` values are the
+    starting centroids, and their length is the dimension every row must
+    have. Each iteration assigns (exact integer distances) and recomputes
+    centroids as the rounded integer mean; an empty cluster keeps its
+    previous centroid.
+    """
+    qdf = quantize(emb, vec_col=vec_col).select(id_col, "q")
     seeds = qdf.orderBy(id_col).limit(k).collect()
     centroids = [list(r["q"]) for r in seeds]
+    dim = len(centroids[0]) if centroids else 0
     for _ in range(iters):
         rows = _assign(qdf, centroids, dim).groupBy("cluster").agg(
             F.count(F.lit(1)).alias("n"),
@@ -129,39 +140,18 @@ def _kmeans(emb: DataFrame, k: int, iters: int, quant: int, dim: int,
     return _assign(qdf, centroids, dim)
 
 
-def kmeans_assign(
-    emb: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    quant: int = 4096,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic fixed-iteration Lloyd k-means over quantized vectors.
-
-    Init: the ``k`` vectors with the smallest ``id_col`` values are the
-    starting centroids. Each iteration assigns (exact integer distances)
-    and recomputes centroids as the rounded integer mean; an empty cluster
-    keeps its previous centroid. Returns one row per vector with
-    ``cluster`` and the exact ``dist2`` to its final centroid.
-    """
-    return _kmeans(emb, k, iters, quant, dim, id_col, vec_col).select(
-        id_col, "cluster", "dist2")
-
-
 def semdedup(
     emb: DataFrame,
     k: int = 8,
     iters: int = 2,
-    quant: int = 4096,
-    dim: int = 64,
     threshold: tuple[int, int] = (9, 10),
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster: int | None = None,
 ) -> DataFrame:
-    """SemDeDup keep flags: cluster, exact dist2, and ``keep``.
+    """SemDeDup keep flags: the k-means ``cluster`` of each vector (``k``
+    seeds, ``iters`` Lloyd iterations, see ``_kmeans``), its exact ``dist2``
+    to that cluster's final centroid, and ``keep``.
 
     A vector is dropped when a SMALLER-id member of its cluster has
     quantized cosine similarity above ``threshold`` (a rational p/q, e.g.
@@ -181,7 +171,7 @@ def semdedup(
     cost when a degenerate corpus collapses into one cluster.
     """
     p, q = threshold
-    assigned = _kmeans(emb, k, iters, quant, dim, id_col, vec_col)
+    assigned = _kmeans(emb, k, iters, id_col, vec_col)
     cand = _drop_large_groups(assigned, ["cluster"], max_cluster).select(
         F.col("cluster").alias("_cluster_a"), F.col(id_col).alias("_id_a"),
         F.col("q").alias("_q_a"), F.col("norm2").alias("_norm2_a"),

@@ -30,6 +30,11 @@ __all__ = [
     "ivf_train_centroids", "ivf_assign", "knn_join",
 ]
 
+N_PLANES = 4        # coordinate-sign hyperplanes: 2^N_PLANES buckets
+IVF_SAMPLE = 2048   # rows the IVF centroids train on
+IVF_ITERS = 10      # spherical k-means iterations
+IVF_SEED = 7        # seed of the centroid initialisation
+
 
 def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -133,7 +138,7 @@ def embedding_near_dup_pairs(
     )
 
 
-def coordinate_sign_bucket(vec_col: Column, n_planes: int = 8) -> Column:
+def coordinate_sign_bucket(vec_col: Column) -> Column:
     """Deterministic sign-difference LSH bucket, pure JVM expression.
 
     Bit i is sign(v[2i] - v[2i+1]) — i.e. the hyperplane with normal
@@ -141,10 +146,10 @@ def coordinate_sign_bucket(vec_col: Column, n_planes: int = 8) -> Column:
     similarity that needs no RNG and no Python: the whole bucketing stays
     inside whole-stage codegen and is exactly reproducible in any SQL
     engine with array indexing (the DuckDB oracle recomputes it).
-    Requires dim >= 2*n_planes.
+    Requires dim >= 2*N_PLANES.
     """
     out: Optional[Column] = None
-    for i in range(n_planes):
+    for i in range(N_PLANES):
         bit = (
             F.element_at(vec_col, 2 * i + 1) > F.element_at(vec_col, 2 * i + 2)
         ).cast("int") * F.lit(1 << i)
@@ -155,7 +160,6 @@ def coordinate_sign_bucket(vec_col: Column, n_planes: int = 8) -> Column:
 def bucketed_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    n_planes: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: Optional[int] = None,
@@ -164,9 +168,9 @@ def bucketed_near_dup_pairs(
     coordinate-sign buckets (equi-join), never as a cross product.
 
     The scale path for embedding_near_dup_pairs: a bucket holding M of N
-    vectors yields M^2 candidates instead of N^2 — with 2^n_planes buckets
-    that's a ~2^n_planes-fold pruning for near-uniform data. True near-dups
-    (cosine ~1) collide with probability (1 - theta/pi)^n_planes, so recall
+    vectors yields M^2 candidates instead of N^2 — with 2^N_PLANES buckets
+    that's a ~2^N_PLANES-fold pruning for near-uniform data. True near-dups
+    (cosine ~1) collide with probability (1 - theta/pi)^N_PLANES, so recall
     stays high for the thresholds dedup cares about (tested vs the exact
     form). max_bucket is the shared skew cap (dedup._drop_large_groups):
     degenerate buckets (e.g. all-zero embeddings) are dropped rather than
@@ -175,7 +179,7 @@ def bucketed_near_dup_pairs(
     b = embeddings.select(
         F.col(id_col),
         F.col(vec_col),
-        coordinate_sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
+        coordinate_sign_bucket(F.col(vec_col)).alias("_bucket"),
     )
     return (
         _key_pairs(b, ["_bucket"], id_col, carry=[vec_col], max_size=max_bucket)
@@ -193,16 +197,15 @@ def ivf_train_centroids(
     embeddings: DataFrame,
     n_lists: int = 16,
     vec_col: str = "embedding",
-    sample_rows: int = 2048,
-    iters: int = 10,
-    seed: int = 7,
     id_col: str = "vec_id",
 ) -> np.ndarray:
-    """Train IVF coarse centroids with a deterministic seeded k-means.
+    """Train IVF coarse centroids with a deterministic seeded k-means
+    (IVF_ITERS iterations from IVF_SEED).
 
-    Trains on a bounded sample collected to the driver — standard IVF
-    practice (FAISS trains on ~(30-256)*nlist samples regardless of corpus
-    size), so this stays O(sample) at 10^12 vectors. Spherical k-means:
+    Trains on a bounded sample of IVF_SAMPLE rows collected to the driver
+    — standard IVF practice (FAISS trains on ~(30-256)*nlist samples
+    regardless of corpus size), so this stays O(sample) at 10^12 vectors.
+    Spherical k-means:
     vectors and centroids are L2-normalized so assignment by max dot product
     equals max cosine. The sample is the id-ordered prefix (a distributed
     top-k, not a full sort): limit() without an order is partition-layout
@@ -210,11 +213,11 @@ def ivf_train_centroids(
     """
     mat = _unit_rows(
         r[0] for r in embeddings.select(vec_col, id_col)
-        .orderBy(id_col).limit(sample_rows).select(vec_col).collect()
+        .orderBy(id_col).limit(IVF_SAMPLE).select(vec_col).collect()
     )
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(IVF_SEED)
     cent = mat[rng.choice(len(mat), size=min(n_lists, len(mat)), replace=False)]
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assign = np.argmax(mat @ cent.T, axis=1)
         for c in range(len(cent)):
             members = mat[assign == c]
@@ -247,7 +250,6 @@ def knn_join(
     n_probe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 7,
 ) -> DataFrame:
     """Batch KNN join: top-k neighbours for EVERY row via the IVF index.
 
@@ -264,9 +266,7 @@ def knn_join(
     in both the local cut and the window, so ties break the same way in
     every engine. Returns (qid, nid, score).
     """
-    cent = ivf_train_centroids(
-        embeddings, n_lists, vec_col, seed=seed, id_col=id_col
-    )
+    cent = ivf_train_centroids(embeddings, n_lists, vec_col, id_col)
     assigned = ivf_assign(embeddings, cent, vec_col)
     centm = np.ascontiguousarray(cent, dtype=np.float64)
     n_probe = min(n_probe, len(centm))
@@ -332,17 +332,16 @@ def lsh_bucketed_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 8,
 ) -> DataFrame:
     """ANN top-k: score only vectors in the query's coordinate-sign bucket.
 
     The scale path for brute_force_topk: the bucket filter prunes the
-    candidate set ~2^n_planes-fold before any cosine is computed. The
+    candidate set ~2^N_PLANES-fold before any cosine is computed. The
     bucket is coordinate_sign_bucket, a JVM expression the DuckDB oracle
     recomputes, so the approximate result itself is value-checked.
     """
     bucketed = embeddings.withColumn(
-        "_bucket", coordinate_sign_bucket(F.col(vec_col), n_planes)
+        "_bucket", coordinate_sign_bucket(F.col(vec_col))
     )
     return _query_topk(bucketed, query_id, k, id_col, vec_col,
                        F.col("_bucket") == F.col("_bucket_q"))

@@ -24,6 +24,9 @@ __all__ = [
 # agree on NBSP-laden web text (str.split() also breaks on U+00A0 etc.)
 _ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
 
+WINNOW_K = 5       # characters per winnowing k-gram
+WINNOW_WINDOW = 4  # consecutive k-gram hashes per winnowing window
+
 
 # The column functions below are the ONE definition of each text concept;
 # every JVM operator and job builds its tokens, lines, symbol count, normal
@@ -179,14 +182,13 @@ def winnow_fingerprint(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 5,
-    window: int = 4,
 ) -> DataFrame:
     """Winnowing document fingerprint (Schleimer et al., SIGMOD'03): rolling
-    Rabin-Karp hash over character k-grams, then the minimum hash per sliding
-    window (rightmost on ties) — the standard public local-fingerprinting
-    scheme behind MOSS. Vectorized numpy Pandas UDF: every k-gram hash is
-    built at once from k shifted multiply-adds over the code points.
+    Rabin-Karp hash over character WINNOW_K-grams, then the minimum hash per
+    sliding window of WINNOW_WINDOW hashes (rightmost on ties) — the
+    standard public local-fingerprinting scheme behind MOSS. Vectorized
+    numpy Pandas UDF: every k-gram hash is built at once from k shifted
+    multiply-adds over the code points.
 
     Returns (id, fingerprints ARRAY<BIGINT>) — overlap of fingerprint sets
     localizes shared substrings, which plain sha256/minhash cannot.
@@ -197,6 +199,7 @@ def winnow_fingerprint(
 
     base = np.uint64(1000003)
     mask = np.uint64((1 << 61) - 1)
+    k, window = WINNOW_K, WINNOW_WINDOW
 
     # no annotations: pandas/numpy are function-local, so stringified
     # annotations (PEP 563 module) would not resolve during UDF inspection

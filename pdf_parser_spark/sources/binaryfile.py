@@ -17,9 +17,9 @@ def read_binary_files(
     spark: SparkSession,
     path: str,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
-    """Read loose files (PDFs, HTML dumps) into the canonical pages schema.
+    """Read loose files (PDFs, HTML dumps) under `path`, recursively, into
+    the canonical pages schema.
 
     url      <- file path (the reference's `filename`; F4's extension
                 predicate works unchanged on it)
@@ -32,10 +32,7 @@ def read_binary_files(
     so e.g. `.where(F.col("length") < 50*1024*1024)` prunes at the listing —
     apply F1 before the bytes are ever read when filtering by size.
     """
-    reader = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", str(recursive).lower())
-    )
+    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     df = reader.load(path)

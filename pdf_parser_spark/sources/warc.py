@@ -141,8 +141,9 @@ def _warc_kernel(batches: Iterator[pd.DataFrame], batch_rows: int) -> Iterator[p
         yield _frame(rows)
 
 
-def read_warc(spark: SparkSession, path: str, glob: str = "*.warc*") -> DataFrame:
-    """Read WARC archives under `path` into the canonical pages schema."""
-    files = read_binary_files(spark, path, glob).select("url", "html")
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """Read the WARC archives (`*.warc*`) under `path` into the canonical
+    pages schema."""
+    files = read_binary_files(spark, path, "*.warc*").select("url", "html")
     n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     return files.mapInPandas(functools.partial(_warc_kernel, batch_rows=n), WARC_SCHEMA)

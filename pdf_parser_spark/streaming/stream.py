@@ -30,13 +30,16 @@ from ..operators.textstats import content_fingerprint
 from ..pipeline import extract_pipeline
 from ..sources.warc import WARC_SCHEMA
 
+MAX_FILES_PER_TRIGGER = 4  # pages files per micro-batch
+WATERMARK = "2 hours"      # event-time lateness a stream's state tolerates
+WINDOW = "1 hour"          # event-time window of the status counters
 
-def _pages_stream(spark: SparkSession, corpus_dir: str,
-                  max_files_per_trigger: int = 4) -> DataFrame:
+
+def _pages_stream(spark: SparkSession, corpus_dir: str) -> DataFrame:
     return (
         # the pages table's schema (a streaming source cannot infer it)
         spark.readStream.schema(WARC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(f"{corpus_dir}/pages.parquet")
     )
 
@@ -46,16 +49,14 @@ def stream_extract(
     corpus_dir: str,
     out_path: str,
     checkpoint: str,
-    method: str = "classic",
-    max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
     """Run the extraction kernel as a streaming job with checkpointed resume.
 
     Returns the started query; callers awaitTermination() (AvailableNow
     stops by itself once the backlog drains).
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
-    extracted = extract_pipeline(pages, method=method)
+    pages = _pages_stream(spark, corpus_dir)
+    extracted = extract_pipeline(pages)
     return (
         extracted.writeStream.format("parquet")
         .option("path", out_path)
@@ -70,7 +71,6 @@ def stream_host_stats(
     spark: SparkSession,
     corpus_dir: str,
     checkpoint: str,
-    max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
     """Incremental per-host crawl statistics that survive across
     micro-batches: Spark's built-in streaming aggregate, no per-row Python.
@@ -86,7 +86,7 @@ def stream_host_stats(
 
     Emits to an in-memory sink named 'host_stats'.
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
+    pages = _pages_stream(spark, corpus_dir)
     stats = (
         pages.groupBy(host_of(F.col("url")).alias("host"))
         .agg(
@@ -110,11 +110,8 @@ def stream_status_counts(
     spark: SparkSession,
     corpus_dir: str,
     checkpoint: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
-    """Watermarked per-window ok/error counters over the live stream.
+    """Watermarked per-WINDOW ok/error counters over the live stream.
 
     Late rows beyond the watermark are dropped from their window instead of
     blocking state forever, and UPDATE output mode lets the watermark
@@ -123,11 +120,11 @@ def stream_status_counts(
     emits the updated running totals; the latest row per (window, status)
     is the current count. In-memory sink named 'status_counts'.
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
+    pages = _pages_stream(spark, corpus_dir)
     extracted = extract_pipeline(pages)
     counts = (
-        extracted.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "status")
+        extracted.withWatermark("warc_ts", WATERMARK)
+        .groupBy(F.window("warc_ts", WINDOW).alias("w"), "status")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "status", "n")
     )
@@ -146,8 +143,6 @@ def stream_exact_dedup(
     corpus_dir: str,
     out_path: str,
     checkpoint: str,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
     """Streaming exact dedup: emit each normalized-content fingerprint once.
 
@@ -159,14 +154,14 @@ def stream_exact_dedup(
     corpus's fingerprint set. Batch-global dedup remains exact_dedup /
     resume_against; this operator is the incremental front-line filter.
     """
-    pages = _pages_stream(spark, corpus_dir, max_files_per_trigger)
+    pages = _pages_stream(spark, corpus_dir)
     deduped = (
         pages.select(
             "url",
             "warc_ts",
             content_fingerprint(F.col("text")).alias("fingerprint"),
         )
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
     return (

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.chunking import (
-    chunk_documents, deterministic_sample, pack_documents,
+    NUM_SHARDS, chunk_documents, deterministic_sample, pack_documents,
 )
 
 
@@ -77,8 +77,9 @@ class TestPackDocuments:
         # derived, and offsets are contiguous within each derived shard
         rows = [(i, "a b c") for i in range(40)]
         df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = pack_documents(df, token_budget=4, num_shards=4).collect()
-        assert {r.shard for r in out} > {0}  # really spread over shards
+        out = pack_documents(df, token_budget=4).collect()
+        shards = {r.shard for r in out}
+        assert len(shards) > 1 and shards <= set(range(NUM_SHARDS))
         for shard in {r.shard for r in out}:
             expect = 0
             for r in sorted([x for x in out if x.shard == shard],
@@ -87,7 +88,7 @@ class TestPackDocuments:
                 assert r.pack_id == expect // 4
                 expect += r.n_tokens
         # rerun is byte-identical (hash shard, no RNG)
-        again = pack_documents(df, token_budget=4, num_shards=4).collect()
+        again = pack_documents(df, token_budget=4).collect()
         assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
     def test_default_mode_plan_has_partitioned_window(self, spark):
@@ -110,14 +111,11 @@ class TestPackDocuments:
 
 
 class TestDeterministicSample:
-    def test_stable_and_salt_independent(self, spark):
+    def test_stable_across_runs(self, spark):
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         a = {r.doc_id for r in deterministic_sample(docs, rate=0.3).collect()}
         b = {r.doc_id for r in deterministic_sample(docs, rate=0.3).collect()}
         assert a == b and 0 < len(a) < docs.count()
-        salted = {r.doc_id
-                  for r in deterministic_sample(docs, rate=0.3, salt="v2").collect()}
-        assert salted != a  # different split, same mechanism
 
     def test_rate_monotone_nesting(self, spark):
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -130,6 +128,18 @@ class TestDeterministicSample:
         # int(0.57 * 10000) == 5699 would drop it at rate 0.57
         df = spark.createDataFrame([("k1772",)], "doc_id string")
         assert deterministic_sample(df, rate=0.57).count() == 1
+
+    @pytest.mark.parametrize("rate", [1.5, -0.1])
+    def test_rate_outside_unit_interval_raises(self, spark, corpus_001, rate):
+        # 1.5 would keep every row and -0.1 none, both silently; the curate
+        # job's --sample-rate reaches the same check
+        from jobs.curate_job import build_curated_chunks
+
+        df = spark.createDataFrame([("k1772",)], "doc_id string")
+        with pytest.raises(ValueError, match="rate"):
+            deterministic_sample(df, rate=rate)
+        with pytest.raises(ValueError, match="rate"):
+            build_curated_chunks(spark, corpus_001, sample_rate=rate)
 
 
 class TestPackByTokensCol:

@@ -98,7 +98,7 @@ class TestLineDedup:
 
         extra = [(self.NULL_DOC, None), (self.EMPTY_DOC, "")]
         df = spark.createDataFrame(rows + extra, "doc_id bigint, text string")
-        out = {r.doc_id: r for r in line_dedup(df, max_doc_freq=1).collect()}
+        out = {r.doc_id: r for r in line_dedup(df).collect()}
         assert len(out) == len(rows) + 2
         assert tuple(out.pop(self.NULL_DOC))[1:] == ("", 0, 0)
         assert tuple(out.pop(self.EMPTY_DOC))[1:] == ("", 1, 1)
@@ -208,14 +208,14 @@ class TestDecontaminate:
     # changes no other row
     NULL_DOC = 900
 
-    def _run(self, spark, docs, **kw):
+    def _run(self, spark, docs):
         from pdf_parser_spark.operators.decontaminate import decontaminate
 
         ddf = spark.createDataFrame(docs + [(self.NULL_DOC, None)],
                                     "doc_id bigint, text string")
         bdf = spark.createDataFrame([(100, self.BENCH)],
                                     "doc_id bigint, text string")
-        out = {r.doc_id: r for r in decontaminate(ddf, bdf, **kw).collect()}
+        out = {r.doc_id: r for r in decontaminate(ddf, bdf).collect()}
         assert len(out) == len(docs) + 1
         assert tuple(out.pop(self.NULL_DOC))[1:] == (0, False)
         return out
@@ -225,29 +225,28 @@ class TestDecontaminate:
             (0, "prefix words " + self.BENCH + " suffix words"),
             (1, "entirely unrelated content with many different words here"),
         ]
-        out = self._run(spark, docs, n=8)
+        out = self._run(spark, docs)
         assert out[0].contaminated is True
         assert out[0].n_contaminated_grams == 3  # 10 bench tokens -> 3 8-grams
         assert out[1].contaminated is False
         assert out[1].n_contaminated_grams == 0
 
     def test_case_insensitive(self, spark):
-        out = self._run(spark, [(0, self.BENCH.upper())], n=8)
+        out = self._run(spark, [(0, self.BENCH.upper())])
         assert out[0].contaminated is True
 
     def test_short_docs_never_flagged(self, spark):
-        out = self._run(spark, [(0, "the quick brown fox"), (1, "")], n=8)
+        out = self._run(spark, [(0, "the quick brown fox"), (1, "")])
         assert out[0].n_contaminated_grams == 0
         assert out[1].contaminated is False
 
     def test_min_hits_threshold(self, spark):
         docs = [(0, " ".join(self.BENCH.split()[:8]))]  # exactly one gram
-        assert self._run(spark, docs, n=8, min_hits=1)[0].contaminated is True
-        assert self._run(spark, docs, n=8, min_hits=2)[0].contaminated is False
+        assert self._run(spark, docs)[0].contaminated is True
 
     def test_repeated_gram_counts_once(self, spark):
         one = " ".join(self.BENCH.split()[:8])
-        out = self._run(spark, [(0, one + " " + one)], n=8)
+        out = self._run(spark, [(0, one + " " + one)])
         # doc grams are distinct-counted; the repeat adds bridging grams
         # that are NOT in the benchmark, so the hit count stays 1
         assert out[0].n_contaminated_grams == 1
@@ -257,7 +256,7 @@ class TestDecontaminate:
 
         ddf = spark.createDataFrame([(0, self.BENCH)],
                                     "doc_id bigint, text string")
-        df = decontaminate(ddf, ddf, n=8)
+        df = decontaminate(ddf, ddf)
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
             .fromString("formatted")
         plan = df._jdf.queryExecution().explainString(mode)

@@ -22,8 +22,8 @@ class TestIVF:
 
         from pdf_parser_spark.operators.similarity import ivf_train_centroids
 
-        c1 = ivf_train_centroids(emb, n_lists=8, seed=7)
-        c2 = ivf_train_centroids(emb, n_lists=8, seed=7)
+        c1 = ivf_train_centroids(emb, n_lists=8)
+        c2 = ivf_train_centroids(emb, n_lists=8)
         assert np.array_equal(c1, c2)
         assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
 
@@ -32,7 +32,7 @@ class TestIVF:
             ivf_assign, ivf_train_centroids,
         )
 
-        cent = ivf_train_centroids(emb, n_lists=8, seed=7)
+        cent = ivf_train_centroids(emb, n_lists=8)
         a = ivf_assign(emb, cent)
         lists = [r[0] for r in a.select("_ivf_list").distinct().collect()]
         assert all(0 <= l < 8 for l in lists) and len(lists) > 1
@@ -276,7 +276,7 @@ class TestDedupSkewGuards:
         df = spark.createDataFrame(rows, "doc_id bigint, text string")
         pruned = {
             (r.id_a, r.id_b): r.jaccard
-            for r in jaccard_pairs(df, threshold=0.5, max_df=2).collect()
+            for r in jaccard_pairs(df, max_df=2).collect()
         }
         assert set(pruned) == {(0, 1)}
         assert pruned[(0, 1)] == 1.0  # identical over the pruned universe
@@ -299,17 +299,16 @@ class TestDedupSkewGuards:
             "doc_id bigint, text string",
         )
         emb = spark.createDataFrame(
-            [(i, [float(i % 2), 1.0, float(i % 3), 0.5]) for i in range(8)],
+            [(i, [float(i % 2), 1.0, float(i % 3), 0.5] * 2) for i in range(8)],
             "vec_id bigint, embedding array<float>",
         )
         build = {
             "minhash": lambda cap: D.minhash_lsh_pairs(docs, max_bucket=cap),
             "simhash": lambda cap: D.simhash_dups(docs, max_block=cap),
             "bucketed": lambda cap: S.bucketed_near_dup_pairs(
-                emb, 0.2, n_planes=2, max_bucket=cap),
-            "jaccard": lambda cap: D.jaccard_pairs(docs, threshold=0.0,
-                                                   max_df=cap),
-            "semdedup": lambda cap: semdedup(emb, k=2, iters=1, dim=4,
+                emb, 0.2, max_bucket=cap),
+            "jaccard": lambda cap: D.jaccard_pairs(docs, max_df=cap),
+            "semdedup": lambda cap: semdedup(emb, k=2, iters=1,
                                              threshold=(1, 2), max_cluster=cap),
         }[op]
 
@@ -345,7 +344,7 @@ class TestBucketedNearDup:
         exact = {(r.id_a, r.id_b) for r in
                  embedding_near_dup_pairs(emb, threshold=0.5).collect()}
         got = {(r.id_a, r.id_b) for r in
-               bucketed_near_dup_pairs(emb, threshold=0.5, n_planes=4).collect()}
+               bucketed_near_dup_pairs(emb, threshold=0.5).collect()}
         # bucketed candidates are a subset of the exact pair set...
         assert got <= exact
         # ...with usable recall at near-dup thresholds
@@ -361,9 +360,9 @@ class TestBucketedNearDup:
                  (11, [-1.0, 1.0, -1.0, 1.0, -1.0, 1.0, -1.0, 1.0])]
         df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
         uncapped = {(r.id_a, r.id_b)
-                    for r in bucketed_near_dup_pairs(df, 0.9, n_planes=4).collect()}
+                    for r in bucketed_near_dup_pairs(df, 0.9).collect()}
         capped = {(r.id_a, r.id_b)
-                  for r in bucketed_near_dup_pairs(df, 0.9, n_planes=4,
+                  for r in bucketed_near_dup_pairs(df, 0.9,
                                                    max_bucket=3).collect()}
         assert len(uncapped) == 15 + 1 and capped == {(10, 11)}
 
@@ -426,6 +425,28 @@ class TestKnnJoin:
             assert [n for _, n in sorted(got[qid], key=lambda t: (-t[0], t[1]))] == want
 
 
+class TestSimHash:
+    def test_pairs_equal_brute_force(self, spark):
+        # the 4 x 16-bit blocking must find every pair within MAX_HAMMING
+        # bits that a cross join of the signatures finds
+        from pdf_parser_spark.operators.dedup import (
+            MAX_HAMMING, simhash64, simhash_dups,
+        )
+
+        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        sig = simhash64(docs)
+        a = sig.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sa"))
+        b = sig.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("sb"))
+        hamming = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
+        want = {
+            tuple(r) for r in a.join(b, F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", hamming.alias("hamming"))
+            .where(F.col("hamming") <= MAX_HAMMING).collect()
+        }
+        got = {tuple(r) for r in simhash_dups(docs).collect()}
+        assert len(want) > 0 and got == want
+
+
 class TestSimhashBlockCap:
     def test_max_block_drops_degenerate_block(self, spark):
         from pdf_parser_spark.operators.dedup import simhash_dups
@@ -434,10 +455,9 @@ class TestSimhashBlockCap:
         rows += [(10, "a small matching pair of documents"),
                  (11, "a small matching pair of documents")]
         df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        uncapped = {(r.id_a, r.id_b)
-                    for r in simhash_dups(df, max_hamming=0).collect()}
+        uncapped = {(r.id_a, r.id_b) for r in simhash_dups(df).collect()}
         capped = {(r.id_a, r.id_b)
-                  for r in simhash_dups(df, max_hamming=0, max_block=3).collect()}
+                  for r in simhash_dups(df, max_block=3).collect()}
         assert (10, 11) in uncapped and len(uncapped) == 15 + 1
         assert capped == {(10, 11)}
 
@@ -972,7 +992,6 @@ def _text_operators():
         "repetition_flags": lambda s, d, c: cleaning.repetition_flags(d),
         "gopher_quality_gate":
             lambda s, d, c: gopher.gopher_quality_gate(d, id_col="doc_id"),
-        "ngram_set": lambda s, d, c: decontaminate.ngram_set(d),
         "decontaminate": lambda s, d, c: decontaminate.decontaminate(d, d),
         "duplicated_span_stats":
             lambda s, d, c: spandedup.duplicated_span_stats(d),
@@ -1064,12 +1083,12 @@ class TestOneExplodedPass:
         path = str(tmp_path / "input")
         spark.createDataFrame(rows, schema).write.parquet(path)
         docs = spark.read.parquet(path)
-        out = {"span": lambda: duplicated_span_stats(docs, k=5),
+        out = {"span": lambda: duplicated_span_stats(docs),
                "line": lambda: line_dedup(docs),
                "decontaminate": lambda: decontaminate(
-                   docs, docs.where(F.col("doc_id") % 5 == 0), n=3),
-               "jaccard": lambda: jaccard_pairs(docs, threshold=0.0),
-               "semdedup": lambda: semdedup(docs, k=2, iters=1, dim=4,
+                   docs, docs.where(F.col("doc_id") % 5 == 0)),
+               "jaccard": lambda: jaccard_pairs(docs),
+               "semdedup": lambda: semdedup(docs, k=2, iters=1,
                                             threshold=(1, 2))}[op]()
         out.write.format("noop").mode("overwrite").save()
         plan = out._jdf.queryExecution().executedPlan()
@@ -1086,93 +1105,92 @@ class TestOneExplodedPass:
             [(i, f"cache probe text {i % 3} with shared words") for i in range(6)],
             "doc_id bigint, text string")
         spark.catalog.clearCache()
-        assert jaccard_pairs(docs, threshold=0.0).count() > 0
+        assert jaccard_pairs(docs).count() > 0
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestDuplicatedSpans:
-    """spandedup.duplicated_span_stats — span-level exact-substring dedup."""
+    """spandedup.duplicated_span_stats — span-level exact-substring dedup
+    over 10-token windows (K) repeated at least twice (MIN_COUNT)."""
 
-    K5 = dict(k=5, min_count=2)
-    # extra inputs in every case: NULL text and a doc shorter than k both
+    SPAN = "one two three four five six seven eight nine ten"
+    # extra inputs in every case: NULL text and a doc shorter than K both
     # keep their row (no window to explode) and change no other row
     NULL_DOC, SHORT_DOC = 900, 901
 
-    def _run(self, spark, docs, **kw):
+    def _run(self, spark, docs):
         from pdf_parser_spark.operators.spandedup import duplicated_span_stats
 
         extra = [(self.NULL_DOC, None), (self.SHORT_DOC, "three short words")]
         df = spark.createDataFrame(docs + extra, "doc_id bigint, text string")
-        out = {r.doc_id: r for r in duplicated_span_stats(df, **kw).collect()}
+        out = {r.doc_id: r for r in duplicated_span_stats(df).collect()}
         assert len(out) == len(docs) + 2
         assert tuple(out.pop(self.NULL_DOC))[1:] == (None, 0, 0, 0, None)
         assert tuple(out.pop(self.SHORT_DOC))[1:] == (3, 0, 0, 0, True)
         return out
 
     def test_cross_doc_span_flagged_in_both(self, spark):
-        shared = "one two three four five"
-        docs = [(0, "prefix " + shared), (1, shared + " suffix"),
+        docs = [(0, "prefix " + self.SPAN), (1, self.SPAN + " suffix"),
                 (2, "totally different words everywhere around here")]
-        out = self._run(spark, docs, **self.K5)
-        assert out[0].n_dup_windows == 1 and out[0].dup_tokens == 5
-        assert out[1].n_dup_windows == 1 and out[1].dup_tokens == 5
+        out = self._run(spark, docs)
+        assert out[0].n_dup_windows == 1 and out[0].dup_tokens == 10
+        assert out[1].n_dup_windows == 1 and out[1].dup_tokens == 10
         assert out[2].n_dup_windows == 0 and out[2].dup_tokens == 0
         assert out[2].keep is True
 
     def test_within_doc_repeat_counts(self, spark):
-        span = "alpha beta gamma delta epsilon"
         # the bridging windows across the junction are unique; only the two
-        # copies of the 5-window are duplicated, and their intervals overlap
-        # is empty (positions 0 and 5) -> coverage = 10 tokens
-        out = self._run(spark, [(0, span + " " + span)], **self.K5)
+        # copies of the 10-window are duplicated, and their intervals overlap
+        # is empty (positions 0 and 10) -> coverage = 20 tokens
+        out = self._run(spark, [(0, self.SPAN + " " + self.SPAN)])
         r = out[0]
-        assert r.n_tokens == 10 and r.n_windows == 6
-        assert r.n_dup_windows == 2 and r.dup_tokens == 10
+        assert r.n_tokens == 20 and r.n_windows == 11
+        assert r.n_dup_windows == 2 and r.dup_tokens == 20
         assert r.keep is False  # 100% coverage > 20%
 
     def test_overlapping_windows_union_not_sum(self, spark):
-        # 6 tokens, windows at pos 0 and 1 both duplicated via doc 1:
-        # union covers all 6 tokens, NOT 10
-        t = "a b c d e f"
-        out = self._run(spark, [(0, t), (1, t)], **self.K5)
+        # 11 tokens, windows at pos 0 and 1 both duplicated via doc 1:
+        # union covers all 11 tokens, NOT 20
+        t = self.SPAN + " eleven"
+        out = self._run(spark, [(0, t), (1, t)])
         r = out[0]
         assert r.n_dup_windows == 2
-        assert r.dup_tokens == 6
+        assert r.dup_tokens == 11
 
     def test_short_and_empty_docs_keep(self, spark):
-        out = self._run(spark, [(0, "under five words"), (1, "")], **self.K5)
+        out = self._run(spark, [(0, "under ten words"), (1, "")])
         assert out[0].n_windows == 0 and out[0].keep is True
         assert out[1].n_tokens == 0 and out[1].keep is True
 
     def test_case_and_whitespace_normalized(self, spark):
-        out = self._run(spark, [(0, "One  Two\tThree Four FIVE"),
-                                (1, "one two three four five")], **self.K5)
+        out = self._run(spark, [
+            (0, "One  Two\tThree Four FIVE six SEVEN  eight Nine\tTEN"),
+            (1, self.SPAN)])
         assert out[0].n_dup_windows == 1 and out[1].n_dup_windows == 1
 
     def test_coverage_threshold_exact_integer_math(self, spark):
-        # 25 tokens, one duplicated 5-window -> 5/25 = exactly 20% -> keep
-        filler = " ".join(f"w{i}" for i in range(20))
-        span = "p q r s t"
-        out = self._run(spark, [(0, filler + " " + span), (1, span)],
-                        **self.K5)
-        assert out[0].n_tokens == 25 and out[0].dup_tokens == 5
+        # 50 tokens, one duplicated 10-window -> 10/50 = exactly 20% -> keep
+        filler = " ".join(f"w{i}" for i in range(40))
+        out = self._run(spark, [(0, filler + " " + self.SPAN),
+                                (1, self.SPAN)])
+        assert out[0].n_tokens == 50 and out[0].dup_tokens == 10
         assert out[0].keep is True
-        # tighten by one token: 5/24 > 20% -> drop
+        # tighten by one token: 10/49 > 20% -> drop
         out = self._run(
             spark,
-            [(0, " ".join(f"w{i}" for i in range(19)) + " " + span),
-             (1, span)], **self.K5)
-        assert out[0].n_tokens == 24 and out[0].keep is False
+            [(0, " ".join(f"w{i}" for i in range(39)) + " " + self.SPAN),
+             (1, self.SPAN)])
+        assert out[0].n_tokens == 49 and out[0].keep is False
 
 
 class TestSemDeDup:
     """semdedup — exact-integer k-means + within-cluster cosine dedup."""
 
-    def _emb(self, spark, rows, dim):
+    def _emb(self, spark, rows):
         return spark.createDataFrame(
             [(i, [float(x) for x in v]) for i, v in rows],
             "vec_id bigint, embedding array<float>",
-        ), dim
+        )
 
     def test_two_clusters_and_near_dup_drop(self, spark):
         from pdf_parser_spark.operators.semdedup import semdedup
@@ -1187,10 +1205,9 @@ class TestSemDeDup:
             (3, [0.3, 0.9, 0.0, 0.0]),
             (4, [-0.8, -0.1, 0.0, 0.0]),
         ]
-        df, dim = self._emb(spark, rows, 4)
+        df = self._emb(spark, rows)
         out = {r.vec_id: r for r in
-               semdedup(df, k=2, iters=2, dim=dim,
-                        threshold=(2, 5)).collect()}
+               semdedup(df, k=2, iters=2, threshold=(2, 5)).collect()}
         assert out[0].cluster == out[2].cluster == out[3].cluster
         assert out[1].cluster == out[4].cluster
         assert out[0].cluster != out[1].cluster
@@ -1199,13 +1216,12 @@ class TestSemDeDup:
         assert out[1].keep is True and out[4].keep is False  # cos ~ 0.996
 
     def test_assignment_tie_breaks_to_smaller_centroid(self, spark):
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         # vec 2 exactly equidistant from both seeds -> cluster 0
         rows = [(0, [1.0, 0.0]), (1, [3.0, 0.0]), (2, [2.0, 0.0])]
-        df, dim = self._emb(spark, rows, 2)
-        out = {r.vec_id: r.cluster
-               for r in kmeans_assign(df, k=2, iters=0, dim=dim).collect()}
+        df = self._emb(spark, rows)
+        out = {r.vec_id: r.cluster for r in semdedup(df, k=2, iters=0).collect()}
         assert out[2] == 0
 
     def test_quantization_ties_away_from_zero(self, spark):
@@ -1215,12 +1231,12 @@ class TestSemDeDup:
         # away from zero in Spark (HALF_UP), DuckDB, and the operator's
         # Python centroid math alike
         v = 1.5 / 4096
-        df, _ = self._emb(spark, [(0, [v, -v])], 2)
+        df = self._emb(spark, [(0, [v, -v])])
         q = quantize(df).select("q").collect()[0][0]
         assert q == [2, -2]
 
     def test_empty_cluster_keeps_previous_centroid(self, spark):
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         # seed 2 duplicates seed 0: in iteration 1 every vector ties to the
         # smaller centroid index, so cluster 2 goes EMPTY — the update must
@@ -1230,20 +1246,18 @@ class TestSemDeDup:
         # zeroed-out centroid could not)
         rows = [(0, [1.0, 0.0]), (1, [-1.0, 0.0]), (2, [1.0, 0.0]),
                 (3, [0.9, 0.1])]
-        df, dim = self._emb(spark, rows, 2)
-        out = {r.vec_id: r
-               for r in kmeans_assign(df, k=3, iters=2, dim=dim).collect()}
+        df = self._emb(spark, rows)
+        out = {r.vec_id: r for r in semdedup(df, k=3, iters=2).collect()}
         assert out[2].cluster == 2 and out[2].dist2 == 0
 
     def test_exact_dist2_integers(self, spark):
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         # quantized: [4096,0] and [0,4096]; seed = vec 0 only (k=1):
         # after 1 iter centroid = floor(mean+0.5) = [2048,2048]
         rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-        df, dim = self._emb(spark, rows, 2)
-        out = {r.vec_id: r.dist2
-               for r in kmeans_assign(df, k=1, iters=1, dim=dim).collect()}
+        df = self._emb(spark, rows)
+        out = {r.vec_id: r.dist2 for r in semdedup(df, k=1, iters=1).collect()}
         assert out[0] == 2048 * 2048 * 2 and out[1] == 2048 * 2048 * 2
 
     def test_max_cluster_skew_guard(self, spark):
@@ -1253,14 +1267,13 @@ class TestSemDeDup:
         # holding 15 cosine-1 pairs. The cap skips the pairwise step for
         # oversized clusters (everyone keeps); uncapped, only vec 0 keeps.
         rows = [(i, [1.0, 0.0]) for i in range(6)]
-        df, dim = self._emb(spark, rows, 2)
+        df = self._emb(spark, rows)
         capped = {r.vec_id: r.keep
-                  for r in semdedup(df, k=2, iters=1, dim=dim,
-                                    threshold=(2, 5),
+                  for r in semdedup(df, k=2, iters=1, threshold=(2, 5),
                                     max_cluster=5).collect()}
         assert all(capped.values())
         uncapped = {r.vec_id: r.keep
-                    for r in semdedup(df, k=2, iters=1, dim=dim,
+                    for r in semdedup(df, k=2, iters=1,
                                       threshold=(2, 5)).collect()}
         assert uncapped[0] is True and not any(
             uncapped[i] for i in range(1, 6))
@@ -1274,9 +1287,9 @@ class TestSemDeDup:
         rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, -1.0]),
                 (3, [1.0, 0.0]), (4, [1.0, 0.0]), (5, [1.0, 0.0]),
                 (6, [0.01, 1.0])]
-        df, dim = self._emb(spark, rows, 2)
+        df = self._emb(spark, rows)
         out = {r.vec_id: r for r in
-               semdedup(df, k=3, iters=1, dim=dim, threshold=(9, 10),
+               semdedup(df, k=3, iters=1, threshold=(9, 10),
                         max_cluster=3).collect()}
         clusters = {}
         for r in out.values():
@@ -1287,17 +1300,17 @@ class TestSemDeDup:
             0: True, 3: True, 4: True, 5: True, 1: True, 6: False, 2: True}
 
     def test_assignment_plan_size_constant_in_k(self, spark):
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
         from tools.plan_audit import node_expressions
 
         # the centroids ride in the kernel's closure, not in the plan, so
         # the plan cannot grow with k (a per-centroid expression adds ~60
         # nodes per centroid)
-        df, dim = self._emb(spark, [(i, [float(i % 5), 1.0, -float(i % 3)])
-                                    for i in range(64)], 3)
+        df = self._emb(spark, [(i, [float(i % 5), 1.0, -float(i % 3)])
+                               for i in range(64)])
 
         def exprs(k):
-            plan = kmeans_assign(df, k=k, iters=0, dim=dim)._jdf \
+            plan = semdedup(df, k=k, iters=0)._jdf \
                 .queryExecution().optimizedPlan()
             return sum(map(len, node_expressions(plan)))
 
@@ -1307,23 +1320,31 @@ class TestSemDeDup:
     def test_inexact_input_raises(self, spark, bad):
         from pyspark.errors import PythonException
 
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         # 1e5 quantizes to 409,600,000: 4*dim*M^2 >= 2^53, so float64 could
-        # no longer hold dist2 exactly; a 1-entry row has no dim=2 distance.
-        # Neither is a seed, so the kernel itself must refuse it.
+        # no longer hold dist2 exactly; a 1-entry row has no distance to the
+        # 2-entry seeds. Neither is a seed, so the kernel itself must refuse
+        # it.
         rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, bad)]
-        df, dim = self._emb(spark, rows, 2)
+        df = self._emb(spark, rows)
         with pytest.raises(PythonException, match="ValueError"):
-            kmeans_assign(df, k=2, iters=0, dim=dim).collect()
+            semdedup(df, k=2, iters=0).collect()
 
     def test_k_above_row_count(self, spark):
-        from pdf_parser_spark.operators.semdedup import kmeans_assign
+        from pdf_parser_spark.operators.semdedup import semdedup
 
         # 3 rows, k=5: every row seeds its own cluster (the oracle's
         # LIMIT k yields 3 seeds too); iterating must not index past them
         rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [-1.0, 0.0])]
-        df, dim = self._emb(spark, rows, 2)
+        df = self._emb(spark, rows)
         out = {r.vec_id: (r.cluster, r.dist2)
-               for r in kmeans_assign(df, k=5, iters=2, dim=dim).collect()}
+               for r in semdedup(df, k=5, iters=2).collect()}
         assert out == {0: (0, 0), 1: (1, 0), 2: (2, 0)}
+
+    def test_empty_input_gives_empty_frame(self, spark):
+        from pdf_parser_spark.operators.semdedup import semdedup
+
+        # no seed to read the dimension from, and nothing to assign
+        df = self._emb(spark, [])
+        assert semdedup(df, k=2, iters=2).collect() == []

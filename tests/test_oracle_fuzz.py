@@ -116,7 +116,7 @@ class TestOracleFuzz:
 
         df, con = tables
         got = {(r.id_a, r.id_b)
-               for r in minhash_lsh_pairs(df, num_hashes=16, bands=8).collect()}
+               for r in minhash_lsh_pairs(df).collect()}
         want = {tuple(r)
                 for r in con.execute(_oracle("dedup_minhash_lsh_pairs")).fetchall()}
         assert got == want
@@ -137,7 +137,7 @@ class TestOracleFuzz:
         bench = df.where("doc_id % 20 = 0")  # same slice as the oracle
         got = {
             r.doc_id: (r.n_contaminated_grams, r.contaminated)
-            for r in decontaminate(df, bench, n=8).collect()
+            for r in decontaminate(df, bench).collect()
         }
         want = {
             row[0]: (row[1], row[2])
@@ -161,7 +161,7 @@ class TestOracleFuzz:
         for max_df, sql in [(None, _oracle("dedup_ngram_jaccard")),
                             (2, pruned.replace("<= 100", "<= 2"))]:
             got = [
-                tuple(r) for r in jaccard_pairs(df, threshold=0.0, max_df=max_df)
+                tuple(r) for r in jaccard_pairs(df, max_df=max_df)
                 .orderBy(F.desc("jaccard"), "id_a", "id_b").limit(20).collect()
             ]
             assert got == [tuple(r) for r in con.execute(sql).fetchall()], max_df
@@ -174,7 +174,7 @@ class TestOracleFuzz:
         df, con = tables
         got = {
             r.doc_id: tuple(r)[1:]
-            for r in duplicated_span_stats(df, k=10).collect()
+            for r in duplicated_span_stats(df).collect()
         }
         want = {
             row[0]: tuple(row[1:])
@@ -278,7 +278,7 @@ class TestSemDeDupOracleFuzz:
         df = spark.createDataFrame(
             vecs, "vec_id bigint, embedding array<float>")
         got = {r.vec_id: (r.cluster, r.dist2, r.keep)
-               for r in semdedup(df, k=k, iters=2, dim=64,
+               for r in semdedup(df, k=k, iters=2,
                                  threshold=(2, 5)).collect()}
         oracle = _oracle("ann_semdedup")
         assert oracle.count("LIMIT 8") == 1

@@ -53,9 +53,7 @@ class TestStreamExtract:
     def test_windowed_status_counts(self, spark, corpus_001, tmp_path):
         from pdf_parser_spark.streaming import stream_status_counts
 
-        q = stream_status_counts(
-            spark, corpus_001, str(tmp_path / "ckpt2"), window="1 hour"
-        )
+        q = stream_status_counts(spark, corpus_001, str(tmp_path / "ckpt2"))
         q.awaitTermination(120)
         rows = spark.sql("select * from status_counts").collect()
         # update-mode memory sink: each micro-batch appends the UPDATED
@@ -80,31 +78,29 @@ class TestStatefulHostStats:
         from pdf_parser_spark.streaming import stream_host_stats
         from pdf_parser_spark.sources.warc import WARC_SCHEMA
 
-        # four one-file appends; maxFilesPerTrigger=2 makes two micro-batches,
-        # and every host spans both, so per-host state MUST carry across
-        # them. Upper-case scheme and host plus a default port name the same
-        # host as https://example.com; a non-default port stays in the host.
+        # seven one-row files; 4 files per trigger makes two micro-batches
+        # (a x b y | z w c), and every host spans both, so per-host state
+        # MUST carry across them. Upper-case scheme and host plus a default
+        # port name the same host as https://example.com; a non-default
+        # port stays in the host.
         t0 = datetime.datetime(2024, 5, 1)
-        shards = [
-            [("HTTP://Example.COM:443/a", 0, b"<p>one</p>"),
-             ("https://fixtures.test/x", 1, None)],
-            [("https://example.com/b", 2, b"two"),
-             ("http://sub.site.pl:8080/y", 3, b"three!")],
-            [("https://fixtures.test/z", 4, b"4"),
-             ("http://SUB.site.pl:8080/w?q=1", 5, b"")],
-            [("https://EXAMPLE.com:80/c#frag", 6, b"seven77")],
+        rows = [
+            ("HTTP://Example.COM:443/a", 0, b"<p>one</p>"),
+            ("https://fixtures.test/x", 1, None),
+            ("https://example.com/b", 2, b"two"),
+            ("http://sub.site.pl:8080/y", 3, b"three!"),
+            ("https://fixtures.test/z", 4, b"4"),
+            ("http://SUB.site.pl:8080/w?q=1", 5, b""),
+            ("https://EXAMPLE.com:80/c#frag", 6, b"seven77"),
         ]
         corpus = tmp_path / "corpus"
-        for rows in shards:
+        for u, h, html in rows:
             spark.createDataFrame(
-                [(u, t0 + datetime.timedelta(hours=h), html, None, "en")
-                 for u, h, html in rows], WARC_SCHEMA,
+                [(u, t0 + datetime.timedelta(hours=h), html, None, "en")],
+                WARC_SCHEMA,
             ).coalesce(1).write.mode("append").parquet(
                 str(corpus / "pages.parquet"))
-        q = stream_host_stats(
-            spark, str(corpus), str(tmp_path / "ck_host"),
-            max_files_per_trigger=2,
-        )
+        q = stream_host_stats(spark, str(corpus), str(tmp_path / "ck_host"))
         q.awaitTermination(120)
         # update-mode memory sink: the LAST row per host is the running total
         got = {
@@ -131,6 +127,8 @@ class TestStatefulHostStats:
             "fixtures.test": (2, 0 + 1),
             "sub.site.pl:8080": (2, 6 + 0),
         }
+        # two micro-batches, each updating all three hosts
+        assert spark.sql("select * from host_stats").count() == 6
 
 
 class TestStreamExactDedup:

@@ -28,7 +28,8 @@ import json, sys, time
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from pdf_parser_spark.session import get_spark
-from pdf_parser_spark.pipeline import load_pages, extract_pipeline
+from pdf_parser_spark.pipeline import load_pages
+from tools.scaling_bench import build_plan
 
 cores, corpus, runs, parts = {cores}, {corpus!r}, {runs}, {parts}
 plan_name = {plan!r}
@@ -42,53 +43,7 @@ stats = pages.agg(
      + F.sum(F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8")))
      ).alias("bytes"),
 ).collect()[0]
-if plan_name == "lsh":
-    # shuffle-BEARING evidence plan (VERDICT r3 item 4): the end-to-end
-    # extract -> MinHash-LSH path users actually run. The banding is
-    # shingle-explode -> groupBy(doc) -> band-explode -> window count ->
-    # self-join — the exchange-heavy stages where 4N could stall on
-    # shuffle. (The corpus `text` COLUMN is a ~9-char stub; real document
-    # text only exists post-extraction, so LSH over the raw column would
-    # measure nothing but fixed overhead.)
-    from pdf_parser_spark.operators.dedup import minhash_lsh_pairs
-    docs = (
-        extract_pipeline(pages)
-        .where(F.col("status") == "ok")
-        .select(F.col("url").alias("doc_id"),
-                F.coalesce(F.col("text"), F.lit("")).alias("text"))
-    )
-    plan = minhash_lsh_pairs(docs, num_hashes=16, bands=8, max_bucket=50)
-elif plan_name == "spandedup":
-    # span-level exact-substring dedup (r5): the operator's one big
-    # exchange keys on 8-byte xxhash64 gram hashes with map-side partial
-    # counts, then a join-back and a per-doc groupBy — the shuffle-heaviest
-    # of the dedup family, so the natural 4N stall probe
-    from pdf_parser_spark.operators.spandedup import duplicated_span_stats
-    docs = (
-        extract_pipeline(pages)
-        .where(F.col("status") == "ok")
-        .select(F.xxhash64("url").alias("doc_id"),
-                F.coalesce(F.col("text"), F.lit("")).alias("text"))
-    )
-    plan = duplicated_span_stats(docs, k=10)
-elif plan_name == "curate":
-    # the ENTIRE production job (jobs/curate_job.py build_curated_chunks:
-    # extract -> exact-dedup window -> token-count gate -> overlapping
-    # chunks): end-to-end evidence that the composed plan a user ships
-    # under spark-submit scales, not just its stages in isolation
-    from jobs.curate_job import build_curated_chunks
-    plan = build_curated_chunks(
-        spark, corpus, chunk_tokens=512, overlap=32
-    ).select("url", "chunk_idx")
-elif plan_name == "repartition":
-    # the OPT-IN url-hash + mega-doc-spread exchange (r4 VERDICT item 7):
-    # what a genuinely unsplittable source (gzip WARC dump) pays — the
-    # full binary payload crosses the wire before the kernel runs
-    plan = extract_pipeline(
-        pages, repartition_partitions=parts
-    ).select("url", "status")
-else:
-    plan = extract_pipeline(pages).select("url", "status")  # shuffle-free
+plan = build_plan(spark, pages, corpus, plan_name, parts)
 plan.count()  # cold run: worker fork + plan compile, excluded from timing
 best = float("inf")
 for _ in range(runs):
@@ -99,6 +54,65 @@ print(json.dumps({{"cores": cores, "sec": round(best, 3),
                    "docs": int(stats["docs"]), "bytes": int(stats["bytes"])}}))
 spark.stop()
 """
+
+
+PLANS = ("extract", "lsh", "repartition", "curate", "spandedup")
+
+
+def build_plan(spark, pages, corpus: str, plan_name: str, parts: int):
+    """The lazy plan a --plan value times over `pages` (the corpus's pages
+    table); building it runs nothing."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_spark.pipeline import extract_pipeline
+
+    if plan_name == "lsh":
+        # shuffle-BEARING evidence plan (VERDICT r3 item 4): the end-to-end
+        # extract -> MinHash-LSH path users actually run. The banding is
+        # shingle-explode -> groupBy(doc) -> band-explode -> window count ->
+        # self-join — the exchange-heavy stages where 4N could stall on
+        # shuffle. (The corpus `text` COLUMN is a ~9-char stub; real document
+        # text only exists post-extraction, so LSH over the raw column would
+        # measure nothing but fixed overhead.)
+        from pdf_parser_spark.operators.dedup import minhash_lsh_pairs
+        docs = (
+            extract_pipeline(pages)
+            .where(F.col("status") == "ok")
+            .select(F.col("url").alias("doc_id"),
+                    F.coalesce(F.col("text"), F.lit("")).alias("text"))
+        )
+        return minhash_lsh_pairs(docs, max_bucket=50)
+    elif plan_name == "spandedup":
+        # span-level exact-substring dedup (r5): the operator's one big
+        # exchange keys on 8-byte xxhash64 gram hashes with map-side partial
+        # counts, then a join-back and a per-doc groupBy — the shuffle-heaviest
+        # of the dedup family, so the natural 4N stall probe
+        from pdf_parser_spark.operators.spandedup import duplicated_span_stats
+        docs = (
+            extract_pipeline(pages)
+            .where(F.col("status") == "ok")
+            .select(F.xxhash64("url").alias("doc_id"),
+                    F.coalesce(F.col("text"), F.lit("")).alias("text"))
+        )
+        return duplicated_span_stats(docs)
+    elif plan_name == "curate":
+        # the ENTIRE production job (jobs/curate_job.py build_curated_chunks:
+        # extract -> exact-dedup window -> token-count gate -> overlapping
+        # chunks): end-to-end evidence that the composed plan a user ships
+        # under spark-submit scales, not just its stages in isolation
+        from jobs.curate_job import build_curated_chunks
+        return build_curated_chunks(
+            spark, corpus, chunk_tokens=512, overlap=32
+        ).select("url", "chunk_idx")
+    elif plan_name == "repartition":
+        # the OPT-IN url-hash + mega-doc-spread exchange (r4 VERDICT item 7):
+        # what a genuinely unsplittable source (gzip WARC dump) pays — the
+        # full binary payload crosses the wire before the kernel runs
+        return extract_pipeline(
+            pages, repartition_partitions=parts
+        ).select("url", "status")
+    else:
+        return extract_pipeline(pages).select("url", "status")  # shuffle-free
 
 
 def run_level(cores: int, corpus: str, runs: int, parts: int, trials: int,
@@ -137,8 +151,7 @@ def main() -> int:
     ap.add_argument("--trials", type=int, default=3,
                     help="fresh-JVM trials per level; best-of is reported")
     ap.add_argument("--plan",
-                    choices=("extract", "lsh", "repartition", "curate",
-                             "spandedup"),
+                    choices=PLANS,
                     default="extract",
                     help="extract = shuffle-free kernel plan; lsh = "
                          "shuffle-bearing MinHash-LSH dedup plan; "
