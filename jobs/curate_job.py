@@ -73,7 +73,8 @@ def main(argv=None) -> int:
                     help="deterministic hash-threshold sampling by url")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession
+    from pyspark.sql import functions as F
 
     spark = SparkSession.builder.appName("pdf-parser-spark-curate").getOrCreate()
     chunks = build_curated_chunks(
@@ -81,9 +82,10 @@ def main(argv=None) -> int:
         overlap=args.overlap, min_tokens=args.min_tokens,
         sample_rate=args.sample_rate,
     )
-    chunks.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
-    print(f"chunks written: {n}", file=sys.stderr)
+    obs = Observation("curate_metrics")
+    counted = chunks.observe(obs, F.count(F.lit(1)).alias("chunks"))
+    counted.write.mode("overwrite").parquet(args.output)
+    print(f"chunks written: {obs.get['chunks']}", file=sys.stderr)
     return 0
 
 

@@ -36,11 +36,12 @@ def chunk_documents(
     Chunk k starts at token offset k*(chunk_tokens-overlap) and takes
     chunk_tokens tokens; the tail chunk is shorter. Tokens are projected
     once as a column, the chunk start offsets posexplode, and each chunk is
-    a plain slice of the token column in the projection above, all
-    codegen'd (no lambda: slicing inside one re-evaluates what it
-    captures per chunk); the fan-out is bounded by n_tokens/stride per
-    row, so skew follows document length, which the F1 size cap already
-    bounds. Returns (id, chunk_idx, chunk_text, n_tokens).
+    a plain slice of the token column in the projection above (no lambda:
+    slicing inside one re-evaluates what it captures per chunk; tokens()'
+    own lambda filter keeps the token projection out of whole-stage
+    codegen). The fan-out is bounded by n_tokens/stride per row, so skew
+    follows document length, which the F1 size cap already bounds.
+    Returns (id, chunk_idx, chunk_text, n_tokens).
     """
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("overlap must be in [0, chunk_tokens)")

@@ -2,9 +2,9 @@
 (C4 [Raffel et al. 2020], Gopher [Rae et al. 2021], RefinedWeb [Penedo et
 al. 2023]): URL canonicalization, PII scrubbing, Gopher's repetition
 flags, CCNet-style line dedup, and domain-level rollups. All JVM
-expressions (codegen-friendly, no Python in the hot path) with exact
-DuckDB-SQL oracles. Gopher's other quality rules (stop words, symbol ratio,
-word and line shape) are the one gate in :mod:`.gopher`.
+expressions (no Python in the hot path) with exact DuckDB-SQL oracles.
+Gopher's other quality rules (stop words, symbol ratio, word and line
+shape) are the one gate in :mod:`.gopher`.
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from .textstats import lines, lower_tokens
 
 __all__ = [
     "canonicalize_url", "host_of", "scrub_pii", "repetition_flags",
-    "line_dedup", "domain_stats", "domain_filter",
+    "line_dedup", "domain_stats",
 ]
 
 # Gopher's repetition bounds (Rae et al. 2021, A1.1): duplicate-line
@@ -186,22 +186,3 @@ def domain_stats(
         )
     )
 
-
-def domain_filter(
-    df: DataFrame,
-    min_docs: int = 1,
-    max_docs: int | None = None,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep documents whose host falls inside a doc-count band (drop one-off
-    spam hosts and mega-hosts that would dominate the mixture). The stats
-    side is tiny (one row per host), so the join back broadcasts."""
-    stats = domain_stats(df, url_col, text_col)
-    cond = F.col("docs") >= min_docs
-    if max_docs is not None:
-        cond = cond & (F.col("docs") <= max_docs)
-    keep_hosts = stats.where(cond).select("host")
-    return df.withColumn("_host", host_of(F.col(url_col))).join(
-        F.broadcast(keep_hosts), F.col("_host") == F.col("host"), "left_semi"
-    ).drop("_host")

@@ -1,4 +1,4 @@
-"""Gopher-style composite document-quality gate (JVM-side, codegen-friendly).
+"""Gopher-style composite document-quality gate (JVM-side).
 
 Implements the repetition-free subset of the Gopher quality rules (Rae et
 al. 2021, "Scaling Language Models: Methods, Analysis & Insights from
@@ -14,10 +14,10 @@ The repetition signals (duplicate lines, modal-word frequency) live in
 curation pipeline runs right after extraction.
 
 Everything compiles to built-in Spark SQL expressions (split / filter /
-aggregate higher-order functions — no Python in the hot path, whole-stage
-codegen applies) and has an exact DuckDB-SQL oracle.  At 100 TB the gate is
-a narrow projection: it reads one string column, emits fixed-width stats +
-booleans, never shuffles, and pushes nothing to Python workers.
+aggregate higher-order functions, which run outside whole-stage codegen;
+no Python in the hot path) and has an exact DuckDB-SQL oracle. At 100 TB
+the gate is a narrow projection: one string column in, fixed-width stats
+and booleans out, no shuffle, nothing pushed to Python workers.
 
 Reference parity note: the reference app (iWhyDuck/pdf-parser) has no
 quality gate — its only text filters are the size band and empty-text guard

@@ -339,6 +339,12 @@ def lsh_bucketed_topk(
     candidate set ~2^N_PLANES-fold before any cosine is computed. The
     bucket is coordinate_sign_bucket, a JVM expression the DuckDB oracle
     recomputes, so the approximate result itself is value-checked.
+
+    Contract against brute_force_topk: its ranking restricted to the
+    query's bucket, which a neighbour at angle theta shares with
+    probability about (1 - theta/pi)^N_PLANES. On the near-isotropic
+    sf0.01 embeddings (max cosine 0.51) that keeps 12% of the true top 10,
+    averaged over all 500 queries.
     """
     bucketed = embeddings.withColumn(
         "_bucket", coordinate_sign_bucket(F.col(vec_col))

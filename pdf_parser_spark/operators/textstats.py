@@ -1,4 +1,4 @@
-"""Text-analysis operators over a documents table (JVM-side, codegen-friendly).
+"""Text-analysis operators over a documents table (JVM-side).
 
 All of these compile to built-in Spark SQL expressions (no Python in the hot
 path) and have exact DuckDB-SQL oracles: token counting, quality scoring,
@@ -40,7 +40,8 @@ WINNOW_WINDOW = 4  # consecutive k-gram hashes per winnowing window
 
 def tokens(col: Column) -> Column:
     """ASCII-whitespace tokens: split on \\s+, empty strings dropped (so
-    leading/trailing whitespace and "" yield no tokens)."""
+    leading/trailing whitespace and "" yield no tokens). Its lambda filter
+    keeps the plan node holding it out of whole-stage codegen."""
     return F.filter(F.split(col, r"\s+"), lambda x: x != "")
 
 

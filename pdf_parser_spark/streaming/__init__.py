@@ -1,9 +1,3 @@
-from .stream import (
-    stream_exact_dedup, stream_extract, stream_host_stats,
-    stream_status_counts,
-)
+from .stream import stream_extract
 
-__all__ = [
-    "stream_extract", "stream_host_stats", "stream_status_counts",
-    "stream_exact_dedup",
-]
+__all__ = ["stream_extract"]

@@ -74,18 +74,14 @@ class TestRepetitionFlags:
 
 
 class TestDomainOps:
-    def test_stats_and_filter(self, spark):
-        from pdf_parser_spark.operators.cleaning import domain_filter, domain_stats
+    def test_stats(self, spark):
+        from pdf_parser_spark.operators.cleaning import domain_stats
 
         rows = [(f"https://big.site/{i}", "x" * 10) for i in range(5)]
         rows += [("https://solo.site/1", "y" * 20)]
         df = spark.createDataFrame(rows, "url string, text string")
         stats = {r.host: (r.docs, r.mean_chars) for r in domain_stats(df).collect()}
         assert stats == {"big.site": (5, 10.0), "solo.site": (1, 20.0)}
-        kept = {r.url for r in domain_filter(df, min_docs=2).collect()}
-        assert kept == {f"https://big.site/{i}" for i in range(5)}
-        capped = {r.url for r in domain_filter(df, min_docs=1, max_docs=3).collect()}
-        assert capped == {"https://solo.site/1"}
 
 
 class TestLineDedup:

@@ -113,6 +113,8 @@ class TestCurateJobCli:
             f"FROM read_parquet('{out}/*.parquet')"
         ).fetchone()
         assert rows[0] > 0 and rows[1] > 0 and rows[2] <= 64
+        # the printed count comes from the write itself, not a re-read
+        assert f"chunks written: {rows[0]}\n" in r.stderr
 
     def test_sampling_flag_reduces_docs(self, corpus, tmp_path):
         out = str(tmp_path / "chunks_s")

@@ -16,6 +16,11 @@ def emb(spark):
     return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
 
+@pytest.fixture(scope="module")
+def emb01(spark):
+    return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+
+
 class TestIVF:
     def test_centroids_are_unit_norm_and_deterministic(self, emb):
         import numpy as np
@@ -333,6 +338,46 @@ class TestDedupSkewGuards:
         # shingle again: at most one more
         assert capped <= uncapped + (1 if op == "jaccard" else 0), (
             op, uncapped, capped)
+
+
+class TestMinhashLshContract:
+    def test_pairs_co_occur_and_find_high_jaccard(self, spark):
+        # banding against the exact Jaccard it approximates, at sf0.01:
+        # every candidate shares a shingle, and a pair of Jaccard s is
+        # missed with probability (1 - s^2)^8, 3e-4 at s = 0.8. Measured:
+        # all 25 pairs at s >= 0.8 are found, so the floor is all of them
+        from pdf_parser_spark.operators.dedup import jaccard_pairs, minhash_lsh_pairs
+
+        docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+        got = {(r.id_a, r.id_b) for r in minhash_lsh_pairs(docs).collect()}
+        exact = {(r.id_a, r.id_b): r.jaccard
+                 for r in jaccard_pairs(docs).collect()}
+        assert got <= set(exact)
+        high = {p for p, s in exact.items() if s >= 0.8}
+        assert len(high) >= 25 and high <= got
+
+
+class TestLshBucketedTopkContract:
+    def test_bucket_restricted_brute_force_and_recall(self, emb01):
+        # exact inside the query's bucket: the answer is brute force's
+        # ranking restricted to that bucket. Recall against brute force is
+        # the bucket collision rate; on the near-isotropic sf0.01 vectors
+        # (max cosine 0.51) queries 0-9 keep 16 of their 100 true top-10
+        from pdf_parser_spark.operators.similarity import (
+            brute_force_topk, coordinate_sign_bucket, lsh_bucketed_topk,
+        )
+
+        bucket = dict(emb01.select(
+            "vec_id", coordinate_sign_bucket(F.col("embedding"))).collect())
+        n, hits = emb01.count(), 0
+        for q in range(10):
+            ranked = [(r.vec_id, r.score)
+                      for r in brute_force_topk(emb01, query_id=q, k=n).collect()]
+            got = [(r.vec_id, r.score)
+                   for r in lsh_bucketed_topk(emb01, query_id=q, k=10).collect()]
+            assert got == [p for p in ranked if bucket[p[0]] == bucket[q]][:10]
+            hits += len({i for i, _ in got} & {i for i, _ in ranked[:10]})
+        assert hits >= 16
 
 
 class TestBucketedNearDup:
