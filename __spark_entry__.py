@@ -1403,8 +1403,9 @@ _VERIFY_FIRST = [
     # module moved onto the shared textstats columns or the one pair join /
     # query top-k (operators/textstats, chunking, cleaning, gopher,
     # decontaminate, spandedup, bpe, dedup, lm, similarity, semdedup,
-    # streaming/stream), the two curate-job plans (jobs/ is outside the
-    # ledger's import graph), s2_warc_source (last verified round 4), and
+    # streaming/stream), the two curate-job plans (their closure holds
+    # jobs/curate_job.py, which the commit log and the run manifest will
+    # change), s2_warc_source (last verified round 4), and
     # the seven round-5 two-round-stale extraction queries (stamp b7a09fc),
     # so none sits out a third round. Their six slots: the deleted GEMM
     # alias of ann_knn_join (same function and oracle) and the media

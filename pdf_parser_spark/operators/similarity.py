@@ -169,12 +169,15 @@ def bucketed_near_dup_pairs(
 
     The scale path for embedding_near_dup_pairs: a bucket holding M of N
     vectors yields M^2 candidates instead of N^2 — with 2^N_PLANES buckets
-    that's a ~2^N_PLANES-fold pruning for near-uniform data. True near-dups
-    (cosine ~1) collide with probability (1 - theta/pi)^N_PLANES, so recall
-    stays high for the thresholds dedup cares about (tested vs the exact
-    form). max_bucket is the shared skew cap (dedup._drop_large_groups):
-    degenerate buckets (e.g. all-zero embeddings) are dropped rather than
-    exploded.
+    that's a ~2^N_PLANES-fold pruning for near-uniform data. max_bucket is
+    the shared skew cap (dedup._drop_large_groups): degenerate buckets
+    (e.g. all-zero embeddings) are dropped rather than exploded.
+
+    Contract: the result is the subset of embedding_near_dup_pairs (same
+    threshold, same scores) whose two vectors share a bucket. A pair at
+    angle theta shares one with probability about (1 - theta/pi)^N_PLANES:
+    of 100 copies planted at cosine 0.97 next to the sf0.001 vectors, 76
+    land in their original's bucket (the estimate is 0.72).
     """
     b = embeddings.select(
         F.col(id_col),
@@ -260,11 +263,15 @@ def knn_join(
     applyInPandas, so BLAS does the dim-loop at memory bandwidth instead of
     one JVM array fold per pair. Each list emits only its local top-k per
     query, so the global ranking window sees n_probe*k candidates per
-    query, not the whole probed corpus. n_probe == n_lists is the
-    exhaustive mode the SQL oracle checks; production sets
-    n_probe << n_lists. Ranking is (score rounded to 6 places desc, id asc)
-    in both the local cut and the window, so ties break the same way in
-    every engine. Returns (qid, nid, score).
+    query, not the whole probed corpus. Ranking is (score rounded to 6
+    places desc, id asc) in both the local cut and the window, so ties
+    break the same way in every engine. Returns (qid, nid, score).
+
+    Contract: with n_probe == n_lists the result is exact, each query's
+    rows equal to brute_force_topk (the mode the SQL oracle checks).
+    Production sets n_probe << n_lists, and a query then sees only its
+    n_probe nearest lists: on the sf0.001 vectors at n_lists=8, n_probe=4,
+    queries 0-9 keep 72 of their 100 true top-10.
     """
     cent = ivf_train_centroids(embeddings, n_lists, vec_col, id_col)
     assigned = ivf_assign(embeddings, cent, vec_col)

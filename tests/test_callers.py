@@ -1,10 +1,13 @@
-"""Every public top-level function of the package has a non-test caller.
+"""Every public top-level function of the package has a non-test caller,
+and every module-level name of the package is read.
 
 An operator that no query, job, tool or benchmark runs is code nothing
 checks. The walk collects every name the non-test code loads (a bare name
 or an attribute, ``F.x`` / ``D.x``) and fails on a public top-level ``def``
 under ``pdf_parser_spark/`` that none of them names. Imports, re-exports
-and ``__all__`` strings are not calls, so they do not count.
+and ``__all__`` strings are not calls, so they do not count. A module-level
+assignment is held to the same rule: a public name needs a load in non-test
+code, and a private one a load anywhere, tests included.
 """
 
 from __future__ import annotations
@@ -27,6 +30,11 @@ ALLOWED = {
     "kernels.webp.webp_dimensions": FROZEN,
     "kernels.mp3.build_mp3_frame": FROZEN,
 }
+ALLOWED_NAMES = {
+    "kernels.mp4.MP4_FTYP_OFFSET": FROZEN,
+    "kernels.pdfgen.MINIMAL_PDF": FROZEN,  # loaded only by tests
+    "sources.exif_fixture._SIZES": FROZEN,
+}
 
 
 def _py_files(root: str):
@@ -42,9 +50,9 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), path)
 
 
-def _loaded_names() -> set:
+def _loaded_names(roots=CALLER_ROOTS) -> set:
     names = set()
-    for root in CALLER_ROOTS:
+    for root in roots:
         for path in _py_files(os.path.join(REPO, root)):
             for node in ast.walk(_parse(path)):
                 if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
@@ -54,13 +62,27 @@ def _loaded_names() -> set:
     return names
 
 
-def _public_defs():
+def _top_level():
     for path in _py_files(PKG):
         mod = os.path.relpath(path, PKG)[:-3].replace(os.sep, ".")
         for node in _parse(path).body:
-            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                    and not node.name.startswith("_")):
-                yield f"{mod}.{node.name}", node.name
+            yield mod, node
+
+
+def _public_defs():
+    for mod, node in _top_level():
+        if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not node.name.startswith("_")):
+            yield f"{mod}.{node.name}", node.name
+
+
+def _assigned_names():
+    for mod, node in _top_level():
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            for t in getattr(node, "targets", None) or [node.target]:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        yield f"{mod}.{n.id}", n.id
 
 
 class TestEveryPublicDefHasACaller:
@@ -69,3 +91,14 @@ class TestEveryPublicDefHasACaller:
         uncalled = sorted(q for q, name in _public_defs() if name not in called)
         # equality, so an allowlisted def that gains a caller leaves the list
         assert uncalled == sorted(ALLOWED)
+
+
+class TestEveryModuleNameIsRead:
+    def test_no_unread_module_name(self):
+        read = _loaded_names()
+        read_anywhere = read | _loaded_names(("tests",))
+        unread = sorted(
+            q for q, name in _assigned_names()
+            if name not in (read_anywhere if name.startswith("_") else read)
+        )
+        assert unread == sorted(ALLOWED_NAMES)

@@ -8,12 +8,31 @@ the contract without waiting for a driver round.
 
 from __future__ import annotations
 
+import importlib.util
+import json
+import os
+import sys
+
 import pytest
 from pyspark.sql.types import ArrayType, MapType
 
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+import freshness_ledger  # noqa: E402
+
+
+def _load_stub(directory, filename, text):
+    """Write `text` to directory/filename and import it as a module."""
+    directory.mkdir(parents=True, exist_ok=True)
+    path = directory / filename
+    path.write_text(text)
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
 
 
 @pytest.fixture(scope="module")
@@ -49,20 +68,15 @@ class TestEntryContract:
         red. tools/freshness_ledger.py holds the per-query last-verified
         commit; fix a violation by promoting the query into _VERIFY_FIRST
         and running `python tools/freshness_ledger.py promote`."""
-        import os
         import subprocess
-        import sys
 
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         # git metadata may be absent in exported source trees; the gate only
         # means something inside the tracked checkout
         probe = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=repo, capture_output=True
+            ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True
         )
         if probe.returncode != 0:
             pytest.skip("not a git checkout")
-        sys.path.insert(0, os.path.join(repo, "tools"))
-        import freshness_ledger
 
         offenders = freshness_ledger.check(entrymod)
         assert offenders == [], (
@@ -70,32 +84,89 @@ class TestEntryContract:
             f"and re-stamp: {offenders}"
         )
 
-    def test_oracle_hash_independent_of_checkout(self, monkeypatch):
-        """Oracle SQL embeds <repo>/.corpus: the ledger hash must not change
-        with where the repo is checked out."""
-        import os
-        import sys
-        from types import SimpleNamespace
-
-        sys.path.insert(0, os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tools"))
-        import freshness_ledger
-
-        def q(spark, sf_dir):
-            return None
+    def test_oracle_hash_independent_of_checkout(self, monkeypatch, tmp_path):
+        """Oracle SQL and path constants embed <repo>: the ledger hashes must
+        not change with where the repo is checked out."""
+        stub = (
+            "import os\n"
+            "CORPUS_01 = os.path.join(os.path.dirname(os.path.abspath("
+            "__file__)), '.corpus', 'sf0.01')\n\n"
+            "def queries():\n"
+            "    def q(spark, sf_dir):\n"
+            "        return CORPUS_01\n"
+            "    return {'q': q}\n\n"
+            "def oracle_sql():\n"
+            "    return {'q': f\"SELECT * FROM '{CORPUS_01}/pages.parquet'\"}\n"
+        )
 
         def snap(repo):
-            monkeypatch.setattr(freshness_ledger, "REPO", repo)
-            entry = SimpleNamespace(
-                queries=lambda: {"q": q},
-                oracle_sql=lambda: {
-                    "q": f"SELECT * FROM '{repo}/.corpus/sf0.01/pages.parquet'"
-                },
-            )
-            return freshness_ledger.snapshot(entry)
+            monkeypatch.setattr(freshness_ledger, "REPO", str(repo))
+            entry = _load_stub(repo, "stub_entry.py", stub)
+            return entry.CORPUS_01, freshness_ledger.snapshot(entry)
 
-        assert snap("/srv/a/repo") == snap("/home/b/copy")
+        (path_a, snap_a), (path_b, snap_b) = (
+            snap(tmp_path / "a" / "repo"), snap(tmp_path / "b" / "copy"))
+        assert path_a != path_b
+        assert snap_a == snap_b
+
+    def test_entry_helper_change_is_a_violation(self, monkeypatch, tmp_path):
+        """An edit to an entry helper a stamped off-window query calls (the
+        `_events(...).limit(3)` probe) turns the gate red."""
+        helper = ("    return spark.read.parquet("
+                  "os.path.join(sf_dir, 'events.parquet'))TAIL\n")
+        stub = (
+            "import os\n\n"
+            "def _events(spark, sf_dir):\n" + helper + "\n"
+            "def queries():\n"
+            "    def q(spark, sf_dir):\n"
+            "        return _events(spark, sf_dir)\n"
+            "    return {'q': q}\n\n"
+            "def oracle_sql():\n"
+            "    return {'q': 'SELECT 1'}\n"
+        )
+        ledger = tmp_path / "ledger.json"
+        monkeypatch.setattr(freshness_ledger, "LEDGER", str(ledger))
+        monkeypatch.setattr(freshness_ledger, "WINDOW", 0)
+        stamped = _load_stub(tmp_path, "v1.py", stub.replace("TAIL", ""))
+        ledger.write_text(json.dumps({"queries": {
+            "q": {"commit": "0" * 40,
+                  **freshness_ledger.snapshot(stamped)["q"]}}}))
+        assert freshness_ledger.check(stamped) == []
+        edited = _load_stub(tmp_path, "v2.py", stub.replace("TAIL", ".limit(3)"))
+        assert [n for n, _ in freshness_ledger.check(edited)] == ["q"]
+
+    def test_namespace_package_import_enters_closure(self, monkeypatch,
+                                                     tmp_path):
+        """A query that imports a module of a repo-root namespace package
+        (as the curate queries import jobs.curate_job) has that file and
+        the package files it imports, transitively, in its closure; a
+        dotted import names the module's file, not parent __init__.py."""
+        files = {
+            "nsjob/job.py": "from lib.mod import f\n",
+            "lib/__init__.py": "",
+            "lib/mod.py": "from .util import g\n\ndef f():\n    return g()\n",
+            "lib/util.py": "def g():\n    return 1\n",
+            "lib/unused.py": "",
+        }
+        for rel, text in files.items():
+            (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+            (tmp_path / rel).write_text(text)
+        monkeypatch.setattr(freshness_ledger, "REPO", str(tmp_path))
+        entry = _load_stub(tmp_path, "stub_entry.py", (
+            "def queries():\n"
+            "    def q(spark, sf_dir):\n"
+            "        from nsjob.job import f\n"
+            "        return f()\n"
+            "    return {'q': q}\n"
+        ))
+        assert freshness_ledger.query_closures(entry)["q"] == {
+            "nsjob/job.py", "lib/mod.py", "lib/util.py"}
+
+    def test_curate_queries_close_over_the_job(self):
+        closures = freshness_ledger.query_closures(entrymod)
+        for name in ("pipeline_extract_dedup_chunk", "pipeline_curate_end2end"):
+            assert {"jobs/curate_job.py",
+                    "pdf_parser_spark/pipeline.py"} <= closures[name], name
 
     def test_entry_scope_import_enters_closure(self, tmp_path):
         """A name the entry module imports at module scope from the package

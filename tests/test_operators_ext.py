@@ -381,20 +381,41 @@ class TestLshBucketedTopkContract:
 
 
 class TestBucketedNearDup:
-    def test_recall_vs_exact_pairs(self, emb):
+    def test_recall_vs_exact_pairs(self, spark, emb):
+        # the sf0.001 vectors hold no near duplicate (max cosine 0.479), so
+        # plant one: a copy of each of the first 100 vectors at cosine 0.97
+        # (the unit original plus a seeded orthogonal part), id + 10000
+        import numpy as np
+
         from pdf_parser_spark.operators.similarity import (
             bucketed_near_dup_pairs, embedding_near_dup_pairs,
         )
 
+        rows = [(r.vec_id, r.embedding)
+                for r in emb.orderBy("vec_id").limit(100).collect()]
+        rng = np.random.RandomState(0)
+        planted = []
+        for vid, v in rows:
+            u = np.asarray(v, dtype=np.float64)
+            u /= np.linalg.norm(u)
+            w = rng.standard_normal(len(u))
+            w -= (w @ u) * u
+            w /= np.linalg.norm(w)
+            planted.append(
+                (vid + 10000, (0.97 * u + np.sqrt(1 - 0.97 ** 2) * w).tolist()))
+        df = spark.createDataFrame(
+            emb.select("vec_id", "embedding").collect() + planted,
+            "vec_id bigint, embedding array<float>")
+
         exact = {(r.id_a, r.id_b) for r in
-                 embedding_near_dup_pairs(emb, threshold=0.5).collect()}
+                 embedding_near_dup_pairs(df, threshold=0.95).collect()}
         got = {(r.id_a, r.id_b) for r in
-               bucketed_near_dup_pairs(emb, threshold=0.5).collect()}
-        # bucketed candidates are a subset of the exact pair set...
+               bucketed_near_dup_pairs(df, threshold=0.95).collect()}
+        assert exact == {(vid, vid + 10000) for vid, _ in rows}
+        # a subset of the exact pairs: a pair is found iff its two vectors
+        # share a coordinate-sign bucket, here 76 of the 100
         assert got <= exact
-        # ...with usable recall at near-dup thresholds
-        if exact:
-            assert len(got) / len(exact) >= 0.3
+        assert len(got) >= 76
 
     def test_max_bucket_drops_degenerate_bucket(self, spark):
         from pdf_parser_spark.operators.similarity import bucketed_near_dup_pairs
@@ -435,15 +456,21 @@ class TestKnnJoin:
                        for (_, g), (_, w) in zip(got, want)), qid
 
     def test_restricted_probe_recall(self, emb):
+        # probing n_probe of n_lists lists is brute force restricted to the
+        # query's nearest lists: on the sf0.001 vectors at n_lists=8,
+        # n_probe=4, queries 0-9 keep 72 of their 100 true top-10
         from pdf_parser_spark.operators.similarity import brute_force_topk, knn_join
 
-        exact = {r.vec_id for r in brute_force_topk(emb, query_id=1, k=10).collect()}
-        approx = {
-            r.nid for r in knn_join(emb, k=10, n_lists=8, n_probe=4)
-            .where(F.col("qid") == 1).collect()
-        }
-        # probing half the lists must recover at least half the true top-k
-        assert len(exact & approx) >= 5
+        out = knn_join(emb, k=10, n_lists=8, n_probe=4).where(
+            F.col("qid") < 10).collect()
+        hits = 0
+        for q in range(10):
+            exact = {r.vec_id
+                     for r in brute_force_topk(emb, query_id=q, k=10).collect()}
+            got = {r.nid for r in out if r.qid == q}
+            assert len(got) == 10, q
+            hits += len(got & exact)
+        assert hits >= 72
 
     def test_restricted_probe_prunes_candidates(self, emb):
         from pdf_parser_spark.operators.similarity import knn_join

@@ -9,19 +9,31 @@ so code drift on an off-window query is invisible until the next rotation.
 This module converts that process risk into a red test:
 
 - `tools/freshness_ledger.json` records, per query, the commit at which it
-  was last driver-verified plus hashes of its function source and oracle SQL.
+  was last driver-verified plus hashes of its definition and oracle SQL.
+- A query's definition is the source of its function, of every entry
+  function it reaches (module helpers such as `_docs`, `queries()`-local
+  ones such as `_cents`, transitively) and of every module-level entry
+  constant they read (`CORPUS_01 = corpus_dir_for(0.01)`). None of that
+  embeds the checkout path; the oracle SQL is hashed with `<repo>/.corpus`
+  as a fixed token. So a copy of the repo hashes alike.
+- A query's closure is the set of repo files its definition runs. The walk
+  resolves each name the definition loads through the function's globals
+  and closure cells: a module is its file, and a function or class is its
+  defining module's file. Function-local imports count too. It then
+  follows every `import` in those files, transitively, across the repo
+  (the package and `jobs/`). `import a.b.c` means `a/b/c.py`, not the
+  parent `__init__.py` files.
 - `check()` (wired into `tests/test_entry_contract.py`) fails when an
   OFF-window query's definition/oracle hash drifted from the ledger, or when
-  any module in its (transitive) import closure changed — `git diff
-  <ledger-commit> -- pdf_parser_spark/` against the WORKING TREE, so
-  uncommitted edits count too. In-window queries are exempt: the driver
-  re-proves them this round by construction.
+  any file in its closure changed — `git diff <ledger-commit> -- <closure>`
+  against the WORKING TREE, so uncommitted edits count too. In-window
+  queries are exempt: the driver re-proves them this round by construction.
 
 Round workflow:
 1. round start: stamp last round's window at the commit the driver verified
    (`python tools/freshness_ledger.py promote --commit <last-round-sha>`),
    then rotate `_VERIFY_FIRST`.
-2. during the round: touching a module that an off-window query depends on
+2. during the round: touching a file that an off-window query depends on
    turns the gate red; fix = promote that query into `_VERIFY_FIRST` and run
    `promote` (stamps the current window at HEAD).
 
@@ -36,26 +48,26 @@ import hashlib
 import inspect
 import json
 import os
-import re
 import subprocess
 import sys
+import textwrap
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-PKG = "pdf_parser_spark"
 LEDGER = os.path.join(REPO, "tools", "freshness_ledger.json")
 WINDOW = 50  # driver checks the first 50 queries() entries
-
-def _pkg_files() -> list[str]:
-    out = []
-    for root, _dirs, files in os.walk(os.path.join(REPO, PKG)):
-        for f in files:
-            if f.endswith(".py"):
-                out.append(os.path.relpath(os.path.join(root, f), REPO))
-    return sorted(out)
+MISSING = "not in ledger — put it in _VERIFY_FIRST, then run `promote`"
 
 
-def _module_to_file(dotted: str) -> str | None:
-    """pdf_parser_spark.operators.dedup -> repo-relative file path."""
+def _repo_file(path: str | None) -> str | None:
+    """Repo-relative path of a source file; None outside the repo."""
+    if not path:
+        return None
+    rel = os.path.relpath(os.path.abspath(path), REPO)
+    return None if rel.startswith("..") else rel
+
+
+def _module_file(dotted: str) -> str | None:
+    """a.b.c -> a/b/c.py (or a/b/c/__init__.py) when it is in the repo."""
     rel = dotted.replace(".", "/")
     for cand in (rel + ".py", rel + "/__init__.py"):
         if os.path.exists(os.path.join(REPO, cand)):
@@ -63,62 +75,123 @@ def _module_to_file(dotted: str) -> str | None:
     return None
 
 
-_IMPORT_RE = re.compile(
-    r"^\s*(?:from\s+([.\w]+)\s+import\s+([\w, ()*]+)|import\s+([.\w]+))",
-    re.M,
-)
+def _imported_files(node: ast.Import | ast.ImportFrom, rel: str) -> set[str]:
+    """Repo files one import statement of file `rel` names: the module and,
+    for `from m import x`, the submodule m.x."""
+    if isinstance(node, ast.Import):
+        found = {_module_file(a.name) for a in node.names}
+    else:
+        base = node.module or ""
+        if node.level:
+            pkg = [p for p in os.path.dirname(rel).split("/") if p]
+            pkg = pkg[: len(pkg) - node.level + 1]
+            base = ".".join(pkg + ([base] if base else []))
+        found = {_module_file(base)} | {
+            _module_file(f"{base}.{a.name}") for a in node.names
+        }
+    return found - {None}
 
 
-def _resolve_import(src_file: str, frm: str, names: str) -> list[str]:
-    """Resolve one import statement inside a package file to file paths."""
-    if frm.startswith("."):
-        base = os.path.dirname(src_file).replace("/", ".")
-        up = len(frm) - len(frm.lstrip("."))
-        parts = base.split(".")
-        parts = parts[: len(parts) - (up - 1)] if up > 1 else parts
-        frm = ".".join(parts + ([frm.lstrip(".")] if frm.strip(".") else []))
-    if not frm.startswith(PKG):
-        return []
-    hits = []
-    f = _module_to_file(frm)
-    if f:
-        hits.append(f)
-    # `from pkg.sub import mod` where mod is itself a module
-    for name in re.split(r"[,\s()]+", names or ""):
-        if name and name != "*":
-            sub = _module_to_file(f"{frm}.{name}")
-            if sub:
-                hits.append(sub)
-    return hits
+def _import_closure(seeds: set[str], graph: dict[str, set[str]]) -> set[str]:
+    """The seed files and every repo file they import, transitively.
+    `graph` memoizes each file's direct imports across calls."""
+    todo, seen = list(seeds), set()
+    while todo:
+        rel = todo.pop()
+        if rel in seen:
+            continue
+        seen.add(rel)
+        if rel not in graph:
+            with open(os.path.join(REPO, rel)) as fh:
+                tree = ast.parse(fh.read())
+            graph[rel] = set().union(*(
+                _imported_files(n, rel) for n in ast.walk(tree)
+                if isinstance(n, (ast.Import, ast.ImportFrom))
+            ))
+        todo.extend(graph[rel])
+    return seen
 
 
-def build_import_graph() -> dict[str, set[str]]:
-    """file -> transitively-closed set of package files it depends on."""
-    direct: dict[str, set[str]] = {}
-    for rel in _pkg_files():
-        with open(os.path.join(REPO, rel)) as fh:
-            src = fh.read()
-        deps: set[str] = set()
-        for m in _IMPORT_RE.finditer(src):
-            frm, names, plain = m.group(1), m.group(2), m.group(3)
-            if plain:
-                frm, names = plain, ""
-            deps.update(_resolve_import(rel, frm, names))
-        direct[rel] = deps - {rel}
-    # transitive closure (graph is tiny; fixpoint loop is fine)
-    closed = {k: set(v) for k, v in direct.items()}
-    changed = True
-    while changed:
-        changed = False
-        for k, v in closed.items():
-            add = set().union(*(closed.get(d, set()) for d in v)) - v - {k}
-            if add:
-                v.update(add)
-                changed = True
-    return closed
+def _module_constants(path: str) -> dict[str, str]:
+    """Module-level assignment source by target name."""
+    with open(path) as fh:
+        src = fh.read()
+    out: dict[str, list[str]] = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = getattr(node, "targets", None) or [node.target]
+            for n in (n for t in targets for n in ast.walk(t)):
+                if isinstance(n, ast.Name):
+                    out.setdefault(n.id, []).append(
+                        ast.get_source_segment(src, node))
+    return {k: "\n".join(v) for k, v in out.items()}
 
 
-_PKG_REF_RE = re.compile(r"pdf_parser_spark(?:\.\w+)+")
+def _reach(fn, consts: dict[str, str]) -> tuple[str, set[str]]:
+    """(definition text, repo files it names) of one query function: its
+    source, then the sources of the entry functions and constants it
+    reaches, ordered by name."""
+    g = fn.__globals__
+    sources: dict[str, str] = {}
+    files: set[str | None] = set()
+    todo = [(fn.__qualname__, fn)]
+    while todo:
+        key, unit = todo.pop()
+        if key in sources:
+            continue
+        cells = {}
+        if inspect.isfunction(unit):
+            src = inspect.getsource(unit)
+            cells = dict(zip(unit.__code__.co_freevars,
+                             (c.cell_contents for c in unit.__closure__ or ())))
+        else:  # an entry constant, given as its assignment source
+            src = unit
+        sources[key] = src
+        for node in ast.walk(ast.parse(textwrap.dedent(src))):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                files |= _imported_files(node, _repo_file(g["__file__"]) or "")
+                continue
+            if not (isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)):
+                continue
+            if node.id in cells:
+                val = cells[node.id]
+            elif node.id in g:
+                val = g[node.id]
+            else:
+                continue
+            if inspect.isfunction(val) and val.__globals__ is g:
+                todo.append((val.__qualname__, val))
+            elif inspect.ismodule(val):
+                files.add(_repo_file(getattr(val, "__file__", None)))
+            elif node.id in consts and node.id not in cells:
+                todo.append((node.id, consts[node.id]))
+            else:
+                mod = sys.modules.get(getattr(val, "__module__", None) or "")
+                files.add(_repo_file(getattr(mod, "__file__", None)))
+    own = sources.pop(fn.__qualname__)
+    return "\n".join([own] + [sources[k] for k in sorted(sources)]), files - {None}
+
+
+def _walk(entry) -> dict[str, tuple[str, set[str]]]:
+    """query name -> (definition hash, closure)."""
+    consts: dict[str, dict[str, str]] = {}
+    graph: dict[str, set[str]] = {}
+    out = {}
+    for name, fn in entry.queries().items():
+        path = fn.__globals__["__file__"]
+        if path not in consts:
+            consts[path] = _module_constants(path)
+        text, files = _reach(fn, consts[path])
+        out[name] = (_sha(text), _import_closure(files, graph))
+    return out
+
+
+def _sha(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+def _oracle_sha(sql: str) -> str:
+    return _sha(sql.replace(os.path.join(REPO, ".corpus"), "<corpus>"))
 
 
 def _entry_module():
@@ -128,94 +201,22 @@ def _entry_module():
     return e
 
 
-def _entry_aliases(entry) -> dict[str, str]:
-    """Names the entry module imports at module scope from the package
-    (`from pdf_parser_spark.operators import dedup as D`) -> package file.
-    Function-local imports are picked up per query by regex."""
-    out = {}
-    for node in ast.parse(inspect.getsource(entry)).body:
-        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
-            for a in node.names:
-                f = (_module_to_file(f"{node.module}.{a.name}")
-                     or _module_to_file(node.module))
-                if f:
-                    out[a.asname or a.name] = f
-    return out
-
-
 def query_closures(entry=None) -> dict[str, set[str]]:
-    """query name -> transitively-closed set of package files it touches."""
-    e = entry or _entry_module()
-    graph = build_import_graph()
-    aliases = _entry_aliases(e)
-    helpers = {
-        n: inspect.getsource(fn)
-        for n, fn in vars(e).items()
-        if n.startswith("_") and inspect.isfunction(fn)
-    }
-    out: dict[str, set[str]] = {}
-    for name, fn in e.queries().items():
-        src = inspect.getsource(fn)
-        # one level of module-scope helper expansion (_pages, _docs, ...)
-        for hname, hsrc in helpers.items():
-            if re.search(rf"\b{re.escape(hname)}\b", src):
-                src += "\n" + hsrc
-        src = re.sub(r"#[^\n]*", "", src)
-        files: set[str] = set()
-        # function-local imports: `from pdf_parser_spark.operators import
-        # temporal as TP` must pull in operators/temporal.py, not just the
-        # package __init__
-        for m in _IMPORT_RE.finditer(src):
-            frm, names, plain = m.group(1), m.group(2), m.group(3)
-            if plain:
-                frm, names = plain, ""
-            files.update(_resolve_import("__spark_entry__.py", frm, names))
-        for dotted in _PKG_REF_RE.findall(src):
-            # longest resolvable prefix (pdf_parser_spark.operators.bpe.train
-            # -> operators/bpe.py)
-            parts = dotted.split(".")
-            for cut in range(len(parts), 1, -1):
-                f = _module_to_file(".".join(parts[:cut]))
-                if f:
-                    files.add(f)
-                    break
-        # module aliases (D/M/S/T) must appear as attribute access —
-        # `M^2/2` in a comment must not drag in multimodal.py (comments are
-        # already stripped above; the dot requirement guards string literals)
-        for alias, f in aliases.items():
-            pat = (rf"\b{re.escape(alias)}\s*\." if len(alias) <= 2
-                   else rf"\b{re.escape(alias)}\b")
-            if re.search(pat, src):
-                files.add(f)
-        closure = set(files)
-        for f in files:
-            closure |= graph.get(f, set())
-        out[name] = closure
-    return out
+    """query name -> the repo files it runs (see the module docstring)."""
+    return {n: c for n, (_, c) in _walk(entry or _entry_module()).items()}
 
 
 def snapshot(entry=None) -> dict[str, dict[str, str]]:
     e = entry or _entry_module()
     oracles = e.oracle_sql()
-    # oracle SQL embeds the checkout's corpus path: hash it as a fixed token
-    # so a copy of the repo elsewhere hashes alike
-    corpus_root = os.path.join(REPO, ".corpus")
-    snap = {}
-    for name, fn in e.queries().items():
-        snap[name] = {
-            "func_sha": hashlib.sha256(
-                inspect.getsource(fn).encode()
-            ).hexdigest()[:16],
-            "oracle_sha": hashlib.sha256(
-                oracles.get(name, "").replace(corpus_root, "<corpus>").encode()
-            ).hexdigest()[:16],
-        }
-    return snap
+    return {name: {"func_sha": sha,
+                   "oracle_sha": _oracle_sha(oracles.get(name, ""))}
+            for name, (sha, _) in _walk(e).items()}
 
 
-def _git_changed_since(commit: str) -> set[str]:
+def _git_changed_since(commit: str, paths: set[str]) -> set[str]:
     out = subprocess.run(
-        ["git", "diff", "--name-only", commit, "--", PKG],
+        ["git", "diff", "--name-only", commit, "--", *sorted(paths)],
         cwd=REPO, capture_output=True, text=True, check=True,
     )
     return {l.strip() for l in out.stdout.splitlines() if l.strip()}
@@ -226,35 +227,35 @@ def check(entry=None) -> list[tuple[str, str]]:
     e = entry or _entry_module()
     with open(LEDGER) as fh:
         ledger = json.load(fh)["queries"]
-    names = list(e.queries())
-    window = set(names[:WINDOW])
-    snap = snapshot(e)
-    closures = query_closures(e)
+    walked = _walk(e)
+    oracles = e.oracle_sql()
+    off = list(walked)[WINDOW:]
+    paths = set().union(*(walked[n][1] for n in off))
     changed_cache: dict[str, set[str]] = {}
     offenders = []
-    for name in names:
-        if name in window:
-            continue
+    for name in off:
         rec = ledger.get(name)
         if rec is None:
-            offenders.append((name, "not in ledger — promote into "
-                                    "_VERIFY_FIRST and run `promote`"))
+            offenders.append((name, MISSING))
             continue
-        if rec["func_sha"] != snap[name]["func_sha"]:
-            offenders.append((name, "query function changed since last "
+        sha, closure = walked[name]
+        if rec["func_sha"] != sha:
+            offenders.append((name, "query function, or an entry helper or "
+                                    "constant it reads, changed since last "
                                     "driver verification"))
             continue
-        if rec["oracle_sha"] != snap[name]["oracle_sha"]:
+        if rec["oracle_sha"] != _oracle_sha(oracles.get(name, "")):
             offenders.append((name, "oracle SQL changed since last "
                                     "driver verification"))
             continue
         commit = rec["commit"]
         if commit not in changed_cache:
-            changed_cache[commit] = _git_changed_since(commit)
-        hit = changed_cache[commit] & closures[name]
+            changed_cache[commit] = (_git_changed_since(commit, paths)
+                                     if paths else set())
+        hit = changed_cache[commit] & closure
         if hit:
             offenders.append(
-                (name, f"depends on modules changed since {commit[:9]}: "
+                (name, f"depends on files changed since {commit[:9]}: "
                        f"{sorted(hit)}")
             )
     return offenders
@@ -272,11 +273,6 @@ def main() -> int:
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
-    p_init = sub.add_parser("init", help="stamp ALL queries")
-    p_init.add_argument("--commit", default=None)
-    p_init.add_argument("--off-window-commit", default=None,
-                        help="stamp off-window queries at this commit "
-                             "instead (their last verification point)")
     p_prom = sub.add_parser("promote", help="stamp the current front window")
     p_prom.add_argument("--commit", default=None)
     sub.add_parser("check", help="print violations; exit 1 if any")
@@ -292,32 +288,21 @@ def main() -> int:
 
     commit = args.commit or _head()
     snap = snapshot(e)
-    names = list(e.queries())
-    window = set(names[:WINDOW])
-    ledger = {"queries": {}}
-    if os.path.exists(LEDGER):
-        with open(LEDGER) as fh:
-            ledger = json.load(fh)
-    for name in names:
-        if args.cmd == "promote" and name not in window:
-            if name not in ledger["queries"]:
-                raise SystemExit(f"off-window query {name} missing from "
-                                 f"ledger; run `init` once first")
-            continue
-        c = commit
-        if args.cmd == "init" and args.off_window_commit and name not in window:
-            c = args.off_window_commit
-        ledger["queries"][name] = {"commit": c, **snap[name]}
+    names = list(snap)
+    with open(LEDGER) as fh:
+        ledger = json.load(fh)
+    missing = [n for n in names[WINDOW:] if n not in ledger["queries"]]
+    if missing:
+        raise SystemExit(f"off-window queries {missing}: {MISSING}")
+    for name in names[:WINDOW]:
+        ledger["queries"][name] = {"commit": commit, **snap[name]}
     # a deleted query leaves no record behind
     ledger["queries"] = {n: r for n, r in ledger["queries"].items()
                          if n in snap}
     with open(LEDGER, "w") as fh:
         json.dump(ledger, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    stamped = len(window) if args.cmd == "promote" else len(names)
-    print(f"stamped {stamped} queries at {commit[:9]}"
-          + (f" (off-window at {args.off_window_commit[:9]})"
-             if args.cmd == "init" and args.off_window_commit else ""))
+    print(f"stamped {len(names[:WINDOW])} queries at {commit[:9]}")
     return 0
 
 
