@@ -1283,39 +1283,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return M.audio_features(df, bin_col="payload").orderBy("url")
     q["media_audio_features"] = media_audio_features
 
-    def stream_extract_lift(spark, sf_dir):
-        # REAL Structured Streaming execution inside the correctness gate:
-        # the extraction kernel runs as a checkpointed availableNow stream
-        # (maxFilesPerTrigger=4 -> several genuine micro-batches), drains,
-        # and the committed parquet is compared against the frozen goldens —
-        # stream output must equal the batch pipeline byte-for-byte
-        import shutil
-        import tempfile
-
-        from pdf_parser_spark.streaming.stream import stream_extract
-
-        d = ensure_corpus(sf_dir)
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "ppspark_stream_" + os.path.basename(os.path.normpath(d)),
-        )
-        shutil.rmtree(base, ignore_errors=True)
-        qry = stream_extract(
-            spark, d, os.path.join(base, "out"), os.path.join(base, "ckpt")
-        )
-        qry.awaitTermination()
-        return (
-            spark.read.parquet(os.path.join(base, "out"))
-            .select(
-                "url", "status",
-                # error rows carry the raw input text through the kernel
-                # (useful for debugging); goldens only pin ok-row text
-                F.when(F.col("status") == "ok", F.col("text")).alias("text"),
-            )
-            .orderBy("url")
-        )
-    q["stream_extract_lift"] = stream_extract_lift
-
     def media_wav_metadata(spark, sf_dir):
         # real audio-container decode (from-scratch RIFF/WAVE walk) over a
         # deterministic fixture; the oracle re-derives every field with
@@ -1402,8 +1369,8 @@ _VERIFY_FIRST = [
     # Slot budget (window = 50). In: every query whose closure reaches a
     # module moved onto the shared textstats columns or the one pair join /
     # query top-k (operators/textstats, chunking, cleaning, gopher,
-    # decontaminate, spandedup, bpe, dedup, lm, similarity, semdedup,
-    # streaming/stream), the two curate-job plans (their closure holds
+    # decontaminate, spandedup, bpe, dedup, lm, similarity, semdedup),
+    # the two curate-job plans (their closure holds
     # jobs/curate_job.py, which the commit log and the run manifest will
     # change), s2_warc_source (last verified round 4), and
     # the seven round-5 two-round-stale extraction queries (stamp b7a09fc),
@@ -1422,9 +1389,12 @@ _VERIFY_FIRST = [
     # oldest of any query. The slot of the deleted clean_stopword_stats (a
     # second stop-word rule; the Gopher gate holds the one definition) goes
     # to p5_multi_pattern_fallback, likewise round-4 evidence (stamp
-    # 882f845). The other 13 round-4 queries (p7/p9/p10/p11/p11b/p12, a3,
-    # f6, s5, s6, w1, w2, olap_priority_rollup) stay out, frozen at their
-    # r4 stamp (`tools/freshness_ledger.py check` proves all).
+    # 882f845). The slot of the deleted Structured Streaming lift (a second
+    # extraction run and resume path) goes to a3_idempotent_resume, round-4
+    # evidence (stamp 882f845) for the batch anti-join, now the one resume
+    # path. The other 12 round-4 queries (p7/p9/p10/p11/p11b/p12, f6, s5,
+    # s6, w1, w2, olap_priority_rollup) stay out, frozen at their r4 stamp
+    # (`tools/freshness_ledger.py check` proves all).
     # closure touched, previously off-window:
     "ann_bruteforce_topk", "ann_embedding_near_dup", "ann_lsh_bucketed_topk",
     "ann_bucketed_near_dup", "ann_knn_join",
@@ -1439,17 +1409,17 @@ _VERIFY_FIRST = [
     "dedup_clusters_capped", "ann_dup_clusters", "text_bpe_token_counts",
     "shape_chunk_documents", "shape_pack_documents", "shape_pack_bpe_tokens",
     "shape_deterministic_sample", "clean_line_dedup",
-    "stream_extract_lift", "clean_gopher_gate", "clean_decontaminate",
-    "dedup_span_coverage", "pipeline_training_mix",
+    "clean_gopher_gate", "clean_decontaminate", "dedup_span_coverage",
+    "pipeline_training_mix",
     # the curate job's plan, and semdedup:
     "pipeline_extract_dedup_chunk", "pipeline_curate_end2end", "ann_semdedup",
     # the WARC reader, and the seven two-round-stale extraction queries:
     "s2_warc_source", "f1_f2_size_filter", "f3_magic_router",
     "f4_extension_predicate", "f5_empty_text_guard", "p3_content_hash",
     "extract_error_accounting", "ai_label_discovery",
-    # the slots of the deleted ann_ivf_topk and clean_stopword_stats:
-    # round-4 evidence
-    "p4_regex_fields", "p5_multi_pattern_fallback",
+    # the slots of the deleted ann_ivf_topk, clean_stopword_stats and
+    # streaming lift: round-4 evidence
+    "p4_regex_fields", "p5_multi_pattern_fallback", "a3_idempotent_resume",
 ]
 
 
@@ -2898,12 +2868,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT url, frame_idx, features_i
         FROM read_parquet('{os.path.join(os.path.dirname(IMG_01), "frame_goldens.parquet")}')
         ORDER BY url, frame_idx
-    """
-    o["stream_extract_lift"] = f"""
-        SELECT url,
-               CASE WHEN golden_text IS NULL THEN 'error' ELSE 'ok' END AS status,
-               golden_text AS text
-        FROM {goldens} ORDER BY url
     """
     o["media_thumbnails"] = f"""
         SELECT url, out_w, out_h, lower(hex(thumb)) AS thumb_hex

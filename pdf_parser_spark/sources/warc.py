@@ -14,7 +14,10 @@ directly. Records are read one at a time off a stream: the archive bytes, or
 `gzip.GzipFile` over them when they start with the gzip magic, which walks
 concatenated members (Common Crawl writes one per record) in linear time.
 Neither the inflated archive nor a per-member copy of the compressed rest is
-built, and a payload is read in bounded chunks, never by its claimed length.
+built, a line is read at most MAX_LINE bytes at a time, and a payload is read
+in bounded chunks, never by its claimed length. CPU time is not bounded: a
+gzip bomb is inflated in full (about 0.6 s per 256 MiB) until an
+inflated-byte budget per archive lands.
 A corrupt or truncated gzip stream ends the archive after the records before
 it. Execution: the shared `binaryFile` scan (`read_binary_files`) -> one
 mapInPandas kernel, one row per document record, frames of at most the
@@ -47,20 +50,21 @@ WARC_SCHEMA = StructType([
 ])
 
 _DOC_TYPES = {"response", "resource", "conversion"}
+MAX_LINE = 1 << 16  # bytes per readline: a line never buffers more
 
 
 def _records(fp: BinaryIO) -> Iterator[Tuple[dict, bytes]]:
     """Yield (lower-cased headers, payload) for each record on the stream."""
-    while line := fp.readline():
+    while line := fp.readline(MAX_LINE):
         if b"WARC/" not in line:
-            continue  # garbage between records
+            continue  # garbage between records, read MAX_LINE at a time
         headers: dict = {}
-        while (line := fp.readline()) not in (b"\r\n", b""):
+        while (line := fp.readline(MAX_LINE)).endswith(b"\n") and line != b"\r\n":
             if b":" in line:
                 k, v = line.split(b":", 1)
                 headers[k.strip().lower().decode("latin-1")] = v.strip().decode("latin-1")
-        if not line:
-            return  # header block never ended
+        if line != b"\r\n":
+            continue  # over-long or unterminated header line: resync on WARC/
         try:
             need = int(headers.get("content-length", ""))
         except ValueError:
@@ -103,10 +107,11 @@ def _http_body(payload: bytes) -> bytes:
 def parse_warc_bytes(data: bytes) -> Iterator[Tuple[Optional[str], Optional[datetime], bytes]]:
     """Yield (url, timestamp, document_bytes) per document record of one archive.
 
-    Never raises. A record without a valid Content-Length is skipped (the
-    parse resumes at the next line holding `WARC/`), a truncated tail record
-    is dropped, a bad WARC-Date gives a NULL timestamp, and a corrupt or
-    truncated gzip stream ends the archive after the records before it.
+    Never raises. A record without a valid Content-Length, or with a header
+    line longer than MAX_LINE or never ended, is skipped (the parse resumes
+    at the next line holding `WARC/`), a truncated tail record is dropped,
+    a bad WARC-Date gives a NULL timestamp, and a corrupt or truncated gzip
+    stream ends the archive after the records before it.
     """
     fp = io.BytesIO(data)
     if data[:2] == b"\x1f\x8b":

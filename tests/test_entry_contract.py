@@ -45,6 +45,14 @@ class TestEntryContract:
         qs, oracles = contract
         assert set(qs) == set(oracles)
 
+    def test_verify_window_is_full(self, contract):
+        """_VERIFY_FIRST fills the driver's window exactly: a short or
+        duplicated list lets the next query in dict order in unchosen."""
+        qs, _ = contract
+        names = entrymod._VERIFY_FIRST
+        assert len(set(names)) == len(names) == freshness_ledger.WINDOW
+        assert set(names) <= set(qs)
+
     def test_no_query_returns_array_or_map_columns(self, spark, contract):
         qs, _ = contract
         offenders = []

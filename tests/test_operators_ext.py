@@ -473,11 +473,28 @@ class TestKnnJoin:
         assert hits >= 72
 
     def test_restricted_probe_prunes_candidates(self, emb):
-        from pdf_parser_spark.operators.similarity import knn_join
+        # every neighbour comes from one of the query's n_probe nearest
+        # lists: on these 60 vectors probing all 6 lists returns 41 of 120
+        # rows from outside the 2 nearest
+        import numpy as np
+
+        from pdf_parser_spark.operators.similarity import (
+            _unit_rows, ivf_assign, ivf_train_centroids, knn_join,
+        )
 
         small = emb.where(F.col("vec_id") < 60)
+        cent = ivf_train_centroids(small, 6)
+        vecs, lists = {}, {}
+        for r in ivf_assign(small, cent).collect():
+            vecs[r.vec_id], lists[r.vec_id] = r.embedding, r._ivf_list
         out = knn_join(small, k=2, n_lists=6, n_probe=2).collect()
-        assert len(out) <= 60 * 2 and len(out) > 0
+        assert len(out) == 60 * 2
+        outside = [
+            (r.qid, r.nid) for r in out
+            if lists[r.nid] not in
+            np.argsort(-(_unit_rows([vecs[r.qid]]) @ cent.T)[0])[:2]
+        ]
+        assert outside == []
 
     def test_tied_candidates_break_by_nid(self, spark):
         # duplicate embeddings tie at each list's local-k cut: the smallest

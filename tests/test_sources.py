@@ -8,7 +8,10 @@ feeding the same canonical pages schema.
 from __future__ import annotations
 
 import gzip
+import io
 import os
+import subprocess
+import sys
 import zlib
 from datetime import datetime
 
@@ -16,6 +19,8 @@ import pytest
 
 from pdf_parser_spark.kernels.pdfgen import build_pdf
 from pdf_parser_spark.sources.warc import parse_warc_bytes
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _warc_record(rtype: str, uri: str, date: str, payload: bytes,
@@ -163,6 +168,46 @@ class TestParseWarcBytes:
             ("https://x/0", datetime(2024, 1, 1), HTML_DOC),
             ("https://x/1", datetime(2024, 1, 1), HTML_DOC),
         ]
+
+    def test_overlong_header_line_skips_record(self):
+        from pdf_parser_spark.sources.warc import MAX_LINE
+
+        long = _warc_record("resource", "https://x/long", "2024-01-01T00:00:00Z",
+                            HTML_DOC).replace(
+            b"\r\n\r\n", b"\r\nX-Pad: " + b"a" * MAX_LINE + b"\r\n\r\n", 1)
+        ok = _warc_record("resource", "https://x/ok", "2024-01-01T00:00:00Z",
+                          HTML_DOC)
+        assert [u for u, _, _ in parse_warc_bytes(long + ok)] == ["https://x/ok"]
+
+    def test_unterminated_line_bomb_stays_bounded(self, tmp_path):
+        # one valid record, then a 0.26 MB gzip member that inflates to
+        # 256 MiB with no newline: an unbounded readline() holds the whole
+        # line (peak RSS +506 MiB); a bounded one keeps the record and
+        # scans the rest in MAX_LINE pieces
+        buf = io.BytesIO()
+        buf.write(gzip.compress(_warc_record(
+            "resource", "https://x/ok", "2024-01-01T00:00:00Z", HTML_DOC)))
+        with gzip.GzipFile(fileobj=buf, mode="wb") as bomb:
+            for _ in range(256):
+                bomb.write(b"x" * (1 << 20))
+        path = tmp_path / "bomb.warc.gz"
+        path.write_bytes(buf.getvalue())
+        probe = (
+            "import resource, sys\n"
+            "from pdf_parser_spark.sources.warc import parse_warc_bytes\n"
+            "data = open(sys.argv[1], 'rb').read()\n"
+            "before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss\n"
+            "urls = [u for u, _, _ in parse_warc_bytes(data)]\n"
+            "grown = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - before\n"
+            "print(urls, grown // 1024)\n"
+        )
+        r = subprocess.run([sys.executable, "-c", probe, str(path)],
+                           capture_output=True, text=True, cwd=REPO,
+                           timeout=300)
+        assert r.returncode == 0, r.stderr[-2000:]
+        urls, grown_mib = r.stdout.rsplit(" ", 1)
+        assert urls == "['https://x/ok']"
+        assert int(grown_mib) < 64, f"peak RSS grew by {grown_mib.strip()} MiB"
 
     def test_kernel_frames_bounded(self):
         # one input batch of archives holding 100 records in all must come

@@ -87,16 +87,15 @@ def main(only: str | None = None) -> int:
     for name, fn in qs.items():
         if only and only not in name:
             continue
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle")
+            failures += 1
+            continue
         try:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             failures += 1
-            continue
-        if name not in oracles:
-            print(f"rows-only {name}: {len(sdf)} rows, cols={list(sdf.columns)}")
-            if len(sdf) == 0:
-                print(f"  WARN {name}: zero rows")
             continue
         try:
             ddf = con.execute(oracles[name]).df()
