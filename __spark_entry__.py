@@ -524,7 +524,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def ann_embedding_near_dup(spark, sf_dir):
         return S.embedding_near_dup_pairs(
-            _emb(spark, sf_dir), threshold=0.2, max_id=200
+            _emb(spark, sf_dir).where(F.col("vec_id") < 200), threshold=0.2
         ).orderBy("id_a", "id_b")
     q["ann_embedding_near_dup"] = ann_embedding_near_dup
 
@@ -568,11 +568,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["ann_semdedup"] = ann_semdedup
 
     def ann_knn_join(spark, sf_dir):
-        # batch KNN: top-k for EVERY row via the IVF index; exhaustive probes
-        # here (oracle-exact), n_probe << n_lists in production
-        return S.knn_join(_emb(spark, sf_dir), k=3, n_lists=8, n_probe=8).orderBy(
-            "qid", "nid"
-        )
+        # batch KNN: exact top-k for EVERY row, scored over id-hash blocks
+        return S.knn_join(_emb(spark, sf_dir), k=3).orderBy("qid", "nid")
     q["ann_knn_join"] = ann_knn_join
 
     # ---- text analysis --------------------------------------------------------

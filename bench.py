@@ -41,7 +41,7 @@ HEADLINE = [
     "dedup_minhash_lsh_pairs_capped",  # MinHash+LSH band join, skew cap ON
     "dedup_simhash",              # pandas-UDF simhash
     "ann_bruteforce_topk",        # similarity search baseline
-    "ann_knn_join",               # batch KNN via the IVF index (BLAS path)
+    "ann_knn_join",               # exact batch KNN, id-hash blocks (BLAS)
     "text_quality_score",         # text analysis
     "clean_repetition_flags",     # Gopher-style corpus cleaning
     "media_metadata",             # multimodal sniffing

@@ -20,7 +20,6 @@ from .textstats import tokens
 
 __all__ = ["chunk_documents", "pack_documents", "deterministic_sample"]
 
-NUM_SHARDS = 64        # derived pack shards when the caller names none
 SAMPLE_DENOM = 10_000  # sample buckets: rates resolve to 1 / SAMPLE_DENOM
 
 
@@ -66,10 +65,10 @@ def chunk_documents(
 
 def pack_documents(
     df: DataFrame,
+    shard_col: str,
     text_col: str = "text",
     id_col: str = "doc_id",
     token_budget: int = 2048,
-    shard_col: Optional[str] = None,
     tokens_col: Optional[str] = None,
 ) -> DataFrame:
     """Stream-order sequence packing: concatenate documents in key order and
@@ -77,12 +76,11 @@ def pack_documents(
     its first token lands in and its offset in the stream (pretraining-style
     packing, where documents may straddle a boundary).
 
-    One prefix-sum window, always partitioned. Pass shard_col to control the
-    sharding; when None a deterministic default shard is derived as
-    pmod(xxhash64(id), NUM_SHARDS) — packing happens independently per shard,
-    which is both the scalable plan (no global single-partition sort is
-    reachable through this API) and the semantics training actually wants
-    (any consistent order works; only determinism matters).
+    One prefix-sum window, partitioned by the required shard_col: packing
+    happens independently per shard, which is both the scalable plan (no
+    global single-partition sort is reachable through this API) and the
+    semantics training actually wants (any consistent order works; only
+    determinism matters).
     Returns (id, shard, n_tokens, stream_offset, pack_id).
     """
     if tokens_col is not None:
@@ -91,15 +89,6 @@ def pack_documents(
         toks = F.col(tokens_col).cast("long")
     else:
         toks = F.size(tokens(F.col(text_col))).cast("long")
-    if shard_col is None:
-        # safe default: a Window.partitionBy() (empty) here would serialize
-        # the whole corpus through one task — derive a hash shard instead
-        shard_col = "shard"
-        df = df.withColumn(
-            shard_col,
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                   F.lit(NUM_SHARDS)).cast("int"),
-        )
     base = df.select(
         F.col(shard_col),
         F.col(id_col),

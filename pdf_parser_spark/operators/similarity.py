@@ -4,12 +4,11 @@ Baseline: brute-force cosine top-k, entirely JVM-side (zip_with + aggregate
 over double-cast arrays — no Python in the hot path, one shuffle for top-k).
 
 Scale paths: coordinate-sign LSH buckets (a pure JVM expression the DuckDB
-oracles recompute exactly), so candidates meet only inside a bucket; and an
-IVF index (seeded numpy k-means) that serves the batch KNN join only: its
-probe lists prune the candidates, and each list pair is scored as one BLAS
-matrix multiply. At 100 TB the bucket or list equi-join replaces the full
-cross product; the approximate modes' recall is tested against the exact
-forms in pytest.
+oracles recompute exactly), so candidates meet only inside a bucket; at
+100 TB the bucket equi-join replaces the full cross product, and the
+approximate modes' recall is tested against the exact forms in pytest.
+The batch KNN join is exact: it scores every pair over id-hash blocks, each
+block pair as one BLAS matrix multiply.
 """
 
 from __future__ import annotations
@@ -20,20 +19,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 from .dedup import _key_pairs
 
 __all__ = [
     "cosine", "dot", "l2_norm", "brute_force_topk", "embedding_near_dup_pairs",
     "coordinate_sign_bucket", "bucketed_near_dup_pairs", "lsh_bucketed_topk",
-    "ivf_train_centroids", "ivf_assign", "knn_join",
+    "knn_join",
 ]
 
 N_PLANES = 4        # coordinate-sign hyperplanes: 2^N_PLANES buckets
-IVF_SAMPLE = 2048   # rows the IVF centroids train on
-IVF_ITERS = 10      # spherical k-means iterations
-IVF_SEED = 7        # seed of the centroid initialisation
+KNN_BLOCKS = 8      # id-hash blocks the batch KNN join scores pairwise
 
 
 def _to_double(col: Column) -> Column:
@@ -59,7 +55,7 @@ def cosine(a: Column, b: Column) -> Column:
 
     Re-folds both norms on every call (3 array folds per pair): the price
     of one JVM expression the SQL oracles mirror. knn_join instead
-    normalizes each side once and scores a whole list pair as one matrix
+    normalizes each side once and scores a whole block pair as one matrix
     multiply.
     """
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
@@ -116,18 +112,14 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_id: Optional[int] = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above a threshold.
 
     Exact (cross-product) form — the oracle-checkable baseline. At scale,
     gate the candidate set with lsh buckets first (see lsh_bucketed_topk).
     """
-    df = embeddings
-    if max_id is not None:
-        df = df.where(F.col(id_col) < max_id)
-    l = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    r = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    l = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    r = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     return (
         l.join(r, F.col("id_a") < F.col("id_b"))
         .select(
@@ -196,97 +188,39 @@ def bucketed_near_dup_pairs(
     )
 
 
-def ivf_train_centroids(
-    embeddings: DataFrame,
-    n_lists: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Train IVF coarse centroids with a deterministic seeded k-means
-    (IVF_ITERS iterations from IVF_SEED).
-
-    Trains on a bounded sample of IVF_SAMPLE rows collected to the driver
-    — standard IVF practice (FAISS trains on ~(30-256)*nlist samples
-    regardless of corpus size), so this stays O(sample) at 10^12 vectors.
-    Spherical k-means:
-    vectors and centroids are L2-normalized so assignment by max dot product
-    equals max cosine. The sample is the id-ordered prefix (a distributed
-    top-k, not a full sort): limit() without an order is partition-layout
-    dependent, which would make "deterministic" false across cluster sizes.
-    """
-    mat = _unit_rows(
-        r[0] for r in embeddings.select(vec_col, id_col)
-        .orderBy(id_col).limit(IVF_SAMPLE).select(vec_col).collect()
-    )
-    rng = np.random.RandomState(IVF_SEED)
-    cent = mat[rng.choice(len(mat), size=min(n_lists, len(mat)), replace=False)]
-    for _ in range(IVF_ITERS):
-        assign = np.argmax(mat @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = mat[assign == c]
-            if len(members):
-                v = members.sum(axis=0)
-                cent[c] = v / np.maximum(np.linalg.norm(v), 1e-12)
-    return cent
-
-
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Attach the nearest-centroid list id (vectorized; centroids are a
-    closure constant — the Spark analog of a broadcast variable)."""
-    cent = np.ascontiguousarray(centroids, dtype=np.float64)
-
-    @F.pandas_udf(IntegerType())
-    def nearest(vecs: pd.Series) -> pd.Series:
-        return pd.Series(np.argmax(_unit_rows(vecs) @ cent.T, axis=1).astype(np.int32))
-
-    return embeddings.withColumn("_ivf_list", nearest(F.col(vec_col)))
-
-
 def knn_join(
     embeddings: DataFrame,
     k: int = 3,
-    n_lists: int = 8,
-    n_probe: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch KNN join: top-k neighbours for EVERY row via the IVF index.
+    """Batch KNN join: exact top-k neighbours for EVERY row.
 
     A training pipeline needs every-document-vs-index, and one query is
-    this join restricted to its qid. Each query row explodes to its
-    n_probe nearest lists, and each (probe list x inverted list) pair
-    is scored as ONE numpy matrix multiply inside a cogrouped
-    applyInPandas, so BLAS does the dim-loop at memory bandwidth instead of
-    one JVM array fold per pair. Each list emits only its local top-k per
-    query, so the global ranking window sees n_probe*k candidates per
-    query, not the whole probed corpus. Ranking is (score rounded to 6
-    places desc, id asc) in both the local cut and the window, so ties
+    this join restricted to its qid. Each member lands in one of KNN_BLOCKS
+    hash blocks (pmod(xxhash64(id), KNN_BLOCKS)) and each query row explodes
+    to every block, so every pair is scored exactly once. Each block (all
+    queries x its members) is scored as ONE numpy matrix multiply inside a
+    cogrouped applyInPandas, so BLAS does the dim-loop at memory bandwidth
+    instead of one JVM array fold per pair. Each block emits only its local
+    top-k per query, so the global ranking window sees KNN_BLOCKS*k
+    candidates per query, not the whole corpus. Ranking is (score rounded
+    to 6 places desc, id asc) in both the local cut and the window, so ties
     break the same way in every engine. Returns (qid, nid, score).
 
-    Contract: with n_probe == n_lists the result is exact, each query's
-    rows equal to brute_force_topk (the mode the SQL oracle checks).
-    Production sets n_probe << n_lists, and a query then sees only its
-    n_probe nearest lists: on the sf0.001 vectors at n_lists=8, n_probe=4,
-    queries 0-9 keep 72 of their 100 true top-10.
+    Contract: exact, each query's rows equal to brute_force_topk (the SQL
+    oracle's QUALIFY window).
     """
-    cent = ivf_train_centroids(embeddings, n_lists, vec_col, id_col)
-    assigned = ivf_assign(embeddings, cent, vec_col)
-    centm = np.ascontiguousarray(cent, dtype=np.float64)
-    n_probe = min(n_probe, len(centm))
-
-    @F.pandas_udf("array<int>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        order = np.argsort(-(_unit_rows(vecs) @ centm.T), axis=1)[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
+    members = embeddings.select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(KNN_BLOCKS))
+        .cast("int").alias("_block"),
+    )
     q = embeddings.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("_qv"),
-        F.explode(probes(F.col(vec_col))).alias("_probe"),
+        F.explode(F.sequence(F.lit(0), F.lit(KNN_BLOCKS - 1))).alias("_block"),
     )
 
     def score_list(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -318,8 +252,8 @@ def knn_join(
         })
 
     candidates = (
-        q.groupBy("_probe")
-        .cogroup(assigned.groupBy("_ivf_list"))
+        q.groupBy("_block")
+        .cogroup(members.groupBy("_block"))
         .applyInPandas(
             lambda l, r: score_list(l, r),
             "qid long, nid long, score double",

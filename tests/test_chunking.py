@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.chunking import (
-    NUM_SHARDS, chunk_documents, deterministic_sample, pack_documents,
+    chunk_documents, deterministic_sample, pack_documents,
 )
 
 
@@ -70,44 +70,6 @@ class TestPackDocuments:
                 assert r.stream_offset == expect
                 assert r.pack_id == expect // 10
                 expect += r.n_tokens
-
-    def test_default_mode_derives_hash_shard(self, spark):
-        # shard_col=None no longer means one global stream (a single-task
-        # window at scale): a deterministic pmod(xxhash64(id)) shard is
-        # derived, and offsets are contiguous within each derived shard
-        rows = [(i, "a b c") for i in range(40)]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = pack_documents(df, token_budget=4).collect()
-        shards = {r.shard for r in out}
-        assert len(shards) > 1 and shards <= set(range(NUM_SHARDS))
-        for shard in {r.shard for r in out}:
-            expect = 0
-            for r in sorted([x for x in out if x.shard == shard],
-                            key=lambda x: x.doc_id):
-                assert r.stream_offset == expect
-                assert r.pack_id == expect // 4
-                expect += r.n_tokens
-        # rerun is byte-identical (hash shard, no RNG)
-        again = pack_documents(df, token_budget=4).collect()
-        assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-
-    def test_default_mode_plan_has_partitioned_window(self, spark):
-        from tools.plan_audit import plan_nodes
-
-        df = spark.createDataFrame([(0, "a")], "doc_id bigint, text string")
-        plan = pack_documents(df)._jdf.queryExecution().executedPlan()
-        # an empty partitionBy plans a Window with no partition spec over a
-        # single-partition exchange: the whole corpus in one task
-        windows, single = [], 0
-        for node in plan_nodes(plan):
-            name = node.getClass().getSimpleName()
-            if name == "WindowExec":
-                spec = node.partitionSpec()
-                windows.append([spec.apply(i).toString().split("#")[0]
-                                for i in range(spec.size())])
-            elif name == "ShuffleExchangeExec":
-                single += node.outputPartitioning().toString() == "SinglePartition"
-        assert windows == [["shard"]] and single == 0, (windows, single)
 
 
 class TestDeterministicSample:

@@ -1,4 +1,4 @@
-"""IVF ANN, connected-components clustering, and multimodal resize/frames."""
+"""Batch KNN join, connected-components clustering, and multimodal resize/frames."""
 
 from __future__ import annotations
 
@@ -19,28 +19,6 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def emb01(spark):
     return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-
-
-class TestIVF:
-    def test_centroids_are_unit_norm_and_deterministic(self, emb):
-        import numpy as np
-
-        from pdf_parser_spark.operators.similarity import ivf_train_centroids
-
-        c1 = ivf_train_centroids(emb, n_lists=8)
-        c2 = ivf_train_centroids(emb, n_lists=8)
-        assert np.array_equal(c1, c2)
-        assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
-
-    def test_assign_covers_all_lists_range(self, emb):
-        from pdf_parser_spark.operators.similarity import (
-            ivf_assign, ivf_train_centroids,
-        )
-
-        cent = ivf_train_centroids(emb, n_lists=8)
-        a = ivf_assign(emb, cent)
-        lists = [r[0] for r in a.select("_ivf_list").distinct().collect()]
-        assert all(0 <= l < 8 for l in lists) and len(lists) > 1
 
 
 class TestConnectedComponents:
@@ -435,69 +413,34 @@ class TestBucketedNearDup:
 
 class TestKnnJoin:
     def test_exhaustive_probe_equals_brute_force_per_query(self, emb):
-        from pdf_parser_spark.operators.similarity import brute_force_topk, knn_join
-
-        small = emb.where(F.col("vec_id") < 40)
-        out = knn_join(small, k=3, n_lists=4, n_probe=4).collect()
-        by_q = {}
-        for r in out:
-            by_q.setdefault(r.qid, []).append((r.nid, r.score))
-        assert set(by_q) == set(range(40))
-        assert all(len(v) == 3 for v in by_q.values())
-        # every query against the single-query baseline: nids exactly,
-        # scores within 2e-6 (numpy float64 GEMM vs brute force's JVM fold
-        # can differ in the last ulp before the 6-place rounding)
-        for qid in range(40):
-            want = [(r.vec_id, r.score)
-                    for r in brute_force_topk(small, query_id=qid, k=3).collect()]
-            got = sorted(by_q[qid], key=lambda t: (-t[1], t[0]))
-            assert [n for n, _ in got] == [n for n, _ in want], qid
-            assert all(abs(g - w) < 2e-6
-                       for (_, g), (_, w) in zip(got, want)), qid
-
-    def test_restricted_probe_recall(self, emb):
-        # probing n_probe of n_lists lists is brute force restricted to the
-        # query's nearest lists: on the sf0.001 vectors at n_lists=8,
-        # n_probe=4, queries 0-9 keep 72 of their 100 true top-10
-        from pdf_parser_spark.operators.similarity import brute_force_topk, knn_join
-
-        out = knn_join(emb, k=10, n_lists=8, n_probe=4).where(
-            F.col("qid") < 10).collect()
-        hits = 0
-        for q in range(10):
-            exact = {r.vec_id
-                     for r in brute_force_topk(emb, query_id=q, k=10).collect()}
-            got = {r.nid for r in out if r.qid == q}
-            assert len(got) == 10, q
-            hits += len(got & exact)
-        assert hits >= 72
-
-    def test_restricted_probe_prunes_candidates(self, emb):
-        # every neighbour comes from one of the query's n_probe nearest
-        # lists: on these 60 vectors probing all 6 lists returns 41 of 120
-        # rows from outside the 2 nearest
-        import numpy as np
-
         from pdf_parser_spark.operators.similarity import (
-            _unit_rows, ivf_assign, ivf_train_centroids, knn_join,
+            KNN_BLOCKS, brute_force_topk, knn_join,
         )
 
-        small = emb.where(F.col("vec_id") < 60)
-        cent = ivf_train_centroids(small, 6)
-        vecs, lists = {}, {}
-        for r in ivf_assign(small, cent).collect():
-            vecs[r.vec_id], lists[r.vec_id] = r.embedding, r._ivf_list
-        out = knn_join(small, k=2, n_lists=6, n_probe=2).collect()
-        assert len(out) == 60 * 2
-        outside = [
-            (r.qid, r.nid) for r in out
-            if lists[r.nid] not in
-            np.argsort(-(_unit_rows([vecs[r.qid]]) @ cent.T)[0])[:2]
-        ]
-        assert outside == []
+        # 40 vectors fill every block; fewer than KNN_BLOCKS leave some
+        # blocks with queries and no members (an empty cogroup side)
+        for size in (40, KNN_BLOCKS - 3):
+            small = emb.where(F.col("vec_id") < size)
+            out = knn_join(small, k=3).collect()
+            by_q = {}
+            for r in out:
+                by_q.setdefault(r.qid, []).append((r.nid, r.score))
+            assert set(by_q) == set(range(size))
+            assert all(len(v) == 3 for v in by_q.values())
+            # every query against the single-query baseline: nids exactly,
+            # scores within 2e-6 (numpy float64 GEMM vs brute force's JVM
+            # fold can differ in the last ulp before the 6-place rounding)
+            for qid in range(size):
+                want = [(r.vec_id, r.score)
+                        for r in brute_force_topk(small, query_id=qid,
+                                                  k=3).collect()]
+                got = sorted(by_q[qid], key=lambda t: (-t[1], t[0]))
+                assert [n for n, _ in got] == [n for n, _ in want], qid
+                assert all(abs(g - w) < 2e-6
+                           for (_, g), (_, w) in zip(got, want)), qid
 
     def test_tied_candidates_break_by_nid(self, spark):
-        # duplicate embeddings tie at each list's local-k cut: the smallest
+        # duplicate embeddings tie at each block's local-k cut: the smallest
         # nids must survive (an unrounded argpartition cut could pick any
         # tie-group member and diverge from the oracle)
         from pdf_parser_spark.operators.similarity import knn_join
@@ -506,7 +449,7 @@ class TestKnnJoin:
         rows += [(i, [0.0, 1.0, float(i)]) for i in range(6, 10)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         got = {}
-        for r in knn_join(df, k=2, n_lists=2, n_probe=2).collect():
+        for r in knn_join(df, k=2).collect():
             got.setdefault(r.qid, []).append((r.score, r.nid))
         for qid in range(6):
             # each duplicate's top-2 are the two smallest OTHER dup ids
@@ -1077,7 +1020,8 @@ def _text_operators():
         "word_shingles": lambda s, d, c: dedup.word_shingles(d),
         "minhash_signatures": lambda s, d, c: dedup.minhash_signatures(d),
         "chunk_documents": lambda s, d, c: chunking.chunk_documents(d),
-        "pack_documents": lambda s, d, c: chunking.pack_documents(d),
+        "pack_documents": lambda s, d, c: chunking.pack_documents(
+            d.withColumn("shard", F.lit(0)), shard_col="shard"),
         "repetition_flags": lambda s, d, c: cleaning.repetition_flags(d),
         "gopher_quality_gate":
             lambda s, d, c: gopher.gopher_quality_gate(d, id_col="doc_id"),
