@@ -21,7 +21,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# the checkout is only the fallback: a shipped zip on the path wins over it
+sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_curated_chunks(spark, input_dir, chunk_tokens=2048, overlap=64,

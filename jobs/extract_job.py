@@ -29,9 +29,9 @@ import argparse
 import os
 import sys
 
-# under spark-submit --py-files the package arrives on sys.path via the zip;
-# for bare local runs, fall back to the repo checkout next to this script
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# under spark-submit --py-files the package arrives on sys.path via the zip,
+# which must win; bare local runs fall back to the checkout appended here
+sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv=None) -> int:
@@ -47,6 +47,8 @@ def main(argv=None) -> int:
     ap.add_argument("--lineage-output", default=None,
                     help="where to write per-partition lineage rows")
     args = ap.parse_args(argv)
+    if args.repartition is not None and args.repartition < 1:
+        ap.error(f"argument --repartition: must be >= 1, got {args.repartition}")
 
     from pyspark.sql import SparkSession
 

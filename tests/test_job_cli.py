@@ -89,6 +89,47 @@ class TestExtractJobCli:
         )
         assert got == want
 
+    def test_binary_source_ai_method_repartition(self, spark, corpus, tmp_path):
+        # loose files in, the ai method, the forced url-hash exchange: the
+        # rows equal the in-process plan over the same directory
+        import pyarrow.parquet as pq
+
+        from pdf_parser_spark.pipeline import extract_pipeline
+        from pdf_parser_spark.sources import read_binary_files
+
+        src = tmp_path / "loose"
+        src.mkdir()
+        pages = pq.read_table(os.path.join(corpus, "pages.parquet"),
+                              columns=["url", "html"]).to_pylist()[:20]
+        for p in pages:
+            if p["html"]:  # binaryFile lists no zero-byte file
+                (src / p["url"].rsplit("/", 1)[-1]).write_bytes(p["html"])
+        out = str(tmp_path / "out_bin")
+        r = _run(["--input", str(src), "--source", "binary", "--method", "ai",
+                  "--repartition", "3", "--output", out])
+        assert r.returncode == 0, r.stderr[-2000:]
+        got = duckdb.sql(
+            f"SELECT url, status, text, fields_json "
+            f"FROM read_parquet('{out}/*.parquet') ORDER BY url"
+        ).fetchall()
+        want = sorted(
+            tuple(row) for row in
+            extract_pipeline(read_binary_files(spark, str(src)), method="ai")
+            .select("url", "status", "text", "fields_json").collect()
+        )
+        assert len(got) == len(os.listdir(src)) and got == want
+        assert {s for _, s, _, _ in got} == {"ok", "error"}
+
+    @pytest.mark.parametrize("value", ["0", "-3"])
+    def test_repartition_below_one_is_a_usage_error(self, value, capsys):
+        # rejected by argparse, exit 2, before any Spark session starts
+        from jobs.extract_job import main
+
+        with pytest.raises(SystemExit) as e:
+            main(["--input", "in", "--output", "out", "--repartition", value])
+        assert e.value.code == 2
+        assert "--repartition: must be >= 1" in capsys.readouterr().err
+
     def test_lineage_output(self, corpus, tmp_path):
         out, lin = str(tmp_path / "out3"), str(tmp_path / "lineage")
         r = _run(["--input", corpus, "--output", out, "--lineage-output", lin])
@@ -154,3 +195,28 @@ class TestParallelismInvariance:
         a = duckdb.sql(q.format(outs[1])).fetchall()
         b = duckdb.sql(q.format(outs[8])).fetchall()
         assert len(a) == 100 and a == b
+
+
+@pytest.mark.parametrize("job", ["extract_job.py", "curate_job.py"])
+def test_job_imports_the_package_on_the_path(job, tmp_path):
+    # spark-submit --py-files puts the zip on the driver's path: the job must
+    # import that package, the one its executors run, not the checkout next
+    # to it; with nothing on the path, the checkout is the fallback
+    import zipfile
+
+    shipped = str(tmp_path / "pdf_parser_spark.zip")
+    with zipfile.ZipFile(shipped, "w") as z:
+        z.writestr("pdf_parser_spark/__init__.py", "")
+    code = ("import runpy, sys; runpy.run_path(sys.argv[1]); "
+            "import pdf_parser_spark; print(pdf_parser_spark.__file__)")
+    found = {}
+    for pythonpath in (shipped, ""):
+        r = subprocess.run(
+            [sys.executable, "-c", code, os.path.join(REPO, "jobs", job)],
+            capture_output=True, text=True, cwd=str(tmp_path), timeout=60,
+            env={**os.environ, "PYTHONPATH": pythonpath},
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        found[pythonpath] = r.stdout.strip()
+    assert found[shipped] == os.path.join(shipped, "pdf_parser_spark", "__init__.py")
+    assert found[""] == os.path.join(REPO, "pdf_parser_spark", "__init__.py")

@@ -5,12 +5,13 @@ executors) cannot use a real cluster in this sandbox; per driver instruction
 it is evidenced by running the IDENTICAL job on the IDENTICAL input at two
 local parallelism levels — local[8] vs local[32] — each in a fresh JVM.
 
-Both runs use the same plan: same shuffle-partition count (128, so the unit
-of work is identical and only the parallelism differs), same Arrow batching,
-same kernel. Reported: docs/sec + MB/sec at each level, and
+Both runs use the same plan: same shuffle-partition count (PARTS = 128, so
+the unit of work is identical and only the parallelism differs), same Arrow
+batching, same kernel. Reported: docs/sec + MB/sec at each level, and
 efficiency = tput(4N) / (4 * tput(N)).
 
-Usage: python tools/scaling_bench.py [--sf 1.0] [--runs 3] [--update-docs]
+Usage: python tools/scaling_bench.py [--sf 1.0] [--n 8] [--runs 3] [--trials 3]
+       [--plan extract]
 """
 
 from __future__ import annotations
@@ -20,46 +21,15 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from pdf_parser_spark.session import get_spark
-from pdf_parser_spark.pipeline import load_pages
-from tools.scaling_bench import build_plan
-
-cores, corpus, runs, parts = {cores}, {corpus!r}, {runs}, {parts}
-plan_name = {plan!r}
-spark = get_spark(master=f"local[{{cores}}]", app_name=f"scale-{{cores}}",
-                  shuffle_partitions=parts)
-spark.sparkContext.setLogLevel("ERROR")
-pages = load_pages(spark, corpus)
-stats = pages.agg(
-    F.count(F.lit(1)).alias("docs"),
-    (F.sum(F.coalesce(F.length("html"), F.lit(0)))
-     + F.sum(F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8")))
-     ).alias("bytes"),
-).collect()[0]
-plan = build_plan(spark, pages, corpus, plan_name, parts)
-plan.count()  # cold run: worker fork + plan compile, excluded from timing
-best = float("inf")
-for _ in range(runs):
-    t0 = time.perf_counter()
-    plan.count()
-    best = min(best, time.perf_counter() - t0)
-print(json.dumps({{"cores": cores, "sec": round(best, 3),
-                   "docs": int(stats["docs"]), "bytes": int(stats["bytes"])}}))
-spark.stop()
-"""
-
-
 PLANS = ("extract", "lsh", "repartition", "curate", "spandedup")
+PARTS = 128  # shuffle partitions at both levels (see the docstring)
 
 
-def build_plan(spark, pages, corpus: str, plan_name: str, parts: int):
+def build_plan(spark, pages, corpus: str, plan_name: str):
     """The lazy plan a --plan value times over `pages` (the corpus's pages
     table); building it runs nothing."""
     from pyspark.sql import functions as F
@@ -109,13 +79,43 @@ def build_plan(spark, pages, corpus: str, plan_name: str, parts: int):
         # what a genuinely unsplittable source (gzip WARC dump) pays — the
         # full binary payload crosses the wire before the kernel runs
         return extract_pipeline(
-            pages, repartition_partitions=parts
+            pages, repartition_partitions=PARTS
         ).select("url", "status")
     else:
         return extract_pipeline(pages).select("url", "status")  # shuffle-free
 
 
-def run_level(cores: int, corpus: str, runs: int, parts: int, trials: int,
+def child(cores: int, corpus: str, runs: int, plan: str) -> None:
+    """Time one level in a local[cores] session; print {cores, sec, docs, bytes}
+    as one JSON line, sec the best of `runs` warm counts. run_level runs it."""
+    from pyspark.sql import functions as F
+
+    from pdf_parser_spark.pipeline import load_pages
+    from pdf_parser_spark.session import get_spark
+
+    spark = get_spark(master=f"local[{cores}]", app_name=f"scale-{cores}",
+                      shuffle_partitions=PARTS)
+    spark.sparkContext.setLogLevel("ERROR")
+    pages = load_pages(spark, corpus)
+    stats = pages.agg(
+        F.count(F.lit(1)).alias("docs"),
+        (F.sum(F.coalesce(F.length("html"), F.lit(0)))
+         + F.sum(F.length(F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8")))
+         ).alias("bytes"),
+    ).collect()[0]
+    df = build_plan(spark, pages, corpus, plan)
+    df.count()  # cold run: worker fork + plan compile, excluded from timing
+    best = float("inf")
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        df.count()
+        best = min(best, time.perf_counter() - t0)
+    print(json.dumps({"cores": cores, "sec": round(best, 3),
+                      "docs": int(stats["docs"]), "bytes": int(stats["bytes"])}))
+    spark.stop()
+
+
+def run_level(cores: int, corpus: str, runs: int, trials: int,
               plan: str = "extract") -> dict:
     # Pin the WHOLE process tree (JVM task threads + forked Python workers)
     # to exactly `cores` CPUs: local[N] alone only caps JVM task threads —
@@ -127,13 +127,13 @@ def run_level(cores: int, corpus: str, runs: int, parts: int, trials: int,
     # ADDS time, so best-of is the right estimator of machine capability —
     # single-trial efficiency on this box scatters 0.72-0.95 purely from
     # that noise.
-    code = CHILD.format(repo=REPO, cores=cores, corpus=corpus, runs=runs,
-                        parts=parts, plan=plan)
+    code = ("from tools.scaling_bench import child; "
+            f"child({cores}, {corpus!r}, {runs}, {plan!r})")
     best = None
     for _ in range(trials):
         out = subprocess.run(
             ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
-            capture_output=True, text=True, check=True,
+            capture_output=True, text=True, check=True, cwd=REPO,
         )
         line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
         r = json.loads(line)
@@ -146,7 +146,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=1.0)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--parts", type=int, default=128)
     ap.add_argument("--n", type=int, default=8)
     ap.add_argument("--trials", type=int, default=3,
                     help="fresh-JVM trials per level; best-of is reported")
@@ -166,8 +165,8 @@ def main() -> int:
 
     corpus = ensure_corpus(args.sf)
     n, n4 = args.n, args.n * 4
-    lo = run_level(n, corpus, args.runs, args.parts, args.trials, args.plan)
-    hi = run_level(n4, corpus, args.runs, args.parts, args.trials, args.plan)
+    lo = run_level(n, corpus, args.runs, args.trials, args.plan)
+    hi = run_level(n4, corpus, args.runs, args.trials, args.plan)
 
     def tput(r):
         return {
@@ -182,7 +181,7 @@ def main() -> int:
         "sf": args.sf,
         "docs": lo["docs"],
         "mb": round(lo["bytes"] / 1e6, 1),
-        "shuffle_partitions": args.parts,
+        "shuffle_partitions": PARTS,
         f"local[{n}]": tput(lo),
         f"local[{n4}]": tput(hi),
         "scaling_efficiency": round(eff, 3),
