@@ -7,7 +7,7 @@ Cluster launch (the north rule's deployment shape):
         jobs/extract_job.py \
         --input  s3://bucket/pages_table \
         --output s3://bucket/extractions \
-        --method classic --resume
+        --method classic
 
 Local smoke:
 
@@ -19,8 +19,13 @@ The script never creates its own master/config in cluster mode — all sizing
 picks up the submitted conf. Source selection: by default --input is a
 directory with pages.parquet (the table scan); --source warc treats it as a
 directory of WARC archives, --source binary as loose document files.
-With --resume, a missing or empty --output means nothing is committed yet;
-any other failure to read it fails the job rather than re-extracting.
+
+Every run resumes: it extracts only the urls not already committed at
+--output (a left-anti join on url), so a rerun after a partial or complete
+commit appends no url twice. A missing or empty --output means nothing is
+committed yet; any other failure to read it fails the job before anything
+is written, rather than re-extracting. To keep a second method's rows for
+urls already committed, write them to a different --output.
 """
 
 from __future__ import annotations
@@ -40,8 +45,6 @@ def main(argv=None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--method", default="classic", choices=["classic", "ai"])
     ap.add_argument("--source", default="table", choices=["table", "warc", "binary"])
-    ap.add_argument("--resume", action="store_true",
-                    help="anti-join against already-committed urls")
     ap.add_argument("--repartition", type=int, default=None,
                     help="force the url-hash exchange (unsplittable sources)")
     ap.add_argument("--lineage-output", default=None,
@@ -50,6 +53,7 @@ def main(argv=None) -> int:
     if args.repartition is not None and args.repartition < 1:
         ap.error(f"argument --repartition: must be >= 1, got {args.repartition}")
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("pdf-parser-spark-extract").getOrCreate()
@@ -66,14 +70,11 @@ def main(argv=None) -> int:
     else:
         pages = load_pages(spark, args.input)
 
-    if args.resume:
-        from pyspark.errors import AnalysisException
-
-        try:
-            pages = resume_against(pages, spark.read.parquet(args.output))
-        except AnalysisException as e:
-            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise  # unreadable committed output: never re-extract over it
+    try:
+        pages = resume_against(pages, spark.read.parquet(args.output))
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise  # unreadable committed output: never re-extract over it
 
     result, obs = with_metrics(
         extract_pipeline(

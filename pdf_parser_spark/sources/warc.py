@@ -19,7 +19,7 @@ in bounded chunks, never by its claimed length. CPU time is not bounded: a
 gzip bomb is inflated in full (about 0.6 s per 256 MiB) until an
 inflated-byte budget per archive lands.
 A corrupt or truncated gzip stream ends the archive after the records before
-it. Execution: the shared `binaryFile` scan (`read_binary_files`) -> one
+it. Execution: the shared `binaryFile` scan (`binaryfile._scan`) -> one
 mapInPandas kernel, one row per document record, frames of at most the
 session's Arrow `maxRecordsPerBatch` rows. An archive is one task's work.
 """
@@ -35,9 +35,10 @@ from typing import BinaryIO, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType, TimestampType
 
-from .binaryfile import read_binary_files
+from .binaryfile import _scan
 
 __all__ = ["parse_warc_bytes", "read_warc", "WARC_SCHEMA"]
 
@@ -149,6 +150,7 @@ def _warc_kernel(batches: Iterator[pd.DataFrame], batch_rows: int) -> Iterator[p
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Read the WARC archives (`*.warc*`) under `path` into the canonical
     pages schema."""
-    files = read_binary_files(spark, path, "*.warc*").select("url", "html")
+    files = _scan(spark, path, "*.warc*").select(
+        F.col("path").alias("url"), F.col("content").alias("html"))
     n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     return files.mapInPandas(functools.partial(_warc_kernel, batch_rows=n), WARC_SCHEMA)

@@ -33,7 +33,7 @@ def _run(args):
 class TestExtractJobCli:
     def test_table_source_end_to_end(self, corpus, tmp_path):
         out = str(tmp_path / "out")
-        r = _run(["--input", corpus, "--output", out, "--resume"])
+        r = _run(["--input", corpus, "--output", out])
         assert r.returncode == 0, r.stderr[-2000:]
         counts = dict(duckdb.sql(
             f"SELECT status, count(*) FROM read_parquet('{out}/*.parquet') GROUP BY 1"
@@ -42,8 +42,8 @@ class TestExtractJobCli:
 
     def test_resume_skips_committed(self, corpus, tmp_path):
         out = str(tmp_path / "out2")
-        _run(["--input", corpus, "--output", out, "--resume"])
-        r = _run(["--input", corpus, "--output", out, "--resume"])
+        _run(["--input", corpus, "--output", out])
+        r = _run(["--input", corpus, "--output", out])
         assert r.returncode == 0
         assert "'docs': 0" in r.stderr  # second run processes nothing
         n = duckdb.sql(
@@ -62,7 +62,7 @@ class TestExtractJobCli:
                 with open(os.path.join(out, f), "r+b") as fh:
                     fh.truncate(os.path.getsize(fh.name) // 2)
         before = sorted(os.listdir(out))
-        r = _run(["--input", corpus, "--output", out, "--resume"])
+        r = _run(["--input", corpus, "--output", out])
         assert r.returncode != 0
         assert sorted(os.listdir(out)) == before  # nothing appended
 
@@ -101,9 +101,8 @@ class TestExtractJobCli:
         src.mkdir()
         pages = pq.read_table(os.path.join(corpus, "pages.parquet"),
                               columns=["url", "html"]).to_pylist()[:20]
-        for p in pages:
-            if p["html"]:  # binaryFile lists no zero-byte file
-                (src / p["url"].rsplit("/", 1)[-1]).write_bytes(p["html"])
+        for p in pages:  # one of them is a zero-byte file
+            (src / p["url"].rsplit("/", 1)[-1]).write_bytes(p["html"])
         out = str(tmp_path / "out_bin")
         r = _run(["--input", str(src), "--source", "binary", "--method", "ai",
                   "--repartition", "3", "--output", out])
@@ -119,6 +118,11 @@ class TestExtractJobCli:
         )
         assert len(got) == len(os.listdir(src)) and got == want
         assert {s for _, s, _, _ in got} == {"ok", "error"}
+        empty = duckdb.sql(
+            f"SELECT status, error FROM read_parquet('{out}/*.parquet') "
+            f"WHERE url LIKE '%/item00000019'"
+        ).fetchall()
+        assert empty == [("error", "empty document")]
 
     @pytest.mark.parametrize("value", ["0", "-3"])
     def test_repartition_below_one_is_a_usage_error(self, value, capsys):
@@ -129,6 +133,16 @@ class TestExtractJobCli:
             main(["--input", "in", "--output", "out", "--repartition", value])
         assert e.value.code == 2
         assert "--repartition: must be >= 1" in capsys.readouterr().err
+
+    def test_resume_flag_is_a_usage_error(self, capsys):
+        # every run resumes: a launch line that still passes the removed
+        # flag stops at argparse, exit 2, before any Spark session starts
+        from jobs.extract_job import main
+
+        with pytest.raises(SystemExit) as e:
+            main(["--input", "in", "--output", "out", "--resume"])
+        assert e.value.code == 2
+        assert "unrecognized arguments: --resume" in capsys.readouterr().err
 
     def test_lineage_output(self, corpus, tmp_path):
         out, lin = str(tmp_path / "out3"), str(tmp_path / "lineage")
@@ -169,6 +183,34 @@ class TestCurateJobCli:
             f"SELECT count(DISTINCT url) FROM read_parquet('{out}/*.parquet')"
         ).fetchone()[0]
         assert 0 < n_docs < 84  # strict subset of the 84 ok docs
+
+    def test_min_tokens_gate(self, spark, corpus, tmp_path):
+        # the job's rows are the in-process plan's at the same settings, and
+        # a stricter gate keeps fewer documents than the default one
+        from jobs.curate_job import build_curated_chunks
+
+        out = str(tmp_path / "chunks_m")
+        r = subprocess.run(
+            [sys.executable, "jobs/curate_job.py", "--input", corpus,
+             "--output", out, "--chunk-tokens", "64", "--overlap", "8",
+             "--min-tokens", "200"],
+            capture_output=True, text=True, cwd=REPO, timeout=300,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        got = duckdb.sql(
+            f"SELECT url, chunk_idx, chunk_text, n_tokens "
+            f"FROM read_parquet('{out}/*.parquet') ORDER BY url, chunk_idx"
+        ).fetchall()
+        want = sorted(
+            tuple(row) for row in build_curated_chunks(spark, corpus, 64, 8, 200)
+            .select("url", "chunk_idx", "chunk_text", "n_tokens").collect()
+        )
+        assert got and got == want
+        default_urls = (
+            build_curated_chunks(spark, corpus, 64, 8)
+            .select("url").distinct().count()
+        )
+        assert len({u for u, *_ in got}) < default_urls
 
 
 class TestParallelismInvariance:

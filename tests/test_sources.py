@@ -243,6 +243,7 @@ class TestSparkSources:
                 "response", "https://example.org/c.html",
                 "2024-01-04T00:00:00Z", HTML_DOC, http=True))
         )
+        (tmp_path / "crawl-02.warc").write_bytes(b"")  # no record, no row
         df = read_warc(spark, str(tmp_path))
         rows = {r.url: r for r in df.collect()}
         assert set(rows) == {
@@ -277,6 +278,38 @@ class TestSparkSources:
         rows = {os.path.basename(r.url): r for r in df.collect()}
         assert set(rows) == {"one.pdf", "two.html"}
         assert bytes(rows["one.pdf"].html) == pdf
+
+    def test_zero_byte_file_is_a_row(self, spark, tmp_path):
+        # the scan reads no zero-length file; the index's listing names it
+        # URI-encoded, and also names a `_metadata` file the scan never reads
+        from pdf_parser_spark.sources import read_binary_files
+
+        (tmp_path / "a b%.html").write_bytes(HTML_DOC)
+        (tmp_path / "sub").mkdir()
+        (tmp_path / "sub" / "a b%.html").write_bytes(b"")
+        (tmp_path / "_metadata").write_bytes(b"x")
+        (tmp_path / "_empty").write_bytes(b"")
+        rows = {r.url: r for r in read_binary_files(spark, str(tmp_path)).collect()}
+        full = f"file:{tmp_path / 'a b%.html'}"
+        empty = f"file:{tmp_path / 'sub' / 'a b%.html'}"
+        assert set(rows) == {full, empty}
+        assert bytes(rows[full].html) == HTML_DOC
+        assert bytes(rows[empty].html) == b"" and rows[empty].warc_ts is None
+
+    def test_empty_file_rows_only_when_the_scan_skips_a_file(self, spark, tmp_path):
+        # the second scan and its join are planned only when the index lists
+        # a file the scan does not read; read_warc never plans them
+        from pdf_parser_spark.sources import read_binary_files, read_warc
+
+        (tmp_path / "a.html").write_bytes(HTML_DOC)
+        (tmp_path / "b.warc").write_bytes(b"")
+
+        def joins(df):
+            return df._jdf.queryExecution().optimizedPlan().toString().count("Join")
+
+        assert joins(read_binary_files(spark, str(tmp_path), "*.html")) == 0
+        assert joins(read_binary_files(spark, str(tmp_path))) == 1
+        assert joins(read_warc(spark, str(tmp_path))) == 0
 
     def test_binaryfile_glob_filter(self, spark, tmp_path):
         from pdf_parser_spark.sources import read_binary_files
